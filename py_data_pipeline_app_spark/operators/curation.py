@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import tokens
-from py_data_pipeline_app_spark.partitioning import cut, fan_out
+from py_data_pipeline_app_spark.partitioning import fan_out
 
 # ---------------------------------------------------------------------------
 # Repetition filters (Gopher-style rules 4-8: a document dominated by a
@@ -575,7 +575,7 @@ def _bigram_map_stage(
         )
         .select(*ids, "_m")
         .filter(F.size("_m") > 0)
-        .transform(cut, eager=False)
+        .localCheckpoint(eager=False)
     )
 
 

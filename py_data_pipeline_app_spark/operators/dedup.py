@@ -30,7 +30,7 @@ from py_data_pipeline_app_spark.functions.text import (
     token_hash,
     tokens,
 )
-from py_data_pipeline_app_spark.partitioning import cut, fan_out
+from py_data_pipeline_app_spark.partitioning import fan_out
 
 DEFAULT_NUM_PERMS = 32
 DEFAULT_BANDS = 8  # 8 bands x 4 rows over 32 perms
@@ -117,12 +117,14 @@ def _posting_list_pair_counts(
     # grouped fans out to THREE consumers (per-doc sizes, pair
     # expansion — and the sizes frame itself twice). Exchange reuse
     # does NOT fire here at runtime (measured r15: 6 scans, 0
-    # ReusedExchange in the executed plan), so without a cut the
-    # tokenize + shingle-explode + collect_list subtree runs 3x per
-    # query. Lazy checkpoint: the caller's one action materializes
-    # the (shingle, members) rows once (cut(): strategy-switchable
-    # at cluster scale — see partitioning.cut).
-    grouped = cut(grouped, eager=False)
+    # ReusedExchange in the executed plan): Catalyst prunes each
+    # consumer branch to the columns it reads, so the branches differ
+    # in ReadSchema and ReusedExchange never matches them. The same
+    # holds at every multi-consumer localCheckpoint in the engine.
+    # Without a cut the tokenize + shingle-explode + collect_list
+    # subtree runs 3x per query. Lazy checkpoint: the caller's one
+    # action materializes the (shingle, members) rows once.
+    grouped = grouped.localCheckpoint(eager=False)
     sizes = (
         grouped.select(F.explode("_ms").alias(id_col))
         .groupBy(id_col)
@@ -565,7 +567,7 @@ def simhash_near_dup_pairs(
     # tokenize + 60-vote signature subtree is recomputed 4x in one
     # plan (4 source scans in the r15 before-plan). Lazy: the caller's
     # one action materializes the (hash, ids) rows once.
-    groups = cut(groups, eager=False)
+    groups = groups.localCheckpoint(eager=False)
 
     # 1. Pairs within an identical-hash group: Hamming 0, no verification.
     within = (
@@ -894,7 +896,7 @@ def cross_corpus_ngram_jaccard(
         grouped = grouped.filter((F.size("_ls") + F.size("_rs")) <= max_df)
     # same fan-out as _posting_list_pair_counts (sizes_l, sizes_r,
     # inter): exchange reuse measured NOT firing — cut once, lazily.
-    grouped = cut(grouped, eager=False)
+    grouped = grouped.localCheckpoint(eager=False)
     sizes_l = (
         grouped.select(F.explode("_ls").alias("id_left"))
         .groupBy("id_left")
@@ -1052,7 +1054,7 @@ def cluster_canonicals(
         # the cut free of an extra job: the caller's one action
         # materializes the (id, component, score) rows once and both
         # branches read the materialized partitions.
-        .transform(cut, eager=False)
+        .localCheckpoint(eager=False)
     )
     # argmax with (score desc, id asc) as ONE map-side-combinable agg:
     # min over struct(-score, id) — the SCORE is negated (always

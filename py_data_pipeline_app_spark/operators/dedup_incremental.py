@@ -67,7 +67,7 @@ from py_data_pipeline_app_spark import fsio
 
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import tokens
-from py_data_pipeline_app_spark.partitioning import cut, fan_out
+from py_data_pipeline_app_spark.partitioning import fan_out
 from py_data_pipeline_app_spark.operators.dedup import (
     DEFAULT_BANDS,
     DEFAULT_MAX_BUCKET,
@@ -673,7 +673,7 @@ def _incremental_lsh_fold_locked(
         new_buckets = new_buckets.withColumn(
             PART_COL, part_bucket_col(["band", "bucket"], part_buckets)
         )
-    new_buckets = cut(new_buckets, eager=False)
+    new_buckets = new_buckets.localCheckpoint(eager=False)
 
     token = batch_token or uuid.uuid4().hex[:12]
     tombs = _read_tombstones(spark, index_path)
@@ -729,13 +729,10 @@ def _incremental_lsh_fold_locked(
     # LAZY: the tokset append below is the first action that touches
     # this frame and materializes the checkpoint — an eager one here
     # was a whole extra job per fold for the same bytes
-    new_toksets = cut(
-        docs.select(
-            F.col(id_col),
-            F.array_sort(F.array_distinct(tokens(text_col))).alias("tokset"),
-        ),
-        eager=False,
-    )
+    new_toksets = docs.select(
+        F.col(id_col),
+        F.array_sort(F.array_distinct(tokens(text_col))).alias("tokset"),
+    ).localCheckpoint(eager=False)
     hist_toksets = _without_tombstoned(
         _pinned_history(
             spark, index_path, TOKSETS_SUBDIR, new_toksets, exclude_token=token

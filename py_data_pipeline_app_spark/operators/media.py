@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark import schemas
 from py_data_pipeline_app_spark.operators.similarity import brute_force_topk
-from py_data_pipeline_app_spark.partitioning import cut, fan_out
+from py_data_pipeline_app_spark.partitioning import fan_out
 
 # ---------------------------------------------------------------------------
 # Deterministic media derivation (fixture source for the driver testdata)
@@ -1114,7 +1114,7 @@ def dhash_near_dup_pairs(
     # three consumers (blocking, both verification sides) would each
     # re-run the upstream decode+hash mapInPandas — materialize the
     # signatures once (the incremental fold's one-decode discipline)
-    hashes = cut(hashes)
+    hashes = hashes.localCheckpoint(eager=True)
     hash_cols = _dhash_hash_cols(hashes, hash_col)
     blocked = dhash_band_buckets(
         hashes, bands=bands, id_col=id_col, hash_col=hash_col
@@ -1318,11 +1318,9 @@ def video_near_dup_pairs(
     # re-run the upstream per-frame decode+hash mapInPandas — the most
     # expensive stage of the whole chain — so materialize it ONCE (the
     # incremental fold's one-decode discipline; round-14 advice)
-    fh = cut(
-        frame_hashes.withColumn(
-            "frame_bucket", (F.col("ts_ms") / F.lit(bucket_ms)).cast("long")
-        )
-    )
+    fh = frame_hashes.withColumn(
+        "frame_bucket", (F.col("ts_ms") / F.lit(bucket_ms)).cast("long")
+    ).localCheckpoint(eager=True)
     blocked = (
         fh.select(
             "media_id",

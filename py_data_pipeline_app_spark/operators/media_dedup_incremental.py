@@ -70,7 +70,6 @@ from py_data_pipeline_app_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET,
     _bucket_member_pairs,
 )
-from py_data_pipeline_app_spark.partitioning import cut
 from py_data_pipeline_app_spark.operators.dedup_incremental import (
     DEFAULT_PART_BUCKETS,
     PART_COL,
@@ -230,7 +229,7 @@ def incremental_dhash_fold(
         )
         # one decode (bands, verify, append share it), materialized by
         # the fold's first action instead of a dedicated checkpoint job
-        new_hashes = cut(new_hashes, eager=False)
+        new_hashes = new_hashes.localCheckpoint(eager=False)
         hash_cols = _dhash_hash_cols(new_hashes)
         new_buckets = dhash_band_buckets(new_hashes, bands=bands)
         if not flat:
@@ -480,7 +479,7 @@ def incremental_video_dhash_fold(
             .withColumn(
                 "frame_bucket", (F.col("ts_ms") / F.lit(bucket_ms)).cast("long")
             )
-            .transform(cut, eager=False)  # one decode (block, verify,
+            .localCheckpoint(eager=False)  # one decode (block, verify,
             # append share it), materialized by new_blocked's own
             # checkpoint action instead of a dedicated job
         )
@@ -509,7 +508,7 @@ def incremental_video_dhash_fold(
             )
         # four consumers (prefix set, within-pairs, history join,
         # append) would each re-run the explode+distinct shuffle
-        new_blocked = cut(new_blocked)
+        new_blocked = new_blocked.localCheckpoint(eager=True)
 
         token = batch_token or uuid.uuid4().hex[:12]
         tombs = _read_tombstones(spark, index_path)

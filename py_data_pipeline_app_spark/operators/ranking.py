@@ -32,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from py_data_pipeline_app_spark.partitioning import cut
 
 _PID = "__gdr_pid"
 _LOCAL = "__gdr_local_rank"
@@ -62,7 +61,7 @@ def global_dense_rank(
     ranged = (
         df.repartitionByRange(num_partitions, key)
         .withColumn(_PID, F.spark_partition_id())
-        .transform(cut, eager=False)
+        .localCheckpoint(eager=False)
     )
 
     local = ranged.withColumn(
@@ -120,7 +119,7 @@ def global_row_number(
     ranged = (
         df.repartitionByRange(num_partitions, *keys)
         .withColumn(_PID, F.spark_partition_id())
-        .transform(cut, eager=False)
+        .localCheckpoint(eager=False)
     )
     local = ranged.withColumn(
         _LOCAL, F.row_number().over(Window.partitionBy(_PID).orderBy(*keys))

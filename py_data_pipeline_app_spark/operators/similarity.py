@@ -28,7 +28,7 @@ from py_data_pipeline_app_spark import fsio
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import md5_long
 from py_data_pipeline_app_spark.operators.dedup import _bucket_member_pairs
-from py_data_pipeline_app_spark.partitioning import cut, fan_out
+from py_data_pipeline_app_spark.partitioning import fan_out
 
 
 def _qident(c: str) -> str:
@@ -1163,7 +1163,7 @@ def semantic_dedup(
     # the k-fold argmax subtree is duplicated 4x in the physical plan
     # (8 source scans in the r15 before-plan with the planted union).
     # Lazy: the caller's one action materializes it, no extra job.
-    assigned = cut(assigned, eager=False)
+    assigned = assigned.localCheckpoint(eager=False)
     return _semantic_kept_flags(
         assigned,
         None,
@@ -1586,12 +1586,9 @@ def build_semantic_index(
     # inside its own job (the fold runs once, later plan references
     # read the stored blocks), instead of a separate full-corpus
     # checkpoint job followed by the write job.
-    assigned = cut(
-        _assign_with_mode(
-            corpus, cent_rows, mode, id_col=id_col, vec_col=vec_col
-        ),
-        eager=False,
-    )
+    assigned = _assign_with_mode(
+        corpus, cent_rows, mode, id_col=id_col, vec_col=vec_col
+    ).localCheckpoint(eager=False)
     rows = _semantic_kept_flags(
         assigned, None, threshold=threshold, id_col=id_col, vec_col=vec_col
     )
@@ -2122,7 +2119,10 @@ def _footer_hist_max_ids(
     never a wrong pass). Returns None — caller must run the exact job —
     when the index is not on the driver-local filesystem, the id column
     is not a plain int type (string stats can be truncated and their
-    byte order is not Spark's), or any footer lacks statistics."""
+    byte order is not Spark's), any footer lacks statistics, or a
+    scanned directory holds parquet files outside its ``centroid_id=``
+    subdirectories (a flat legacy layout that :func:`_union_appends`
+    reads but a per-cluster footer walk cannot see)."""
     from py_data_pipeline_app_spark.fsio import _local_path
 
     root = _local_path(spark, index_path)
@@ -2132,19 +2132,30 @@ def _footer_hist_max_ids(
 
     import pyarrow.parquet as pq
 
-    dirs: list[tuple] = [
-        (c, os.path.join(root, "assigned", f"centroid_id={c}"))
-        for c in probed
-    ]
+    tables = [os.path.join(root, "assigned")]
     app_root = os.path.join(root, IVF_APPENDS_SUBDIR)
     if os.path.isdir(app_root):
-        for name in os.listdir(app_root):
-            if not name.startswith("batch-") or name == exclude:
-                continue
-            dirs.extend(
-                (c, os.path.join(app_root, name, f"centroid_id={c}"))
-                for c in probed
-            )
+        tables.extend(
+            os.path.join(app_root, name)
+            for name in os.listdir(app_root)
+            if name.startswith("batch-") and name != exclude
+        )
+    for t in tables:
+        for _, subdirs, files in os.walk(t):
+            subdirs[:] = [
+                s for s in subdirs
+                if not s.startswith(("_", ".", "centroid_id="))
+            ]
+            if any(
+                f.endswith(".parquet") and not f.startswith(("_", "."))
+                for f in files
+            ):
+                return None
+    dirs = [
+        (c, os.path.join(t, f"centroid_id={c}"))
+        for t in tables
+        for c in probed
+    ]
     out: dict = {}
     for c, d in dirs:
         if not os.path.isdir(d):
@@ -2304,7 +2315,7 @@ def semantic_index_append(
             id_col=id_col,
             vec_col=vec_col,
         )
-        assigned = cut(assigned, eager=False)
+        assigned = assigned.localCheckpoint(eager=False)
         # ONE job yields the probed-cluster list, each cluster's
         # batch-min id, AND the batch size (the probed-collect, the
         # guard's batch side, and the reorder sidecar's Bloom-sizing

@@ -41,7 +41,6 @@ from py_data_pipeline_app_spark import fsio
 
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import tokens
-from py_data_pipeline_app_spark.partitioning import cut
 from py_data_pipeline_app_spark.operators.dedup_incremental import (
     DEFAULT_PART_BUCKETS,
     PART_COL,
@@ -164,7 +163,7 @@ def incremental_span_fold(
             exploded = exploded.withColumn(
                 PART_COL, part_bucket_col(["fp"], part_buckets)
             )
-        exploded = cut(exploded, eager=False)
+        exploded = exploded.localCheckpoint(eager=False)
         fp_cols = ["fp"] if flat else ["fp", PART_COL]
         hist_like = exploded.select(*fp_cols).limit(0)
         # distinct() makes the fold tolerant of duplicate fingerprints

@@ -1,19 +1,19 @@
 """Scale-adaptive parallelism floor for unsplittable inputs.
 
-The driver's testdata is one parquet file per table with a SINGLE row
-group, which Spark cannot split below one task (splits are assigned by
-row-group midpoint). Every scan therefore opens as ONE partition, and
-any expensive narrow stage downstream — an Arrow ``mapInPandas`` decode,
-a per-row shingle/pair explode feeding a partial aggregate — runs on one
-of the 32 local cores (guide §2.5 "input skew: one huge unsplittable
-file … repartition immediately after the read"; §6 split sizing cannot
-help below one row group).
+A parquet file with a SINGLE row group cannot be split below one task
+(Spark assigns splits by row-group midpoint), so a scan of such a file
+opens as ONE partition, and any expensive narrow stage downstream — an
+Arrow ``mapInPandas`` decode, a per-row shingle/pair explode feeding a
+partial aggregate — runs on one core (guide §2.5 "input skew: one huge
+unsplittable file … repartition immediately after the read"; §6 split
+sizing cannot help below one row group).
 
 :func:`fan_out` repartitions a frame up to the cluster's default
-parallelism ONLY when it currently has fewer partitions, so it is
+parallelism ONLY when its physical plan has fewer partitions
+(``df.rdd.getNumPartitions()``), so it is
 
 - a round-robin shuffle of a tiny frame locally (µs of data, buys
-   32× on the compute stage that follows), and
+  cores-many tasks on the compute stage that follows), and
 - a NO-OP at scale, where a real corpus scan already carries at least
   cores-many partitions — the guard keeps the knob scale-adaptive
   instead of tuned to either environment.
@@ -30,156 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: session conf selecting how :func:`cut` materializes multi-consumer
-#: subtrees. Values: ``local`` (default) / ``reliable`` / ``none``.
-CUT_STRATEGY_CONF = "spark.graft.cutStrategy"
-
-
-def cut(df: DataFrame, *, eager: bool = True) -> DataFrame:
-    """Materialize a MULTI-CONSUMER subtree once and truncate its
-    lineage — the engine's single code path for the fan-out cuts
-    (posting lists, simhash groups, argmax assignments, decode
-    outputs) whose duplicated upstreams would otherwise re-execute per
-    consuming plan branch.
-
-    Why a cut and not exchange reuse: Catalyst prunes each consumer
-    branch to the columns IT uses, so the "duplicated" subtrees differ
-    in ReadSchema and partial aggregates and ``ReusedExchange`` can
-    never match them (measured r16: reuse fires only for
-    byte-identical subtrees with AQE off; the engine's executed plans
-    showed 0 ReusedExchange and N× re-scans before the cuts landed).
-
-    Strategy comes from the session conf ``spark.graft.cutStrategy``
-    so a cluster deployment can change the materialization without
-    touching operator code:
-
-    - ``local`` (default): ``localCheckpoint`` — blocks live on
-      executor storage and lineage is DROPPED, so losing an executor
-      fails the job instead of recomputing (guide §5). Right where
-      the job is cheap to rerun end-to-end: the local bench, batch
-      jobs whose retry story is "resubmit".
-    - ``reliable``: ``DataFrame.checkpoint`` into the cluster's
-      ``sparkContext.setCheckpointDir`` location — fault-tolerant
-      materialization for corpus-scale intermediates at 100 TB (the
-      checkpoint dir must be set by the deployment).
-    - ``none``: no cut — every consumer recomputes its (pruned)
-      subtree; correct because every cut site is deterministic
-      (fan_out's round-robin sorts before repartitioning, and all
-      other upstreams are pure projections/aggregates), and sometimes
-      right at scale when recomputing beats materializing.
-
-    ITERATIVE per-round checkpoints (connected-components star rounds,
-    BPE merge rounds) intentionally stay raw ``localCheckpoint``:
-    bounding plan growth per round is standard practice, the frames
-    are round-sized, and a mid-fold executor loss retries the fold."""
-    spark = df.sparkSession
-    try:
-        mode = (spark.conf.get(CUT_STRATEGY_CONF, "local") or "local").lower()
-    except Exception:  # noqa: BLE001 — conf read must never fail a plan
-        mode = "local"
-    if mode == "none":
-        return df
-    if mode == "reliable":
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
-#: ceiling for trusting the driver-side split-count estimate: above
-#: this many input bytes a wrong estimate could shrink a genuinely
-#: wide corpus scan, so the physical-plan probe stays authoritative.
-_ESTIMATE_MAX_BYTES = 1 << 30
-
-#: analyzed-plan operators that cannot change a scan's partitioning —
-#: the estimate only engages when the WHOLE plan is one parquet
-#: relation under narrow ops (a shuffle, aggregate, join, window,
-#: local-relation or checkpointed RDD falls back to the probe).
-_NARROW_OPS = frozenset(
-    {"Project", "Filter", "Relation", "SubqueryAlias", "Generate"}
-)
-
-
-def _narrow_scan_split_count(df: DataFrame) -> int | None:
-    """Partition count of a scan+narrow-only frame, computed
-    DRIVER-SIDE from its file sizes with Spark's own
-    ``FilePartition`` split/packing formula — the physical-plan probe
-    (``df.rdd.getNumPartitions()``) costs ~160 ms of planning per
-    call site (measured r16) and fan_out sits on every expensive
-    narrow stage's construction path. Returns None whenever the
-    answer is not PROVABLY the probe's: non-narrow plan shapes,
-    non-driver-local files, or inputs past the small-local regime
-    (:data:`_ESTIMATE_MAX_BYTES`) — at corpus scale the probe's cost
-    is amortized and a wrong estimate could shrink a wide scan, so
-    the fast path simply disengages there. Equality with the probe is
-    pinned by tests on the harness's own file shapes."""
-    import re
-
-    from py_data_pipeline_app_spark import fsio
-
-    spark = df.sparkSession
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        ops = {
-            m.group(1)
-            for m in re.finditer(r"^[+\-:\s]*([A-Za-z]+)", plan, flags=re.M)
-        }
-        if not ops or not ops <= _NARROW_OPS or "Relation" not in ops:
-            return None
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — estimate only; probe is authoritative
-        return None
-    if not files:
-        return None
-    sizes = []
-    for f in files:
-        if fsio._local_path(spark, f) is None:
-            return None  # remote stat would cost a py4j call per file
-        sizes.append(fsio.file_size(spark, f))
-    total = sum(sizes)
-    if total <= 0 or total > _ESTIMATE_MAX_BYTES:
-        return None
-    conf = spark.conf
-    def _bytes_conf(key: str, default: int) -> int:
-        try:
-            v = str(conf.get(key, str(default)))
-        except Exception:  # noqa: BLE001
-            return default
-        units = {"k": 10, "m": 20, "g": 30}
-        v = v.lower().rstrip("b")
-        return (
-            int(v[:-1]) << units[v[-1]] if v[-1] in units else int(float(v))
-        )
-
-    max_split = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 << 20)
-    open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 << 20)
-    try:
-        min_parts = int(
-            conf.get(
-                "spark.sql.files.minPartitionNum",
-                conf.get(
-                    "spark.sql.leafNodeDefaultParallelism",
-                    str(spark.sparkContext.defaultParallelism),
-                ),
-            )
-        )
-    except Exception:  # noqa: BLE001
-        min_parts = spark.sparkContext.defaultParallelism
-    bytes_per_core = (total + len(sizes) * open_cost) // max(min_parts, 1)
-    max_split = min(max_split, max(open_cost, bytes_per_core))
-    splits = []
-    for s in sizes:
-        off = 0
-        while off < s:
-            splits.append(min(max_split, s - off))
-            off += max_split
-    splits.sort(reverse=True)
-    n, cur = 0, 0
-    for s in splits:
-        if cur + s > max_split and cur > 0:
-            n += 1
-            cur = 0
-        cur += s + open_cost
-    return n + (1 if cur > 0 else 0)
-
 
 def fan_out(df: DataFrame, *, min_partitions: int | None = None) -> DataFrame:
     """Ensure ``df`` has at least ``min_partitions`` (default: the
@@ -189,12 +39,10 @@ def fan_out(df: DataFrame, *, min_partitions: int | None = None) -> DataFrame:
     target = int(min_partitions or sc.defaultParallelism)
     if target <= 1:
         return df
-    current = _narrow_scan_split_count(df)
-    if current is None:
-        try:
-            current = df.rdd.getNumPartitions()
-        except Exception:  # noqa: BLE001 — planning-time probe; shuffle is safe
-            current = None
+    try:
+        current = df.rdd.getNumPartitions()
+    except Exception:  # noqa: BLE001 — planning-time probe; shuffle is safe
+        current = None
     if current is not None and current >= target:
         return df
     return df.repartition(target)

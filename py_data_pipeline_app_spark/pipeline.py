@@ -32,14 +32,11 @@ from py_data_pipeline_app_spark.operators.aggregates import (
 from py_data_pipeline_app_spark.operators.enrich import enrich_transactions
 from py_data_pipeline_app_spark.operators.parse import parse_customer_blob
 from py_data_pipeline_app_spark.operators.scd import apply_scd_batch
+from py_data_pipeline_app_spark.sources.ingest import (
+    REQUIRED_SHEETS,
+    MissingSheetsError,
+)
 from py_data_pipeline_app_spark.warehouse import Warehouse
-
-REQUIRED_SHEETS = {"Transactions", "Customers", "Products"}
-
-
-class MissingSheetsError(ValueError):
-    """Raised when the workbook lacks required sheets (reference
-    app.py:68-71 flashes and redirects; the engine raises typed)."""
 
 
 @dataclass

@@ -890,8 +890,8 @@ def dedup_incremental_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Note the two folds run EAGER index writes at plan-construction
     time; only the returned pairs union is lazy — so a harness that
     times collect-only underestimates this query relative to purely
-    lazy ones (bench.py times plan construction + execution end-to-end,
-    which bills the folds correctly)."""
+    lazy ones (perfbench's ``query_mix`` times plan construction and
+    execution separately, which bills the folds to construction)."""
     docs = load_table(spark, "documents", sf_dir)
     index = _scratch_dir("lsh_index")
     even = docs.filter(F.col("doc_id") % 2 == 0)

@@ -38,7 +38,8 @@ SHEET_SCHEMAS = {
 
 
 class MissingSheetsError(ValueError):
-    """Workbook lacks required sheets (reference app.py:68-71)."""
+    """Raised when the workbook lacks required sheets (reference
+    app.py:68-71 flashes and redirects; the engine raises typed)."""
 
 
 def _read_workbook_rows(path: str) -> dict[str, list[list[str | None]]]:

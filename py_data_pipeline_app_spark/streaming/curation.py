@@ -46,7 +46,6 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from py_data_pipeline_app_spark import fsio
-from py_data_pipeline_app_spark.partitioning import cut
 
 #: split weights — imported from the batch rollup so the streaming and
 #: batch paths cannot drift (the parity test compares against this name)
@@ -295,7 +294,7 @@ def curation_fold(
     # localCheckpoint: the batch feeds four consumers (span fold,
     # semantic append, quality score, token count) — batch-sized, and
     # a streaming source frame cannot be re-read by a second action
-    batch_df = cut(batch_df)
+    batch_df = batch_df.localCheckpoint(eager=True)
 
     # 1. span dedup — EAGER index append inside, returns the rebuilt
     # documents (previously-seen spans scrubbed)
@@ -308,7 +307,7 @@ def curation_fold(
         chunk_tokens=chunk_tokens,
         batch_token=token,
     )
-    rebuilt = cut(rebuilt)
+    rebuilt = rebuilt.localCheckpoint(eager=True)
 
     # 2. semantic verdicts — append the batch's embedded rows to the
     # index, then read back the verdicts it just computed (the append
@@ -504,7 +503,7 @@ def curation_fold(
             max_hamming=media_max_hamming,
             batch_token=token,
         )
-        pairs = cut(pairs)
+        pairs = pairs.localCheckpoint(eager=True)
         drops = _near_dup_drop_ids(pairs, assets.select("media_id")).select(
             F.col("_drop_id").alias(id_col)
         ).withColumn("_img_dup", F.lit(True))
@@ -544,7 +543,7 @@ def curation_fold(
             min_matching_buckets=video_min_matching_buckets,
             batch_token=token,
         )
-        vpairs = cut(vpairs)
+        vpairs = vpairs.localCheckpoint(eager=True)
         vdrops = _near_dup_drop_ids(
             vpairs.select("id_a", "id_b"), clips.select("media_id")
         ).select(F.col("_drop_id").alias(id_col)).withColumn(

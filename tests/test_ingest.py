@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from py_data_pipeline_app_spark import pipeline
 from py_data_pipeline_app_spark.pipeline import process_upload
 from py_data_pipeline_app_spark.sources.ingest import (
     MissingSheetsError,
@@ -85,6 +86,9 @@ def test_ingest_rejects_wrong_extension_and_missing_sheet(spark, tmp_path):
     p = str(tmp_path / "partial.xlsx")
     write_xlsx(p, {"Transactions": [TXN_HEADER], "Products": [PROD_HEADER]})
     with pytest.raises(MissingSheetsError):
+        ingest_workbook(spark, p)
+    # the pipeline's name is the same class as the ingest front door's
+    with pytest.raises(pipeline.MissingSheetsError):
         ingest_workbook(spark, p)
 
 

@@ -1,52 +1,8 @@
-"""partitioning.fan_out / cut: the split-count fast path and the
-strategy-switchable subtree cut (round-16 optimization pins)."""
+"""partitioning.fan_out: the scale-adaptive parallelism floor."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from py_data_pipeline_app_spark.functions.frames import local_rows_df
-from py_data_pipeline_app_spark.partitioning import (
-    CUT_STRATEGY_CONF,
-    _narrow_scan_split_count,
-    cut,
-    fan_out,
-)
-
-
-def test_split_estimate_matches_physical_probe(spark):
-    """The driver-side split-count estimate replicates Spark's own
-    FilePartition packing EXACTLY for the shapes fan_out sees (scan +
-    narrow ops over the harness's parquet files) — any mismatch must
-    surface here, because an under-estimate at scale would let fan_out
-    shrink a wide scan."""
-    for sf in ["sf0.001", "sf0.1"]:
-        docs = spark.read.parquet(f"/root/testdata/{sf}/documents.parquet")
-        for d in (
-            docs,
-            docs.select("doc_id"),
-            docs.filter(F.col("doc_id") > 3),
-            docs.select(
-                "doc_id", F.explode(F.split("text", " ")).alias("w")
-            ),
-        ):
-            assert _narrow_scan_split_count(d) == d.rdd.getNumPartitions()
-
-
-def test_split_estimate_disengages_off_the_narrow_scan_shape(spark):
-    """Shapes whose partitioning is NOT the scan's splits (shuffles,
-    aggregates, checkpointed RDDs, literal frames) must return None —
-    the physical probe stays authoritative there."""
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    assert _narrow_scan_split_count(docs.groupBy("lang").count()) is None
-    assert _narrow_scan_split_count(docs.repartition(4)) is None
-    assert (
-        _narrow_scan_split_count(docs.localCheckpoint(eager=False)) is None
-    )
-    assert (
-        _narrow_scan_split_count(local_rows_df(spark, "a int", [(1,)]))
-        is None
-    )
+from py_data_pipeline_app_spark.partitioning import fan_out
 
 
 def test_fan_out_widens_single_split_scan(spark):
@@ -56,20 +12,3 @@ def test_fan_out_widens_single_split_scan(spark):
     # already-wide frames pass through untouched (the scale guard)
     wide = docs.repartition(target + 7)
     assert fan_out(wide) is wide
-
-
-def test_cut_strategies(spark):
-    """cut() is the one code path for multi-consumer subtree cuts:
-    local (default) materializes via localCheckpoint, none passes
-    through (every consumer recomputes — deterministic upstreams make
-    that correct), and the conf flips behavior per session."""
-    df = local_rows_df(spark, "a int", [(1,), (2,)])
-    out = cut(df)
-    assert out.collect() == df.collect()
-    assert "LogicalRDD" in out._jdf.queryExecution().analyzed().toString()
-    spark.conf.set(CUT_STRATEGY_CONF, "none")
-    try:
-        passthrough = cut(df)
-        assert passthrough is df
-    finally:
-        spark.conf.unset(CUT_STRATEGY_CONF)

@@ -100,6 +100,25 @@ def test_out_of_order_id_refused_before_writing(spark, emb, tmp_path):
     assert _state_rows(spark, idx) == before
 
 
+def test_out_of_order_id_refused_against_flat_legacy_append(
+    spark, emb, tmp_path
+):
+    """A flat append directory (centroid_id as a data column, no
+    ``centroid_id=`` subdirectories) is history too: its higher ids
+    must trip the monotone guard, not slip past the footer prescreen
+    that only walks the per-cluster subdirectories."""
+    n = emb.count()
+    idx = _fresh(tmp_path, "sem_flat")
+    build_semantic_index(
+        emb.filter(F.col("vec_id") < n // 2), idx, threshold=THRESH, n_centroids=K
+    )
+    spark.read.parquet(f"{idx}/assigned").withColumn(
+        "vec_id", F.col("vec_id") + n
+    ).write.parquet(f"{idx}/appends/batch-legacy")
+    with pytest.raises(ValueError, match="not above cluster"):
+        semantic_index_append(spark, idx, emb.filter(F.col("vec_id") >= n // 2))
+
+
 @pytest.mark.oracle
 def test_tombstone_forgets_history(spark, tmp_path):
     """Deleting an id removes it from the state immediately AND stops

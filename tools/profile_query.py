@@ -1,7 +1,7 @@
 """Per-job wall-time profiler for registered queries (guide §1).
 
-Runs one or more registered queries exactly the way bench.py does
-(noop sink, warmup first), with the Spark event log enabled, then
+Runs one or more registered queries into a noop sink, warmup first,
+with the Spark event log enabled, then
 attributes wall time job-by-job using each job's call site — which
 separates eager index-build writes, driver collects, localCheckpoints,
 and the final noop sink inside one "query" timing.

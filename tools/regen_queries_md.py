@@ -55,10 +55,6 @@ def main() -> None:
             f"headroom for {100 - n} more"
         ),
     }
-    bench = _latest_bench()
-    if bench is not None:
-        rnd, total = bench
-        spans["bench-band"] = f"{total:.0f} s measured in round {rnd}"
     readme = os.path.join(REPO, "README.md")
     with open(readme) as f:
         text = f.read()
@@ -73,40 +69,6 @@ def main() -> None:
             print(f"README {key} markers missing - not patched")
     with open(readme, "w") as f:
         f.write(text)
-
-
-def _latest_bench() -> tuple[int, float] | None:
-    """(round, total seconds) from the newest committed BENCH_r*.json —
-    the source for the README's bench-band span, so the stated number
-    is always a driver measurement, never a hand-written claim."""
-    import glob
-    import json
-    import re
-
-    best = None
-    for path in glob.glob(os.path.join(REPO, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        # The driver wraps bench.py's JSON line: the total lives at
-        # parsed.value (top-level keys are n/rc/cpus/tail/parsed).
-        total = (data.get("parsed") or {}).get("value")
-        if isinstance(total, (int, float)) and (
-            best is None or int(m.group(1)) > best[0]
-        ):
-            best = (int(m.group(1)), float(total))
-    if best is None:
-        print(
-            "WARNING: no BENCH_r*.json parsed - README bench-band span "
-            "left stale",
-            file=sys.stderr,
-        )
-    return best
 
 
 if __name__ == "__main__":
