@@ -1,26 +1,34 @@
-"""Small driver-literal DataFrames without Python-worker tasks.
+"""Driver-known DataFrames without Python-worker tasks.
 
-``spark.createDataFrame(rows, schema)`` backs the frame with a
-parallelized Python RDD sliced to ``defaultParallelism`` partitions.
-Every execution of that plan — even under ``coalesce(1)`` — evaluates
-all slices through Python workers, which costs ~4-5 s of fixed
-per-action overhead on a 32-core local master (measured: a one-row
-config-manifest parquet write dropped 4.7 s → 0.25 s with this
-helper). The index builders write such manifests on every build, so
-the overhead was the single largest fixed cost in the registered
-index queries.
+Only a *list* ``spark.createDataFrame(rows, schema)`` is Python-RDD
+backed: it plans as ``Scan ExistingRDD`` over a parallelized Python
+RDD sliced to ``defaultParallelism`` partitions, and every execution
+of that plan — even under ``coalesce(1)`` — evaluates all slices
+through Python workers, which costs ~4-5 s of fixed per-action
+overhead on a 32-core local master (measured: a one-row
+config-manifest parquet write dropped 4.7 s → 0.25 s with
+:func:`local_rows_df`). A ``createDataFrame(pyarrow.Table, schema)``
+instead ships the rows to the JVM once as Arrow batches and plans as a
+pure-JVM ``LocalTableScan``. This module has one builder for each
+size:
 
-:func:`local_rows_df` instead renders the rows as ONE JVM-side
-expression — ``inline(array(named_struct(...), ...))`` over a
-single-partition ``range(1)`` — so the plan is a pure-JVM projection:
-no Python task, no RDD scan, and Catalyst folds it to a local
-relation. The expression is built as a single parsed STRING, not
-per-cell ``F.lit`` Columns: a 1k-cell centroid/codebook table costs
-~1 s of driver-side py4j round trips the ``F.lit`` way vs ~ms as one
-``expr()`` parse (the ``similarity.float_matrix_lit`` measurement).
-Intended for SMALL driver-known tables (config manifests,
-anchor/segment label frames, centroid/codebook tables — up to a few
-thousand cells); large literals belong in parquet.
+:func:`local_rows_df` renders the rows as ONE JVM-side expression —
+``inline(array(named_struct(...), ...))`` over a single-partition
+``range(1)`` — so the plan is a pure-JVM projection: no Python task,
+no RDD scan, and Catalyst folds it to a local relation. The
+expression is built as a single parsed STRING, not per-cell ``F.lit``
+Columns: a 1k-cell centroid/codebook table costs ~1 s of driver-side
+py4j round trips the ``F.lit`` way vs ~ms as one ``expr()`` parse (the
+``similarity.float_matrix_lit`` measurement). Intended for SMALL
+driver-known tables (config manifests, anchor/segment label frames,
+centroid/codebook samples — up to a few thousand cells); the SQL text
+grows with every cell.
+
+:func:`arrow_rows_df` builds a ``pyarrow.Table`` of the declared
+column types and hands it to ``createDataFrame``: the cost is one
+Arrow serialisation, not one SQL token per cell, so it carries the
+workbook sheets and trained centroid tables. Large tables belong in
+parquet.
 """
 
 from __future__ import annotations
@@ -29,8 +37,11 @@ import math
 
 from datetime import date, datetime
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -143,3 +154,18 @@ def local_rows_df(
     return spark.range(0, 1, 1, 1).select(
         F.inline(F.expr("array(" + ",".join(rendered) + ")"))
     )
+
+
+def arrow_rows_df(
+    spark: SparkSession, schema: str | StructType, rows: list[tuple]
+) -> DataFrame:
+    """DataFrame of driver-local ``rows`` (tuples) under a DDL-string or
+    ``StructType`` schema, built from a ``pyarrow.Table`` of exactly
+    the declared column types. The frame's schema is ``schema`` and
+    its executed plan is a ``LocalTableScan`` at any row count,
+    including zero (see module docstring). A row whose arity differs
+    from the schema, or a cell of the wrong type, raises from pyarrow
+    — there is no silent fallback to the list path."""
+    dt = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    cells = pa.array(rows, type=pa.struct(to_arrow_schema(dt)))
+    return spark.createDataFrame(pa.Table.from_struct_array(cells), dt)

@@ -188,9 +188,10 @@ def train_pq_codebooks(
             (s, j, [float(x) for x in c])
             for j, c in enumerate(model.clusterCenters())
         )
-    # JVM-literal frame, not createDataFrame: the trained table is the
-    # same m×ksub shape as the sampled codebooks, and the Python-RDD
-    # path costs ~4-5s PER ACTION through whatever plan embeds it
+    # JVM-literal frame, not a list createDataFrame: the trained table
+    # is the same m×ksub shape as the sampled codebooks, and the
+    # Python-RDD path costs ~4-5s PER ACTION through whatever plan
+    # embeds it
     return local_rows_df(
         spark, "sub_id int, code_id int, codeword array<double>", out
     )

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark import fsio
-from py_data_pipeline_app_spark.functions.frames import local_rows_df
+from py_data_pipeline_app_spark.functions.frames import arrow_rows_df, local_rows_df
 from py_data_pipeline_app_spark.functions.text import md5_long
 from py_data_pipeline_app_spark.operators.dedup import _bucket_member_pairs
 from py_data_pipeline_app_spark.partitioning import fan_out
@@ -813,11 +813,12 @@ def train_centroids(
 ) -> DataFrame:
     """(centroid_id, cvec): k-means coarse centroids via Spark ML's
     distributed Lloyd's (deterministic seed). The k×dim result
-    collects to the driver (a few KB) and re-enters the plan as a
-    small table, so it broadcasts into any probing or index-build
-    plan — including :func:`build_ivf_index`'s ``cents`` parameter,
-    which persists trained centroids behind the same partition-pruned
-    probing path as the hash-sample pick."""
+    collects to the driver (a few KB) and re-enters the plan as an
+    Arrow local relation (a ``LocalTableScan``), so it broadcasts into
+    any probing or index-build plan — including
+    :func:`build_ivf_index`'s ``cents`` parameter, which persists
+    trained centroids behind the same partition-pruned probing path as
+    the hash-sample pick."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -825,9 +826,10 @@ def train_centroids(
     model = KMeans(
         k=n_centroids, seed=seed, maxIter=max_iter, featuresCol="features"
     ).fit(train)
-    return corpus.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+    return arrow_rows_df(
+        corpus.sparkSession,
         "centroid_id int, cvec array<double>",
+        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
     )
 
 

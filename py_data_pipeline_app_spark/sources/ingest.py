@@ -13,10 +13,13 @@ Reference semantics re-expressed (app.py:67,126-129):
 
 Scale posture: an .xlsx is a zip container — not splittable, driver-side
 by nature, and small in practice (the reference's sheets are ≤ a few
-thousand rows). The driver parses it and ``spark.createDataFrame``
-parallelizes the rows. For at-scale ingest the staging format is
-CSV/Parquet (:func:`ingest_csv_dir` / :func:`ingest_staged_parquet`),
-which Spark reads distributed with the same post-ingest contract.
+thousand rows). The driver decodes the zip, and each sheet enters Spark
+as an Arrow local relation (``functions/frames.arrow_rows_df``): a
+``LocalTableScan`` of the declared schema, so no upload job runs a
+Python task to re-read the ingested rows. For at-scale ingest the
+staging format is CSV/Parquet (:func:`ingest_csv_dir` /
+:func:`ingest_staged_parquet`), which Spark reads distributed with the
+same post-ingest contract.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark import schemas
+from py_data_pipeline_app_spark.functions.frames import arrow_rows_df
 from py_data_pipeline_app_spark.sources.xlsx import read_xlsx_sheets
 
 REQUIRED_SHEETS = {"Transactions", "Customers", "Products"}
@@ -76,7 +80,9 @@ def sheets_to_dataframes(
 ) -> dict[str, DataFrame]:
     """Post-ingest DataFrame dict — the contract process_upload takes:
     Transactions/Products with promoted lowercase headers against their
-    declared all-string schemas, Customers as (raw, _sheet_pos)."""
+    declared all-string schemas, Customers as (raw, _sheet_pos). Rows
+    arrive rectangular (the readers pad them; the header check pins the
+    width), and every frame is an Arrow local relation."""
     missing = REQUIRED_SHEETS - set(raw_sheets)
     if missing:
         raise MissingSheetsError(
@@ -90,15 +96,12 @@ def sheets_to_dataframes(
             raise ValueError(
                 f"Sheet {name!r} header mismatch: got {header}, want {expected}"
             )
-        out[name] = spark.createDataFrame(
-            [[None if v is None else str(v) for v in row] for row in data], schema
-        )
-    out["Customers"] = spark.createDataFrame(
-        [
-            (None if not row else row[0], pos)
-            for pos, row in enumerate(raw_sheets["Customers"])
-        ],
+        rows = [tuple(None if v is None else str(v) for v in row) for row in data]
+        out[name] = arrow_rows_df(spark, schema, rows)
+    out["Customers"] = arrow_rows_df(
+        spark,
         schemas.CUSTOMERS_RAW,
+        [(row[0], pos) for pos, row in enumerate(raw_sheets["Customers"])],
     )
     return out
 

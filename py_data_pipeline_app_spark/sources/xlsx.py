@@ -4,9 +4,10 @@ The reference's front door is ``pd.read_excel(sheet_name=None,
 header=None)`` (reference app.py:67) via openpyxl. Excel workbooks are
 driver-side artifacts by nature — a zip container is not splittable and
 the reference's sheets are thousands of rows — so the engine reads them
-on the driver and parallelizes afterwards. This module implements the
-read (and a writer for tests/report parity, reference app.py:155-167)
-with nothing but ``zipfile`` + ``xml.etree`` so ingest works even where
+on the driver and hands each sheet to Spark as an Arrow local relation
+(:mod:`ingest`). This module implements the read (and a writer for
+tests/report parity, reference app.py:155-167) with nothing but
+``zipfile`` + ``xml.etree`` so ingest works even where
 openpyxl/xlsxwriter are not installed; :mod:`ingest` prefers pandas
 when available.
 

@@ -14,6 +14,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 
 from py_data_pipeline_app_spark import schemas
+from py_data_pipeline_app_spark.functions.frames import arrow_rows_df
 
 PRODUCTS = [
     ("P001", "Protein Powder", "Supplements", "55"),
@@ -41,7 +42,8 @@ def make_workbook(
     seed: int = 42,
 ) -> dict[str, DataFrame]:
     """3-sheet workbook as post-ingest DataFrames (headers already
-    promoted; Customers as (raw, _sheet_pos))."""
+    promoted; Customers as (raw, _sheet_pos)), built by the same Arrow
+    sheet builder as ingest, so they have the production plan shape."""
     rng = random.Random(seed)
 
     customer_ids = [f"C{i:04d}" for i in range(1, n_customers + 1)]
@@ -89,7 +91,7 @@ def make_workbook(
         )
 
     return {
-        "Transactions": spark.createDataFrame(txn_rows, schemas.TRANSACTIONS),
-        "Customers": spark.createDataFrame(blob_rows, schemas.CUSTOMERS_RAW),
-        "Products": spark.createDataFrame(PRODUCTS, schemas.PRODUCTS),
+        "Transactions": arrow_rows_df(spark, schemas.TRANSACTIONS, txn_rows),
+        "Customers": arrow_rows_df(spark, schemas.CUSTOMERS_RAW, blob_rows),
+        "Products": arrow_rows_df(spark, schemas.PRODUCTS, PRODUCTS),
     }

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from py_data_pipeline_app_spark.functions.frames import local_rows_df
+from py_data_pipeline_app_spark.functions.frames import arrow_rows_df, local_rows_df
 
 
 def test_matches_create_dataframe(spark):
@@ -148,3 +148,21 @@ def test_row_arity_mismatch_refused(spark):
         local_rows_df(spark, "a int, b int", [(1, 2), (1, 2, 3)])
     with _pytest.raises(ValueError, match="row 0 has 1 cell"):
         local_rows_df(spark, "a int, b int", [(1,)])
+
+
+def test_arrow_rows_df_matches_create_dataframe(spark):
+    """The Arrow builder: same rows and exactly the same schema as the
+    list createDataFrame, as a LocalTableScan; arity drift raises."""
+    import pyarrow as pa
+    import pytest as _pytest
+
+    schema = "a string, b int, c double, e array<double>"
+    rows = [("x", 1, 2.5, [1.0, 2.0]), (None, None, None, None), ("y", -7, -0.0, [])]
+    got = arrow_rows_df(spark, schema, rows)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    with _pytest.raises(pa.ArrowInvalid):
+        arrow_rows_df(spark, "a int, b int", [(1, 2), (1, 2, 3)])

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from py_data_pipeline_app_spark import pipeline
+from py_data_pipeline_app_spark import pipeline, schemas
 from py_data_pipeline_app_spark.pipeline import process_upload
 from py_data_pipeline_app_spark.sources.ingest import (
     MissingSheetsError,
@@ -193,3 +193,59 @@ def test_merged_mirror_is_distributed_and_excel_sheet_is_capped(spark, tmp_path)
 
     back = read_xlsx_sheets(out)
     assert len(back["MergedData"]) == 5 + 1  # capped rows + header
+
+
+def _assert_local_relation(df, schema):
+    """Arrow-built frame: a pure-JVM LocalTableScan of exactly the
+    declared schema — no Python-RDD scan for any action to re-run."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert df.schema == schema
+
+
+def test_ingested_sheets_are_arrow_local_relations(spark, tmp_path):
+    p = str(tmp_path / "nulls.xlsx")
+    write_xlsx(
+        p,
+        {
+            "Transactions": [
+                TXN_HEADER,
+                ["TXN00001", "C0001", 45001, "P001", "N/A", "Cash"],
+                ["TXN00002", None, "45002", "P002", "40.50", None],
+            ],
+            "Customers": [
+                ["{C0001_Ann_a@x.com_1990-01-01_1 First St_44000.5}"],
+                [None],
+                ["no braces at all"],
+            ],
+            "Products": [PROD_HEADER, ["P001", "Protein Powder", None, 55]],
+        },
+    )
+    got = ingest_workbook(spark, p)
+    want_schema = {
+        "Transactions": schemas.TRANSACTIONS,
+        "Customers": schemas.CUSTOMERS_RAW,
+        "Products": schemas.PRODUCTS,
+    }
+    for name, df in got.items():
+        _assert_local_relation(df, want_schema[name])
+    assert [tuple(r) for r in got["Transactions"].collect()] == [
+        ("TXN00001", "C0001", "45001", "P001", "N/A", "Cash"),
+        ("TXN00002", None, "45002", "P002", "40.50", None),
+    ]
+    assert [tuple(r) for r in got["Customers"].orderBy("_sheet_pos").collect()] == [
+        ("{C0001_Ann_a@x.com_1990-01-01_1 First St_44000.5}", 0),
+        (None, 1),
+        ("no braces at all", 2),
+    ]
+    assert [tuple(r) for r in got["Products"].collect()] == [
+        ("P001", "Protein Powder", None, "55"),
+    ]
+
+    empty = sheets_to_dataframes(
+        spark,
+        {"Transactions": [TXN_HEADER], "Customers": [], "Products": [PROD_HEADER]},
+    )
+    for name, df in empty.items():
+        _assert_local_relation(df, want_schema[name])
+        assert df.count() == 0

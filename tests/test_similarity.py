@@ -200,6 +200,29 @@ def test_indexed_ivf_with_trained_centroids_matches_on_the_fly(spark, emb, tmp_p
     assert got == exp
 
 
+def test_trained_centroids_are_a_local_relation(emb):
+    """The trained centroid table re-enters plans as an Arrow local
+    relation: a LocalTableScan of the declared schema, never a
+    Python-RDD scan that each embedding plan would re-run."""
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, IntegerType, StructField, StructType,
+    )
+
+    from py_data_pipeline_app_spark.operators.similarity import train_centroids
+
+    cents = train_centroids(emb, n_centroids=4, seed=7, max_iter=5)
+    plan = cents._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert cents.schema == StructType([
+        StructField("centroid_id", IntegerType()),
+        StructField("cvec", ArrayType(DoubleType())),
+    ])
+    dim = len(emb.first().embedding)
+    rows = cents.collect()
+    assert [r.centroid_id for r in rows] == [0, 1, 2, 3]
+    assert all(len(r.cvec) == dim for r in rows)
+
+
 def test_trained_ivf_recall_at_least_hash_sample(emb):
     from py_data_pipeline_app_spark.operators.similarity import ivf_topk_trained
 
