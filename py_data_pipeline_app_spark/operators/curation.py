@@ -149,28 +149,6 @@ def ngrams_of(toks_src: str, n: int) -> Column:
     )
 
 
-def gram_repetition_stats(
-    df: DataFrame, *, n: int = 2, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document ``n``-gram repetition: total grams, the top gram's
-    share, and the share of occurrences in repeated grams — same
-    zero-shuffle fold shape as :func:`word_repetition_stats`."""
-    # stage the token array before ngrams_of's per-gram lambda reads it
-    # — an inlined tokens() re-evaluates its split per gram position
-    # (the word_shingles staging rule); fan_out past a one-file scan
-    d = (
-        fan_out(df).withColumn("_rtoks", tokens(text_col))
-        .withColumn("_g", ngrams_of("`_rtoks`", n))
-        .withColumn("_gs", run_length_stats("sort_array(`_g`)"))
-    )
-    return d.select(
-        F.col(id_col),
-        F.size("_g").cast("long").alias(f"n_{n}grams"),
-        F.col("_gs.top_count").alias(f"top_{n}gram_count"),
-        F.col("_gs.dup_occurrences").alias(f"dup_{n}gram_occurrences"),
-    )
-
-
 def repetition_filter(
     df: DataFrame,
     *,
@@ -453,7 +431,7 @@ def perplexity_buckets(
         # TakeOrdered over every token) — referencing that frame twice
         # (scoring join + floor aggregate) would re-run the corpus-wide
         # aggregation per reference. Collect the V rows ONCE and
-        # re-enter them as a JVM literal (the collect-once rule the
+        # re-enter them as a local relation (the collect-once rule the
         # index builders follow, SURVEY §4.3); the table broadcasts
         # anyway, so driver residency is not new cost.
         lm_rows = unigram_lm(
@@ -1667,8 +1645,8 @@ def bpe_merge_table(
 ) -> DataFrame:
     """:func:`bpe_train` as a relation: (merge_rank, left, right,
     n_occurrences) — the registered-query wrapper (the merge table is
-    n_merges driver-known rows; local_rows_df renders them as one
-    literal frame)."""
+    n_merges driver-known rows; local_rows_df builds them as one
+    local relation)."""
     from py_data_pipeline_app_spark.functions.frames import local_rows_df
 
     rows = bpe_train(docs, n_merges=n_merges, text_col=text_col, level=level)

@@ -188,10 +188,8 @@ def train_pq_codebooks(
             (s, j, [float(x) for x in c])
             for j, c in enumerate(model.clusterCenters())
         )
-    # JVM-literal frame, not a list createDataFrame: the trained table
-    # is the same m×ksub shape as the sampled codebooks, and the
-    # Python-RDD path costs ~4-5s PER ACTION through whatever plan
-    # embeds it
+    # an Arrow local relation, like the sampled codebooks: no plan
+    # that embeds the trained table runs a Python task
     return local_rows_df(
         spark, "sub_id int, code_id int, codeword array<double>", out
     )
@@ -209,8 +207,8 @@ def _codebook_rows(codebooks) -> list:
 
 
 def _codebook_rows_df(spark, rows: list) -> DataFrame:
-    """The collected codebook rows as a JVM-literal frame (zero Python
-    tasks, no re-scan of whatever derived them)."""
+    """The collected codebook rows as an Arrow local relation (zero
+    Python tasks, no re-scan of whatever derived them)."""
     return local_rows_df(
         spark,
         "sub_id int, code_id int, codeword array<double>",

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark import fsio
-from py_data_pipeline_app_spark.functions.frames import arrow_rows_df, local_rows_df
+from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import md5_long
 from py_data_pipeline_app_spark.operators.dedup import _bucket_member_pairs
 from py_data_pipeline_app_spark.partitioning import fan_out
@@ -553,7 +553,7 @@ def _centroid_rows(cents) -> list:
 
 
 def _centroid_rows_df(spark, rows: list) -> DataFrame:
-    """The collected centroid rows as a JVM-literal frame (zero
+    """The collected centroid rows as an Arrow local relation (zero
     Python tasks, no re-scan of whatever derived them)."""
     return local_rows_df(
         spark,
@@ -826,7 +826,7 @@ def train_centroids(
     model = KMeans(
         k=n_centroids, seed=seed, maxIter=max_iter, featuresCol="features"
     ).fit(train)
-    return arrow_rows_df(
+    return local_rows_df(
         corpus.sparkSession,
         "centroid_id int, cvec array<double>",
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
@@ -849,7 +849,7 @@ def _ivf_probe_topk(
     ``nprobe`` nearest buckets, exact-rank the scanned candidates.
 
     The centroid table is collected ONCE and re-enters both the
-    assignment and the probe plan as a JVM-literal frame — when
+    assignment and the probe plan as an Arrow local relation — when
     ``cents`` is a derived sample over the corpus, each plan that
     embedded the frame directly would re-run that sample (full corpus
     scans at 100 TB for a few KB of state)."""

@@ -36,6 +36,7 @@ from py_data_pipeline_app_spark.sources.ingest import (
     REQUIRED_SHEETS,
     MissingSheetsError,
 )
+from py_data_pipeline_app_spark.sources.xlsx import write_xlsx
 from py_data_pipeline_app_spark.warehouse import Warehouse
 
 
@@ -180,9 +181,8 @@ def write_excel_report(
     (CategoryTotalsSummary / TopSpenders / MergedData, app.py:155-167).
 
     Post-aggregation frames (Summary/TopSpenders) are small, so they
-    come to the driver via Arrow; pandas+xlsxwriter/openpyxl writes the
-    workbook when installed (byte-compatible with the reference sink),
-    else the stdlib codec (sources/xlsx.py) does.
+    come to the driver via Arrow, and the stdlib codec
+    (sources/xlsx.py) writes the workbook.
 
     The full merged fact is handled scale-first: the authoritative
     mirror is written DISTRIBUTED to ``{base}_MergedData`` parquet via
@@ -202,20 +202,11 @@ def write_excel_report(
     }
     for sheet in ("CategoryTotalsSummary", "TopSpenders"):
         frames[sheet].to_parquet(f"{base}_{sheet}.parquet")
-    try:
-        import pandas as pd
-
-        with pd.ExcelWriter(path) as xw:  # engine: whatever is installed
-            for sheet, pdf in frames.items():
-                pdf.to_excel(xw, sheet_name=sheet, index=False)
-    except (ImportError, ValueError, ModuleNotFoundError):
-        from py_data_pipeline_app_spark.sources.xlsx import write_xlsx
-
-        write_xlsx(
-            path,
-            {
-                sheet: [list(pdf.columns)] + pdf.values.tolist()
-                for sheet, pdf in frames.items()
-            },
-        )
+    write_xlsx(
+        path,
+        {
+            sheet: [list(pdf.columns)] + pdf.values.tolist()
+            for sheet, pdf in frames.items()
+        },
+    )
     return True

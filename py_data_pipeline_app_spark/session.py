@@ -9,7 +9,7 @@ the same knobs are correct on a 1000-executor cluster:
   let AQE shrink, rather than hand-pinning per-job;
 - UTC session timezone so results are comparable across engines
   (DuckDB oracle timestamps are UTC-naive);
-- Arrow enabled for any pandas interchange (ingest bridge, pandas UDFs).
+- Arrow enabled for any pandas interchange (pandas UDFs, ``toPandas``).
 """
 
 from __future__ import annotations

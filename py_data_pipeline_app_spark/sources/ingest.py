@@ -13,13 +13,13 @@ Reference semantics re-expressed (app.py:67,126-129):
 
 Scale posture: an .xlsx is a zip container — not splittable, driver-side
 by nature, and small in practice (the reference's sheets are ≤ a few
-thousand rows). The driver decodes the zip, and each sheet enters Spark
-as an Arrow local relation (``functions/frames.arrow_rows_df``): a
-``LocalTableScan`` of the declared schema, so no upload job runs a
-Python task to re-read the ingested rows. For at-scale ingest the
-staging format is CSV/Parquet (:func:`ingest_csv_dir` /
-:func:`ingest_staged_parquet`), which Spark reads distributed with the
-same post-ingest contract.
+thousand rows). The driver decodes the zip with the stdlib codec
+(:mod:`sources.xlsx`), and each sheet enters Spark as a one-partition
+Arrow local relation (``functions/frames.local_rows_df``) of the
+declared schema, so no upload job runs a Python task to re-read the
+ingested rows. For at-scale ingest the staging format is CSV/Parquet
+(:func:`ingest_csv_dir` / :func:`ingest_staged_parquet`), which Spark
+reads distributed with the same post-ingest contract.
 """
 
 from __future__ import annotations
@@ -27,10 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark import schemas
-from py_data_pipeline_app_spark.functions.frames import arrow_rows_df
+from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.sources.xlsx import read_xlsx_sheets
 
 REQUIRED_SHEETS = {"Transactions", "Customers", "Products"}
@@ -44,26 +43,6 @@ SHEET_SCHEMAS = {
 class MissingSheetsError(ValueError):
     """Raised when the workbook lacks required sheets (reference
     app.py:68-71 flashes and redirects; the engine raises typed)."""
-
-
-def _read_workbook_rows(path: str) -> dict[str, list[list[str | None]]]:
-    """All sheets as raw string rows. Prefers pandas+openpyxl — byte-
-    compatible with the reference's ``pd.read_excel(sheet_name=None,
-    header=None)`` — and falls back to the stdlib codec
-    (sources/xlsx.py) where no Excel engine is installed."""
-    try:
-        import pandas as pd
-
-        frames = pd.read_excel(path, sheet_name=None, header=None, dtype=object)
-        return {
-            name: [
-                [None if pd.isna(v) else str(v) for v in row]
-                for row in pdf.itertuples(index=False)
-            ]
-            for name, pdf in frames.items()
-        }
-    except ImportError:
-        return read_xlsx_sheets(path)
 
 
 def promote_header(rows: list[list[str | None]]) -> tuple[list[str], list[list]]:
@@ -81,8 +60,8 @@ def sheets_to_dataframes(
     """Post-ingest DataFrame dict — the contract process_upload takes:
     Transactions/Products with promoted lowercase headers against their
     declared all-string schemas, Customers as (raw, _sheet_pos). Rows
-    arrive rectangular (the readers pad them; the header check pins the
-    width), and every frame is an Arrow local relation."""
+    arrive rectangular (the reader pads them; the header check pins the
+    width), and every frame is a one-partition Arrow local relation."""
     missing = REQUIRED_SHEETS - set(raw_sheets)
     if missing:
         raise MissingSheetsError(
@@ -97,8 +76,8 @@ def sheets_to_dataframes(
                 f"Sheet {name!r} header mismatch: got {header}, want {expected}"
             )
         rows = [tuple(None if v is None else str(v) for v in row) for row in data]
-        out[name] = arrow_rows_df(spark, schema, rows)
-    out["Customers"] = arrow_rows_df(
+        out[name] = local_rows_df(spark, schema, rows)
+    out["Customers"] = local_rows_df(
         spark,
         schemas.CUSTOMERS_RAW,
         [(row[0], pos) for pos, row in enumerate(raw_sheets["Customers"])],
@@ -110,7 +89,7 @@ def ingest_workbook(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """SRC1: one .xlsx → post-ingest DataFrames."""
     if not path.lower().endswith(".xlsx"):  # SRC3 analog (reference app.py:55-56)
         raise ValueError(f"Only .xlsx uploads are accepted, got: {path}")
-    return sheets_to_dataframes(spark, _read_workbook_rows(path))
+    return sheets_to_dataframes(spark, read_xlsx_sheets(path))
 
 
 def ingest_csv_dir(spark: SparkSession, directory: str) -> dict[str, DataFrame]:

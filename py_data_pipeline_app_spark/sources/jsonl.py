@@ -27,22 +27,6 @@ def _with_corrupt(schema: T.StructType) -> T.StructType:
     return T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())])
 
 
-def parse_jsonl(raw: DataFrame, schema: T.StructType, *, line_col: str = "value") -> DataFrame:
-    """Parse a frame of raw JSON lines into ``schema`` plus the
-    corrupt-record column (null for clean rows, the raw line for
-    malformed ones). Pure projection — composes with any upstream
-    (file scan, Kafka value, streaming source)."""
-    full = _with_corrupt(schema)
-    parsed = raw.select(
-        F.from_json(
-            F.col(line_col),
-            full,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("_j")
-    )
-    return parsed.select("_j.*")
-
-
 def read_jsonl(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:

@@ -69,8 +69,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, name, sf_dir) for name in names}
 
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register the testdata tables as temp views for the SQL API."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

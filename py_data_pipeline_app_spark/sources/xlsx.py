@@ -5,11 +5,10 @@ header=None)`` (reference app.py:67) via openpyxl. Excel workbooks are
 driver-side artifacts by nature — a zip container is not splittable and
 the reference's sheets are thousands of rows — so the engine reads them
 on the driver and hands each sheet to Spark as an Arrow local relation
-(:mod:`ingest`). This module implements the read (and a writer for
-tests/report parity, reference app.py:155-167) with nothing but
-``zipfile`` + ``xml.etree`` so ingest works even where
-openpyxl/xlsxwriter are not installed; :mod:`ingest` prefers pandas
-when available.
+(:mod:`ingest`). This module is the engine's only workbook codec: the
+read (:mod:`ingest`) and the write (the 3-sheet report, reference
+app.py:155-167, and test fixtures), with nothing but ``zipfile`` +
+``xml.etree`` — no openpyxl or xlsxwriter.
 
 Cell fidelity: every value is surfaced as a string (or None for empty
 cells), matching the engine's stringly-typed ingest contract

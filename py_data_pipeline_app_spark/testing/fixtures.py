@@ -14,7 +14,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 
 from py_data_pipeline_app_spark import schemas
-from py_data_pipeline_app_spark.functions.frames import arrow_rows_df
+from py_data_pipeline_app_spark.functions.frames import local_rows_df
 
 PRODUCTS = [
     ("P001", "Protein Powder", "Supplements", "55"),
@@ -91,7 +91,7 @@ def make_workbook(
         )
 
     return {
-        "Transactions": arrow_rows_df(spark, schemas.TRANSACTIONS, txn_rows),
-        "Customers": arrow_rows_df(spark, schemas.CUSTOMERS_RAW, blob_rows),
-        "Products": arrow_rows_df(spark, schemas.PRODUCTS, PRODUCTS),
+        "Transactions": local_rows_df(spark, schemas.TRANSACTIONS, txn_rows),
+        "Customers": local_rows_df(spark, schemas.CUSTOMERS_RAW, blob_rows),
+        "Products": local_rows_df(spark, schemas.PRODUCTS, PRODUCTS),
     }

@@ -1,13 +1,15 @@
-"""local_rows_df (functions/frames): JVM-literal small frames must be
-row- and type-identical to their createDataFrame equivalents — they
-replace the Python-RDD-backed path on every index-manifest write, so
+"""local_rows_df (functions/frames): driver-known frames must be row-
+and type-identical to their createDataFrame equivalents — they replace
+the Python-RDD-backed path on every ingest and index-manifest write, so
 a silent type drift here would corrupt config fail-loudly checks."""
 
 from __future__ import annotations
 
+import pathlib
+
 from pyspark.sql import types as T
 
-from py_data_pipeline_app_spark.functions.frames import arrow_rows_df, local_rows_df
+from py_data_pipeline_app_spark.functions.frames import local_rows_df
 
 
 def test_matches_create_dataframe(spark):
@@ -19,14 +21,8 @@ def test_matches_create_dataframe(spark):
     ]
     got = local_rows_df(spark, schema, rows)
     want = spark.createDataFrame(rows, schema)
-    # names + types identical; nullability may be tighter (documented)
-    assert [(f.name, f.dataType) for f in got.schema.fields] == [
-        (f.name, f.dataType) for f in want.schema.fields
-    ]
-    key = lambda t: tuple((v is None, str(v)) for v in t)  # noqa: E731
-    assert sorted(map(tuple, got.collect()), key=key) == sorted(
-        map(tuple, want.collect()), key=key
-    )
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
 
 
 def test_struct_type_schema(spark):
@@ -53,12 +49,15 @@ def test_empty_rows(spark):
 
 
 def test_no_python_rdd_scan(spark):
-    """The point of the helper: the executed plan must be pure JVM —
-    no ExistingRDD (Python parallelize) scan node."""
+    """The point of the helper: the executed plan must be pure JVM — a
+    LocalTableScan, no ExistingRDD (Python parallelize) scan node — and
+    one partition at any row count."""
     df = local_rows_df(spark, "k string", [("a",), ("b",)])
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
     assert df.count() == 2
+    wide = local_rows_df(spark, "i int", [(i,) for i in range(600)])
+    assert wide.rdd.getNumPartitions() == 1
 
 
 def test_parquet_round_trip(spark, tmp_path):
@@ -71,7 +70,7 @@ def test_parquet_round_trip(spark, tmp_path):
 
 
 def test_string_escaping_round_trip(spark):
-    """The expr-string renderer must survive hostile strings — quotes,
+    """The builder must survive hostile strings — quotes,
     backslashes, control chars, unicode; a silent escaping bug would
     corrupt every label/manifest frame built from user data."""
     from hypothesis import given, settings
@@ -150,19 +149,14 @@ def test_row_arity_mismatch_refused(spark):
         local_rows_df(spark, "a int, b int", [(1,)])
 
 
-def test_arrow_rows_df_matches_create_dataframe(spark):
-    """The Arrow builder: same rows and exactly the same schema as the
-    list createDataFrame, as a LocalTableScan; arity drift raises."""
-    import pyarrow as pa
-    import pytest as _pytest
-
-    schema = "a string, b int, c double, e array<double>"
-    rows = [("x", 1, 2.5, [1.0, 2.0]), (None, None, None, None), ("y", -7, -0.0, [])]
-    got = arrow_rows_df(spark, schema, rows)
-    want = spark.createDataFrame(rows, schema)
-    assert got.schema == want.schema
-    assert got.collect() == want.collect()
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
-    with _pytest.raises(pa.ArrowInvalid):
-        arrow_rows_df(spark, "a int, b int", [(1, 2), (1, 2, 3)])
+def test_one_builder_for_driver_known_tables():
+    """Static: local_rows_df is the package's only createDataFrame call
+    site, so no second builder (a list or pandas createDataFrame, a
+    Python RDD) can come back unnoticed."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "py_data_pipeline_app_spark"
+    callers = sorted(
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if "createDataFrame(" in f.read_text(encoding="utf-8")
+    )
+    assert callers == ["functions/frames.py"]
