@@ -1,15 +1,31 @@
 """Thin wrappers over the Hadoop FileSystem API (the JVM-side
-``org.apache.hadoop.fs.FileSystem`` Spark already carries) so state
-layers (warehouse snapshots/logs, persisted indexes) manage their
+``org.apache.hadoop.fs.FileSystem`` Spark already carries) so every
+state layer — warehouse snapshots/logs and all persisted indexes
+(LSH, span, image/video dHash, IVF, IVF-PQ, semantic) — manages its
 files on ANY supported scheme — ``file:/`` locally, HDFS/S3A/GCS on a
 cluster — instead of the driver's local ``os``/``shutil`` module,
-which silently binds a component to a single machine's disk.
+which silently binds a component to a single machine's disk. This is
+the package's only filesystem layer: no other module talks to the
+Hadoop API directly (a static test pins it).
 
 Semantics notes:
 - paths without a scheme resolve against ``fs.defaultFS`` (local
   Spark: ``file:///``), exactly like every DataFrame read/write —
   so the warehouse and the frames it stores always agree on where
   the bytes live.
+- ``create_exclusive`` is the index lock's primitive: it creates a
+  marker file only if none exists, and reports whether it did.
+  Locally it is ``os.open(O_CREAT | O_EXCL)``, which the kernel makes
+  atomic, so exactly one of any number of racing callers wins. Other
+  schemes use ``FileSystem.create(path, overwrite=false)``, where a
+  ``FileAlreadyExistsException`` means "held": HDFS decides that on
+  the NameNode, atomically; S3A does NOT — its create is an existence
+  probe followed by an upload, so two racing callers can both win.
+  HDFS and S3A behaviour is as documented by Hadoop, not verified in
+  this repository's tests. (Hadoop's ``createNewFile`` is an
+  existence check followed by a create; on the local filesystem racing
+  callers were measured to get the marker two to six at a time, which
+  is why the lock does not use it.)
 - ``rename`` is atomic on HDFS and local filesystems (the property
   the compaction protocols rely on); on S3A it is a copy+delete —
   object-store deployments should point state roots at a consistent
@@ -33,6 +49,8 @@ import json
 import os as _os
 import shutil as _shutil
 from urllib.parse import urlparse as _urlparse
+
+from py4j.protocol import Py4JJavaError
 
 # fs.defaultFS per JVM gateway (one py4j read, then cached): decides
 # whether a scheme-less path is the driver-local filesystem.
@@ -59,8 +77,7 @@ def _local_path(spark, path: str) -> str | None:
 
 
 def hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for ``path`` — the same helper shape the
-    index modules use (operators/similarity.py:_hadoop_fs)."""
+    """(FileSystem, Path) for ``path`` on the Hadoop code path."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
@@ -121,9 +138,11 @@ def rename(spark, src: str, dst: str) -> None:
     Concurrency note: the local fast path is check-then-act (exists
     probe, then ``os.rename``, which silently REPLACES a file created
     in between — the Hadoop path would return false and raise). Every
-    call site is serialized by its index/compaction lock, which is
-    what makes the window unreachable; a new caller outside a lock
-    must not rely on rename-onto-existing failing loudly here."""
+    index call site runs under the index lock, whose marker is taken
+    with :func:`create_exclusive` (atomic locally and on HDFS, see the
+    module notes), so no second mutator of that index can be inside
+    the window. A caller outside such a lock must not rely on
+    rename-onto-existing failing loudly here."""
     ls, ld = _local_path(spark, src), _local_path(spark, dst)
     if ls is not None and ld is not None and not _os.path.exists(ld):
         # staged-commit shape (dst absent): plain os.rename, which
@@ -135,6 +154,32 @@ def rename(spark, src: str, dst: str) -> None:
     _, d = hadoop_fs(spark, dst)
     if not bool(fs.rename(s, d)):
         raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def create_exclusive(spark, path: str) -> bool:
+    """Create an empty file at ``path`` (and its parent directories)
+    only if nothing exists there; True if this call created it, False
+    if it already existed. Atomic locally (``O_CREAT | O_EXCL``) and on
+    HDFS; not on S3A (module notes)."""
+    lp = _local_path(spark, path)
+    if lp is not None:
+        _os.makedirs(_os.path.dirname(lp), exist_ok=True)
+        try:
+            _os.close(_os.open(lp, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY))
+        except FileExistsError:
+            return False
+        return True
+    fs, p = hadoop_fs(spark, path)
+    try:
+        fs.create(p, False).close()
+    except Py4JJavaError as e:
+        if (
+            e.java_exception.getClass().getName()
+            == "org.apache.hadoop.fs.FileAlreadyExistsException"
+        ):
+            return False
+        raise
+    return True
 
 
 def child_entries(spark, path: str) -> list[tuple[str, bool]]:

@@ -59,6 +59,7 @@ bucket_bytes / target_file_size at the target corpus).
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -140,45 +141,54 @@ def _batch_part_values(df: DataFrame, part_buckets: int) -> list[int] | None:
     return None if len(vals) >= part_buckets else vals
 
 
+@contextmanager
 def _acquire_index_lock(spark: SparkSession, index_path: str, what: str):
-    """Mutual exclusion between index mutators (folds and compactions):
-    an atomic ``createNewFile`` on a lock marker. Folds must be
+    """Mutual exclusion between index mutators (folds, appends,
+    deletes and compactions), held for the ``with`` block: the
+    ``_index.lock`` marker is created with
+    :func:`~py_data_pipeline_app_spark.fsio.create_exclusive`, so of
+    any number of racing mutators exactly one gets it (atomic on local
+    and HDFS paths; not on S3A, see the fsio notes). Folds must be
     serialized anyway (two concurrent folds would each miss the other's
     documents as history — silent missed pairs), and a compaction
     racing a fold could delete subdirectories mid-read; with the lock,
     either race fails LOUDLY instead. A crash can leave the marker
     behind — the error message names the path so an operator can remove
     a stale lock deliberately, never accidentally."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(f"{index_path}/{LOCK_FILE}")
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(jvm_path.getParent())
-    if not fs.createNewFile(jvm_path):
+    lock = f"{index_path}/{LOCK_FILE}"
+    if not fsio.create_exclusive(spark, lock):
         raise RuntimeError(
             f"index at {index_path} is locked by a concurrent fold or "
             f"compaction ({what} refused). If the previous operation crashed, "
-            f"remove the stale marker {index_path}/{LOCK_FILE} and retry."
+            f"remove the stale marker {lock} and retry."
         )
-    return fs, jvm_path
+    try:
+        yield
+    finally:
+        fsio.delete(spark, lock)
+
+
+_CONFIG_TYPES = {bool: "boolean", int: "int", str: "string"}
 
 
 def _check_or_write_config(
     spark: SparkSession,
     index_path: str,
-    num_perms: int,
-    bands: int,
-    exact: bool,
+    kind: str,
+    fields: dict,
     part_buckets: int | None,
     batch: DataFrame,
 ) -> int:
-    """One index = one (num_perms, bands, exact-mode, part_buckets)
-    configuration — band keys from different configurations NEVER
+    """One index = one configuration: the ordered ``fields`` (name →
+    value: what decides the index's keys and which pairs folds emit)
+    plus ``part_buckets``. Keys from different configurations NEVER
     match, so a mismatched fold would silently emit no cross-history
     pairs (the worst failure mode for a dedup system: false
     confidence), and a drifted ``part_buckets`` would send the same
-    band key to a DIFFERENT partition directory, so a pruned probe
-    would silently skip history written under the old scheme. The
-    first fold persists its configuration as a one-row parquet table
-    — ``part_buckets=None`` auto-sizes it there
+    key to a DIFFERENT partition directory, so a pruned probe would
+    silently skip history written under the old scheme. The first fold
+    persists the configuration as a one-row parquet table —
+    ``part_buckets=None`` auto-sizes it there
     (:func:`_auto_part_buckets`); every later fold validates against
     it (None adopts the stored fanout) and fails loudly on drift (an
     index written before the partitioned layout has no
@@ -188,36 +198,45 @@ def _check_or_write_config(
     single-bucket partitionBy would pay the layout's listing/write
     overhead and prune nothing)."""
     path = f"{index_path}/{CONFIG_SUBDIR}"
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
+    names = (*fields, "part_buckets")
+    if fsio.exists(spark, path):
         row = fsio.read_small_parquet_rows(spark, path)[0]
-        stored = getattr(row, "part_buckets", None)
-        have = (row.num_perms, row.bands, row.exact, stored)
+        have = tuple(getattr(row, f, None) for f in names)
+        stored = have[-1]
         want = (
-            num_perms,
-            bands,
-            exact,
+            *fields.values(),
             stored if part_buckets is None else part_buckets,
         )
         if stored is None or have != want:
             raise ValueError(
-                f"index at {index_path} was built with (num_perms, bands, "
-                f"exact, part_buckets)={have}, fold requested {want}; band "
-                "keys (and their partition directories) from different "
+                f"{kind} index at {index_path} was built with "
+                f"({', '.join(names)})={have}, fold requested {want}; keys "
+                "(and their partition directories) from different "
                 "configurations never match, so this fold would silently miss "
-                "every historical near-dup - rebuild the index or match its "
-                "configuration"
+                "or misreport every historical match - rebuild the index or "
+                "match its configuration"
             )
         return int(stored)
     if part_buckets is None:
         part_buckets = _auto_part_buckets(spark, batch)
+    values = (*fields.values(), part_buckets)
     local_rows_df(
         spark,
-        "num_perms int, bands int, exact boolean, part_buckets int",
-        [(num_perms, bands, exact, part_buckets)],
+        ", ".join(f"{n} {_CONFIG_TYPES[type(v)]}" for n, v in zip(names, values)),
+        [values],
     ).write.mode("overwrite").parquet(path)
     return int(part_buckets)
+
+
+def _batch_names(spark: SparkSession, root: str) -> list[str]:
+    """Sorted names of the ``batch-*`` subdirectories of ``root`` ([]
+    when it does not exist) — the unit every index table, tombstone
+    set and append log is written in."""
+    return [
+        name
+        for name, is_dir in fsio.child_entries(spark, root)
+        if is_dir and name.startswith("batch-")
+    ]
 
 
 def _pinned_history(
@@ -249,23 +268,18 @@ def _pinned_history(
     ``prune_to`` then applies an ``IN``-filter on the partition
     column, which Catalyst pushes into every scan as a
     ``PartitionFilters`` entry — the pruned posting-list probe."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(f"{index_path}/{subdir}")
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return local_rows_df(spark, like.schema, [])
+    root = f"{index_path}/{subdir}"
     dirs = [
-        str(s.getPath())
-        for s in fs.listStatus(jvm_path)
-        if s.isDirectory()
-        and s.getPath().getName().startswith("batch-")
-        and s.getPath().getName() != f"batch-{exclude_token}"
+        f"{root}/{name}"
+        for name in _batch_names(spark, root)
+        if name != f"batch-{exclude_token}"
     ]
     if not dirs:
         return local_rows_df(spark, like.schema, [])
     if PART_COL not in like.columns:
-        return spark.read.parquet(*sorted(dirs))
+        return spark.read.parquet(*dirs)
     hist: DataFrame | None = None
-    for d in sorted(dirs):
+    for d in dirs:
         part = spark.read.schema(like.schema).parquet(d)
         hist = part if hist is None else hist.unionByName(part)
     if prune_to is not None:
@@ -301,17 +315,6 @@ def _append_batch(
         (df.repartition(1) if single_file else df).write.mode(
             "overwrite"
         ).parquet(dest)
-
-
-def _has_data_files(fs, jvm_path) -> bool:
-    """True iff the directory holds any parquet data file, at any
-    depth (a partitioned batch dir nests them under ``pb=*``). A
-    ``_SUCCESS``-only directory — an empty fold's append — has none."""
-    it = fs.listFiles(jvm_path, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
-    return False
 
 
 DELETES_SUBDIR = "deletes"
@@ -357,12 +360,11 @@ def index_delete(
     to retry. Returns the batch token, or None for an empty ``ids``
     (a no-op tombstone directory would accrete listing cost
     forever)."""
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "delete")
-    try:
+    with _acquire_index_lock(spark, index_path, "delete"):
         token = batch_token or uuid.uuid4().hex[:12]
         dest = f"{index_path}/{DELETES_SUBDIR}/batch-{token}"
         # coalesce(1): the set is takedown-sized and re-read by EVERY
-        # fold — one file beats shuffle-partition-many tiny ones
+        # fold or probe — one file beats shuffle-partition-many tiny ones
         ids.select(F.col(id_col)).distinct().coalesce(1).write.mode(
             "overwrite"
         ).parquet(dest)
@@ -370,37 +372,24 @@ def index_delete(
         # (empty literal frame) emits only _SUCCESS — no footers, so a
         # read would fail inference — while a zero-row write from a
         # scan-backed frame emits a schema-bearing empty file
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(dest)
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
         has_files = any(
-            s.getPath().getName().endswith(".parquet")
-            for s in fs.listStatus(jvm_path)
+            name.endswith(".parquet")
+            for name, _ in fsio.child_entries(spark, dest)
         )
         if not has_files or spark.read.parquet(dest).isEmpty():
-            fs.delete(jvm_path, True)
+            fsio.delete(spark, dest)
             return None
         return token
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def _read_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
     """Union of every pending tombstone batch, distinct — None when
-    the index has none (one existence check, zero jobs)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/{DELETES_SUBDIR}"
-    )
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
+    the index has none (one listing, zero jobs)."""
+    root = f"{index_path}/{DELETES_SUBDIR}"
+    names = _batch_names(spark, root)
+    if not names:
         return None
-    dirs = sorted(
-        str(s.getPath())
-        for s in fs.listStatus(jvm_path)
-        if s.isDirectory() and s.getPath().getName().startswith("batch-")
-    )
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs).distinct()
+    return spark.read.parquet(*[f"{root}/{n}" for n in names]).distinct()
 
 
 def _without_tombstoned(df: DataFrame, tombs: DataFrame | None) -> DataFrame:
@@ -459,8 +448,7 @@ def compact_index(
     pinned pre-fold subdirectories."""
     removed = 0
     token = f"compact-{uuid.uuid4().hex[:12]}"
-    lock_fs, lock_path = _acquire_index_lock(spark, index_path, "compaction")
-    try:
+    with _acquire_index_lock(spark, index_path, "compaction"):
         # A fold writes the SAME batch token to both subdirs, so the
         # "one batch a crashed producer could still replay" is one NAME
         # shared by bands and toksets — resolve it ONCE across both
@@ -470,19 +458,11 @@ def compact_index(
         # subdirs protect different batches).
         protected: str | None = None
         if keep_newest:
-            candidates: list[tuple[int, str]] = []
-            for subdir, _ in tables:
-                jvm_path = spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{index_path}/{subdir}"
-                )
-                fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-                if not fs.exists(jvm_path):
-                    continue
-                candidates.extend(
-                    (s.getModificationTime(), s.getPath().getName())
-                    for s in fs.listStatus(jvm_path)
-                    if s.isDirectory() and s.getPath().getName().startswith("batch-")
-                )
+            candidates = [
+                (fsio.mtime_ms(spark, f"{index_path}/{subdir}/{name}"), name)
+                for subdir, _ in tables
+                for name in _batch_names(spark, f"{index_path}/{subdir}")
+            ]
             if candidates:
                 protected = max(candidates)[1]
         # Tombstones (index_delete) are applied to every consolidated
@@ -498,18 +478,12 @@ def compact_index(
         tombs = _read_tombstones(spark, index_path)
         min_dirs = 1 if (tombs is not None and not keep_newest) else 2
         for subdir, keys in tables:
-            jvm_path = spark._jvm.org.apache.hadoop.fs.Path(f"{index_path}/{subdir}")
-            fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-            if not fs.exists(jvm_path):
-                continue
-            statuses = [
-                s
-                for s in fs.listStatus(jvm_path)
-                if s.isDirectory()
-                and s.getPath().getName().startswith("batch-")
-                and s.getPath().getName() != protected
+            root = f"{index_path}/{subdir}"
+            dirs = [
+                f"{root}/{name}"
+                for name in _batch_names(spark, root)
+                if name != protected
             ]
-            dirs = [s.getPath() for s in statuses]
             if len(dirs) < min_dirs:
                 continue
             # per-directory reads, unioned: a partitioned table's
@@ -520,10 +494,10 @@ def compact_index(
             # a schema from — it contributes no rows and is deleted
             # with the rest.
             merged = None
-            for p in sorted(dirs, key=str):
-                if not _has_data_files(fs, p):
+            for d in dirs:
+                if not fsio.any_file_with_suffix(spark, d, ".parquet"):
                     continue
-                part = spark.read.parquet(str(p))
+                part = spark.read.parquet(d)
                 merged = part if merged is None else merged.unionByName(part)
             if merged is not None:
                 merged = (
@@ -531,19 +505,12 @@ def compact_index(
                 )
                 merged = _without_tombstoned(merged, tombs)
                 _append_batch(merged, index_path, subdir, token)
-            for p in dirs:
-                fs.delete(p, True)
+            for d in dirs:
+                fsio.delete(spark, d)
                 removed += 1
         if tombs is not None and not keep_newest:
-            dels_path = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{index_path}/{DELETES_SUBDIR}"
-            )
-            dels_path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
-                dels_path, True
-            )
+            fsio.delete(spark, f"{index_path}/{DELETES_SUBDIR}")
             removed += 1
-    finally:
-        lock_fs.delete(lock_path, False)
     return removed
 
 
@@ -604,8 +571,7 @@ def incremental_lsh_fold(
     batch's token set shadows the historical one, so no duplicate or
     stale-jaccard pair rows), but the OLD content's band rows remain in
     the index — fold a changed document under a new doc_id instead."""
-    fs, lock = _acquire_index_lock(spark, index_path, "fold")
-    try:
+    with _acquire_index_lock(spark, index_path, "fold"):
         return _incremental_lsh_fold_locked(
             spark,
             index_path,
@@ -619,8 +585,6 @@ def incremental_lsh_fold(
             part_buckets=part_buckets,
             batch_token=batch_token,
         )
-    finally:
-        fs.delete(lock, False)
 
 
 def _incremental_lsh_fold_locked(
@@ -639,7 +603,12 @@ def _incremental_lsh_fold_locked(
 ) -> DataFrame:
     exact = threshold >= 1.0
     part_buckets = _check_or_write_config(
-        spark, index_path, num_perms, bands, exact, part_buckets, new_docs
+        spark,
+        index_path,
+        "LSH",
+        {"num_perms": num_perms, "bands": bands, "exact": exact},
+        part_buckets,
+        new_docs,
     )
     flat = part_buckets <= 1
     # fan_out: the per-doc fingerprint/signature compute below is

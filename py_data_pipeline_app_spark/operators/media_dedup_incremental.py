@@ -63,20 +63,16 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from py_data_pipeline_app_spark import fsio
-
-from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET,
     _bucket_member_pairs,
 )
 from py_data_pipeline_app_spark.operators.dedup_incremental import (
-    DEFAULT_PART_BUCKETS,
     PART_COL,
     _acquire_index_lock,
     _append_batch,
-    _auto_part_buckets,
     _batch_part_values,
+    _check_or_write_config,
     _pinned_history,
     _read_tombstones,
     _without_tombstoned,
@@ -96,69 +92,6 @@ from py_data_pipeline_app_spark.operators.media import (
 BANDS_SUBDIR = "bands"
 HASHES_SUBDIR = "hashes"
 FRAMEHASHES_SUBDIR = "framehashes"
-CONFIG_SUBDIR = "config"
-
-
-def _check_or_write_config(
-    spark: SparkSession,
-    index_path: str,
-    decoder: str,
-    axes: str,
-    bands: int,
-    max_hamming: int,
-    part_buckets: int | None,
-    batch: DataFrame,
-) -> int:
-    """One index = one (decoder, axes, bands, max_hamming)
-    configuration. ``decoder`` decides the hash SPACE itself (an image
-    grid and an audio spectrogram never hash alike), ``axes`` the
-    signature schema AND per-band segment width, ``bands`` the bucket
-    keys — band keys from different configurations never match, so a
-    drifted fold would silently emit no cross-history pairs (the worst
-    dedup failure mode: false confidence); ``max_hamming`` decides
-    which pairs folds emit, so drift there would make the
-    union-of-folds parity contract meaningless; ``part_buckets`` the
-    band table's partition layout, so drift there would send the same
-    band key to a different partition directory and a pruned probe
-    would silently skip old history. First fold persists the
-    manifest; later folds fail loudly on drift (the ``assign_mode`` /
-    LSH-config discipline). ``part_buckets=None`` auto-sizes at the
-    first fold and adopts the persisted fanout afterwards (the LSH
-    index's resolution contract); returns the resolved fanout, 1
-    meaning the unpartitioned flat layout."""
-    path = f"{index_path}/{CONFIG_SUBDIR}"
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        row = fsio.read_small_parquet_rows(spark, path)[0]
-        stored = getattr(row, "part_buckets", None)
-        have = (row.decoder, row.axes, row.bands, row.max_hamming, stored)
-        want = (
-            decoder,
-            axes,
-            bands,
-            max_hamming,
-            stored if part_buckets is None else part_buckets,
-        )
-        if stored is None or have != want:
-            raise ValueError(
-                f"dhash index at {index_path} was built with (decoder, axes, "
-                f"bands, max_hamming, part_buckets)={have}, fold requested "
-                f"{want}; hashes and band keys (and their partition "
-                "directories) from different configurations never match, so "
-                "this fold would silently miss every historical near-dup - "
-                "rebuild the index or match its configuration"
-            )
-        return int(stored)
-    if part_buckets is None:
-        part_buckets = _auto_part_buckets(spark, batch)
-    local_rows_df(
-        spark,
-        "decoder string, axes string, bands int, max_hamming int, "
-        "part_buckets int",
-        [(decoder, axes, bands, max_hamming, part_buckets)],
-    ).write.mode("overwrite").parquet(path)
-    return int(part_buckets)
 
 
 def incremental_dhash_fold(
@@ -215,11 +148,22 @@ def incremental_dhash_fold(
     partition directories (plan-asserted ``PartitionFilters``; the
     filter is dropped when the batch saturates the prefix space and
     the probe degrades to the keyed full scan)."""
-    fs, lock = _acquire_index_lock(spark, index_path, "dhash fold")
-    try:
+    with _acquire_index_lock(spark, index_path, "dhash fold"):
+        # ``decoder`` decides the hash space itself (an image grid and an
+        # audio spectrogram never hash alike), ``axes`` the signature
+        # schema and band width, ``max_hamming`` which pairs folds emit
         part_buckets = _check_or_write_config(
-            spark, index_path, decoder, axes, bands, max_hamming,
-            part_buckets, new_media,
+            spark,
+            index_path,
+            "dhash",
+            {
+                "decoder": decoder,
+                "axes": axes,
+                "bands": bands,
+                "max_hamming": max_hamming,
+            },
+            part_buckets,
+            new_media,
         )
         flat = part_buckets <= 1
         new_hashes = media_dhash(
@@ -315,8 +259,6 @@ def incremental_dhash_fold(
             new_hashes, index_path, HASHES_SUBDIR, token, single_file=True
         )
         return verified
-    finally:
-        fs.delete(lock, False)
 
 
 def media_index_delete(
@@ -334,74 +276,6 @@ def media_index_delete(
     return index_delete(
         spark, index_path, ids, id_col="media_id", batch_token=batch_token
     )
-
-
-def _check_or_write_video_config(
-    spark: SparkSession,
-    index_path: str,
-    decoder: str,
-    every: int,
-    fps_ms: int,
-    bucket_ms: int,
-    bands: int,
-    max_hamming: int,
-    min_matching_buckets: int,
-    part_buckets: int | None,
-    batch: DataFrame,
-) -> int:
-    """One video index = one complete sampling + banding + verification
-    configuration: ``decoder``/``every``/``fps_ms`` decide WHICH frames
-    exist and what they hash to, ``bucket_ms`` the time-bucket blocking
-    keys, ``bands``/``part_buckets`` the band keys and their partition
-    directories, ``max_hamming``/``min_matching_buckets`` which pairs
-    folds emit. Any drift would silently break cross-history matching
-    or the union-of-folds parity contract — refuse loudly instead (the
-    image index's manifest discipline, one field per knob).
-    ``part_buckets=None`` auto-sizes at the first fold and adopts the
-    persisted fanout afterwards; returns the resolved fanout (1 = the
-    unpartitioned flat layout)."""
-    path = f"{index_path}/{CONFIG_SUBDIR}"
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        row = fsio.read_small_parquet_rows(spark, path)[0]
-        have = tuple(
-            getattr(row, f, None)
-            for f in (
-                "decoder", "every", "fps_ms", "bucket_ms", "bands",
-                "max_hamming", "min_matching_buckets", "part_buckets",
-            )
-        )
-        stored = have[-1]
-        want = (
-            decoder, every, fps_ms, bucket_ms, bands, max_hamming,
-            min_matching_buckets,
-            stored if part_buckets is None else part_buckets,
-        )
-        if stored is None or have != want:
-            raise ValueError(
-                f"video dhash index at {index_path} was built with (decoder, "
-                f"every, fps_ms, bucket_ms, bands, max_hamming, "
-                f"min_matching_buckets, part_buckets)={have}, fold requested "
-                f"{want}; frame samples, band keys and verification floors "
-                "from different configurations never line up, so this fold "
-                "would silently miss or misreport historical near-dups - "
-                "rebuild the index or match its configuration"
-            )
-        return int(stored)
-    if part_buckets is None:
-        part_buckets = _auto_part_buckets(spark, batch)
-    want = (
-        decoder, every, fps_ms, bucket_ms, bands, max_hamming,
-        min_matching_buckets, part_buckets,
-    )
-    local_rows_df(
-        spark,
-        "decoder string, every int, fps_ms int, bucket_ms int, bands int, "
-        "max_hamming int, min_matching_buckets int, part_buckets int",
-        [want],
-    ).write.mode("overwrite").parquet(path)
-    return int(part_buckets)
 
 
 def incremental_video_dhash_fold(
@@ -453,11 +327,25 @@ def incremental_video_dhash_fold(
     all reuse it), one explode to band rows, one chunk-capped grouped
     expansion, one pruned (frame_bucket, band, bucket) equi-join, one
     id-keyed frame join restricted to candidate pairs, two appends."""
-    fs, lock = _acquire_index_lock(spark, index_path, "video dhash fold")
-    try:
-        part_buckets = _check_or_write_video_config(
-            spark, index_path, decoder, every, fps_ms, bucket_ms, bands,
-            max_hamming, min_matching_buckets, part_buckets, new_media,
+    with _acquire_index_lock(spark, index_path, "video dhash fold"):
+        # decoder/every/fps_ms decide WHICH frames exist and what they
+        # hash to, bucket_ms the time-bucket blocking keys, max_hamming
+        # and min_matching_buckets which pairs folds emit
+        part_buckets = _check_or_write_config(
+            spark,
+            index_path,
+            "video dhash",
+            {
+                "decoder": decoder,
+                "every": every,
+                "fps_ms": fps_ms,
+                "bucket_ms": bucket_ms,
+                "bands": bands,
+                "max_hamming": max_hamming,
+                "min_matching_buckets": min_matching_buckets,
+            },
+            part_buckets,
+            new_media,
         )
         flat = part_buckets <= 1
         cols = [F.col(id_col).alias("media_id"), F.col("payload")]
@@ -597,8 +485,6 @@ def incremental_video_dhash_fold(
             new_fh, index_path, FRAMEHASHES_SUBDIR, token, single_file=True
         )
         return verified
-    finally:
-        fs.delete(lock, False)
 
 
 def video_index_delete(

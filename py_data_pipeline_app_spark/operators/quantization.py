@@ -71,16 +71,19 @@ from py_data_pipeline_app_spark import fsio
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import md5_long
 from py_data_pipeline_app_spark.partitioning import fan_out
+from py_data_pipeline_app_spark.operators.dedup_incremental import (
+    _acquire_index_lock,
+)
 from py_data_pipeline_app_spark.operators.similarity import (
     _apply_tombstones,
     _assign_to_centroids,
     _bucket_layout,
     _centroid_rows,
     _centroid_rows_df,
-    _hadoop_fs,
     _ivf_centroid_checksum,
     _md5_sample_centroids,
     _query_probes,
+    _refuse_rebuild_over_mutations,
     _union_appends,
     _write_append_batch,
     _qident,
@@ -176,9 +179,16 @@ def train_pq_codebooks(
         raise ValueError(f"dim={dim} must divide into m={m} subspaces")
     dsub = dim // m
     spark = corpus.sparkSession
+    # materialise the training column once: KMeans re-evaluates its
+    # input plan on every Lloyd iteration of each of the m fits, and
+    # the column is usually a residual (and rotation) projection whose
+    # per-row matvec would otherwise be recomputed every time. The
+    # checkpoint keeps the input's partitioning, which k-means|| init
+    # depends on, so the fitted codebooks are unchanged.
+    vecs = corpus.select(vec_col).localCheckpoint()
     out = []
     for s in range(m):
-        train = corpus.select(
+        train = vecs.select(
             array_to_vector(_sub(F.col(vec_col), s, dsub)).alias("features")
         )
         model = KMeans(
@@ -623,25 +633,9 @@ def build_ivfpq_index(
     callers should prefer :func:`build_ivfpq_index_trained`, which
     derives both tables correctly in one call."""
     spark = corpus.sparkSession
-    fs, appends_path = _hadoop_fs(spark, f"{index_path}/{IVFPQ_APPENDS_SUBDIR}")
-    if fs.exists(appends_path):
-        raise ValueError(
-            f"IVF-PQ index at {index_path} has appended batches; rebuilding "
-            "the base would orphan their assignments and codes (the reader "
-            "unions base + appends). Delete the index directory for a full "
-            "rebuild."
-        )
-    from py_data_pipeline_app_spark.operators.similarity import (
-        IVF_DELETES_SUBDIR,
+    _refuse_rebuild_over_mutations(
+        spark, index_path, "IVF-PQ", "assignments and codes"
     )
-
-    _, dels_path = _hadoop_fs(spark, f"{index_path}/{IVF_DELETES_SUBDIR}")
-    if fs.exists(dels_path):
-        raise ValueError(
-            f"IVF-PQ index at {index_path} has pending tombstones; rebuilding "
-            "the base would leave them filtering the NEW corpus's ids. "
-            "Delete the index directory for a full rebuild."
-        )
     samp_df = None
     if cents is None and codebooks is None:
         # ONE md5-ordered TakeOrdered serves BOTH tiny samples: the
@@ -1225,12 +1219,7 @@ def ivfpq_index_append(
     already in the index is unsupported (the reader unions). Returns
     the batch token. Serialized against other mutators by the shared
     atomic lock marker."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
-
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "IVF-PQ append")
-    try:
+    with _acquire_index_lock(spark, index_path, "IVF-PQ append"):
         return _ivfpq_index_append_locked(
             spark,
             index_path,
@@ -1239,8 +1228,6 @@ def ivfpq_index_append(
             vec_col=vec_col,
             batch_token=batch_token,
         )
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def _ivfpq_index_append_locked(
@@ -1320,17 +1307,11 @@ def ivfpq_index_compact(spark, index_path: str, *, keep_newest: bool = False) ->
     layouts differ only in what a row holds); serialized against
     appends by the shared lock. Returns the number of directories
     merged."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
     from py_data_pipeline_app_spark.operators.similarity import (
         _compact_assigned_locked,
     )
 
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "IVF-PQ compaction")
-    try:
+    with _acquire_index_lock(spark, index_path, "IVF-PQ compaction"):
         return _compact_assigned_locked(
             spark, index_path, IVFPQ_APPENDS_SUBDIR, keep_newest
         )
-    finally:
-        lock_fs.delete(lock, False)

@@ -28,6 +28,13 @@ from py_data_pipeline_app_spark import fsio
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import md5_long
 from py_data_pipeline_app_spark.operators.dedup import _bucket_member_pairs
+from py_data_pipeline_app_spark.operators.dedup_incremental import (
+    DELETES_SUBDIR,
+    _acquire_index_lock,
+    _batch_names,
+    _read_tombstones,
+    index_delete,
+)
 from py_data_pipeline_app_spark.partitioning import fan_out
 
 
@@ -891,21 +898,6 @@ def _bucket_layout(
     )
 
 
-def _hadoop_fs(spark, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jvm_path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm_path
-
-
-def _rename_or_raise(fs, src, dst) -> None:
-    """FileSystem.rename reports most failures (dst exists, parent
-    missing, S3A partial copy) by returning ``false``; every rename in
-    the index lifecycle is the commit point of a staged write whose
-    sources get deleted right after, so a silent ``false`` here would
-    be unrecoverable loss — fail loudly instead (see fsio.rename)."""
-    if not bool(fs.rename(src, dst)):
-        raise IOError(f"index rename failed: {src} -> {dst}")
-
-
 def _write_append_batch(spark, rows: DataFrame, dest: str) -> None:
     """Write an index append batch ``partitionBy(centroid_id)`` under
     its idempotent ``batch-{token}`` directory — then REMOVE the
@@ -926,13 +918,12 @@ def _write_append_batch(spark, rows: DataFrame, dest: str) -> None:
     rows.repartition(F.col("centroid_id")).write.partitionBy(
         "centroid_id"
     ).mode("overwrite").parquet(dest)
-    fs, path = _hadoop_fs(spark, dest)
     has_data = any(
-        s.isDirectory() and s.getPath().getName().startswith("centroid_id=")
-        for s in fs.listStatus(path)
+        is_dir and name.startswith("centroid_id=")
+        for name, is_dir in fsio.child_entries(spark, dest)
     )
     if not has_data:
-        fs.delete(path, True)
+        fsio.delete(spark, dest)
 
 
 def _union_appends(
@@ -959,33 +950,44 @@ def _union_appends(
     — see :func:`_load_reorder_exclusions`) subtract each append's
     re-homed clusters from its scan."""
     out = base
-    fs, appends_path = _hadoop_fs(spark, appends_dir)
-    if fs.exists(appends_path):
-        excl = _load_reorder_exclusions(spark, appends_dir.rsplit("/", 1)[0])
-        for status in sorted(
-            fs.listStatus(appends_path), key=lambda s: str(s.getPath())
-        ):
-            if not (
-                status.isDirectory()
-                and status.getPath().getName().startswith("batch-")
-            ):
-                continue
-            name = status.getPath().getName()
-            if exclude is not None and name == exclude:
-                continue
-            batch = spark.read.schema(base.schema).parquet(
-                str(status.getPath())
-            )
-            gone = excl.get(name)
-            if gone:
-                batch = batch.filter(~F.col("centroid_id").isin(gone))
-            if probed is not None:
-                batch = batch.filter(F.col("centroid_id").isin(probed))
-            out = out.unionByName(batch)
+    names = _batch_names(spark, appends_dir)
+    excl = (
+        _load_reorder_exclusions(spark, appends_dir.rsplit("/", 1)[0])
+        if names
+        else {}
+    )
+    for name in names:
+        if exclude is not None and name == exclude:
+            continue
+        batch = spark.read.schema(base.schema).parquet(f"{appends_dir}/{name}")
+        gone = excl.get(name)
+        if gone:
+            batch = batch.filter(~F.col("centroid_id").isin(gone))
+        if probed is not None:
+            batch = batch.filter(F.col("centroid_id").isin(probed))
+        out = out.unionByName(batch)
     return out
 
 
-IVF_DELETES_SUBDIR = "deletes"
+def _refuse_rebuild_over_mutations(
+    spark, index_path: str, kind: str, orphaned: str
+) -> None:
+    """Refuse to rebuild an index's base while appends or tombstones
+    are pending: the reader unions base + appends, so a new base would
+    orphan the appends' ``orphaned`` rows, and the tombstones would go
+    on filtering the NEW corpus's ids."""
+    if fsio.exists(spark, f"{index_path}/{IVF_APPENDS_SUBDIR}"):
+        raise ValueError(
+            f"{kind} index at {index_path} has appended batches; rebuilding "
+            f"the base would orphan their {orphaned} (the reader unions "
+            "base + appends). Delete the index directory for a full rebuild."
+        )
+    if fsio.exists(spark, f"{index_path}/{DELETES_SUBDIR}"):
+        raise ValueError(
+            f"{kind} index at {index_path} has pending tombstones; rebuilding "
+            "the base would leave them filtering the NEW corpus's ids. "
+            "Delete the index directory for a full rebuild."
+        )
 
 
 def ivf_index_delete(
@@ -1021,53 +1023,9 @@ def ivf_index_delete(
     index lock. Returns the batch token, or None when ``ids`` was
     empty (an empty tombstone directory would break later readers'
     schema inference, same guard as :func:`_write_append_batch`)."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
+    return index_delete(
+        spark, index_path, ids, id_col=id_col, batch_token=batch_token
     )
-
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "IVF delete")
-    try:
-        token = batch_token or uuid.uuid4().hex[:12]
-        dest = f"{index_path}/{IVF_DELETES_SUBDIR}/batch-{token}"
-        # coalesce(1): the set is takedown-sized and re-read by EVERY
-        # probe — one file beats shuffle-partition-many tiny ones
-        ids.select(F.col(id_col)).distinct().coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(dest)
-        # empty-input detection needs BOTH probes: a zero-task write
-        # (empty literal frame) emits only _SUCCESS — no footers, so a
-        # read would fail inference — while a zero-row write from a
-        # scan-backed frame emits a schema-bearing empty file whose
-        # no-op directory would accrete listing cost forever; the
-        # read-back is one tiny-file job on a rare operation
-        fs, path = _hadoop_fs(spark, dest)
-        has_files = any(
-            s.getPath().getName().endswith(".parquet")
-            for s in fs.listStatus(path)
-        )
-        if not has_files or spark.read.parquet(dest).isEmpty():
-            fs.delete(path, True)
-            return None
-        return token
-    finally:
-        lock_fs.delete(lock, False)
-
-
-def _read_tombstones(spark, index_path: str) -> DataFrame | None:
-    """Union of every ``deletes/batch-*`` tombstone set, distinct —
-    None when the index has no pending deletes (the overwhelmingly
-    common case: one existence check, zero jobs)."""
-    fs, dels_path = _hadoop_fs(spark, f"{index_path}/{IVF_DELETES_SUBDIR}")
-    if not fs.exists(dels_path):
-        return None
-    dirs = sorted(
-        str(s.getPath())
-        for s in fs.listStatus(dels_path)
-        if s.isDirectory() and s.getPath().getName().startswith("batch-")
-    )
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs).distinct()
 
 
 def _apply_tombstones(
@@ -1559,20 +1517,7 @@ def build_semantic_index(
     two-level assignment is approximate by construction (near-dup
     pairs still co-locate; see :func:`semantic_dedup`)."""
     spark = corpus.sparkSession
-    fs, appends_path = _hadoop_fs(spark, f"{index_path}/{IVF_APPENDS_SUBDIR}")
-    if fs.exists(appends_path):
-        raise ValueError(
-            f"semantic index at {index_path} has appended batches; rebuilding "
-            "the base would orphan their kept flags (the reader unions "
-            "base + appends). Delete the index directory for a full rebuild."
-        )
-    _, dels_path = _hadoop_fs(spark, f"{index_path}/{IVF_DELETES_SUBDIR}")
-    if fs.exists(dels_path):
-        raise ValueError(
-            f"semantic index at {index_path} has pending tombstones; "
-            "rebuilding the base would leave them filtering the NEW corpus's "
-            "ids. Delete the index directory for a full rebuild."
-        )
+    _refuse_rebuild_over_mutations(spark, index_path, "semantic", "kept flags")
     if cents is None:
         cents = _md5_sample_centroids(
             corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
@@ -1881,14 +1826,12 @@ def _load_reorder_exclusions(spark, index_path: str) -> dict:
     subsets out of append directories would break their idempotent
     replay contract). One driver listing + one tiny JSON read per
     marker; indexes that never reorder never have the directory."""
-    fs, root = _hadoop_fs(spark, f"{index_path}/{SEMANTIC_REORDER_EXCL_SUBDIR}")
-    if not fs.exists(root):
-        return {}
+    root = f"{index_path}/{SEMANTIC_REORDER_EXCL_SUBDIR}"
     out: dict = {}
-    for st in fs.listStatus(root):
-        if st.isDirectory():
+    for name, is_dir in fsio.child_entries(spark, root):
+        if is_dir:
             continue
-        m = fsio.read_json(spark, str(st.getPath()))
+        m = fsio.read_json(spark, f"{root}/{name}")
         out.setdefault(m["append"], set()).update(int(c) for c in m["clusters"])
     return {k: sorted(v) for k, v in out.items()}
 
@@ -2258,12 +2201,7 @@ def semantic_index_append(
     before any write — a caller who believes the index uses a
     different fold than it does would otherwise get silently
     mixed-mode clusters (the centroid-checksum refusal's twin)."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
-
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "semantic append")
-    try:
+    with _acquire_index_lock(spark, index_path, "semantic append"):
         _recover_semantic_reorder(spark, index_path)
         if batch_token is not None and fsio.exists(
             spark,
@@ -2441,8 +2379,6 @@ def semantic_index_append(
         # entry lazily (batch-sized, once, persisted) when — and only
         # when — a reorder actually needs to probe it.
         return token
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def semantic_index_state(
@@ -2465,27 +2401,13 @@ def semantic_index_state(
     returning that inconsistent view; a manifest-LESS stage is an
     in-progress (or orphaned) write that never became visible, so the
     read proceeds normally."""
-    fs, root = _hadoop_fs(spark, index_path)
-    if fs.exists(root) and any(
-        st.getPath().getName().startswith(".reorder-stage-")
-        and fs.exists(
-            spark._jvm.org.apache.hadoop.fs.Path(
-                f"{index_path}/{st.getPath().getName()}/_MANIFEST"
-            )
-        )
-        for st in fs.listStatus(root)
+    if any(
+        name.startswith(".reorder-stage-")
+        and fsio.exists(spark, f"{index_path}/{name}/_MANIFEST")
+        for name, _ in fsio.child_entries(spark, index_path)
     ):
-        from py_data_pipeline_app_spark.operators.dedup_incremental import (
-            _acquire_index_lock,
-        )
-
-        lock_fs, lock = _acquire_index_lock(
-            spark, index_path, "reorder crash recovery"
-        )
-        try:
+        with _acquire_index_lock(spark, index_path, "reorder crash recovery"):
             _recover_semantic_reorder(spark, index_path)
-        finally:
-            lock_fs.delete(lock, False)
     base = spark.read.parquet(f"{index_path}/assigned")
     rows = _union_appends(spark, base, f"{index_path}/{IVF_APPENDS_SUBDIR}", None)
     rows = _apply_tombstones(spark, rows, index_path, id_col=id_col)
@@ -2506,18 +2428,11 @@ def semantic_index_compact(spark, index_path: str, *, keep_newest: bool = False)
     every crash point is tested there). Applies and (on full
     compaction) consumes pending tombstones and exclusion markers.
     Returns directories merged + tombstone sets consumed."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
-
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "semantic compaction")
-    try:
+    with _acquire_index_lock(spark, index_path, "semantic compaction"):
         _recover_semantic_reorder(spark, index_path)
         return _compact_assigned_locked(
             spark, index_path, IVF_APPENDS_SUBDIR, keep_newest
         )
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def build_ivf_index(
@@ -2561,20 +2476,7 @@ def build_ivf_index(
     ``write_training_shards``'s files_per_shard already makes). Leave
     None at demo scale — the shuffle costs more than the files."""
     spark = corpus.sparkSession
-    fs, appends_path = _hadoop_fs(spark, f"{index_path}/{IVF_APPENDS_SUBDIR}")
-    if fs.exists(appends_path):
-        raise ValueError(
-            f"IVF index at {index_path} has appended batches; rebuilding the "
-            "base would orphan their assignments (the reader unions "
-            "base + appends). Delete the index directory for a full rebuild."
-        )
-    _, dels_path = _hadoop_fs(spark, f"{index_path}/{IVF_DELETES_SUBDIR}")
-    if fs.exists(dels_path):
-        raise ValueError(
-            f"IVF index at {index_path} has pending tombstones; rebuilding "
-            "the base would leave them filtering the NEW corpus's ids. "
-            "Delete the index directory for a full rebuild."
-        )
+    _refuse_rebuild_over_mutations(spark, index_path, "IVF", "assignments")
     if cents is None:
         cents = _md5_sample_centroids(
             corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
@@ -2651,12 +2553,7 @@ def ivf_index_append(
     shared atomic lock marker (a concurrent compaction deleting
     subdirectories mid-append fails loudly instead of silently).
     Returns the batch token."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
-
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "IVF append")
-    try:
+    with _acquire_index_lock(spark, index_path, "IVF append"):
         return _ivf_index_append_locked(
             spark,
             index_path,
@@ -2665,8 +2562,6 @@ def ivf_index_append(
             vec_col=vec_col,
             batch_token=batch_token,
         )
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def _ivf_index_append_locked(
@@ -2730,17 +2625,10 @@ def ivf_index_compact(spark, index_path: str, *, keep_newest: bool = False) -> i
     the shared atomic lock marker. Returns the number of append
     directories merged plus tombstone directories consumed
     (0 = nothing to do)."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
-
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "IVF compaction")
-    try:
+    with _acquire_index_lock(spark, index_path, "IVF compaction"):
         return _compact_assigned_locked(
             spark, index_path, IVF_APPENDS_SUBDIR, keep_newest
         )
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def _compact_assigned_locked(
@@ -2776,81 +2664,54 @@ def _compact_assigned_locked(
     between swap and cleanup deletes exactly the consumed sets on
     retry. A keep-newest compaction leaves tombstones pending (the
     kept-back append batch may still hold a tombstoned row)."""
-    import json
-
-    jvm = spark._jvm.org.apache.hadoop.fs.Path
-    fs, appends_path = _hadoop_fs(spark, f"{index_path}/{appends_subdir}")
-    _, dels_path = _hadoop_fs(spark, f"{index_path}/{IVF_DELETES_SUBDIR}")
-    base = jvm(f"{index_path}/assigned")
-    old = jvm(f"{index_path}/assigned-old")
-    staged = jvm(f"{index_path}/assigned-compact")
+    appends_path = f"{index_path}/{appends_subdir}"
+    dels_path = f"{index_path}/{DELETES_SUBDIR}"
+    excl_path = f"{index_path}/{SEMANTIC_REORDER_EXCL_SUBDIR}"
+    base = f"{index_path}/assigned"
+    old = f"{index_path}/assigned-old"
+    staged = f"{index_path}/assigned-compact"
 
     def read_manifest(dirpath: str):
-        mp = jvm(f"{dirpath}/_MANIFEST")
-        if not fs.exists(mp):
+        mp = f"{dirpath}/_MANIFEST"
+        if not fsio.exists(spark, mp):
             return None
-        stream = fs.open(mp)
-        try:
-            txt = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        m = json.loads(txt)
+        m = fsio.read_json(spark, mp)
         # pre-tombstone manifests were a plain list of append names
         return {"appends": m, "deletes": []} if isinstance(m, list) else m
 
     def cleanup(manifest: dict) -> None:
         for name in manifest["appends"]:
-            fs.delete(jvm(f"{index_path}/{appends_subdir}/{name}"), True)
+            fsio.delete(spark, f"{appends_path}/{name}")
         for name in manifest.get("deletes", []):
-            fs.delete(jvm(f"{index_path}/{IVF_DELETES_SUBDIR}/{name}"), True)
+            fsio.delete(spark, f"{dels_path}/{name}")
         for name in manifest.get("exclusions", []):
-            fs.delete(
-                jvm(f"{index_path}/{SEMANTIC_REORDER_EXCL_SUBDIR}/{name}"),
-                False,
-            )
-        fs.delete(old, True)
-        fs.delete(jvm(f"{index_path}/assigned/_MANIFEST"), False)
+            fsio.delete(spark, f"{excl_path}/{name}")
+        fsio.delete(spark, old)
+        fsio.delete(spark, f"{base}/_MANIFEST")
 
     # -- recovery of a crashed previous compaction (under the lock) --
-    if not fs.exists(base) and fs.exists(
-        jvm(f"{index_path}/assigned-compact/_SUCCESS")
+    if not fsio.exists(spark, base) and fsio.exists(
+        spark, f"{staged}/_SUCCESS"
     ):
-        names = read_manifest(f"{index_path}/assigned-compact")
+        names = read_manifest(staged)
         if names is not None:  # interrupted swap: staged copy is the base
-            _rename_or_raise(fs, staged, base)
+            fsio.rename(spark, staged, base)
             cleanup(names)
-    if not fs.exists(base) and fs.exists(old):
-        _rename_or_raise(fs, old, base)  # no usable staged copy: roll back
-    if fs.exists(staged):
-        fs.delete(staged, True)  # stale staging beside a live base
-    leftover = read_manifest(f"{index_path}/assigned")
+    if not fsio.exists(spark, base) and fsio.exists(spark, old):
+        fsio.rename(spark, old, base)  # no usable staged copy: roll back
+    fsio.delete(spark, staged)  # stale staging beside a live base
+    leftover = read_manifest(base)
     if leftover is not None:  # completed swap, interrupted cleanup
         cleanup(leftover)
 
     # -- the actual merge --
-    statuses = []
-    if fs.exists(appends_path):
-        statuses = [
-            s
-            for s in fs.listStatus(appends_path)
-            if s.isDirectory() and s.getPath().getName().startswith("batch-")
-        ]
-    if keep_newest and statuses:
+    names = _batch_names(spark, appends_path)
+    if keep_newest and names:
         newest = max(
-            statuses, key=lambda s: (s.getModificationTime(), str(s.getPath()))
+            names, key=lambda n: (fsio.mtime_ms(spark, f"{appends_path}/{n}"), n)
         )
-        statuses = [s for s in statuses if s is not newest]
-    batch_dirs = sorted(str(s.getPath()) for s in statuses)
-    names = [d.rsplit("/", 1)[-1] for d in batch_dirs]
-    del_names: list[str] = []
-    if not keep_newest and fs.exists(dels_path):
-        del_names = sorted(
-            s.getPath().getName()
-            for s in fs.listStatus(dels_path)
-            if s.isDirectory() and s.getPath().getName().startswith("batch-")
-        )
+        names = [n for n in names if n != newest]
+    del_names = [] if keep_newest else _batch_names(spark, dels_path)
     if not names and not del_names:
         return 0
     # reorder exclusion markers: an append's re-homed clusters already
@@ -2860,47 +2721,42 @@ def _compact_assigned_locked(
     # a keep-newest pass leaves the kept-back batch's markers pending.
     excl = _load_reorder_exclusions(spark, index_path)
     excl_names: list[str] = []
-    _, excl_path = _hadoop_fs(spark, f"{index_path}/{SEMANTIC_REORDER_EXCL_SUBDIR}")
-    if excl and fs.exists(excl_path):
+    if excl:
         merged_set = set(names)
-        for s in fs.listStatus(excl_path):
-            if s.isDirectory():
-                continue
-            m = fsio.read_json(spark, str(s.getPath()))
-            if m["append"] in merged_set:
-                excl_names.append(s.getPath().getName())
-        excl_names.sort()
-    merged = spark.read.parquet(f"{index_path}/assigned")
-    for d in batch_dirs:
+        excl_names = [
+            marker
+            for marker, is_dir in fsio.child_entries(spark, excl_path)
+            if not is_dir
+            and fsio.read_json(spark, f"{excl_path}/{marker}")["append"]
+            in merged_set
+        ]
+    merged = spark.read.parquet(base)
+    for name in names:
         # base schema: a legacy file-less empty append must merge as an
         # empty frame, not fail inference (same guard as _union_appends)
-        b = spark.read.schema(merged.schema).parquet(d)
-        gone = excl.get(d.rsplit("/", 1)[-1])
+        b = spark.read.schema(merged.schema).parquet(f"{appends_path}/{name}")
+        gone = excl.get(name)
         if gone:
             b = b.filter(~F.col("centroid_id").isin(gone))
         merged = merged.unionByName(b)
     # ALL pending tombstones are applied to the rewrite (a keep-newest
     # pass just doesn't consume them — see docstring)
     merged = _apply_tombstones(spark, merged, index_path)
-    merged.write.partitionBy("centroid_id").mode("overwrite").parquet(str(staged))
+    merged.write.partitionBy("centroid_id").mode("overwrite").parquet(staged)
     manifest = {"appends": names, "deletes": del_names, "exclusions": excl_names}
-    out = fs.create(jvm(f"{index_path}/assigned-compact/_MANIFEST"), True)
-    try:
-        out.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    finally:
-        out.close()
-    fs.delete(old, True)
-    _rename_or_raise(fs, base, old)
-    _rename_or_raise(fs, staged, base)
+    fsio.write_json(spark, f"{staged}/_MANIFEST", manifest)
+    fsio.delete(spark, old)
+    fsio.rename(spark, base, old)
+    fsio.rename(spark, staged, base)
     cleanup(manifest)
     if not keep_newest:
-        fs.delete(appends_path, True)
+        fsio.delete(spark, appends_path)
         # every append is merged, so every exclusion marker is moot
-        fs.delete(excl_path, True)
+        fsio.delete(spark, excl_path)
         if del_names:
-            fs.delete(dels_path, True)
+            fsio.delete(spark, dels_path)
     _refresh_id_stats_after_compaction(spark, index_path)
-    return len(batch_dirs) + len(del_names)
+    return len(names) + len(del_names)
 
 
 def _refresh_id_stats_after_compaction(spark, index_path: str) -> None:

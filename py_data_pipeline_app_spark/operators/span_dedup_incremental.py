@@ -39,63 +39,18 @@ from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark import fsio
 
-from py_data_pipeline_app_spark.functions.frames import local_rows_df
-from py_data_pipeline_app_spark.functions.text import tokens
 from py_data_pipeline_app_spark.operators.dedup_incremental import (
-    DEFAULT_PART_BUCKETS,
     PART_COL,
     _acquire_index_lock,
     _append_batch,
-    _auto_part_buckets,
+    _batch_names,
     _batch_part_values,
+    _check_or_write_config,
     _pinned_history,
     part_bucket_col,
 )
 
 FPS_SUBDIR = "fps"
-CONFIG_SUBDIR = "config"
-
-
-def _check_or_write_config(
-    spark: SparkSession,
-    index_path: str,
-    chunk_tokens: int,
-    part_buckets: int | None,
-    batch: DataFrame,
-) -> int:
-    """Validate-or-persist the span index configuration; same
-    resolution contract as the LSH index's config helper —
-    ``part_buckets=None`` auto-sizes at the first fold
-    (:func:`~py_data_pipeline_app_spark.operators.dedup_incremental.
-    _auto_part_buckets`) and adopts the persisted fanout afterwards;
-    1 means the unpartitioned flat layout. Returns the resolved
-    fanout."""
-    path = f"{index_path}/{CONFIG_SUBDIR}"
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        row = fsio.read_small_parquet_rows(spark, path)[0]
-        stored = getattr(row, "part_buckets", None)
-        have = (row.chunk_tokens, stored)
-        want = (chunk_tokens, stored if part_buckets is None else part_buckets)
-        if stored is None or have != want:
-            raise ValueError(
-                f"span index at {index_path} was built with (chunk_tokens, "
-                f"part_buckets)={have}, fold requested {want}; fingerprints "
-                "of different span sizes never match (and a drifted "
-                "partition scheme would make pruned probes skip old "
-                "history), so this fold would silently dedup nothing - "
-                "rebuild the index or match its configuration"
-            )
-        return int(stored)
-    if part_buckets is None:
-        part_buckets = _auto_part_buckets(spark, batch)
-    local_rows_df(
-        spark,
-        "chunk_tokens int, part_buckets int",
-        [(chunk_tokens, part_buckets)],
-    ).write.mode("overwrite").parquet(path)
-    return int(part_buckets)
 
 
 def incremental_span_fold(
@@ -139,10 +94,15 @@ def incremental_span_fold(
     fold order is the dedup precedence order, so the append cannot
     wait for a consumer that may never collect."""
     token = batch_token or uuid.uuid4().hex[:12]
-    fs, lock = _acquire_index_lock(spark, index_path, "span fold")
-    try:
+    with _acquire_index_lock(spark, index_path, "span fold"):
+        # fingerprints of different span sizes never match
         part_buckets = _check_or_write_config(
-            spark, index_path, chunk_tokens, part_buckets, batch
+            spark,
+            index_path,
+            "span",
+            {"chunk_tokens": chunk_tokens},
+            part_buckets,
+            batch,
         )
         flat = part_buckets <= 1
         from py_data_pipeline_app_spark.operators.curation import (
@@ -234,8 +194,6 @@ def incremental_span_fold(
             F.col("n_chunks").cast("long").alias("n_chunks"),
             F.col("n_kept").cast("int").alias("n_kept"),
         )
-    finally:
-        fs.delete(lock, False)
 
 
 def compact_fps(spark: SparkSession, index_path: str, *, keep_newest: bool = False) -> int:
@@ -254,24 +212,15 @@ def compact_fps(spark: SparkSession, index_path: str, *, keep_newest: bool = Fal
     of the replay would look seen and the rebuild would come back
     empty. Serialized with folds by the same lock. Returns the number
     of directories merged."""
-    fs, lock = _acquire_index_lock(spark, index_path, "fps compaction")
-    try:
-        jvm = spark._jvm.org.apache.hadoop.fs.Path
-        fps_path = jvm(f"{index_path}/{FPS_SUBDIR}")
-        if not fs.exists(fps_path):
-            return 0
-        statuses = [
-            s
-            for s in fs.listStatus(fps_path)
-            if s.isDirectory() and s.getPath().getName().startswith("batch-")
-        ]
-        if keep_newest and statuses:
+    with _acquire_index_lock(spark, index_path, "fps compaction"):
+        root = f"{index_path}/{FPS_SUBDIR}"
+        names = _batch_names(spark, root)
+        if keep_newest and names:
             newest = max(
-                statuses,
-                key=lambda s: (s.getModificationTime(), str(s.getPath())),
+                names, key=lambda n: (fsio.mtime_ms(spark, f"{root}/{n}"), n)
             )
-            statuses = [s for s in statuses if s is not newest]
-        dirs = sorted(str(s.getPath()) for s in statuses)
+            names = [n for n in names if n != newest]
+        dirs = [f"{root}/{n}" for n in names]
         if len(dirs) < 2:
             return 0
         token = f"compact-{uuid.uuid4().hex[:12]}"
@@ -279,19 +228,15 @@ def compact_fps(spark: SparkSession, index_path: str, *, keep_newest: bool = Fal
         # files under pb=* (multi-path reads refuse that layout), and a
         # zero-row append (_SUCCESS only) has no schema to infer — it
         # contributes nothing and its directory is deleted with the rest
-        from py_data_pipeline_app_spark.operators.dedup_incremental import (
-            _has_data_files,
-        )
-
         merged = None
         for d in dirs:
-            if not _has_data_files(fs, jvm(d)):
+            if not fsio.any_file_with_suffix(spark, d, ".parquet"):
                 continue
             part = spark.read.parquet(d)
             merged = part if merged is None else merged.unionByName(part)
         if merged is None:
             for d in dirs:
-                fs.delete(jvm(d), True)
+                fsio.delete(spark, d)
             return len(dirs)
         merged = merged.distinct()
         # staged-invisible write: _staging-* does not match the reader's
@@ -299,22 +244,14 @@ def compact_fps(spark: SparkSession, index_path: str, *, keep_newest: bool = Fal
         # through the atomic rename — the duplicate-history crash window
         # shrinks to [rename, last source delete], and the fold's
         # history distinct makes even that window semantically harmless
-        staging = f"{index_path}/{FPS_SUBDIR}/_staging-{token}"
+        staging = f"{root}/_staging-{token}"
         writer = merged.write.mode("overwrite")
         if PART_COL in merged.columns:
             writer = merged.repartition(PART_COL).write.mode(
                 "overwrite"
             ).partitionBy(PART_COL)
         writer.parquet(staging)
-        if not bool(
-            fs.rename(jvm(staging), jvm(f"{index_path}/{FPS_SUBDIR}/batch-{token}"))
-        ):
-            # a silently-skipped rename followed by the source deletes
-            # below would lose the merged rows (FileSystem.rename reports
-            # most failures by returning false, not raising)
-            raise IOError(f"compaction rename failed: {staging}")
+        fsio.rename(spark, staging, f"{root}/batch-{token}")
         for d in dirs:
-            fs.delete(jvm(d), True)
+            fsio.delete(spark, d)
         return len(dirs)
-    finally:
-        fs.delete(lock, False)

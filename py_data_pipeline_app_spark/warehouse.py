@@ -15,8 +15,8 @@ token — see :meth:`Warehouse.append`); log tables never rewrite.
 All file management goes through the Hadoop FileSystem API
 (:mod:`py_data_pipeline_app_spark.fsio`), never the driver's local
 ``os``/``shutil`` — so ``root`` may live on ``file:/`` locally or
-HDFS/S3A/GCS on a cluster, the same property the persisted index
-modules already have (operators/similarity.py:_hadoop_fs). At 100 TB
+HDFS/S3A/GCS on a cluster, through the same module every persisted
+index uses for its files. At 100 TB
 the dimension/state tables live in the object store; retention,
 time travel, and the max+1-id path all have to work there too.
 """

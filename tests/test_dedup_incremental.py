@@ -2,6 +2,12 @@
 replay parity against the batch path, index idempotency, and the
 band_buckets contract both paths share."""
 
+import pathlib
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import ExitStack
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +18,10 @@ from py_data_pipeline_app_spark.operators.dedup import (
     minhash_signatures,
 )
 from py_data_pipeline_app_spark.operators.dedup_incremental import (
+    _acquire_index_lock,
+    compact_index,
     incremental_lsh_fold,
+    index_delete,
 )
 
 
@@ -268,6 +277,89 @@ def test_index_lock_blocks_concurrent_mutators(spark, docs, tmp_path):
         spark, str(index), docs.filter(F.col("doc_id") >= 20),
         threshold=0.5, batch_token="b",
     ).collect()
+
+
+def test_index_lock_is_exclusive(spark, tmp_path):
+    """Of 6 mutators racing for the lock of a fresh index, exactly one
+    holds it. Each winner keeps the lock until every thread has tried,
+    so a second holder can only come from a create that is not
+    exclusive (a check-then-create marker lets several threads in)."""
+    threads, rounds = 6, 100
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            for r in range(rounds):
+                index = str(tmp_path / f"idx{r}")
+                go = threading.Barrier(threads)
+                tried = threading.Barrier(threads)
+
+                def contend():
+                    go.wait(timeout=60)
+                    with ExitStack() as held:
+                        try:
+                            held.enter_context(
+                                _acquire_index_lock(spark, index, "race")
+                            )
+                            won = 1
+                        except RuntimeError as e:
+                            if "locked" not in str(e):
+                                raise
+                            won = 0
+                        tried.wait(timeout=60)
+                        return won
+
+                futs = [pool.submit(contend) for _ in range(threads)]
+                holders = [f.result(timeout=120) for f in futs]
+                assert sum(holders) == 1, (r, holders)
+    finally:
+        sys.setswitchinterval(switch)
+
+
+def test_index_on_explicit_file_uri(spark, docs, tmp_path):
+    """Index files are managed through fsio, so an index rooted at a
+    scheme-qualified ``file://`` URI folds, tombstones and compacts
+    exactly like one at the bare local path: same pairs, same band rows
+    left after a full compaction."""
+
+    def run(index, local):
+        a = docs.filter(F.col("doc_id") % 2 == 0)
+        b = docs.filter(F.col("doc_id") % 2 == 1)
+        pairs = _pairs(
+            incremental_lsh_fold(spark, index, a, threshold=0.5, batch_token="a")
+        ) + _pairs(
+            incremental_lsh_fold(spark, index, b, threshold=0.5, batch_token="b")
+        )
+        gone = docs.filter(F.col("doc_id") == 0).select("doc_id")
+        assert index_delete(spark, index, gone, batch_token="d") == "d"
+        assert compact_index(spark, index, keep_newest=False) > 0
+        (compacted,) = [p for p in (local / "bands").iterdir() if p.is_dir()]
+        bands = sorted(
+            tuple(r) for r in spark.read.parquet(str(compacted)).collect()
+        )
+        assert not (local / "_index.lock").exists()
+        return sorted(pairs), bands
+
+    plain = run(str(tmp_path / "plain"), tmp_path / "plain")
+    uri = run(f"file://{tmp_path}/uri", tmp_path / "uri")
+    assert uri == plain
+    assert plain[0] and plain[1]
+    assert all(r[0] != 0 for r in plain[1])  # the tombstoned doc is gone
+
+
+def test_one_filesystem_layer():
+    """Static: fsio is the package's only filesystem layer. No other
+    module reaches the Hadoop FileSystem API, so a second set of file
+    helpers (and with it a second, non-exclusive lock) cannot come
+    back unnoticed."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "py_data_pipeline_app_spark"
+    needles = ("org.apache.hadoop", "getFileSystem(", "hadoopConfiguration(")
+    callers = sorted(
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if any(n in f.read_text(encoding="utf-8") for n in needles)
+    )
+    assert callers == ["fsio.py"]
 
 
 def test_refold_same_doc_id_identical_content_no_fanout(spark, tmp_path):

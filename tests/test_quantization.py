@@ -472,23 +472,17 @@ def test_index_mutators_respect_lock(spark, emb, tmp_path):
 
     ivf = str(tmp_path / "ivf")
     build_ivf_index(half, ivf, n_centroids=8)
-    fs, lock = _acquire_index_lock(spark, ivf, "test")
-    try:
+    with _acquire_index_lock(spark, ivf, "test"):
         with pytest.raises(RuntimeError, match="locked"):
             ivf_index_append(spark, ivf, rest, batch_token="x")
         with pytest.raises(RuntimeError, match="locked"):
             ivf_index_compact(spark, ivf)
-    finally:
-        fs.delete(lock, False)
 
     pq = str(tmp_path / "pq")
     build_ivfpq_index(half, pq, n_centroids=8, m=M, ksub=8, dim=DIM)
-    fs, lock = _acquire_index_lock(spark, pq, "test")
-    try:
+    with _acquire_index_lock(spark, pq, "test"):
         with pytest.raises(RuntimeError, match="locked"):
             ivfpq_index_append(spark, pq, rest, batch_token="x")
-    finally:
-        fs.delete(lock, False)
 
 
 @pytest.mark.oracle

@@ -304,10 +304,10 @@ def test_reorder_leaves_untouched_clusters_unrewritten(spark, emb, tmp_path):
     """Partition pruning is the scale contract: a cluster receiving no
     batch rows keeps its exact files (same names, same mtimes) through
     a reorder append."""
+    from py_data_pipeline_app_spark import fsio
     from py_data_pipeline_app_spark.operators.similarity import (
         _assign_to_centroids,
         _centroid_rows,
-        _hadoop_fs,
     )
 
     idx = _fresh(tmp_path, "reorder-prune")
@@ -328,7 +328,7 @@ def test_reorder_leaves_untouched_clusters_unrewritten(spark, emb, tmp_path):
     assert untouched, "fixture batch must leave some cluster untouched"
 
     def listing(c):
-        fs, p = _hadoop_fs(spark, f"{idx}/assigned/centroid_id={c}")
+        fs, p = fsio.hadoop_fs(spark, f"{idx}/assigned/centroid_id={c}")
         return sorted(
             (s.getPath().getName(), s.getModificationTime())
             for s in fs.listStatus(p)
@@ -517,7 +517,6 @@ def test_reorder_with_pending_appends_is_bounded(spark, emb, tmp_path):
         SEMANTIC_REORDER_EXCL_SUBDIR,
         _assign_to_centroids,
         _centroid_rows,
-        _hadoop_fs,
         semantic_index_compact,
     )
 
@@ -545,14 +544,14 @@ def test_reorder_with_pending_appends_is_bounded(spark, emb, tmp_path):
     assert untouched, "fixture batch must leave some cluster untouched"
 
     def listing(c):
-        fs, p = _hadoop_fs(spark, f"{idx}/assigned/centroid_id={c}")
+        fs, p = fsio.hadoop_fs(spark, f"{idx}/assigned/centroid_id={c}")
         return sorted(
             (s.getPath().getName(), s.getModificationTime())
             for s in fs.listStatus(p)
         )
 
     def append_listing(tok):
-        fs, p = _hadoop_fs(spark, f"{idx}/appends/batch-{tok}")
+        fs, p = fsio.hadoop_fs(spark, f"{idx}/appends/batch-{tok}")
         return sorted(
             (s.getPath().toString(), s.getModificationTime())
             for s in fs.listStatus(p)

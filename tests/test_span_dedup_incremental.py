@@ -92,14 +92,11 @@ def test_lock_excludes_concurrent_fold(spark, corpus, tmp_path):
     )
 
     index = str(tmp_path / "idx")
-    fs, lock = _acquire_index_lock(spark, index, "test holds lock")
-    try:
+    with _acquire_index_lock(spark, index, "test holds lock"):
         with pytest.raises(RuntimeError, match="locked"):
             incremental_span_fold(
                 spark, index, corpus.filter(F.col("doc_id") < 10), batch_token="x"
             )
-    finally:
-        fs.delete(lock, False)
 
 
 @pytest.mark.oracle
