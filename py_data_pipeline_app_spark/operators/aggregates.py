@@ -1,20 +1,20 @@
 """Report aggregations — operators A1/A2/A3/A4, W1, O1 of SURVEY.md §2.
 
 All are single groupBy/window compositions: Spark gives partial
-(map-side) aggregation and whole-stage codegen for free. Global
-ranking goes through the two-phase range-partitioned dense rank
-(operators/ranking.py) — the expensive part (fact-table aggregation)
-happens BEFORE the rank, partitioned on the group keys, and the rank
-itself never sorts the whole relation in one task.
+(map-side) aggregation and whole-stage codegen for free. The expensive
+part (fact-table aggregation) happens before any rank, partitioned on
+the group keys. The customer summary is then ranked by one
+unpartitioned window: the report pulls that frame whole into the
+driver, so its one-partition sort is no bigger than the collect that
+follows it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark.functions.scalar import money_round, null_safe_double
-from py_data_pipeline_app_spark.operators.ranking import global_dense_rank
 
 
 def category_totals(merged: DataFrame) -> DataFrame:
@@ -34,16 +34,20 @@ def customer_spend_summary(cat_totals: DataFrame) -> DataFrame:
     ranked descending, sorted by rank.
 
     Rank is computed on the ROUNDED amount (reference app.py:140 runs
-    before :141), so post-round ties share a dense rank. The rank uses
-    the two-phase global dense rank (operators/ranking.py) so the only
-    single-partition step is the final ORDER BY the caller asked for —
-    never a full-relation rank sort."""
+    before :141), so post-round ties share a dense rank; a NULL total
+    (all amounts garbage) ranks last, in its own tier.
+
+    The result has one row per customer and goes to the driver whole
+    (``write_excel_report``'s ``toPandas``), so the rank is a plain
+    ``dense_rank() OVER (ORDER BY amount DESC)`` on one partition, the
+    reference's single pandas sort (app.py:139-142). Building the frame
+    runs no job. The two-phase ``global_dense_rank`` stays for ranks
+    that are not collected (operators/ranking.py)."""
     totals = cat_totals.groupBy("customer_id", "name").agg(
         money_round(F.sum("amount")).alias("amount")
     )
-    return global_dense_rank(totals, "amount", "rank").orderBy(
-        "rank", "customer_id"
-    )
+    rank = F.dense_rank().over(Window.orderBy(F.col("amount").desc()))
+    return totals.withColumn("rank", rank).orderBy("rank", "customer_id")
 
 
 def top_spender_per_category(cat_totals: DataFrame) -> DataFrame:

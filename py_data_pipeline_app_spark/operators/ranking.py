@@ -25,6 +25,14 @@ The ranged relation feeds both the local-rank branch and the counts
 branch; ``localCheckpoint(eager=False)`` materializes it once so the
 upstream aggregation isn't executed twice (same diamond-reuse lesson
 as connected components, operators/dedup.py).
+
+"Lazy" holds only without AQE. Under AQE (the session default) the
+checkpoint's physical plan is finalised when the frame is built, and
+finalising an adaptive plan runs its query stages: the range-bound
+sampling job and the upstream shuffle stages execute inside
+:func:`global_dense_rank`, before any action on its result. A frame
+that is collected whole on the driver anyway is cheaper ranked by a
+plain window (``aggregates.customer_spend_summary``).
 """
 
 from __future__ import annotations

@@ -8,9 +8,13 @@ reference's four HTTP routes as library calls (SURVEY.md §3):
 
 One call = one micro-batch: validate → log run metadata → parse the
 customer blob → fold SCD state + change log → enrich → aggregate →
-report frames. All transformations are lazy DataFrame compositions;
-actions happen only at the warehouse sinks and when the caller
-materializes report frames.
+report frames. All transformations are lazy DataFrame compositions,
+and actions happen only at the warehouse sinks (the max+1 id, the
+sheet counts, the two appends, the snapshot) and when the caller
+materializes report frames. Two things keep that true: every warehouse
+read passes its declared schema, so no read runs a footer-inference
+job, and the summary rank is a plain window, not a checkpointed
+range-partitioned rank (``aggregates.customer_spend_summary``).
 """
 
 from __future__ import annotations
@@ -108,7 +112,7 @@ def process_upload(
     # INSERT OR REPLACEs rows present in the batch): batch rows carry
     # this upload's id into the fold, dim-carried rows keep the id of
     # the upload that last touched them.
-    current = wh.read("customers")
+    current = wh.read("customers", schemas.CUSTOMER_DIM)
     scd = apply_scd_batch(
         current,
         parsed.withColumn("upload_id", F.lit(upload_id).cast("long")),

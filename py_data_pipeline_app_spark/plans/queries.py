@@ -32,11 +32,6 @@ from py_data_pipeline_app_spark.functions.scalar import (
     excel_serial_to_timestamp,
     money_round,
 )
-from py_data_pipeline_app_spark.operators.aggregates import (
-    category_totals,
-    customer_spend_summary,
-    top_spender_per_category,
-)
 from py_data_pipeline_app_spark.operators.enrich import enrich_transactions
 from py_data_pipeline_app_spark.operators.ranking import global_dense_rank
 from py_data_pipeline_app_spark.operators.parse import parse_customer_blob

@@ -60,7 +60,7 @@ def start_customer_stream(
         if not batch_df.head(1):
             return
         parsed, _rejects = parse_customer_blob(batch_df)
-        current = wh.read("customers")
+        current = wh.read("customers", schemas.CUSTOMER_DIM)
         # Idempotent replay: log appends are keyed by the micro-batch id
         # (same token ⇒ same log subdir, overwritten not duplicated), and
         # a replayed batch reuses the upload_id its first attempt logged

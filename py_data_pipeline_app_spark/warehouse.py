@@ -39,7 +39,8 @@ class Warehouse:
     - ``overwrite(name, df)``: new snapshot version (dimension state).
     - ``append(name, df)``: add files to the append log (change logs,
       run metadata) — never rewrites existing data.
-    - ``read(name)``: latest snapshot, or the whole append log.
+    - ``read(name, schema)``: latest snapshot, or the whole append log,
+      read with the table's declared schema.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -80,12 +81,31 @@ class Warehouse:
         """Latest snapshot (or the append log). None if absent and no
         schema given; an empty typed frame if a schema is supplied.
 
+        A supplied ``schema`` is the read schema on every path
+        (snapshot, ``version=``, append log): the frame has exactly
+        those columns and types, a column the files lack reads as NULL
+        (a customers snapshot written before ``upload_id`` existed),
+        and building the frame runs no job. Without a schema Spark
+        infers one, and inferring runs one job to read a parquet
+        footer.
+
         ``version`` reads a specific snapshot instead of the newest —
         the versioned layout's time travel (inspect the dimension as of
         upload N, diff two states, reproduce a report). Raises if that
         version does not exist or is incomplete; note :meth:`vacuum`
         deletes old versions, so history reaches back only as far as
         the retention policy keeps it."""
+        df = self._scan(name, schema, version)
+        if df is None and schema is not None:
+            return local_rows_df(self.spark, schema, [])
+        return df
+
+    def _scan(
+        self, name: str, schema: T.StructType | None, version: int | None = None
+    ) -> DataFrame | None:
+        """The parquet read behind :meth:`read`; None if the table has
+        no data yet."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         vs = self._versions(name)
         if version is not None:
             if version not in vs:
@@ -93,21 +113,13 @@ class Warehouse:
                     f"table {name!r} has no complete snapshot v{version}; "
                     f"available: {vs} (older versions may have been vacuumed)"
                 )
-            return self.spark.read.parquet(
-                fsio.join(self._table_dir(name), f"v{version}")
-            )
+            return reader.parquet(fsio.join(self._table_dir(name), f"v{version}"))
         if vs:
-            return self.spark.read.parquet(
-                fsio.join(self._table_dir(name), f"v{vs[-1]}")
-            )
-        append_dir = fsio.join(self._table_dir(name), "log")
+            return reader.parquet(fsio.join(self._table_dir(name), f"v{vs[-1]}"))
+        append_dir = self._append_log_dir(name)
         if fsio.any_file_with_suffix(self.spark, append_dir, ".parquet"):
             # appends live in per-write subdirectories (see append())
-            return self.spark.read.option("recursiveFileLookup", "true").parquet(
-                append_dir
-            )
-        if schema is not None:
-            return local_rows_df(self.spark, schema, [])
+            return reader.option("recursiveFileLookup", "true").parquet(append_dir)
         return None
 
     # -- append logs ---------------------------------------------------------
@@ -264,8 +276,9 @@ class Warehouse:
     def next_id(self, name: str, id_col: str = "id") -> int:
         """max+1 id from a metadata table — the distributed analog of
         SQLite's autoincrement ``lastrowid`` (reference app.py:89); runs
-        as one tiny driver-side aggregation over the (small) log."""
-        cur = self.read(name)
+        as one tiny driver-side aggregation over the (small) log. Reads
+        only ``id_col``, typed ``long``, so no footer job precedes it."""
+        cur = self._scan(name, T.StructType([T.StructField(id_col, T.LongType())]))
         if cur is None:
             return 1
         row = cur.agg(F.max(id_col).alias("m")).collect()[0]

@@ -67,6 +67,71 @@ def test_spend_summary_rank_on_rounded_ties(spark):
     assert by_id["C3"].rank == 2  # dense: no gap
 
 
+def _job_ids(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [])
+
+
+def test_spend_summary_matches_python_dense_rank_and_builds_without_jobs(spark):
+    """W1 on 240 customers over six partitions: rows and order equal a
+    pure-Python dense rank (amount descending, NULL total last, then
+    customer_id). Amounts carry a third decimal of 1 or 2, so rounding
+    is never a half tie and many customers share a rounded total. One
+    customer's amounts are all garbage (NULL total, last tier); one
+    mixes garbage with a number (the sum skips the NULL).
+
+    Building the summary must launch no job: the frame goes to the
+    driver whole, so its rank is a plain window; a range-partitioned
+    rank behind ``localCheckpoint`` runs its sampling and shuffle
+    stages at build time under AQE."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(240):
+        cid = f"C{i:03d}"
+        for cat in rng.sample(["X", "Y", "Z"], rng.randint(1, 2)):
+            amount = f"{rng.randint(1, 20)}.00{rng.randint(1, 2)}"
+            rows.append((cid, f"N{i}", cat, amount))
+    rows.append(("C900", "garbage-only", "X", "N/A"))
+    rows.append(("C900", "garbage-only", "Y", "oops"))
+    rows.append(("C901", "half-garbage", "X", "N/A"))
+    rows.append(("C901", "half-garbage", "Y", "3.001"))
+    merged = spark.createDataFrame(
+        rows, "customer_id string, name string, category string, amount string"
+    ).repartition(6)
+
+    totals: dict[tuple[str, str], float | None] = {}
+    for cid, name, _cat, amount in rows:
+        try:
+            v = float(amount)
+        except ValueError:
+            v = None
+        prev = totals.get((cid, name))
+        totals[(cid, name)] = prev if v is None else (prev or 0.0) + v
+    rounded = {k: None if v is None else round(v, 2) for k, v in totals.items()}
+    tiers = sorted({v for v in rounded.values() if v is not None}, reverse=True)
+    tier = {v: r for r, v in enumerate(tiers, start=1)}
+    expected = sorted(
+        (
+            (cid, name, amt, len(tiers) + 1 if amt is None else tier[amt])
+            for (cid, name), amt in rounded.items()
+        ),
+        key=lambda t: (t[3], t[0]),
+    )
+    assert len(tiers) < len(expected) // 4  # heavy ties after rounding
+
+    before = _job_ids(spark)
+    summary = customer_spend_summary(category_totals(merged))
+    built = _job_ids(spark) - before
+    assert not built, f"building the summary ran jobs {sorted(built)}"
+
+    got = [tuple(r) for r in summary.collect()]
+    assert got == expected
+    assert summary.columns == ["customer_id", "name", "amount", "rank"]
+    assert dict(summary.dtypes)["rank"] == "int"
+    assert got[-1][:2] == ("C900", "garbage-only") and got[-1][2] is None
+
+
 def test_top_spender_tie_break_first_occurrence(spark):
     """A3: pandas idxmax takes the first occurrence in (customer_id,
     name, category)-sorted order ⇒ ascending customer_id tie-break."""

@@ -7,17 +7,23 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from py_data_pipeline_app_spark import schemas
+from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.pipeline import (
     MissingSheetsError,
     UploadResult,
     list_address_changes,
     list_uploads,
     process_upload,
+    write_excel_report,
 )
 from py_data_pipeline_app_spark.testing.fixtures import make_workbook
 from py_data_pipeline_app_spark.warehouse import Warehouse
 
 K_DUPS = 4
+# Spark jobs of one steady-state upload (test_upload_job_counts_pinned)
+PROCESS_UPLOAD_JOBS = 10
+REPORT_JOBS = 12
 
 
 @pytest.fixture()
@@ -127,6 +133,92 @@ def test_upload_id_provenance_on_partial_batch(spark, wh, sheets):
     assert dim2[some_id] == 2
     untouched = {k: v for k, v in dim2.items() if k != some_id}
     assert set(untouched.values()) == {1}
+
+
+def _job_ids(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [])
+
+
+def test_typed_reads_return_the_schema_and_run_no_job(spark, wh):
+    """``Warehouse.read(name, schema)`` reads parquet with ``schema`` on
+    every path — newest snapshot, ``version=`` and the append log — so
+    the frame is exactly ``schema`` and building it runs no
+    footer-inference job."""
+    dim_rows = [
+        ("C1", "A", "a@x", "1990-01-01", "1 Main St", "2024-01-01", 1),
+        ("C2", "B", "b@x", "1991-02-02", "2 High St", "2024-01-02", 1),
+    ]
+    wh.overwrite("customers", local_rows_df(spark, schemas.CUSTOMER_DIM, dim_rows[:1]))
+    wh.overwrite("customers", local_rows_df(spark, schemas.CUSTOMER_DIM, dim_rows))
+    for i in (1, 2):
+        wh.append(
+            "uploads",
+            local_rows_df(spark, schemas.UPLOADS, [(i, f"f{i}.xlsx", f"t{i}", 3, 2, 1)]),
+        )
+
+    before = _job_ids(spark)
+    frames = {
+        "snapshot": wh.read("customers", schemas.CUSTOMER_DIM),
+        "version": wh.read("customers", schemas.CUSTOMER_DIM, version=1),
+        "log": wh.read("uploads", schemas.UPLOADS),
+    }
+    built = _job_ids(spark) - before
+    assert not built, f"building typed reads ran jobs {sorted(built)}"
+
+    for key, want in (("snapshot", schemas.CUSTOMER_DIM),
+                      ("version", schemas.CUSTOMER_DIM),
+                      ("log", schemas.UPLOADS)):
+        assert frames[key].schema == want, key
+    assert sorted(tuple(r) for r in frames["snapshot"].collect()) == dim_rows
+    assert [tuple(r) for r in frames["version"].collect()] == dim_rows[:1]
+    assert sorted(r.id for r in frames["log"].collect()) == [1, 2]
+    assert wh.next_id("uploads") == 3
+
+
+def test_legacy_dim_without_upload_id_still_folds(spark, wh, sheets, tmp_path):
+    """A customers snapshot written before ``upload_id`` existed reads
+    back with a NULL ``upload_id`` and still folds: reloading the
+    workbook over the state its first load leaves gives the same 2k
+    ping-pong changes as over a current snapshot
+    (test_scd_invariant_over_reloads), and every folded row carries
+    the new upload's id."""
+    first = Warehouse(spark, str(tmp_path / "first"))
+    process_upload(spark, first, sheets, run_ts="t1")
+    legacy = first.read("customers", schemas.CUSTOMER_DIM).drop("upload_id")
+    wh.overwrite("customers", legacy)
+    assert "upload_id" not in spark.read.parquet(
+        f"{wh._table_dir('customers')}/v1"
+    ).columns
+
+    dim = wh.read("customers", schemas.CUSTOMER_DIM)
+    assert dim.schema == schemas.CUSTOMER_DIM
+    assert dim.filter(F.col("upload_id").isNotNull()).count() == 0
+
+    r = process_upload(spark, wh, sheets, run_ts="t2")
+    assert r.upload_id == 1
+    assert wh.read("address_changes").count() == 2 * K_DUPS
+    folded = wh.read("customers", schemas.CUSTOMER_DIM).collect()
+    assert len(folded) == 50
+    assert {row.upload_id for row in folded} == {1}
+
+
+def test_upload_job_counts_pinned(spark, wh, sheets, tmp_path):
+    """Pin the Spark jobs of one steady-state upload: a second
+    ``process_upload`` over populated tables and its
+    ``write_excel_report``. Before typed warehouse reads and the
+    window-ranked summary the pair ran 16 and 17 jobs here; a new
+    per-upload action shows up as a higher count."""
+    process_upload(spark, wh, sheets, run_ts="t1")
+
+    before = _job_ids(spark)
+    r = process_upload(spark, wh, sheets, run_ts="t2")
+    process_jobs = len(_job_ids(spark) - before)
+    before = _job_ids(spark)
+    write_excel_report(r, str(tmp_path / "report.xlsx"))
+    report_jobs = len(_job_ids(spark) - before)
+
+    assert process_jobs <= PROCESS_UPLOAD_JOBS, f"process_upload ran {process_jobs} jobs"
+    assert report_jobs <= REPORT_JOBS, f"write_excel_report ran {report_jobs} jobs"
 
 
 def test_append_token_is_idempotent(spark, wh):
