@@ -32,7 +32,7 @@ rows|``, never ``|history|``:
    joined from the new batch and the index;
 4. the new batch's bands + toksets are appended to the index under an
    idempotent ``batch-{token}`` subdirectory (same exactly-once
-   pattern as streaming/dedup.py's sink and warehouse.append).
+   pattern as streaming/fold.py's sink and warehouse.append).
 
 Parity contract (tested in test_dedup_incremental.py): folding batches
 B1..Bn sequentially and unioning the emitted pairs yields EXACTLY the

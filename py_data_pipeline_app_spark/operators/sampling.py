@@ -71,6 +71,11 @@ def _thresholds(weights: Mapping[str, float]) -> list[tuple[str, int, int]]:
     return out
 
 
+#: the curation split every registry row and the streaming front door
+#: share, so the batch and streaming paths cannot drift
+SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
+
+
 def hash_split(
     df: DataFrame,
     key_col: str,

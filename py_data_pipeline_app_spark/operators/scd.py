@@ -30,6 +30,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from py_data_pipeline_app_spark.operators.enrich import dedup_last_by_key
+
 
 @dataclass
 class ScdResult:
@@ -73,19 +75,5 @@ def apply_scd_batch(
         )
     )
 
-    w_last = Window.partitionBy(key).orderBy(F.col("_pos").desc())
-    new_state = (
-        staged.withColumn("_rn", F.row_number().over(w_last))
-        .filter(F.col("_rn") == 1)
-        .select(*attrs)
-    )
+    new_state = dedup_last_by_key(staged, key, "_pos").select(*attrs)
     return ScdResult(new_state=new_state, changes=changes)
-
-
-def upsert_last_write_wins(current: DataFrame, incoming: DataFrame, key: str) -> DataFrame:
-    """SNK2 without MERGE support: keep current rows whose key is absent
-    from the batch (left_anti), union the batch. The anti-join side is
-    the (small) batch — broadcast it so the dimension never shuffles."""
-    return current.join(
-        F.broadcast(incoming.select(key).distinct()), key, "left_anti"
-    ).unionByName(incoming)

@@ -15,6 +15,11 @@ materializes report frames. Two things keep that true: every warehouse
 read passes its declared schema, so no read runs a footer-inference
 job, and the summary rank is a plain window, not a checkpointed
 range-partitioned rank (``aggregates.customer_spend_summary``).
+
+The three warehouse sinks are written by :func:`log_upload` and
+:func:`fold_customers` only; the streaming upload loop
+(``streaming.pipeline.start_customer_stream``) folds each micro-batch
+through the same two functions.
 """
 
 from __future__ import annotations
@@ -83,51 +88,22 @@ def process_upload(
         sheets["Products"],
     )
 
-    # SNK1: run metadata with max+1 id (distributed analog of lastrowid).
-    # The three sheet counts come from ONE action: each .count() would be
-    # its own job (three scans of the input before any real work — two
-    # wasted full passes against staged 100-TB parquet); cross-joining
-    # the single-row aggregates folds them into a single job.
-    upload_id = wh.next_id("uploads")
+    # SNK1: run metadata. The three sheet counts come from ONE action:
+    # each .count() would be its own job (three scans of the input
+    # before any real work — two wasted full passes against staged
+    # 100-TB parquet); cross-joining the single-row aggregates folds
+    # them into a single job.
     counts = (
         txn.agg(F.count(F.lit(1)).alias("_n_txn"))
         .crossJoin(cust_raw.agg(F.count(F.lit(1)).alias("_n_cust")))
         .crossJoin(products.agg(F.count(F.lit(1)).alias("_n_prod")))
         .first()
     )
-    wh.append(
-        "uploads",
-        local_rows_df(
-            spark,
-            schemas.UPLOADS,
-            [(upload_id, filename, run_ts, counts._n_txn, counts._n_cust, counts._n_prod)],
-        ),
-    )
+    upload_id = log_upload(wh, filename, run_ts, tuple(counts))
 
     # P1/P2/P3: blob parse with rejects channel
     parsed, rejects = parse_customer_blob(cust_raw)
-
-    # S6 + SNK2 + SNK3: order-aware SCD fold against current dim state.
-    # upload_id provenance matches the reference (app.py:117-122 only
-    # INSERT OR REPLACEs rows present in the batch): batch rows carry
-    # this upload's id into the fold, dim-carried rows keep the id of
-    # the upload that last touched them.
-    current = wh.read("customers", schemas.CUSTOMER_DIM)
-    scd = apply_scd_batch(
-        current,
-        parsed.withColumn("upload_id", F.lit(upload_id).cast("long")),
-        key="customer_id",
-        tracked="address",
-    )
-    changes = scd.changes.select(
-        "customer_id",
-        "old_address",
-        "new_address",
-        F.lit(run_ts).alias("change_timestamp"),
-        F.lit(upload_id).cast("long").alias("upload_id"),
-    )
-    wh.append("address_changes", changes)
-    wh.overwrite("customers", scd.new_state)
+    changes = fold_customers(wh, parsed, upload_id, run_ts)
 
     # J1/J2 + P6 + A1..A4/W1/O1: enrichment and report aggregates
     merged = enrich_transactions(
@@ -148,6 +124,76 @@ def process_upload(
         changes=changes,
         rejects=rejects,
     )
+
+
+def log_upload(
+    wh: Warehouse,
+    filename: str,
+    timestamp: str,
+    counts: tuple[int, int, int],
+    *,
+    token: str | None = None,
+) -> int:
+    """SNK1: append one ``uploads`` row — (transactions, customers,
+    products) sheet ``counts`` — and return its id: max+1 over the log
+    (the distributed analog of the reference's ``lastrowid``,
+    app.py:89), or, when ``token`` names an append a first attempt
+    already completed (a replayed micro-batch), that attempt's id, so
+    the retry overwrites its own row instead of logging a second one."""
+    prior = wh.read_token("uploads", token) if token is not None else None
+    upload_id = int(prior.select("id").head()[0]) if prior is not None else wh.next_id("uploads")
+    wh.append(
+        "uploads",
+        local_rows_df(wh.spark, schemas.UPLOADS, [(upload_id, filename, timestamp, *counts)]),
+        token=token,
+    )
+    return upload_id
+
+
+def fold_customers(
+    wh: Warehouse,
+    parsed: DataFrame,
+    upload_id: int,
+    change_ts: str,
+    *,
+    token: str | None = None,
+) -> DataFrame:
+    """S6 + SNK2 + SNK3: the order-aware SCD fold of parsed customer
+    rows against the current dimension, its ``address_changes`` append
+    and the new ``customers`` snapshot. Returns the change rows.
+
+    upload_id provenance matches the reference (app.py:117-122 only
+    INSERT OR REPLACEs rows present in the batch): batch rows carry
+    this upload's id into the fold, dim-carried rows keep the id of
+    the upload that last touched them.
+
+    With a ``token`` (a micro-batch id) the fold is replay-safe: when
+    the token's change-log append already completed, its rows are kept
+    and not rewritten — the retry reads the snapshot its first attempt
+    wrote, so a re-derived change set would be empty. The snapshot
+    fold needs no such guard: folding a batch into a state that already
+    holds it yields the same state."""
+    current = wh.read("customers", schemas.CUSTOMER_DIM)
+    scd = apply_scd_batch(
+        current,
+        parsed.withColumn("upload_id", F.lit(upload_id).cast("long")),
+        key="customer_id",
+        tracked="address",
+    )
+    changes = scd.changes.select(
+        "customer_id",
+        "old_address",
+        "new_address",
+        F.lit(change_ts).alias("change_timestamp"),
+        F.lit(upload_id).cast("long").alias("upload_id"),
+    )
+    logged = wh.read_token("address_changes", token) if token is not None else None
+    if logged is None:
+        wh.append("address_changes", changes, token=token)
+    else:
+        changes = logged
+    wh.overwrite("customers", scd.new_state)
+    return changes
 
 
 def list_uploads(wh: Warehouse) -> DataFrame:

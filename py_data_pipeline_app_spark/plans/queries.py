@@ -2435,6 +2435,7 @@ def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from py_data_pipeline_app_spark.operators import curation as CUR  # noqa: E402
 from py_data_pipeline_app_spark.operators.sampling import (  # noqa: E402
+    SPLIT_WEIGHTS,
     hash_split,
     sql_hash_split_case,
 )
@@ -2775,9 +2776,6 @@ def event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CURATION_SPLIT = {"train": 0.8, "val": 0.1, "test": 0.1}
-
-
 @register(
     "training_set_curation",
     f"""
@@ -2803,7 +2801,7 @@ _CURATION_SPLIT = {"train": 0.8, "val": 0.1, "test": 0.1}
       FROM canon WHERE rn = 1
     ),
     split AS (
-      SELECT *, {sql_hash_split_case('doc_id', _CURATION_SPLIT)} AS split
+      SELECT *, {sql_hash_split_case('doc_id', SPLIT_WEIGHTS)} AS split
       FROM kept WHERE quality_score >= 0.5
     )
     SELECT split, lang,
@@ -2839,7 +2837,7 @@ def training_set_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count_ws("text").alias("n_tokens"),
         feats["quality_score"].alias("quality_score"),
     ).filter(F.col("quality_score") >= 0.5)
-    split = hash_split(kept, "doc_id", _CURATION_SPLIT)
+    split = hash_split(kept, "doc_id", SPLIT_WEIGHTS)
     return split.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -2891,7 +2889,7 @@ def training_set_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE quality_score >= 0.5
     ),
     split AS (
-      SELECT *, {sql_hash_split_case('split_key', _CURATION_SPLIT)} AS split
+      SELECT *, {sql_hash_split_case('split_key', SPLIT_WEIGHTS)} AS split
       FROM skeyed
     )
     SELECT split, lang,
@@ -2934,7 +2932,7 @@ def training_set_curation_leakage_safe_q(
     skeyed = kept.join(
         labels.withColumnRenamed("node", "doc_id"), "doc_id", "left"
     ).withColumn("split_key", F.coalesce(F.col("comp"), F.col("doc_id")))
-    split = hash_split(skeyed, "split_key", _CURATION_SPLIT)
+    split = hash_split(skeyed, "split_key", SPLIT_WEIGHTS)
     return split.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -2948,8 +2946,8 @@ def training_set_curation_leakage_safe_q(
     WITH {_NGRAM_PAIR_CTES},
     assigned AS (
       SELECT id_a, id_b,
-             {sql_hash_split_case('id_a', _CURATION_SPLIT)} AS split_a,
-             {sql_hash_split_case('id_b', _CURATION_SPLIT)} AS split_b
+             {sql_hash_split_case('id_a', SPLIT_WEIGHTS)} AS split_a,
+             {sql_hash_split_case('id_b', SPLIT_WEIGHTS)} AS split_b
       FROM njpairs
     )
     SELECT least(split_a, split_b) AS split_lo,
@@ -2970,10 +2968,10 @@ def split_leakage_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "documents", sf_dir), n=3, threshold=0.5, max_df=100
     )
     assigned = hash_split(
-        pairs.select("id_a", "id_b", F.col("id_a").alias("_k")), "_k", _CURATION_SPLIT
+        pairs.select("id_a", "id_b", F.col("id_a").alias("_k")), "_k", SPLIT_WEIGHTS
     ).withColumnRenamed("split", "split_a")
     assigned = hash_split(
-        assigned.withColumn("_k", F.col("id_b")), "_k", _CURATION_SPLIT
+        assigned.withColumn("_k", F.col("id_b")), "_k", SPLIT_WEIGHTS
     ).withColumnRenamed("split", "split_b")
     return (
         assigned.select(
@@ -4121,14 +4119,13 @@ from py_data_pipeline_app_spark.operators.sampling import (  # noqa: E402
 )
 from py_data_pipeline_app_spark.operators.skew import salted_join  # noqa: E402
 
-_SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
 _LANG_FRACTIONS = {"en": 0.25}
 
 
 @register(
     "dataset_split_profile",
     f"""
-    SELECT {sql_hash_split_case('doc_id', _SPLIT_WEIGHTS)} AS split,
+    SELECT {sql_hash_split_case('doc_id', SPLIT_WEIGHTS)} AS split,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS total_chars,
            CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
@@ -4147,7 +4144,7 @@ def dataset_split_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over 3 groups."""
     docs = load_table(spark, "documents", sf_dir)
     return (
-        hash_split(docs, "doc_id", _SPLIT_WEIGHTS)
+        hash_split(docs, "doc_id", SPLIT_WEIGHTS)
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -6104,7 +6101,7 @@ def dedup_canonical_by_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_QUALITY_SCORE_CTES},
     labeled AS (
       SELECT d.doc_id, d.source,
-             {sql_hash_split_case('d.doc_id', _SPLIT_WEIGHTS)} AS split,
+             {sql_hash_split_case('d.doc_id', SPLIT_WEIGHTS)} AS split,
              coalesce(v.kept, TRUE) AS kept,
              q.quality_z > 0.0 AS good,
              s.n AS n_tokens
@@ -6173,7 +6170,7 @@ def training_set_curation_semantic_q(spark: SparkSession, sf_dir: str) -> DataFr
         .join(scored, "doc_id")
         .withColumn("good", F.col("quality_z") > 0.0)
     )
-    labeled = hash_split(labeled, "doc_id", _SPLIT_WEIGHTS)
+    labeled = hash_split(labeled, "doc_id", SPLIT_WEIGHTS)
     kept_good = F.col("kept") & F.col("good")
     return labeled.groupBy("split", "source").agg(
         F.sum(F.when(kept_good, 1).otherwise(0)).alias("n_retained"),

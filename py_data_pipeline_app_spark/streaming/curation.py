@@ -1,7 +1,8 @@
 """End-to-end incremental CURATION front door (extension — the
-reference has no streaming or corpus surface): one ``foreachBatch``
-stream that folds each arriving doc+embedding micro-batch through the
-four persisted incremental structures —
+reference has no streaming or corpus surface): one stream on the
+package's micro-batch driver (``streaming.fold``) that folds each
+arriving doc+embedding micro-batch through the four persisted
+incremental structures —
 
 1. span dedup against the chunk-fingerprint index
    (``operators.span_dedup_incremental``): previously-seen spans are
@@ -27,15 +28,11 @@ rollup computed over everything at once (with the index's frozen
 centroids) — and the curated text equals one batch
 ``chunk_dedup_rebuild`` over the concatenated corpus.
 
-Exactly-once under micro-batch replay: every structure keys on the
-micro-batch id — the span fold and semantic append exclude their own
-token's directory from history and overwrite it, and the per-batch
-output directory is rewritten in overwrite mode — so a replayed batch
-converges to the identical state instead of duplicating. Index
-maintenance is automatic: every ``compact_every`` batches both indexes
-compact keep-newest (the one batch Structured Streaming could still
-replay stays overwritable). Unbounded history lives in parquet; the
-streaming state store stays EMPTY.
+Exactly-once under micro-batch replay follows the driver's contract
+(``streaming.fold``): every structure keys on the micro-batch id, so a
+replayed batch converges to the identical state instead of
+duplicating, and every ``compact_every`` batches the indexes compact
+keep-newest.
 """
 
 from __future__ import annotations
@@ -46,11 +43,11 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from py_data_pipeline_app_spark import fsio
-
-#: split weights — imported from the batch rollup so the streaming and
-#: batch paths cannot drift (the parity test compares against this name)
-from py_data_pipeline_app_spark.plans.queries import (  # noqa: E402
-    _SPLIT_WEIGHTS as SPLIT_WEIGHTS,
+from py_data_pipeline_app_spark.operators.sampling import SPLIT_WEIGHTS, hash_split
+from py_data_pipeline_app_spark.streaming.fold import (
+    fold_stream,
+    read_fold_output,
+    write_fold_output,
 )
 
 SPAN_SUBDIR = "span_index"
@@ -280,7 +277,6 @@ def curation_fold(
     from py_data_pipeline_app_spark.operators.quality_model import (
         score_quality_linear,
     )
-    from py_data_pipeline_app_spark.operators.sampling import hash_split
     from py_data_pipeline_app_spark.operators.similarity import (
         IVF_APPENDS_SUBDIR,
         semantic_index_append,
@@ -566,7 +562,7 @@ def curation_fold(
         id_col,
     ).withColumn("retained", gate)
     # idempotent landing: a replayed batch rewrites its own directory
-    out.write.mode("overwrite").parquet(f"{out_path}/batch-{token}")
+    write_fold_output(out, out_path, batch_id)
 
 
 def start_curation_stream(
@@ -634,6 +630,10 @@ def start_curation_stream(
     fresh feed are legitimately smaller than ``n_shards`` cells and
     a raise inside foreachBatch would kill the query; size
     ``n_shards`` to the corpus, not the batch."""
+    from py_data_pipeline_app_spark.operators.media_dedup_incremental import (
+        compact_media_index,
+        compact_video_index,
+    )
     from py_data_pipeline_app_spark.operators.similarity import (
         semantic_index_compact,
     )
@@ -644,10 +644,9 @@ def start_curation_stream(
         write_training_shards,
     )
 
-    stream = spark.readStream.schema(schema).parquet(landing)
     shards_dest = shards_path or f"{out_path}/shards"
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         curation_fold(
             spark,
             state_root,
@@ -679,23 +678,6 @@ def start_curation_stream(
             video_max_hamming=video_max_hamming,
             video_min_matching_buckets=video_min_matching_buckets,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_fps(spark, f"{state_root}/{SPAN_SUBDIR}", keep_newest=True)
-            semantic_index_compact(
-                spark, f"{state_root}/{SEMANTIC_SUBDIR}", keep_newest=True
-            )
-            if media_index is not None:
-                from py_data_pipeline_app_spark.operators.media_dedup_incremental import (
-                    compact_media_index,
-                )
-
-                compact_media_index(spark, media_index, keep_newest=True)
-            if video_index is not None:
-                from py_data_pipeline_app_spark.operators.media_dedup_incremental import (
-                    compact_video_index,
-                )
-
-                compact_video_index(spark, video_index, keep_newest=True)
         if shards_every and batch_id > 0 and batch_id % shards_every == 0:
             # a reordering feed's shard write must read the index's
             # CURRENT verdicts (curation_fold's documented contract):
@@ -722,28 +704,24 @@ def start_curation_stream(
                 verify=False,
             )
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    def compact() -> None:
+        compact_fps(spark, f"{state_root}/{SPAN_SUBDIR}", keep_newest=True)
+        semantic_index_compact(
+            spark, f"{state_root}/{SEMANTIC_SUBDIR}", keep_newest=True
+        )
+        if media_index is not None:
+            compact_media_index(spark, media_index, keep_newest=True)
+        if video_index is not None:
+            compact_video_index(spark, video_index, keep_newest=True)
+
+    return fold_stream(
+        spark.readStream.schema(schema).parquet(landing),
+        checkpoint,
+        fold,
+        maintain=compact,
+        maintain_every=compact_every,
+        query_name=query_name,
     )
-
-
-def curated_batches(spark: SparkSession, out_path: str) -> DataFrame:
-    """Every landed batch's rows as one frame (schema-stable union of
-    the ``batch-*`` subdirectories — a bare directory read would fail
-    partition discovery on the non-partition-style layout)."""
-    dirs = [
-        f"{out_path}/{name}"
-        for name, is_dir in fsio.child_entries(spark, out_path)
-        if is_dir and name.startswith("batch-")
-    ]
-    if not dirs:
-        raise ValueError(f"no curated batches under {out_path}")
-    return spark.read.parquet(*dirs)
 
 
 def curated_corpus(spark: SparkSession, out_path: str) -> DataFrame:
@@ -752,7 +730,7 @@ def curated_corpus(spark: SparkSession, out_path: str) -> DataFrame:
     FOLD-TIME verdicts — exactly right for monotone feeds (verdicts
     never change); a reordering feed should read
     :func:`curated_corpus_current` instead."""
-    return curated_batches(spark, out_path).filter(F.col("retained"))
+    return read_fold_output(spark, out_path).filter(F.col("retained"))
 
 
 def curated_corpus_current(
@@ -779,7 +757,7 @@ def curated_corpus_current(
         semantic_index_state,
     )
 
-    rows = curated_batches(spark, out_path)
+    rows = read_fold_output(spark, out_path)
     state = semantic_index_state(
         spark, f"{state_root}/{SEMANTIC_SUBDIR}", id_col=id_col
     ).select(F.col(id_col), F.col("kept").alias("_kept_now"))
@@ -825,7 +803,7 @@ def curation_accounting(spark: SparkSession, out_path: str) -> DataFrame:
     adds ``n_dropped_vid_dup``. Gated verdicts fold into
     ``n_retained``/``retained_tokens``; non-gated streams keep the
     original 6-column schema."""
-    rows = curated_batches(spark, out_path)
+    rows = read_fold_output(spark, out_path)
     kept_good = F.col("sem_kept") & F.col("good")
     aggs = [
         F.sum(F.when(~F.col("sem_kept"), 1).otherwise(0)).alias(

@@ -18,14 +18,17 @@ by corpus history. The semantic contract, asserted in tests:
 At 100 TB-scale ingestion this is the right split: the stream keeps
 the recent horizon clean in real time; a periodic batch exact_dedup
 sweep (cheap: one shuffle on the fingerprint) reconciles history.
+
+Run it through the package's one micro-batch driver, which lands each
+batch's survivors replay-idempotently::
+
+    fold_stream(streaming_exact_dedup(stream), ckpt, lambda df, i: df, out=out)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from py_data_pipeline_app_spark.functions.text import normalize_text
 
@@ -45,361 +48,3 @@ def streaming_exact_dedup(
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
 
-
-def start_dedup_stream(
-    spark: SparkSession,
-    landing: str,
-    checkpoint: str,
-    schema: T.StructType,
-    out_path: str,
-    *,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    query_name: str = "deduped_docs",
-) -> StreamingQuery:
-    """File-landing → watermarked exact dedup → parquet sink
-    (foreachBatch, so the query recovers from its checkpoint across
-    restarts — the memory sink cannot). ``availableNow`` drains the
-    landing dir and terminates, so repeated calls with one checkpoint
-    fold newly landed files incrementally.
-
-    The sink is IDEMPOTENT under micro-batch replay: each batch writes
-    its own ``batch-{id}`` subdirectory in overwrite mode, so when
-    Structured Streaming re-runs the last uncommitted batch after a
-    crash, the retry overwrites the partial output instead of
-    appending duplicates — exactly-once output, not just
-    at-least-once (same pattern as warehouse.append's token subdirs).
-    Read the result with ``read_dedup_output`` (recursive lookup over
-    the batch subdirectories)."""
-    stream = spark.readStream.schema(schema).parquet(landing)
-    deduped = streaming_exact_dedup(
-        stream, text_col=text_col, ts_col=ts_col, watermark=watermark
-    )
-    base = out_path.rstrip("/")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{base}/batch-{batch_id:08d}")
-
-    return (
-        deduped.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_dedup_output(spark: SparkSession, out_path: str) -> DataFrame:
-    """Read every committed micro-batch's rows from the sink's
-    ``batch-*`` subdirectories (recursive file lookup — no partition
-    column is inferred, the schema is exactly what the stream wrote)."""
-    return (
-        spark.read.option("recursiveFileLookup", "true").parquet(out_path.rstrip("/"))
-    )
-
-
-def start_near_dup_stream(
-    spark: SparkSession,
-    landing: str,
-    checkpoint: str,
-    schema: T.StructType,
-    index_path: str,
-    pairs_out: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    num_perms: int | None = None,
-    bands: int | None = None,
-    part_buckets: int | None = None,
-    compact_every: int | None = 16,
-    query_name: str = "near_dup_docs",
-) -> StreamingQuery:
-    """Streaming NEAR-dup detection: every arriving micro-batch is
-    folded into the persisted MinHash+LSH band index
-    (operators.dedup_incremental), emitting the verified near-dup
-    pairs the batch introduces — within the batch AND against all
-    previously streamed documents — without re-running LSH over
-    history.
-
-    This is the incremental twin of the batch
-    ``minhash_dedup_pairs``: the union of every micro-batch's emitted
-    pairs equals one batch run over everything streamed so far
-    (parity-tested). Exactly-once pair output under micro-batch
-    replay: the fold's ``batch_token`` is the micro-batch id, so a
-    retried batch excludes its own half-committed index write from
-    history (no self-pairs) and overwrites both its index and pairs
-    subdirectories.
-
-    State design vs the watermarked exact-dedup stream above: the LSH
-    band index deliberately covers UNBOUNDED history — that is the
-    product (a near-dup of anything ever seen must be caught), and it
-    lives in parquet on shared storage, not in executor state, so the
-    streaming state store stays empty. Growth is linear in corpus
-    size.
-
-    Index maintenance is AUTOMATIC: every ``compact_every`` micro-
-    batches the sink compacts the index's ``batch-*`` subdirectories
-    (bounding the driver-side listing cost a long-lived stream would
-    otherwise accrete one subdir per batch). Running inside
-    foreachBatch structurally serializes compaction with folds — and
-    the index lock would fail loudly if anything raced anyway. The
-    compaction keeps the newest batch subdirectory untouched
-    (``keep_newest``), so the one batch Structured Streaming could
-    still replay after a crash keeps its own-token exclusion intact.
-    Pass ``compact_every=None`` to manage compaction out-of-band."""
-    from py_data_pipeline_app_spark.operators.dedup import (
-        DEFAULT_BANDS,
-        DEFAULT_NUM_PERMS,
-    )
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        compact_index,
-        incremental_lsh_fold,
-    )
-
-    np_, b_ = num_perms or DEFAULT_NUM_PERMS, bands or DEFAULT_BANDS
-    stream = spark.readStream.schema(schema).parquet(landing)
-    base = pairs_out.rstrip("/")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = incremental_lsh_fold(
-            spark,
-            index_path,
-            batch_df,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-            num_perms=np_,
-            bands=b_,
-            **({"part_buckets": part_buckets} if part_buckets is not None else {}),
-            batch_token=f"{batch_id:08d}",
-        )
-        # the eager write also drains the lazy pairs frame, so the
-        # compaction below never deletes subdirs a pending read pins
-        pairs.write.mode("overwrite").parquet(f"{base}/batch-{batch_id:08d}")
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_index(spark, index_path)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_media_dedup_stream(
-    spark: SparkSession,
-    landing: str,
-    checkpoint: str,
-    schema: T.StructType,
-    index_path: str,
-    pairs_out: str,
-    *,
-    decoder: str = "payload_gray",
-    axes: str = "both",
-    bands: int = 8,
-    max_hamming: int = 6,
-    part_buckets: int | None = None,
-    compact_every: int | None = 16,
-    query_name: str = "near_dup_media",
-) -> StreamingQuery:
-    """Streaming IMAGE near-dup detection: every arriving micro-batch
-    of media assets is folded into the persisted dHash band index
-    (operators.media_dedup_incremental), emitting the verified
-    near-dup pairs the batch introduces — within the batch AND against
-    every previously streamed asset — without re-hashing or
-    re-blocking history. The multimodal twin of
-    :func:`start_near_dup_stream`, at the production defaults
-    (two-axis 128-bit signature, 16-bit band buckets, combined-hamming
-    verify).
-
-    Same contracts as the text stream, inherited from the shared
-    index machinery: union-of-folds equals one batch
-    ``dhash_near_dup_pairs`` over everything streamed (parity-tested);
-    exactly-once pair output under micro-batch replay (the fold's
-    ``batch_token`` is the micro-batch id — a retried batch excludes
-    its own half-committed index write from history and overwrites
-    both its index and pairs subdirectories); unbounded history lives
-    in parquet, not executor state; every ``compact_every`` batches
-    the index compacts keep-newest inside foreachBatch (structurally
-    serialized with folds). Landing schema needs (media_id, payload)
-    — filter mixed-modality feeds to images upstream or land them
-    pre-filtered."""
-    from py_data_pipeline_app_spark.operators.media_dedup_incremental import (
-        compact_media_index,
-        incremental_dhash_fold,
-    )
-
-    stream = spark.readStream.schema(schema).parquet(landing)
-    base = pairs_out.rstrip("/")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = incremental_dhash_fold(
-            spark,
-            index_path,
-            batch_df,
-            decoder=decoder,
-            axes=axes,
-            bands=bands,
-            max_hamming=max_hamming,
-            **({"part_buckets": part_buckets} if part_buckets is not None else {}),
-            batch_token=f"{batch_id:08d}",
-        )
-        # the eager write also drains the lazy pairs frame, so the
-        # compaction below never deletes subdirs a pending read pins
-        pairs.write.mode("overwrite").parquet(f"{base}/batch-{batch_id:08d}")
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_media_index(spark, index_path)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_video_dedup_stream(
-    spark: SparkSession,
-    landing: str,
-    checkpoint: str,
-    schema: T.StructType,
-    index_path: str,
-    pairs_out: str,
-    *,
-    decoder: str = "payload_frames",
-    every: int = 5,
-    fps_ms: int = 40,
-    bucket_ms: int = 1000,
-    bands: int = 8,
-    max_hamming: int = 6,
-    min_matching_buckets: int = 2,
-    part_buckets: int | None = None,
-    compact_every: int | None = 16,
-    query_name: str = "near_dup_video",
-) -> StreamingQuery:
-    """Streaming VIDEO near-dup detection: every arriving micro-batch
-    of clips is folded into the persisted per-frame dHash index
-    (operators.media_dedup_incremental.incremental_video_dhash_fold),
-    emitting the verified near-dup CLIP pairs the batch introduces —
-    within the batch AND against every previously streamed clip —
-    without re-decoding or re-blocking history. The video twin of
-    :func:`start_media_dedup_stream`, inheriting the same contracts
-    from the shared index machinery: union-of-folds equals one batch
-    ``video_near_dup_pairs`` over everything streamed (parity-tested);
-    exactly-once pair output under micro-batch replay (the fold's
-    ``batch_token`` is the micro-batch id); unbounded history lives in
-    parquet, partition-pruned per fold; keep-newest compaction every
-    ``compact_every`` batches inside foreachBatch. Landing schema
-    needs (media_id, payload, meta) — filter mixed-modality feeds to
-    ``kind='video'`` upstream or land them pre-filtered."""
-    from py_data_pipeline_app_spark.operators.media_dedup_incremental import (
-        compact_video_index,
-        incremental_video_dhash_fold,
-    )
-
-    stream = spark.readStream.schema(schema).parquet(landing)
-    base = pairs_out.rstrip("/")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = incremental_video_dhash_fold(
-            spark,
-            index_path,
-            batch_df,
-            decoder=decoder,
-            every=every,
-            fps_ms=fps_ms,
-            bucket_ms=bucket_ms,
-            bands=bands,
-            max_hamming=max_hamming,
-            min_matching_buckets=min_matching_buckets,
-            **({"part_buckets": part_buckets} if part_buckets is not None else {}),
-            batch_token=f"{batch_id:08d}",
-        )
-        # the eager write also drains the lazy pairs frame, so the
-        # compaction below never deletes subdirs a pending read pins
-        pairs.write.mode("overwrite").parquet(f"{base}/batch-{batch_id:08d}")
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_video_index(spark, index_path)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_span_dedup_stream(
-    spark: SparkSession,
-    landing: str,
-    checkpoint: str,
-    schema: T.StructType,
-    index_path: str,
-    out_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 10,
-    part_buckets: int | None = None,
-    compact_every: int | None = 16,
-    query_name: str = "span_dedup_docs",
-) -> StreamingQuery:
-    """Streaming SPAN dedup: every arriving micro-batch is folded
-    against the persisted chunk-fingerprint index
-    (operators.span_dedup_incremental) and its REBUILT documents — all
-    previously-seen spans scrubbed, whether seen in earlier batches or
-    earlier in this one — land under ``out/batch-{id}``. The crawl-
-    cadence twin of the batch ``chunk_dedup_rebuild``: the union of
-    every micro-batch's output equals one batch run over everything
-    streamed so far (parity-tested).
-
-    Exactly-once under replay: the fold's ``batch_token`` is the
-    micro-batch id (a retried batch excludes its own half-committed
-    fingerprint append from history and overwrites both its append and
-    its output subdir). Index maintenance is automatic: every
-    ``compact_every`` micro-batches the fingerprint subdirectories
-    merge (keep-newest, so the one replayable batch stays
-    overwritable); the index lock makes any out-of-band race fail
-    loudly. Unbounded-history state lives in parquet — the streaming
-    state store stays empty, same design as the near-dup stream."""
-    from py_data_pipeline_app_spark.operators.span_dedup_incremental import (
-        compact_fps,
-        incremental_span_fold,
-    )
-
-    stream = spark.readStream.schema(schema).parquet(landing)
-    base = out_path.rstrip("/")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rebuilt = incremental_span_fold(
-            spark,
-            index_path,
-            batch_df,
-            text_col=text_col,
-            id_col=id_col,
-            chunk_tokens=chunk_tokens,
-            **({"part_buckets": part_buckets} if part_buckets is not None else {}),
-            batch_token=f"{batch_id:08d}",
-        )
-        rebuilt.write.mode("overwrite").parquet(f"{base}/batch-{batch_id:08d}")
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_fps(spark, index_path, keep_newest=True)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -227,9 +227,12 @@ def test_streaming_media_dedup_parity(spark, media_rows, tmp_path):
     the union of the emitted pair batches equals one batch
     dhash_near_dup_pairs over everything streamed — including the
     planted cross-batch duplicates caught at batch 2."""
-    from py_data_pipeline_app_spark.streaming.dedup import (
-        read_dedup_output,
-        start_media_dedup_stream,
+    from py_data_pipeline_app_spark.operators.media_dedup_incremental import (
+        compact_media_index,
+    )
+    from py_data_pipeline_app_spark.streaming.fold import (
+        fold_stream,
+        read_fold_output,
     )
 
     landing = str(tmp_path / "landing")
@@ -238,13 +241,15 @@ def test_streaming_media_dedup_parity(spark, media_rows, tmp_path):
     a.write.mode("overwrite").parquet(f"{landing}/wave-0")
 
     def drain():
-        q = start_media_dedup_stream(
-            spark,
-            f"{landing}/wave-*",
+        idx = str(tmp_path / "idx")
+        q = fold_stream(
+            spark.readStream.schema(a.schema).parquet(f"{landing}/wave-*"),
             str(tmp_path / "ckpt"),
-            a.schema,
-            str(tmp_path / "idx"),
-            str(tmp_path / "pairs"),
+            lambda df, i: incremental_dhash_fold(
+                spark, idx, df, batch_token=f"{i:08d}"
+            ),
+            out=str(tmp_path / "pairs"),
+            maintain=lambda: compact_media_index(spark, idx),
         )
         q.awaitTermination(120)
 
@@ -253,7 +258,7 @@ def test_streaming_media_dedup_parity(spark, media_rows, tmp_path):
     drain()
     got = sorted(
         (r.id_a, r.id_b, r.hamming)
-        for r in read_dedup_output(spark, str(tmp_path / "pairs")).collect()
+        for r in read_fold_output(spark, str(tmp_path / "pairs")).collect()
     )
     # default (capped) config both sides: buckets here are tiny
     assert got == _pairs(dhash_near_dup_pairs(media_dhash(media_rows)))
@@ -399,7 +404,7 @@ def test_video_config_drift_fails_loudly(spark, video_rows, tmp_path):
 
 
 def test_video_streaming_front_door_parity(spark, video_rows, tmp_path):
-    """start_video_dedup_stream: landing two micro-batch files and
+    """The video near-dup stream: landing two micro-batch files and
     draining with availableNow folds each into the persisted index;
     the union of emitted pair batches equals one batch
     video_near_dup_pairs over everything streamed."""
@@ -407,9 +412,13 @@ def test_video_streaming_front_door_parity(spark, video_rows, tmp_path):
         video_frame_dhash,
         video_near_dup_pairs,
     )
-    from py_data_pipeline_app_spark.streaming.dedup import (
-        read_dedup_output,
-        start_video_dedup_stream,
+    from py_data_pipeline_app_spark.operators.media_dedup_incremental import (
+        compact_video_index,
+        incremental_video_dhash_fold,
+    )
+    from py_data_pipeline_app_spark.streaming.fold import (
+        fold_stream,
+        read_fold_output,
     )
 
     landing = str(tmp_path / "landing")
@@ -418,13 +427,15 @@ def test_video_streaming_front_door_parity(spark, video_rows, tmp_path):
     a.write.mode("overwrite").parquet(f"{landing}/wave-0")
 
     def drain():
-        q = start_video_dedup_stream(
-            spark,
-            f"{landing}/wave-*",
+        vidx = str(tmp_path / "vidx")
+        q = fold_stream(
+            spark.readStream.schema(a.schema).parquet(f"{landing}/wave-*"),
             str(tmp_path / "ckpt"),
-            a.schema,
-            str(tmp_path / "vidx"),
-            str(tmp_path / "pairs"),
+            lambda df, i: incremental_video_dhash_fold(
+                spark, vidx, df, batch_token=f"{i:08d}"
+            ),
+            out=str(tmp_path / "pairs"),
+            maintain=lambda: compact_video_index(spark, vidx),
         )
         q.awaitTermination(120)
 
@@ -433,7 +444,7 @@ def test_video_streaming_front_door_parity(spark, video_rows, tmp_path):
     drain()
     got = sorted(
         (r.id_a, r.id_b, r.n_matching_buckets)
-        for r in read_dedup_output(spark, str(tmp_path / "pairs")).collect()
+        for r in read_fold_output(spark, str(tmp_path / "pairs")).collect()
     )
     assert got == _vpairs(
         video_near_dup_pairs(video_frame_dhash(video_rows))

@@ -9,7 +9,7 @@ rows (reference upload_logs.db; loop at app.py:110-123).
 
 from pyspark.sql import Row
 
-from py_data_pipeline_app_spark.operators.scd import apply_scd_batch, upsert_last_write_wins
+from py_data_pipeline_app_spark.operators.scd import apply_scd_batch
 
 
 def _batch(spark, rows):
@@ -66,11 +66,3 @@ def test_change_compares_against_existing_dim_state(spark):
     assert total == 1
     assert dim.collect()[0].address == "new"
 
-
-def test_upsert_last_write_wins(spark):
-    current = spark.createDataFrame(
-        [Row(k="a", v=1), Row(k="b", v=2)], "k string, v int"
-    )
-    incoming = spark.createDataFrame([Row(k="b", v=9), Row(k="c", v=3)], "k string, v int")
-    out = {(r.k, r.v) for r in upsert_last_write_wins(current, incoming, "k").collect()}
-    assert out == {("a", 1), ("b", 9), ("c", 3)}

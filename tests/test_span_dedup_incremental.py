@@ -107,9 +107,12 @@ def test_streaming_span_dedup_parity_and_compaction(spark, corpus, tmp_path):
 
     from pyspark.sql import types as T
 
-    from py_data_pipeline_app_spark.streaming.dedup import (
-        read_dedup_output,
-        start_span_dedup_stream,
+    from py_data_pipeline_app_spark.operators.span_dedup_incremental import (
+        compact_fps,
+    )
+    from py_data_pipeline_app_spark.streaming.fold import (
+        fold_stream,
+        read_fold_output,
     )
 
     schema = T.StructType(
@@ -123,11 +126,18 @@ def test_streaming_span_dedup_parity_and_compaction(spark, corpus, tmp_path):
         corpus.filter(
             (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
         ).coalesce(1).write.parquet(f"{landing}/b{i}")
-        q = start_span_dedup_stream(
-            spark, landing + "/*", ckpt, schema, index, out, compact_every=2
+        q = fold_stream(
+            spark.readStream.schema(schema).parquet(landing + "/*"),
+            ckpt,
+            lambda df, i: incremental_span_fold(
+                spark, index, df, batch_token=f"{i:08d}"
+            ),
+            out=out,
+            maintain=lambda: compact_fps(spark, index, keep_newest=True),
+            maintain_every=2,
         )
         q.awaitTermination(120)
-    got = sorted(map(tuple, read_dedup_output(spark, out).collect()))
+    got = sorted(map(tuple, read_fold_output(spark, out).collect()))
     want = sorted(map(tuple, chunk_dedup_rebuild(corpus).collect()))
     assert got == want
     n_dirs = len(

@@ -3,6 +3,10 @@ and windowed aggregations (batch-equivalence + a real stream run)."""
 
 from __future__ import annotations
 
+import ast
+import os
+import pathlib
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -72,6 +76,83 @@ def test_checkpoint_prevents_refolding(spark, tmp_path):
     # restart with same checkpoint and no new files: nothing re-folds
     start_customer_stream(spark, wh, landing + "/*", ckpt).awaitTermination(120)
     assert wh.read("uploads").count() == n1
+
+
+def test_replayed_customer_batch_keeps_its_change_log(spark, tmp_path):
+    """Checkpoint replay of the last micro-batch (its commit deleted, so
+    a restart re-runs it with the same id — Structured Streaming's crash
+    recovery) must leave the warehouse as the first attempt left it. The
+    retry reads the snapshot its first attempt wrote, so re-deriving
+    the change set would find nothing and overwrite the logged move
+    with an empty append."""
+    landing = str(tmp_path / "landing")
+    ckpt = tmp_path / "ckpt"
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for name, rows in (
+        ("b1", [(_blob("C1", "addr one"), 0), (_blob("C2", "addr two"), 1)]),
+        ("b2", [(_blob("C1", "addr moved"), 0)]),
+    ):
+        spark.createDataFrame(rows, schemas.CUSTOMERS_RAW).coalesce(1).write.parquet(
+            f"{landing}/{name}"
+        )
+        start_customer_stream(spark, wh, landing + "/*", str(ckpt)).awaitTermination(120)
+    assert wh.read("address_changes").count() == 1
+
+    commits = ckpt / "commits"
+    os.remove(commits / "1")
+    if (commits / ".1.crc").exists():
+        os.remove(commits / ".1.crc")
+    start_customer_stream(spark, wh, landing + "/*", str(ckpt)).awaitTermination(120)
+    assert (commits / "1").exists()  # batch 1 ran again and committed
+
+    changes = wh.read("address_changes").collect()
+    assert [(r.customer_id, r.old_address, r.new_address) for r in changes] == [
+        ("C1", "addr one", "addr moved")
+    ]
+    dim = {r.customer_id: r.address for r in wh.read("customers").collect()}
+    assert dim == {"C1": "addr moved", "C2": "addr two"}
+    assert sorted(r.id for r in wh.read("uploads").collect()) == [1, 2]
+
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "py_data_pipeline_app_spark"
+
+
+def test_one_micro_batch_driver():
+    """Static: streaming.fold is the package's only foreachBatch, so the
+    replay contract is written and kept in one place."""
+    callers = sorted(
+        str(f.relative_to(PKG))
+        for f in PKG.rglob("*.py")
+        if "foreachBatch(" in f.read_text(encoding="utf-8")
+    )
+    assert callers == ["streaming/fold.py"]
+
+
+def test_query_registry_not_imported_by_the_engine():
+    """Static: no engine module outside plans/ imports the query
+    registry; shared constants live with their operators."""
+    registry = "py_data_pipeline_app_spark.plans"
+
+    def imports_registry(node):
+        if isinstance(node, ast.Import):
+            return any(a.name.startswith(registry) for a in node.names)
+        if isinstance(node, ast.ImportFrom) and node.module:
+            return node.module.startswith(registry) or (
+                node.module == "py_data_pipeline_app_spark"
+                and any(a.name == "plans" for a in node.names)
+            )
+        return False
+
+    importers = sorted(
+        str(f.relative_to(PKG))
+        for f in PKG.rglob("*.py")
+        if f.parent.name != "plans"
+        and any(
+            imports_registry(n)
+            for n in ast.walk(ast.parse(f.read_text(encoding="utf-8")))
+        )
+    )
+    assert importers == []
 
 
 def test_tumbling_counts_batch(spark):

@@ -26,10 +26,10 @@ from py_data_pipeline_app_spark.streaming.curation import (
     SPLIT_WEIGHTS,
     curation_accounting,
     curation_fold,
-    curated_batches,
     curated_corpus,
     start_curation_stream,
 )
+from py_data_pipeline_app_spark.streaming.fold import read_fold_output
 
 # streaming lifecycle parity suites are multi-second end-to-end runs —
 # slow tier by module (round-11 split; see pytest.ini)
@@ -181,7 +181,7 @@ def test_stream_span_text_matches_batch_rebuild(spark, streamed):
     state, out, streamed_df, _ = streamed
     got = {
         r.doc_id: (r.text_deduped, r.n_chunks, r.n_kept_chunks)
-        for r in curated_batches(spark, out).collect()
+        for r in read_fold_output(spark, out).collect()
     }
     want = {
         r.doc_id: (r.text_deduped, r.n_chunks, r.n_kept)
@@ -201,11 +201,11 @@ def test_replayed_batch_is_noop(spark, corpus, streamed):
     t1 = 2 * n // 3
     last = corpus.filter(F.col("doc_id") >= t1)
     before_rows = sorted(
-        map(tuple, curated_batches(spark, out).collect())
+        map(tuple, read_fold_output(spark, out).collect())
     )
     curation_fold(spark, state, out, last, 1)  # batch id 1 = the last
     assert (
-        sorted(map(tuple, curated_batches(spark, out).collect()))
+        sorted(map(tuple, read_fold_output(spark, out).collect()))
         == before_rows
     )
 
@@ -257,7 +257,7 @@ def test_stream_shard_sink_end_to_end(spark, streamed, tmp_path):
     )
     assert got == manual
     # the shards subdir must be invisible to the batch-* readers
-    assert "shard" not in curated_batches(spark, out).columns
+    assert "shard" not in read_fold_output(spark, out).columns
 
 
 def test_reorder_feed_through_front_door(spark, corpus, tmp_path):
@@ -506,7 +506,7 @@ def test_lm_gate_in_front_door(spark, corpus, tmp_path):
             bigram_lm=lm_path, lm_tail_cutoff=cutoff,
         )
 
-    landed = curated_batches(spark, out)
+    landed = read_fold_output(spark, out)
     assert "lm_kept" in landed.columns
     rows = landed.collect()
     # token-less rows (no score row) default kept=True
@@ -584,7 +584,7 @@ def test_decon_gate_in_front_door(spark, corpus, tmp_path):
             spark, state, out, batch, i, decon_benchmark=bench_path
         )
 
-    landed = curated_batches(spark, out)
+    landed = read_fold_output(spark, out)
     assert "decon_kept" in landed.columns
     rows = landed.collect()
     assert {r.doc_id for r in rows if not r.decon_kept} == set(leaked)
@@ -737,7 +737,7 @@ def test_dsir_gate_in_front_door(spark, tmp_path):
         dsir_fit=fit, dsir_min_micro=0,
     )
 
-    landed = curated_batches(spark, out)
+    landed = read_fold_output(spark, out)
     assert "dsir_kept" in landed.columns
     rows = landed.collect()
     assert {r.doc_id for r in rows if not r.dsir_kept} == {11, 13}
@@ -824,7 +824,7 @@ def test_media_gate_in_front_door(spark, tmp_path):
     curation_fold(spark, state, out, batch1, 0, media_index=media_idx)
     curation_fold(spark, state, out, batch2, 1, media_index=media_idx)
 
-    landed = curated_batches(spark, out)
+    landed = read_fold_output(spark, out)
     assert "img_kept" in landed.columns
     rows = landed.collect()
     flags = {r.doc_id: r.img_kept for r in rows}
@@ -853,7 +853,7 @@ def test_media_gate_in_front_door(spark, tmp_path):
     # replayed batch token reproduces identical flags (exactly-once)
     curation_fold(spark, state, out, batch2, 1, media_index=media_idx)
     again = {
-        r.doc_id: r.img_kept for r in curated_batches(spark, out).collect()
+        r.doc_id: r.img_kept for r in read_fold_output(spark, out).collect()
     }
     assert again == flags
 
@@ -936,7 +936,7 @@ def test_media_gate_routes_by_modality(spark, tmp_path):
     curation_fold(spark, state, out, batch1, 0, media_index=media_idx)
     curation_fold(spark, state, out, batch2, 1, media_index=media_idx)
     flags = {
-        r.doc_id: r.img_kept for r in curated_batches(spark, out).collect()
+        r.doc_id: r.img_kept for r in read_fold_output(spark, out).collect()
     }
     assert flags == {10: True, 20: False, 21: True, 22: True}
 
@@ -1005,7 +1005,7 @@ def test_video_gate_in_front_door(spark, tmp_path):
     )
     curation_fold(spark, state, out, batch1, 0, video_index=vid_idx)
     curation_fold(spark, state, out, batch2, 1, video_index=vid_idx)
-    rows = curated_batches(spark, out).collect()
+    rows = read_fold_output(spark, out).collect()
     flags = {r.doc_id: r.vid_kept for r in rows}
     assert flags == {10: True, 11: True, 20: False, 21: True}
     assert all(
@@ -1021,7 +1021,7 @@ def test_video_gate_in_front_door(spark, tmp_path):
     # replay no-op
     curation_fold(spark, state, out, batch2, 1, video_index=vid_idx)
     again = {
-        r.doc_id: r.vid_kept for r in curated_batches(spark, out).collect()
+        r.doc_id: r.vid_kept for r in read_fold_output(spark, out).collect()
     }
     assert again == flags
     # no kind column -> loud refusal, not silent byte-hashing

@@ -10,10 +10,12 @@ from datetime import datetime
 from pyspark.sql import types as T
 
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
-from py_data_pipeline_app_spark.streaming.dedup import (
-    read_dedup_output,
-    start_dedup_stream,
+from py_data_pipeline_app_spark.operators.dedup_incremental import (
+    compact_index,
+    incremental_lsh_fold,
 )
+from py_data_pipeline_app_spark.streaming.dedup import streaming_exact_dedup
+from py_data_pipeline_app_spark.streaming.fold import fold_stream, read_fold_output
 
 SCHEMA = T.StructType(
     [
@@ -32,6 +34,25 @@ def _ts(h: int, m: int = 0) -> datetime:
     return datetime(2024, 1, 1, h, m)
 
 
+def _near_dup_stream(spark, tmp_path, query_name, maintain_every=16):
+    """The near-dup stream: each micro-batch folds into the persisted
+    LSH index under tmp_path/index, its pairs land under
+    tmp_path/pairs, and the index compacts every ``maintain_every``
+    batches."""
+    index = str(tmp_path / "index")
+    return fold_stream(
+        spark.readStream.schema(SCHEMA).parquet(str(tmp_path / "landing") + "/*"),
+        str(tmp_path / "ckpt"),
+        lambda df, i: incremental_lsh_fold(
+            spark, index, df, threshold=0.5, batch_token=f"{i:08d}"
+        ),
+        out=str(tmp_path / "pairs"),
+        maintain=lambda: compact_index(spark, index),
+        maintain_every=maintain_every,
+        query_name=query_name,
+    )
+
+
 def test_streaming_dedup_within_and_beyond_watermark(spark, tmp_path):
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
@@ -43,12 +64,16 @@ def test_streaming_dedup_within_and_beyond_watermark(spark, tmp_path):
         )
 
     def run(qn):
-        q = start_dedup_stream(
-            spark, landing + "/*", ckpt, SCHEMA, out,
-            watermark="1 hour", query_name=qn,
+        stream = spark.readStream.schema(SCHEMA).parquet(landing + "/*")
+        q = fold_stream(
+            streaming_exact_dedup(stream, watermark="1 hour"),
+            ckpt,
+            lambda df, i: df,
+            out=out,
+            query_name=qn,
         )
         q.awaitTermination(180)
-        return read_dedup_output(spark, out)
+        return read_fold_output(spark, out)
 
     # batch 1: A, B, and an in-batch duplicate of A
     land(
@@ -95,7 +120,6 @@ def test_streaming_near_dup_matches_batch_lsh(spark, tmp_path):
     minhash run over everything streamed (the incremental parity
     contract, exercised through the streaming front door)."""
     from py_data_pipeline_app_spark.operators.dedup import minhash_dedup_pairs
-    from py_data_pipeline_app_spark.streaming.dedup import start_near_dup_stream
 
     landing = str(tmp_path / "landing")
     base = [
@@ -118,17 +142,7 @@ def test_streaming_near_dup_matches_batch_lsh(spark, tmp_path):
         )
 
     def run(qn):
-        q = start_near_dup_stream(
-            spark,
-            landing + "/*",
-            str(tmp_path / "ckpt"),
-            SCHEMA,
-            str(tmp_path / "index"),
-            str(tmp_path / "pairs"),
-            threshold=0.5,
-            query_name=qn,
-        )
-        q.awaitTermination(180)
+        _near_dup_stream(spark, tmp_path, qn).awaitTermination(180)
 
     land("b1", b1)
     run("neardup_s1")
@@ -160,7 +174,6 @@ def test_streaming_near_dup_auto_compaction_bounds_index(spark, tmp_path):
     import os
 
     from py_data_pipeline_app_spark.operators.dedup import minhash_dedup_pairs
-    from py_data_pipeline_app_spark.streaming.dedup import start_near_dup_stream
 
     landing = str(tmp_path / "landing")
     pool = [
@@ -184,16 +197,8 @@ def test_streaming_near_dup_auto_compaction_bounds_index(spark, tmp_path):
 
     for k, rows in enumerate(batches):
         land(f"b{k}", rows)
-        q = start_near_dup_stream(
-            spark,
-            landing + "/*",
-            str(tmp_path / "ckpt"),
-            SCHEMA,
-            str(tmp_path / "index"),
-            str(tmp_path / "pairs"),
-            threshold=0.5,
-            compact_every=2,
-            query_name=f"autocompact_s{k}",
+        q = _near_dup_stream(
+            spark, tmp_path, f"autocompact_s{k}", maintain_every=2
         )
         q.awaitTermination(180)
 
@@ -222,3 +227,44 @@ def test_streaming_near_dup_auto_compaction_bounds_index(spark, tmp_path):
         for r in minhash_dedup_pairs(all_docs, threshold=0.5).collect()
     )
     assert got == expected
+
+
+def test_near_dup_stream_replays_last_batch_unchanged(spark, tmp_path):
+    """Checkpoint replay through the driver: with the last micro-batch's
+    commit deleted, a restart re-runs that batch with its original id
+    (Structured Streaming's crash recovery). The fold excludes its own
+    half-committed index write and the driver overwrites the batch's
+    output directory, so the landed pairs are unchanged."""
+    import os
+
+    landing = str(tmp_path / "landing")
+    pool = [
+        "the quick brown fox jumps over the lazy dog",
+        "pack my box with five dozen liquor jugs",
+    ]
+    for k in range(2):
+        local_rows_df(
+            spark,
+            SCHEMA,
+            [
+                (k * 10, pool[0], _ts(10 + k, 0)),
+                (k * 10 + 1, pool[1] + " trailing tail", _ts(10 + k, 30)),
+            ],
+        ).write.parquet(f"{landing}/b{k}")
+        _near_dup_stream(spark, tmp_path, f"replay_s{k}").awaitTermination(180)
+
+    def landed():
+        return sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in read_fold_output(spark, str(tmp_path / "pairs")).collect()
+        )
+
+    before = landed()
+    assert before  # the second batch pairs with the first
+    commits = tmp_path / "ckpt" / "commits"
+    os.remove(commits / "1")
+    if (commits / ".1.crc").exists():
+        os.remove(commits / ".1.crc")
+    _near_dup_stream(spark, tmp_path, "replay_s2").awaitTermination(180)
+    assert (commits / "1").exists()  # batch 1 ran again and committed
+    assert landed() == before

@@ -8,13 +8,19 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
+from py_data_pipeline_app_spark.operators.quantization import (
+    ivfpq_index_append,
+    ivfpq_index_compact,
+)
 from py_data_pipeline_app_spark.operators.similarity import (
     build_ivf_index,
+    ivf_index_append,
+    ivf_index_compact,
     ivf_topk_indexed,
+    semantic_index_append,
+    semantic_index_compact,
 )
-from py_data_pipeline_app_spark.streaming.embeddings import (
-    start_embedding_ingest_stream,
-)
+from py_data_pipeline_app_spark.streaming.fold import fold_stream
 
 # streaming lifecycle parity suites are multi-second end-to-end runs —
 # slow tier by module (round-11 split; see pytest.ini)
@@ -29,6 +35,21 @@ SCHEMA = T.StructType(
         T.StructField("label", T.IntegerType()),
     ]
 )
+
+
+def _ingest_stream(
+    spark, landing, ckpt, index, append, compact, maintain_every=16, **append_kw
+):
+    """The embedding-ingest stream: each micro-batch is appended to the
+    persisted index with its micro-batch id as the token, and the index
+    compacts keep-newest every ``maintain_every`` batches."""
+    return fold_stream(
+        spark.readStream.schema(SCHEMA).parquet(landing),
+        ckpt,
+        lambda df, i: append(spark, index, df, batch_token=f"{i:08d}", **append_kw),
+        maintain=lambda: compact(spark, index, keep_newest=True),
+        maintain_every=maintain_every,
+    )
 
 
 @pytest.fixture(scope="module")
@@ -55,8 +76,9 @@ def test_streamed_appends_probe_like_full_rebuild(spark, emb, tmp_path):
         emb.filter(F.col("vec_id") % 4 == part).coalesce(1).write.parquet(
             f"{landing}/b{part}"
         )
-        q = start_embedding_ingest_stream(
-            spark, landing + "/*", ckpt, SCHEMA, index, compact_every=2
+        q = _ingest_stream(
+            spark, landing + "/*", ckpt, index,
+            ivf_index_append, ivf_index_compact, maintain_every=2,
         )
         q.awaitTermination(120)
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -89,8 +111,6 @@ def test_replayed_batch_token_overwrites(spark, emb, tmp_path):
     """A micro-batch retried with the same id must overwrite its own
     append, not duplicate rows (simulated by calling the append twice
     with one token, exactly what foreachBatch replay does)."""
-    from py_data_pipeline_app_spark.operators.similarity import ivf_index_append
-
     index = str(tmp_path / "index")
     initial = emb.filter(F.col("vec_id") % 2 == 0)
     build_ivf_index(initial, index, n_centroids=8)
@@ -106,7 +126,7 @@ def test_replayed_batch_token_overwrites(spark, emb, tmp_path):
 
 
 def test_streamed_ivfpq_appends_probe_like_full_rebuild(spark, emb, tmp_path):
-    """index_kind='ivfpq': streamed batches of PQ codes must probe
+    """IVF-PQ appends: streamed batches of PQ codes must probe
     identically to one compressed rebuild with the same tables."""
     import pyspark.sql.functions as F2
 
@@ -124,8 +144,9 @@ def test_streamed_ivfpq_appends_probe_like_full_rebuild(spark, emb, tmp_path):
         emb.filter(F2.col("vec_id") % 3 == part).coalesce(1).write.parquet(
             f"{landing}/b{part}"
         )
-        q = start_embedding_ingest_stream(
-            spark, landing + "/*", ckpt, SCHEMA, index, index_kind="ivfpq"
+        q = _ingest_stream(
+            spark, landing + "/*", ckpt, index,
+            ivfpq_index_append, ivfpq_index_compact,
         )
         q.awaitTermination(120)
     queries = emb.filter(F2.col("vec_id") < 10).select(
@@ -145,7 +166,7 @@ def test_streamed_ivfpq_appends_probe_like_full_rebuild(spark, emb, tmp_path):
 
 
 def test_streamed_semantic_appends_match_full_rebuild(spark, emb, tmp_path):
-    """index_kind='semantic': streamed id-range batches folded into the
+    """SemDeDup appends: streamed id-range batches folded into the
     persisted SemDeDup index must produce exactly the kept/dropped
     verdicts of one full semantic_dedup rebuild over everything with
     the initial corpus's centroids. (Range batches, not modulo — the
@@ -167,14 +188,9 @@ def test_streamed_semantic_appends_match_full_rebuild(spark, emb, tmp_path):
         emb.filter(
             (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
         ).coalesce(1).write.parquet(f"{landing}/b{i}")
-        q = start_embedding_ingest_stream(
-            spark,
-            landing + "/*",
-            ckpt,
-            SCHEMA,
-            index,
-            index_kind="semantic",
-            compact_every=1,
+        q = _ingest_stream(
+            spark, landing + "/*", ckpt, index,
+            semantic_index_append, semantic_index_compact, maintain_every=1,
         )
         q.awaitTermination(120)
     got = sorted(
@@ -202,7 +218,7 @@ def test_streamed_semantic_reorder_appends_match_full_rebuild(
     spark, emb, tmp_path
 ):
 
-    """index_kind='semantic' with allow_reorder=True: a multi-producer
+    """SemDeDup appends with allow_reorder=True: a multi-producer
     feed delivering id ranges OUT OF ORDER (high range first) must
     still converge to one full rebuild's verdicts — the out-of-order
     batch takes the recompute-mode append instead of refusing."""
@@ -225,14 +241,9 @@ def test_streamed_semantic_reorder_appends_match_full_rebuild(
         emb.filter(F.col("vec_id") % 3 == part).coalesce(1).write.parquet(
             f"{landing}/b{i}"
         )
-        q = start_embedding_ingest_stream(
-            spark,
-            landing + "/*",
-            ckpt,
-            SCHEMA,
-            index,
-            index_kind="semantic",
-            allow_reorder=True,
+        q = _ingest_stream(
+            spark, landing + "/*", ckpt, index,
+            semantic_index_append, semantic_index_compact, allow_reorder=True,
         )
         q.awaitTermination(120)
     got = sorted(map(tuple, semantic_index_state(spark, index).collect()))
@@ -248,19 +259,6 @@ def test_streamed_semantic_reorder_appends_match_full_rebuild(
         )
     )
     assert got == want
-
-
-def test_reorder_flag_rejected_for_order_independent_kinds(spark, tmp_path):
-    with pytest.raises(ValueError, match="allow_reorder"):
-        start_embedding_ingest_stream(
-            spark,
-            str(tmp_path / "l") + "/*",
-            str(tmp_path / "c"),
-            SCHEMA,
-            str(tmp_path / "i"),
-            index_kind="ivf",
-            allow_reorder=True,
-        )
 
 
 def test_streamed_trained_opq_ivfpq_matches_full_rebuild(
@@ -300,9 +298,9 @@ def test_streamed_trained_opq_ivfpq_matches_full_rebuild(
         emb.filter(F2.col("vec_id") % 3 == part).coalesce(1).write.parquet(
             f"{landing}/b{part}"
         )
-        q = start_embedding_ingest_stream(
-            spark, landing + "/*", ckpt, SCHEMA, index,
-            index_kind="ivfpq", compact_every=1,
+        q = _ingest_stream(
+            spark, landing + "/*", ckpt, index,
+            ivfpq_index_append, ivfpq_index_compact, maintain_every=1,
         )
         q.awaitTermination(120)
     appends = os.path.join(index, "appends")
@@ -360,7 +358,7 @@ def test_streamed_trained_opq_ivfpq_matches_full_rebuild(
 
 
 def test_streamed_semantic_two_level_matches_full_rebuild(spark, emb, tmp_path):
-    """index_kind='semantic' over a TWO_LEVEL-built index (round 13):
+    """SemDeDup appends over a TWO_LEVEL-built index (round 13):
     the streaming append needs no flag — it reads the assign_mode
     pinned in the config manifest and replays the scaled-k coarse→fine
     fold, so streamed batches still reproduce one
@@ -384,14 +382,9 @@ def test_streamed_semantic_two_level_matches_full_rebuild(spark, emb, tmp_path):
         emb.filter(
             (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
         ).coalesce(1).write.parquet(f"{landing}/b{i}")
-        q = start_embedding_ingest_stream(
-            spark,
-            landing + "/*",
-            ckpt,
-            SCHEMA,
-            index,
-            index_kind="semantic",
-            compact_every=1,
+        q = _ingest_stream(
+            spark, landing + "/*", ckpt, index,
+            semantic_index_append, semantic_index_compact, maintain_every=1,
         )
         q.awaitTermination(120)
     got = sorted(map(tuple, semantic_index_state(spark, index).collect()))
