@@ -87,32 +87,6 @@ def run_length_stats(sorted_src: str) -> Column:
     )
 
 
-def word_repetition_stats(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document word-occurrence statistics: total/ distinct word
-    counts, the most frequent word's share, and the share of
-    occurrences belonging to repeated words — computed per row with
-    :func:`run_length_stats` (zero shuffle, scan-bound).
-
-    The token array and the fold result are materialized once as
-    intermediate columns — whole-stage codegen does not CSE an
-    expression repeated across output columns, and CollapseProject
-    keeps non-cheap multi-referenced projections in their own step.
-    fan_out: the per-row sort + fold is expensive narrow compute —
-    pinned to one core on an unsplittable one-file scan (guide §2.5)."""
-    d = fan_out(df).withColumn("_toks", tokens(text_col)).withColumn(
-        "_ws", run_length_stats("sort_array(`_toks`)")
-    )
-    return d.select(
-        F.col(id_col),
-        F.size("_toks").cast("long").alias("n_words"),
-        F.col("_ws.n_distinct").alias("n_distinct_words"),
-        F.col("_ws.top_count").alias("top_word_count"),
-        F.col("_ws.dup_occurrences").alias("dup_word_occurrences"),
-    )
-
-
 def with_token_chunks(
     df: DataFrame, text_col: str, chunk_tokens: int, out: str = "_chunks"
 ) -> DataFrame:

@@ -619,150 +619,6 @@ def _assign_to_centroids(
     )
 
 
-def _assign_to_centroids_2level(
-    corpus: DataFrame,
-    cents,
-    *,
-    n_coarse: int | None = None,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Two-level (coarse→fine) variant of :func:`_assign_to_centroids`
-    — the fix the ×100 rehearsal measured the need for: with
-    k ∝ N/cluster_size (the scaled-k SemDeDup recipe), the flat
-    k-centroid fold is O(N·k) = O(N²/c) — at the 500k-embedding decade
-    it is the assignment, not the within-cluster pairs, that dominates
-    (BENCH_sf10.json ``semantic_scaled_k``). This is FAISS's IMI /
-    two-level-IVF move in DataFrame form: group the k centroids under
-    ``n_coarse ≈ √k`` coarse cells DRIVER-side (the centroid table is
-    k×dim and already collected — one numpy argmax, no jobs), then
-    each row folds over the n_coarse coarse vectors, picks its cell,
-    and folds only over that cell's member centroids via a nested
-    ragged literal — cost per row ~2√k instead of k, still ONE pure
-    zero-shuffle projection.
-
-    APPROXIMATE by construction: a row whose true nearest centroid
-    sits just across a coarse boundary lands in a neighboring cluster.
-    For SemDeDup that is benign in exactly the way that matters: a
-    near-dup PAIR (cos ≥ τ ⇒ nearly identical vectors) computes nearly
-    identical folds and co-locates with high probability (tested on
-    the planted pairs), so dedup recall survives even where absolute
-    assignment agreement does not. Not for use where the oracle pins
-    exact assignment — the value-hash surfaces keep the flat fold."""
-    import math
-
-    corpus = fan_out(corpus)  # same rationale as _assign_to_centroids
-    rows = _centroid_rows(cents)
-    k = len(rows)
-    if n_coarse is None:
-        n_coarse = max(1, int(k**0.5))
-    # clamp: an explicit n_coarse > k would size `cells` past the
-    # available picks and the empty-cell seeding below would index
-    # picks[] out of range
-    n_coarse = max(1, min(n_coarse, k))
-    picks = rows[:n_coarse]  # md5-ordered sample ⇒ a random subset
-
-    # driver-side cosine in the EXACT sequential fold order the Spark
-    # :func:`cosine` fold uses (left-to-right double adds; literals
-    # round-trip via repr→parseDouble) — a numpy matmul here computes
-    # different last-ulp values, and near-tie centroids would then be
-    # grouped into a different cell than their own row's Spark-side
-    # coarse fold picks, silently breaking self-assignment
-    def _seq_cos(x: list[float], y: list[float]) -> float:
-        num = 0.0
-        for a, b in zip(x, y):
-            num += a * b
-        nx = 0.0
-        for a in x:
-            nx += a * a
-        ny = 0.0
-        for b in y:
-            ny += b * b
-        return num / (math.sqrt(nx) * math.sqrt(ny))
-
-    pick_vecs = [[float(x) for x in p.cvec] for p in picks]
-    cells: list[list] = [[] for _ in range(n_coarse)]
-    for r in rows:
-        rv = [float(x) for x in r.cvec]
-        best, best_j = None, 0
-        for j, pv in enumerate(pick_vecs):
-            c = _seq_cos(rv, pv)
-            if best is None or c > best:  # ties → lowest pick index
-                best, best_j = c, j
-        cells[best_j].append(r)
-    for j, cell in enumerate(cells):
-        if not cell:
-            # duplicate centroid vectors can strand a pick's own row in
-            # a lower-index cell; seed the empty cell with its pick so
-            # the ragged literal is never empty (assignment stays a
-            # valid centroid id either way)
-            cell.append(picks[j])
-
-    coarse_vecs = float_matrix_lit([[float(x) for x in p.cvec] for p in picks])
-    child_ids = F.lit(
-        [[int(r.centroid_id) for r in cell] for cell in cells]
-    )
-    child_vecs = float_matrix_lit(
-        [[[float(x) for x in r.cvec] for r in cell] for cell in cells]
-    )
-    vec = F.col(vec_col)
-    coarse_scored = F.transform(
-        coarse_vecs,
-        lambda cv, i: F.struct(
-            cosine(vec, cv).alias("csim"), (-i).alias("neg_pos")
-        ),
-    )
-    cpos = -F.array_max(coarse_scored)["neg_pos"] + 1  # 1-based cell
-    cell_vecs = F.element_at(child_vecs, cpos.cast("int"))
-    fine_scored = F.transform(
-        cell_vecs,
-        lambda cv, i: F.struct(
-            cosine(vec, cv).alias("csim"), (-i).alias("neg_pos")
-        ),
-    )
-    fpos = -F.array_max(fine_scored)["neg_pos"] + 1
-    return corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.element_at(
-            F.element_at(child_ids, cpos.cast("int")), fpos.cast("int")
-        )
-        .cast("int")
-        .alias("centroid_id"),
-    )
-
-
-def _assign_with_mode(
-    corpus: DataFrame, cents, mode: str, *, id_col: str, vec_col: str
-) -> DataFrame:
-    """Dispatch a centroid assignment by its pinned mode name —
-    ``"flat"`` (:func:`_assign_to_centroids`, exact) or ``"two_level"``
-    (:func:`_assign_to_centroids_2level`, ~2√k/row, approximate). The
-    string form is what the semantic index config manifest persists:
-    append/reorder/read-back all resolve the SAME fold the base was
-    built with (assignment is a deterministic function of the frozen
-    centroids AND the fold — mixing folds would compare rows against
-    the wrong cluster's history)."""
-    if mode == "two_level":
-        return _assign_to_centroids_2level(
-            corpus, cents, id_col=id_col, vec_col=vec_col
-        )
-    if mode != "flat":
-        raise ValueError(f"unknown assign_mode {mode!r} (flat | two_level)")
-    return _assign_to_centroids(corpus, cents, id_col=id_col, vec_col=vec_col)
-
-
-def _index_assign_mode(spark, index_path: str) -> str:
-    """The assignment mode pinned in a semantic index's config manifest.
-    Pre-round-13 indexes have no ``assign_mode`` column — they were all
-    built with the flat fold, so absence reads as ``"flat"`` (never a
-    guess: two_level indexes cannot predate the column)."""
-    cfg = fsio.read_small_parquet_rows(spark, f"{index_path}/config")[0]
-    if "assign_mode" not in cfg.__fields__:
-        return "flat"
-    return cfg.assign_mode or "flat"
-
-
 def _query_probes(
     queries: DataFrame, cents, *, nprobe: int, query_id_col: str, vec_col: str
 ) -> DataFrame:
@@ -1064,8 +920,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cents: DataFrame | None = None,
-    max_bucket_size: int | None = None,
-    two_level: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (cluster-then-prune, after
     Abbas et al. 2023's public recipe): assign every embedding to its
@@ -1092,32 +946,14 @@ def semantic_dedup(
     k ∝ N/target_cluster_size so clusters stay bounded as the corpus
     grows; pass trained centroids via ``cents`` for tighter clusters
     at the same k). The verification join touches candidate pairs
-    only.
-
-    ``max_bucket_size`` defaults to ``None`` — every within-cluster
-    pair is compared, so the kept-rule above holds EXACTLY (what the
-    oracle verifies). It stays None deliberately: unlike the LSH
-    paths, where a chunk cap only degrades recall inside viral
-    common-token FALSE-POSITIVE buckets, here the cluster is the only
-    blocking — capping silently skips genuine comparisons and marks
-    real near-duplicates kept. Setting it is an explicit recall trade
-    for corpora whose k was left too small for their size; the honest
-    fix is scaling k.
-
-    ``two_level=True`` swaps the flat k-fold assignment for
-    :func:`_assign_to_centroids_2level` (~2√k per row instead of k) —
-    the measured necessity once k ∝ N makes the flat fold itself
-    O(N²/c) (the ×100 rehearsal's ``semantic_scaled_k`` row).
-    Assignment becomes approximate (near-dup PAIRS still co-locate —
-    nearly identical vectors compute nearly identical folds; tested on
-    the planted pairs), so the oracle-pinned registered query keeps
-    the exact default."""
+    only. Every within-cluster pair is compared (no chunk cap): the
+    cluster is the only blocking, so capping would skip genuine
+    comparisons and break the exact kept rule the oracle verifies."""
     if cents is None:
         cents = _md5_sample_centroids(
             corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
         )
-    assign = _assign_to_centroids_2level if two_level else _assign_to_centroids
-    assigned = assign(corpus, cents, id_col=id_col, vec_col=vec_col)
+    assigned = _assign_to_centroids(corpus, cents, id_col=id_col, vec_col=vec_col)
     # the kept computation reads the assignment FOUR times (pair
     # candidates, both vector sides, final left join) — without a cut
     # the k-fold argmax subtree is duplicated 4x in the physical plan
@@ -1130,7 +966,6 @@ def semantic_dedup(
         threshold=threshold,
         id_col=id_col,
         vec_col=vec_col,
-        max_bucket_size=max_bucket_size,
     ).select(id_col, "centroid_id", "kept")
 
 
@@ -1141,7 +976,6 @@ def _semantic_kept_flags(
     threshold: float,
     id_col: str,
     vec_col: str,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """The SemDeDup greedy survivor rule for one assigned batch:
     ``kept(x) ⇔ ¬∃ y earlier than x in x's cluster with cos(x,y) ≥ τ``
@@ -1166,7 +1000,6 @@ def _semantic_kept_flags(
         batch_assigned.select(F.col(id_col), F.col("centroid_id")),
         ["centroid_id"],
         id_col,
-        max_bucket_size=max_bucket_size,
     ).select(F.col("_a").alias("id_a"), F.col("_b").alias("id_b"))
     va = batch_assigned.select(
         F.col(id_col).alias("id_a"),
@@ -1218,7 +1051,6 @@ def cluster_profile(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cents: DataFrame | None = None,
-    two_level: bool = False,
 ) -> DataFrame:
     """Per-cluster CORPUS MAP: (centroid_id, n_members, member_share,
     exemplar_id, mean_norm) — the cluster-level statistics a curation
@@ -1237,18 +1069,12 @@ def cluster_profile(
     round-half-up form ``(2s + n) div (2n)`` (the daily_value_trend
     pattern — double-quotient rounding diverges at .5 boundaries,
     and share quotients like 62/1000 have exactly the short
-    expansions that hit them).
-
-    ``two_level=True`` profiles a scaled-k clustering (k ∝ N) with the
-    √k coarse→fine assignment (:func:`_assign_to_centroids_2level`) —
-    the same cost argument as ``semantic_dedup(two_level=True)``; the
-    oracle-pinned registered query keeps the exact flat default."""
+    expansions that hit them)."""
     if cents is None:
         cents = _md5_sample_centroids(
             corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
         )
-    assign = _assign_to_centroids_2level if two_level else _assign_to_centroids
-    assigned = assign(
+    assigned = _assign_to_centroids(
         corpus.select(F.col(id_col), F.col(vec_col)),
         _centroid_rows(cents),
         id_col=id_col,
@@ -1481,7 +1307,6 @@ def build_semantic_index(
     vec_col: str = "embedding",
     cents: DataFrame | None = None,
     files_per_bucket: int | None = None,
-    two_level: bool = False,
 ) -> None:
     """Materialize a persisted SemDeDup index: the corpus with its
     cluster assignment AND its greedy ``kept`` verdict, written
@@ -1501,21 +1326,10 @@ def build_semantic_index(
     (generic id-tombstones) and compaction rides the shared
     crash-safe :func:`_compact_assigned_locked`.
 
-    ``two_level=True`` builds the index with the √k coarse→fine
-    assignment (:func:`_assign_to_centroids_2level`) — the scaled-k
-    production path (k ∝ N makes the flat fold O(N²/c); the ×100
-    rehearsal measured 300 s → 120 s on the one-shot operator, and a
-    persisted 100 TB index lives in exactly that regime). The mode is
-    PINNED in the config manifest alongside the centroid checksum:
-    every later append, reorder recompute, and verdict read-back must
-    assign with the build's fold, or a row could silently land in —
-    and be compared against — a different cluster than its own build-
-    time assignment (the same discipline the centroid checksum
-    enforces for the centroid SET). :func:`semantic_index_append`
-    follows the pinned mode automatically and refuses an explicit
-    contradiction. Oracle-pinned surfaces keep the flat default —
-    two-level assignment is approximate by construction (near-dup
-    pairs still co-locate; see :func:`semantic_dedup`)."""
+    Rows are assigned with the exact flat argmax fold
+    (:func:`_assign_to_centroids`), the same fold every append, reorder
+    recompute and verdict read-back replays against the frozen
+    centroids."""
     spark = corpus.sparkSession
     _refuse_rebuild_over_mutations(spark, index_path, "semantic", "kept flags")
     if cents is None:
@@ -1524,7 +1338,6 @@ def build_semantic_index(
         )
     cent_rows = _centroid_rows(cents)
     checksum = _ivf_centroid_checksum(cent_rows)
-    mode = "two_level" if two_level else "flat"
     # localCheckpoint: the kept computation reads the assignment FOUR
     # times (pair generation + both vector sides + the verdict join) —
     # each re-running the k-wide argmax fold over the corpus. Pinning
@@ -1533,8 +1346,8 @@ def build_semantic_index(
     # inside its own job (the fold runs once, later plan references
     # read the stored blocks), instead of a separate full-corpus
     # checkpoint job followed by the write job.
-    assigned = _assign_with_mode(
-        corpus, cent_rows, mode, id_col=id_col, vec_col=vec_col
+    assigned = _assign_to_centroids(
+        corpus, cent_rows, id_col=id_col, vec_col=vec_col
     ).localCheckpoint(eager=False)
     rows = _semantic_kept_flags(
         assigned, None, threshold=threshold, id_col=id_col, vec_col=vec_col
@@ -1558,8 +1371,8 @@ def build_semantic_index(
     def _w_config() -> None:
         local_rows_df(
             spark,
-            "centroid_checksum string, threshold double, assign_mode string",
-            [(checksum, float(threshold), mode)],
+            "centroid_checksum string, threshold double",
+            [(checksum, float(threshold))],
         ).write.mode("overwrite").parquet(f"{index_path}/config")
 
     def _w_assigned() -> None:
@@ -2143,7 +1956,6 @@ def semantic_index_append(
     vec_col: str = "embedding",
     batch_token: str | None = None,
     allow_reorder: bool = False,
-    two_level: bool | None = None,
 ) -> str:
     """Fold a NEW embedding batch into a persisted
     :func:`build_semantic_index`: assign the batch against the
@@ -2192,15 +2004,11 @@ def semantic_index_append(
     index lock; drift-checked against the config checksum. Returns
     the batch token.
 
-    The batch is assigned with the fold PINNED in the index config
-    (``assign_mode``: flat, or two_level for a scaled-k build) — the
-    parity contract requires every append to reproduce the build's
-    assignment function, so the mode is index state, not a call-site
-    choice. ``two_level`` defaults to None (follow the manifest);
-    passing an explicit value that CONTRADICTS the manifest raises
-    before any write — a caller who believes the index uses a
-    different fold than it does would otherwise get silently
-    mixed-mode clusters (the centroid-checksum refusal's twin)."""
+    The batch is assigned with the build's exact flat fold. An index
+    whose config records any other ``assign_mode`` (the approximate
+    two-level fold earlier builds could pick) is refused before any
+    write: appending flat-assigned rows to it would compare them
+    against the wrong clusters. Rebuild such an index."""
     with _acquire_index_lock(spark, index_path, "semantic append"):
         _recover_semantic_reorder(spark, index_path)
         if batch_token is not None and fsio.exists(
@@ -2223,23 +2031,18 @@ def semantic_index_append(
                 "clusters. Rebuild the index (delete the directory) instead."
             )
         threshold = float(cfg.threshold)
-        # mode from the SAME config read as the checksum — a second
-        # read here would add one action to every monotone append (the
-        # job-count-pinned hot path); legacy two-column configs
-        # (pre-round-13) were all built flat
-        mode = (
-            (cfg.assign_mode or "flat")
-            if "assign_mode" in cfg.__fields__
-            else "flat"
-        )
-        if two_level is not None and ("two_level" if two_level else "flat") != mode:
+        # checked on the SAME config read as the checksum — a second
+        # read would add one action to every monotone append (the
+        # job-count-pinned hot path). Configs without the column and
+        # configs recording "flat" were both built with the flat fold.
+        mode = cfg.asDict().get("assign_mode") or "flat"
+        if mode != "flat":
             raise ValueError(
                 f"semantic index at {index_path} was built with "
-                f"assign_mode={mode!r}; an append requesting "
-                f"{'two_level' if two_level else 'flat'} assignment would "
-                "land batch rows in different clusters than the build's own "
-                "fold and silently break rebuild parity. Pass two_level=None "
-                "(follow the manifest) or rebuild the index in the other mode."
+                f"assign_mode={mode!r}, an assignment fold the engine no "
+                "longer has; appends assign with the flat fold and would "
+                "compare rows against the wrong clusters. Rebuild the index "
+                "(delete the directory) instead."
             )
         token = batch_token or uuid.uuid4().hex[:12]
         # localCheckpoint: the assignment feeds three consumers (probed
@@ -2248,10 +2051,9 @@ def semantic_index_append(
         # LAZY: the per-cluster stats collect right below is the first
         # consumer and materializes it — eager would be one extra job
         # per append (the fused-probe shape)
-        assigned = _assign_with_mode(
+        assigned = _assign_to_centroids(
             new_vectors.select(F.col(id_col), F.col(vec_col)),
             cent_rows,
-            mode,
             id_col=id_col,
             vec_col=vec_col,
         )

@@ -1336,8 +1336,8 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic duplicates being pruned; the oracle replays clustering,
     assignment and the greedy survivor rule exactly.
 
-    Every within-cluster pair is compared (exact kept-rule — the cap
-    is opt-in, operators/similarity.semantic_dedup). k is PINNED at
+    Every within-cluster pair is compared (the exact kept-rule of
+    operators/similarity.semantic_dedup). k is PINNED at
     128 for the oracle (any pinned k is quadratic in N eventually —
     production picks k ∝ N/target_cluster_size), chosen over the
     earlier k=16 as the scale-first trade, stated honestly: at sf0.1

@@ -333,26 +333,18 @@ def curation_fold(
         # frozen centroids buys the partition filter, so un-touched
         # clusters still cost zero I/O.
         from py_data_pipeline_app_spark.operators.similarity import (
-            _assign_with_mode,
+            _assign_to_centroids,
             _centroid_rows,
-            _index_assign_mode,
             _union_appends,
         )
 
         cent_rows = _centroid_rows(
             spark.read.parquet(f"{sem_index}/centroids")
         )
-        # the re-assignment must replay the index's PINNED fold (flat
-        # vs two_level — the config manifest) or a two_level index's
-        # rows would be looked up in the clusters the flat fold picks
         probed = [
             r.centroid_id
-            for r in _assign_with_mode(
-                emb_rows,
-                cent_rows,
-                _index_assign_mode(spark, sem_index),
-                id_col=id_col,
-                vec_col=vec_col,
+            for r in _assign_to_centroids(
+                emb_rows, cent_rows, id_col=id_col, vec_col=vec_col
             )
             .select("centroid_id")
             .distinct()

@@ -814,101 +814,42 @@ def test_monotone_append_job_count_pinned(spark, emb, tmp_path):
     assert after - before <= 20, f"monotone append ran {after - before} jobs"
 
 
-def _rebuild_rows_2level(emb, base):
-    """semantic_dedup(two_level=True) over the full corpus with the
-    BASE batch's centroids — what a two_level-built index must
-    reproduce (assignment is a deterministic function of the frozen
-    centroids and the PINNED fold)."""
-    cents = _md5_sample_centroids(
-        base, n_centroids=K, id_col="vec_id", vec_col="embedding"
-    )
-    return sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            emb, threshold=THRESH, n_centroids=K, cents=cents, two_level=True
-        ).collect()
-    )
-
-
-def test_two_level_appends_match_rebuild_across_compaction(spark, emb, tmp_path):
-    """The round-12 verdict's #1 task: a two_level-built index must
-    reproduce semantic_dedup(two_level=True) over the merged corpus
-    through ≥2 appends AND a compaction boundary — the persisted
-    lifecycle pays the same ~2√k/row fold the one-shot operator does,
-    with the mode pinned in the config manifest."""
-    n = emb.count()
-    a, b = n // 3, 2 * n // 3
-    base = emb.filter(F.col("vec_id") < a)
-    idx = _fresh(tmp_path, "sem_2lvl")
-    build_semantic_index(
-        base, idx, threshold=THRESH, n_centroids=K, two_level=True
-    )
-    cfg = spark.read.parquet(f"{idx}/config").first()
-    assert cfg.assign_mode == "two_level"
-    semantic_index_append(
-        spark, idx, emb.filter((F.col("vec_id") >= a) & (F.col("vec_id") < b))
-    )
-    expect_mid = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            emb.filter(F.col("vec_id") < b),
-            threshold=THRESH,
-            n_centroids=K,
-            cents=_md5_sample_centroids(
-                base, n_centroids=K, id_col="vec_id", vec_col="embedding"
-            ),
-            two_level=True,
-        ).collect()
-    )
-    assert _state_rows(spark, idx) == expect_mid
-    semantic_index_compact(spark, idx)
-    assert _state_rows(spark, idx) == expect_mid  # compaction is a no-op on state
-    semantic_index_append(spark, idx, emb.filter(F.col("vec_id") >= b))
-    assert _state_rows(spark, idx) == _rebuild_rows_2level(emb, base)
-    # and the mode genuinely matters on this fixture: the flat rebuild
-    # must differ somewhere, or the test proves nothing
-    assert _rebuild_rows_2level(emb, base) != _rebuild_rows(emb, base)
-
-
-def test_two_level_reorder_append_matches_rebuild(spark, emb, tmp_path):
-    """An out-of-order backfill into a two_level index takes the
-    recompute path with the PINNED fold: final state still equals the
-    two_level rebuild over everything."""
-    n = emb.count()
-    hi = emb.filter(F.col("vec_id") >= n // 2)
-    idx = _fresh(tmp_path, "sem_2lvl_reorder")
-    build_semantic_index(hi, idx, threshold=THRESH, n_centroids=K, two_level=True)
-    semantic_index_append(
-        spark, idx, emb.filter(F.col("vec_id") < n // 2), allow_reorder=True
-    )
-    assert _state_rows(spark, idx) == _rebuild_rows_2level(emb, hi)
-
-
 def test_append_mode_drift_refused(spark, emb, tmp_path):
-    """An explicit two_level= that contradicts the index's pinned
-    assign_mode refuses before writing, in BOTH directions; the
-    matching explicit value and None (follow the manifest) pass."""
+    """An index whose config records assign_mode='two_level' (the
+    approximate fold earlier builds could pick) is refused before any
+    write; a config recording 'flat', or no mode column at all, keeps
+    appending to rebuild parity."""
+    from py_data_pipeline_app_spark.functions.frames import local_rows_df
+
     n = emb.count()
     base = emb.filter(F.col("vec_id") < n // 2)
-    batch = emb.filter(F.col("vec_id") >= n // 2)
+    idx = _fresh(tmp_path, "sem_drift")
+    build_semantic_index(base, idx, threshold=THRESH, n_centroids=K)
+    cfg = spark.read.parquet(f"{idx}/config").first()
 
-    flat_idx = _fresh(tmp_path, "sem_drift_flat")
-    build_semantic_index(base, flat_idx, threshold=THRESH, n_centroids=K)
-    before = _state_rows(spark, flat_idx)
-    with pytest.raises(ValueError, match="assign_mode"):
-        semantic_index_append(spark, flat_idx, batch, two_level=True)
-    assert _state_rows(spark, flat_idx) == before
-    semantic_index_append(spark, flat_idx, batch, two_level=False)
-    assert _state_rows(spark, flat_idx) == _rebuild_rows(emb, base)
+    def write_config(mode):
+        schema = "centroid_checksum string, threshold double"
+        row = (cfg.centroid_checksum, float(cfg.threshold))
+        if mode is not None:
+            schema, row = schema + ", assign_mode string", row + (mode,)
+        local_rows_df(spark, schema, [row]).write.mode("overwrite").parquet(
+            f"{idx}/config"
+        )
 
-    tl_idx = _fresh(tmp_path, "sem_drift_tl")
-    build_semantic_index(
-        base, tl_idx, threshold=THRESH, n_centroids=K, two_level=True
+    write_config("two_level")
+    before = _state_rows(spark, idx)
+    with pytest.raises(ValueError, match="assign_mode='two_level'"):
+        semantic_index_append(spark, idx, emb.filter(F.col("vec_id") >= n // 2))
+    assert _state_rows(spark, idx) == before
+
+    mid = 3 * n // 4
+    write_config("flat")
+    semantic_index_append(
+        spark, idx, emb.filter((F.col("vec_id") >= n // 2) & (F.col("vec_id") < mid))
     )
-    with pytest.raises(ValueError, match="assign_mode"):
-        semantic_index_append(spark, tl_idx, batch, two_level=False)
-    semantic_index_append(spark, tl_idx, batch, two_level=True)
-    assert _state_rows(spark, tl_idx) == _rebuild_rows_2level(emb, base)
+    write_config(None)
+    semantic_index_append(spark, idx, emb.filter(F.col("vec_id") >= mid))
+    assert _state_rows(spark, idx) == _rebuild_rows(emb, base)
 
 
 def test_legacy_config_without_mode_reads_as_flat(spark, emb, tmp_path):

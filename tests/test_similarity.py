@@ -1030,167 +1030,12 @@ def test_decontamination_is_zero_shuffle(decon_frames):
     assert "Exchange" not in plan and "Join" not in plan
 
 
-# ---------------------------------------------------------------------------
-# Two-level (coarse -> fine) centroid assignment
-# ---------------------------------------------------------------------------
-
-
-def test_2level_near_dup_pairs_colocate_and_dedup_survives(spark, emb):
-    """The property SemDeDup actually needs from the approximate
-    assignment: planted near-dup pairs (cos ≈ 0.975 — nearly identical
-    vectors, nearly identical folds) co-locate essentially as often as
-    under the FLAT fold. Absolute co-location is bounded by the
-    assignment's own argmax margin (at k=64 over random 64-dim vectors
-    even the exact fold splits a third of the perturbed pairs — a
-    property of md5-sampled centroids at this k/N, not of the 2-level
-    approximation), so the assertion compares against flat, and the
-    dedup run must drop every co-located twin."""
+def test_cluster_profile_is_total_and_consistent(spark, emb):
+    """Profiling partitions the corpus completely (member counts sum
+    to the corpus size) and agrees with a direct assignment's cluster
+    sizes."""
     from py_data_pipeline_app_spark.operators.similarity import (
         _assign_to_centroids,
-        _assign_to_centroids_2level,
-        _centroid_rows,
-        _md5_sample_centroids,
-        semantic_dedup,
-    )
-    from py_data_pipeline_app_spark.plans.queries import (
-        _with_planted_near_dups,
-    )
-
-    planted = _with_planted_near_dups(emb)
-    cents = _centroid_rows(
-        _md5_sample_centroids(
-            planted, n_centroids=64, id_col="vec_id", vec_col="embedding"
-        )
-    )
-    a2 = {
-        r.vec_id: r.centroid_id
-        for r in _assign_to_centroids_2level(
-            planted, cents, id_col="vec_id", vec_col="embedding"
-        ).collect()
-    }
-    af = {
-        r.vec_id: r.centroid_id
-        for r in _assign_to_centroids(
-            planted, cents, id_col="vec_id", vec_col="embedding"
-        ).collect()
-    }
-    pairs = [(v, v + 1000000) for v in a2 if v < 1000000 and v % 10 == 0]
-    co2 = sum(1 for s, t in pairs if a2[s] == a2[t])
-    cof = sum(1 for s, t in pairs if af[s] == af[t])
-    # within 10% of the exact fold's co-location (measured: 31 vs 34
-    # of 50 at this fixture)
-    assert co2 >= cof - max(1, len(pairs) // 10)
-
-    verdicts = semantic_dedup(
-        planted, n_centroids=64, threshold=0.9, two_level=True
-    ).collect()
-    kept = {r.vec_id: r.kept for r in verdicts}
-    # every co-located planted twin must drop (its source has the lower
-    # id); boundary-split twins are the documented miss
-    dropped_twins = sum(1 for s, t in pairs if not kept[t])
-    assert dropped_twins >= co2
-
-
-def test_2level_matches_flat_on_its_own_centroid_rows(spark):
-    """Sanity: on the centroid rows themselves the two-level fold must
-    agree with the FLAT fold exactly — each row's own cell contains it
-    (driver grouping replays the Spark fold's sequential arithmetic),
-    so cosine 1.0 wins in both, with the same lowest-id tie-break when
-    the fixture's duplicate vectors tie at 1.0."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        _assign_to_centroids,
-        _assign_to_centroids_2level,
-        _centroid_rows,
-        _md5_sample_centroids,
-    )
-
-    corpus = local_rows_df(
-        spark,
-        "vec_id long, embedding array<double>",
-        [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)]) for i in range(20)],
-    )
-    cents = _centroid_rows(
-        _md5_sample_centroids(
-            corpus, n_centroids=9, id_col="vec_id", vec_col="embedding"
-        )
-    )
-    cent_corpus = local_rows_df(
-        spark,
-        "vec_id long, embedding array<double>",
-        [(int(r.centroid_id), [float(x) for x in r.cvec]) for r in cents],
-    )
-    flat = {
-        r.vec_id: r.centroid_id
-        for r in _assign_to_centroids(
-            cent_corpus, cents, id_col="vec_id", vec_col="embedding"
-        ).collect()
-    }
-    two = {
-        r.vec_id: r.centroid_id
-        for r in _assign_to_centroids_2level(
-            cent_corpus, cents, id_col="vec_id", vec_col="embedding"
-        ).collect()
-    }
-    assert two == flat
-    # and every row found a 1.0-cosine home (its own vector's group)
-    assert all(flat[r.vec_id] in flat.values() for r in cent_corpus.collect())
-
-
-def test_2level_survives_duplicate_centroid_vectors(spark):
-    """Duplicate centroid vectors strand a pick's own row in a
-    lower-index cell; the empty cell is seeded with its pick instead of
-    producing an empty array literal."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        _assign_to_centroids_2level,
-    )
-
-    same = [1.0, 0.0, 0.0, 0.0]
-    cents = local_rows_df(
-        spark,
-        "centroid_id int, cvec array<double>",
-        [(0, same), (1, same), (2, [0.0, 1.0, 0.0, 0.0]), (3, same)],
-    )
-    corpus = local_rows_df(
-        spark,
-        "vec_id long, embedding array<double>",
-        [(0, same), (1, [0.0, 1.0, 0.0, 0.0])],
-    )
-    got = {
-        r.vec_id: r.centroid_id
-        for r in _assign_to_centroids_2level(
-            corpus, cents, n_coarse=2, id_col="vec_id", vec_col="embedding"
-        ).collect()
-    }
-    assert got[0] in (0, 1, 3) and got[1] == 2
-
-
-def test_2level_assignment_is_zero_shuffle(spark, emb):
-    import contextlib
-    import io
-
-    from py_data_pipeline_app_spark.operators.similarity import (
-        _assign_to_centroids_2level,
-        _md5_sample_centroids,
-    )
-
-    cents = _md5_sample_centroids(
-        emb, n_centroids=16, id_col="vec_id", vec_col="embedding"
-    )
-    wide = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    out = _assign_to_centroids_2level(
-        wide, cents, id_col="vec_id", vec_col="embedding"
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # one Exchange: the explicit repartition above — fan_out adds none
-    assert plan.count("Exchange") == 1 and "Join" not in plan, plan
-
-
-def test_cluster_profile_two_level_is_total_and_consistent(spark, emb):
-    """two_level profiling partitions the corpus completely (shares sum
-    to 1e0 within integer-division slack) and agrees with a direct
-    two-level assignment's cluster sizes."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        _assign_to_centroids_2level,
         _centroid_rows,
         _md5_sample_centroids,
         cluster_profile,
@@ -1204,12 +1049,12 @@ def test_cluster_profile_two_level_is_total_and_consistent(spark, emb):
     prof = cluster_profile(emb, cents=spark.createDataFrame(
         [(int(r.centroid_id), [float(x) for x in r.cvec]) for r in cents],
         "centroid_id int, cvec array<double>",
-    ), two_level=True).collect()
+    )).collect()
     n = emb.count()
     assert sum(r.n_members for r in prof) == n
     sizes = {
         r.centroid_id: r.n_members
-        for r in _assign_to_centroids_2level(
+        for r in _assign_to_centroids(
             emb, cents, id_col="vec_id", vec_col="embedding"
         )
         .groupBy("centroid_id")
@@ -1345,30 +1190,6 @@ def test_decontamination_preserves_string_benchmark_ids(spark):
     )
     assert dict(empty.dtypes)["nearest_benchmark_id"] == "string"
     assert all(r.kept for r in empty.collect())
-
-
-def test_two_level_assign_clamps_explicit_n_coarse(spark, emb):
-    """An explicit n_coarse above k must clamp, not IndexError in the
-    empty-cell seeding loop (the round-12 advice finding) — and still
-    assign every row to a valid centroid."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        _assign_to_centroids_2level,
-        _centroid_rows,
-        _md5_sample_centroids,
-    )
-
-    cents = _centroid_rows(
-        _md5_sample_centroids(
-            emb, n_centroids=8, id_col="vec_id", vec_col="embedding"
-        )
-    )
-    out = _assign_to_centroids_2level(
-        emb, cents, n_coarse=64, id_col="vec_id", vec_col="embedding"
-    )
-    valid = {int(r.centroid_id) for r in cents}
-    assert out.count() == emb.count()
-    got = {r.centroid_id for r in out.select("centroid_id").distinct().collect()}
-    assert got <= valid
 
 
 def test_auto_banding_is_production_default(spark):

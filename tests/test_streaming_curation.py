@@ -608,67 +608,6 @@ def test_decon_gate_in_front_door(spark, corpus, tmp_path):
     assert not cur & set(leaked)
 
 
-def test_reorder_feed_through_two_level_index(spark, corpus, tmp_path):
-    """A two_level-built semantic index behind the front door: the
-    backfill recompute AND the verdict read-back both replay the
-    PINNED two-level fold (round-13 — the read-back used to hardcode
-    the flat fold, probing the wrong clusters for a two_level index).
-    Final index state must equal semantic_dedup(two_level=True) over
-    everything, and the backfill batch's landed flags must match."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        semantic_index_state,
-    )
-
-    n = corpus.agg(F.max("doc_id")).first()[0] + 1
-    t0, t1 = n // 3, 2 * n // 3
-    seed = corpus.filter(F.col("doc_id") < t0)
-    high = corpus.filter(F.col("doc_id") >= t1)
-    low = corpus.filter((F.col("doc_id") >= t0) & (F.col("doc_id") < t1))
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "out")
-    seed_emb = seed.filter(F.col("embedding").isNotNull()).select(
-        "doc_id", "embedding"
-    )
-    build_semantic_index(
-        seed_emb,
-        f"{state}/semantic_index",
-        threshold=THRESH,
-        n_centroids=K,
-        id_col="doc_id",
-        vec_col="embedding",
-        two_level=True,
-    )
-    curation_fold(spark, state, out, high, 0, allow_reorder=True)
-    curation_fold(spark, state, out, low, 1, allow_reorder=True)
-
-    emb_all = corpus.filter(F.col("embedding").isNotNull()).select(
-        "doc_id", "embedding"
-    )
-    cents = _md5_sample_centroids(
-        seed_emb, n_centroids=K, id_col="doc_id", vec_col="embedding"
-    )
-    want = {
-        r.doc_id: r.kept
-        for r in semantic_dedup(
-            emb_all, threshold=THRESH, n_centroids=K, cents=cents,
-            id_col="doc_id", vec_col="embedding", two_level=True,
-        ).collect()
-    }
-    got = {
-        r.doc_id: r.kept
-        for r in semantic_index_state(
-            spark, f"{state}/semantic_index", id_col="doc_id"
-        ).collect()
-    }
-    assert got == want
-    landed_low = {
-        r.doc_id: r.sem_kept
-        for r in spark.read.parquet(f"{out}/batch-00000001").collect()
-        if r.doc_id in got
-    }
-    assert landed_low == {i: got[i] for i in landed_low}
-
-
 def test_dsir_gate_in_front_door(spark, tmp_path):
     """The DSIR importance gate (round 13): folds score every batch
     against a PERSISTED frozen fit (dsir_fit_train), land a

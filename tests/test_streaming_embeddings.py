@@ -355,49 +355,3 @@ def test_streamed_trained_opq_ivfpq_matches_full_rebuild(
     )
     assert got == want
     assert got_rr == want_rr
-
-
-def test_streamed_semantic_two_level_matches_full_rebuild(spark, emb, tmp_path):
-    """SemDeDup appends over a TWO_LEVEL-built index (round 13):
-    the streaming append needs no flag — it reads the assign_mode
-    pinned in the config manifest and replays the scaled-k coarse→fine
-    fold, so streamed batches still reproduce one
-    semantic_dedup(two_level=True) rebuild exactly."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        _md5_sample_centroids,
-        build_semantic_index,
-        semantic_dedup,
-        semantic_index_state,
-    )
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    index = str(tmp_path / "index")
-    n = emb.count()
-    initial = emb.filter(F.col("vec_id") < n // 2)
-    build_semantic_index(
-        initial, index, threshold=0.8, n_centroids=8, two_level=True
-    )
-    for i, (lo, hi) in enumerate([(n // 2, 3 * n // 4), (3 * n // 4, n)]):
-        emb.filter(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        ).coalesce(1).write.parquet(f"{landing}/b{i}")
-        q = _ingest_stream(
-            spark, landing + "/*", ckpt, index,
-            semantic_index_append, semantic_index_compact, maintain_every=1,
-        )
-        q.awaitTermination(120)
-    got = sorted(map(tuple, semantic_index_state(spark, index).collect()))
-    cents_raw = _md5_sample_centroids(
-        initial, n_centroids=8, id_col="vec_id", vec_col="embedding"
-    )
-    want = sorted(
-        map(
-            tuple,
-            semantic_dedup(
-                emb, threshold=0.8, n_centroids=8, cents=cents_raw,
-                two_level=True,
-            ).collect(),
-        )
-    )
-    assert got == want
