@@ -1,106 +1,33 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry module over the query registry (plans/queries.py).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is the flagship query at sf0.001; ``queries()`` and
+``oracle_sql()`` return every registered query and its DuckDB oracle,
+in registration order. Tier-1 (tests/test_registry.py) compares each
+query with its oracle at sf0.001, and tools/check_oracle.py does the
+same at sf0.01.
 
-Implementation lives in ``py_data_pipeline_app_spark``; this module is
-a thin adapter over its query registry (plans/queries.py).
-
-Gate-coverage rotation
-----------------------
-The driver verifies at most ~50 registry entries per round, in dict
-order; the registry holds more oracle-backed queries than that. To
-guarantee every query is re-verified on a short cycle (rather than a
-fixed tail going permanently unchecked — the round-3 verdict's #1
-finding), ``queries()`` / ``oracle_sql()`` emit entries ordered
-least-recently-verified first: a query's priority is the most recent
-round whose ``CORRECTNESS_r*.json`` contains a fully-green row for it
-(never-verified or previously-failing queries sort first; ties break
-on registration order). With N registered queries and a cap of C the
-structural bound is N <= 2C (100 at C=50; the registry is AT the cap,
-so each new registration first retires one near-twin — round 13
-seated training_set_curation_dsir by retiring
-training_set_curation_semantic; the README names the next candidate)
-and each query is unverified for at most one consecutive round.
-Retirements must come from the LEAST-recently-verified half (the one
-whose gate-prefix slot the newcomer takes): retiring a
-freshly-verified row instead pushes a stale row past the prefix and
-breaches the staleness bound — tests/test_registry.py's
-test_no_registered_query_is_stale enforces exactly this.
-The ordering is a pure function of the committed CORRECTNESS files,
-so it is deterministic for the driver and reproducible for the judge.
+Implementation lives in ``py_data_pipeline_app_spark``.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from py_data_pipeline_app_spark.plans.queries import ORACLES, QUERIES
 
-_REPO_DIR = os.path.dirname(os.path.abspath(__file__))
-
-
-def _last_verified_round() -> dict[str, int]:
-    """Map query name -> latest round with a fully-green gate row.
-
-    Reads the committed CORRECTNESS_r{NN}.json files next to this
-    module. A row counts only if rows+schema+hash all matched; a
-    failing or missing row leaves the query at its previous (or -1)
-    priority so it is re-verified first next round.
-    """
-    last: dict[str, int] = {}
-    for path in glob.glob(os.path.join(_REPO_DIR, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            if green and rnd > last.get(name, -1):
-                last[name] = rnd
-    return last
-
-
-def _rotated_names() -> list[str]:
-    last = _last_verified_round()
-    reg_index = {name: i for i, name in enumerate(QUERIES)}
-    return sorted(QUERIES, key=lambda n: (last.get(n, -1), reg_index[n]))
-
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
+    """Flagship query at sf0.001."""
     return QUERIES["customer_spend_ranking"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2,
-    least-recently-verified first (see module docstring)."""
-    return {name: QUERIES[name] for name in _rotated_names()}
+    """One entry per implemented operator from SURVEY.md §2."""
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL equivalent for each query (omitted keys
-    get the driver's weaker rows-only check); same rotation order as
-    ``queries()``."""
-    return {name: ORACLES[name] for name in _rotated_names() if name in ORACLES}
+    """DuckDB-runnable ANSI SQL equivalent of each query."""
+    return dict(ORACLES)

@@ -1,8 +1,10 @@
 """Query registry: every implemented operator from SURVEY.md §2 as a
 (spark, sf_dir) -> DataFrame callable, with a DuckDB-equivalent ANSI-SQL
-oracle string for the driver's correctness gate.
+oracle string. Tier-1 (tests/test_registry.py) runs every row on Spark
+and its oracle on DuckDB at sf0.001 and compares them; tools/check_oracle.py
+does the same at sf0.01.
 
-Conventions (driver contract, __spark_entry__.py):
+Conventions:
 - every computed column is aliased IDENTICALLY in Spark and SQL;
 - double SUMs are computed as decimal(18,6) sums (exact, summation-order
   independent — double summation order differs between engines and can
@@ -42,16 +44,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-# Queries retired from the driver-facing registry (round-9 headroom:
-# the rotation invariant caps the registry at 2×gate_cap entries, and
-# adding new operators requires retiring studies/near-twin variants
-# whose operator surface stays covered by a sibling row). Retired
-# queries keep their full DuckDB oracle and are gated by
-# tests/test_retired.py on every pytest run instead of the driver's
-# per-round prefix.
-RETIRED_QUERIES: dict[str, QueryFn] = {}
-RETIRED_ORACLES: dict[str, str] = {}
 
 _SCRATCH_DIRS: dict[str, str] = {}
 
@@ -125,13 +117,10 @@ def sql_stat_avg(expr: str, scale: int = 4) -> str:
     )
 
 
-def register(name: str, oracle: str | None = None, retired: bool = False):
+def register(name: str, oracle: str):
     def deco(fn: QueryFn) -> QueryFn:
-        queries = RETIRED_QUERIES if retired else QUERIES
-        oracles = RETIRED_ORACLES if retired else ORACLES
-        queries[name] = fn
-        if oracle is not None:
-            oracles[name] = oracle
+        QUERIES[name] = fn
+        ORACLES[name] = oracle
         return fn
 
     return deco
@@ -556,7 +545,6 @@ def recent_events_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value), 4) AS avg_value
     FROM events GROUP BY event_type
     """,
-    retired=True,
 )
 def event_type_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profiling aggregation (payment_type-breakdown analog): count /
@@ -808,7 +796,6 @@ _NGRAM_PAIR_CTES = f"""toks AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
     WITH {_NGRAM_PAIR_CTES}
     SELECT id_a, id_b, jaccard FROM njpairs
     """,
-    retired=True,
 )
 def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-trigram Jaccard near-dup pairs (threshold 0.5) via the
@@ -816,19 +803,9 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a cross join. ``max_df=100`` drops stop-shingles (boilerplate
     lines shared by >100 docs): each shingle's candidate pairs grow as
     df², so one viral line otherwise dominates the shuffle at corpus
-    scale. The oracle mirrors the cap, so the gate stays exact.
-
-    RETIRED round 15 (registry at the 2×gate-cap ceiling; retired from
-    the least-recently-verified half per the README's rotation plan —
-    the round-14 README named media_frame_sample, but that row sits in
-    the FRESHLY-verified r14 half, so retiring it would push an
-    r13-verified row past the next gate prefix and breach the
-    staleness pin; this r13-verified near-twin retires instead.
-    Near-twin coverage: the identical shingle→inverted-index→Jaccard
-    chain stays driver-gated by ``cross_corpus_decontamination`` and
-    this full oracle keeps running in tests/test_retired.py) to seat
-    ``audio_dhash_canonicals`` — the audio dedup family's driver-gate
-    row."""
+    scale. The oracle mirrors the cap, so the comparison stays exact.
+    ``cross_corpus_decontamination`` runs the same
+    shingle→inverted-index→Jaccard chain against a second corpus."""
     return ngram_jaccard_pairs(
         load_table(spark, "documents", sf_dir), n=3, threshold=0.5, max_df=100
     )
@@ -990,7 +967,7 @@ def dedup_cluster_assignment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_cluster_assignment_star", _CLUSTER_ORACLE, retired=True)
+@register("dedup_cluster_assignment_star", _CLUSTER_ORACLE)
 def dedup_cluster_assignment_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clustering contract as ``dedup_cluster_assignment`` but via
     the O(log n)-round large-star/small-star algorithm
@@ -1187,7 +1164,7 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("embedding_near_dup_lowt", _hyperplane_oracle(), retired=True)
+@register("embedding_near_dup_lowt", _hyperplane_oracle())
 def embedding_near_dup_lowt_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOW-threshold (≥ 0.4) hyperplane-LSH recall study — 32 planes /
     8×4-bit bands, the config whose measured recall at this data's
@@ -1216,7 +1193,6 @@ def embedding_near_dup_lowt_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sample a JOIN sample b ON a.vec_id < b.vec_id
     WHERE round({_sql_cos('a.embedding', 'b.embedding')}, 9) >= 0.25
     """,
-    retired=True,
 )
 def embedding_near_dup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (≥ 0.25), exact all-pairs over a
@@ -1499,11 +1475,7 @@ def embedding_cluster_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle argmax assignment + ONE keyed agg with map-side
     partials; the divisions run over the k-row result in integer
     round-half-up micro-units (the daily_value_trend pattern), so
-    every value hashes cross-engine. Born in the pytest-gated oracle
-    tier in round 10 (that round's two gate slots went to the BPE char
-    trainer and the reorder append); promoted to a driver gate row in
-    round 11 after three near-twin queries were retired to restore
-    registry headroom."""
+    every value hashes cross-engine."""
     from py_data_pipeline_app_spark.operators.similarity import (
         cluster_profile,
     )
@@ -1600,7 +1572,7 @@ def _ivf_oracle(
     """
 
 
-@register("similarity_topk_ivf", _ivf_oracle(), retired=True)
+@register("similarity_topk_ivf", _ivf_oracle())
 def similarity_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-probed approximate top-5 (16 coarse buckets, nprobe 4):
     scans ~nprobe/n_centroids of the corpus per query. Approximate by
@@ -2810,7 +2782,6 @@ def event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            {sql_stat_avg('quality_score', 6)} AS avg_quality
     FROM split GROUP BY split, lang
     """,
-    retired=True,
 )
 def training_set_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed training-set build — the flagship curation
@@ -2898,7 +2869,6 @@ def training_set_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            {sql_stat_avg('quality_score', 6)} AS avg_quality
     FROM split GROUP BY split, lang
     """,
-    retired=True,
 )
 def training_set_curation_leakage_safe_q(
     spark: SparkSession, sf_dir: str
@@ -3128,7 +3098,6 @@ def media_metadata_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(resized) AS payload_md5
     FROM rs
     """,
-    retired=True,
 )
 def media_resize_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image resize through the mapInPandas plumbing
@@ -3165,18 +3134,10 @@ def media_resize_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM media
     GROUP BY kind, mime
     """,
-    retired=True,
 )
 def media_payload_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Payload volume + exact-duplicate profile per (kind, mime): one
-    hash aggregation; only digests and counters cross the shuffle.
-
-    RETIRED round 14 (registry at the 2×gate-cap ceiling; retired from
-    the least-recently-verified half per the README's rotation plan,
-    near-twin coverage: the payload md5/byte accounting stays exercised
-    by media_metadata_filter + this oracle in tests/test_retired.py) to
-    seat ``media_dhash_canonicals`` — the multimodal dedup family's
-    driver-gate row."""
+    hash aggregation; only digests and counters cross the shuffle."""
     media = M.media_from_documents(load_table(spark, "documents", sf_dir))
     prof = M.payload_profile(media)
     return prof.select(
@@ -3430,7 +3391,7 @@ def _dhash_cluster_sql(feed_cte: str) -> str:
     """,
 )
 def media_dhash_canonicals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multimodal dedup family's driver-gate row (round 14; the
+    """The multimodal dedup family's registry row (round 14; the
     round-13 verdict's #1): perceptual dHash → banded near-dup pairs →
     connected components → fidelity canonicals, end-to-end at the
     PRODUCTION defaults (two-axis 128-bit signature, 16-bit band
@@ -3503,7 +3464,7 @@ def media_dhash_canonicals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def audio_dhash_canonicals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The AUDIO dedup family's driver-gate row (round 15; the
+    """The AUDIO dedup family's registry row (round 15; the
     round-14 verdict's task 4): perceptual hash → banded near-dup
     pairs → connected components → fidelity canonicals over audio
     assets, at the production two-axis defaults, through the
@@ -3671,8 +3632,7 @@ def _video_dhash_ctes() -> str:
     """,
 )
 def video_dhash_canonicals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VIDEO dedup family's driver-gate row (round 14, seated in
-    the slot ``media_feature_topk`` vacated): per-frame two-axis dHash
+    """The VIDEO dedup family's registry row (round 14): per-frame two-axis dHash
     → coarse-time-bucketed banded clip pairs → per-bucket min-hamming
     verify with a ≥2-matching-buckets floor → connected components →
     fidelity canonicals, end to end over the deterministic
@@ -3737,9 +3697,9 @@ def media_feature_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine (both quantize count/len to float32), so
     this Arrow-batched Python stage gets a full value-hash check.
 
-    The gate-facing shape serializes the array<float> column to a CSV
-    string (fixed decimal(12,9) per element) because the driver's
-    canonicalizer sorts output columns and Python lists aren't
+    The registry shape serializes the array<float> column to a CSV
+    string (fixed decimal(12,9) per element) because the oracle
+    compare sorts output columns and Python lists aren't
     hashable — same pattern as customer_details_nested. The real API
     (operators.media.extract_features) keeps the typed array column."""
     media = M.media_from_documents(load_table(spark, "documents", sf_dir))
@@ -3772,20 +3732,11 @@ def media_feature_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM feats c, (SELECT * FROM feats WHERE media_id < 8) q
     ) WHERE rank <= 5
     """,
-    retired=True,
 )
 def media_feature_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search over extracted media features: cosine top-5
     for 8 query assets — reuses the broadcast-queries/single-scan
-    brute-force kernel from operators.similarity.
-
-    RETIRED round 14 (registry at the 2×gate-cap ceiling; retired from
-    the least-recently-verified half per the README's rotation plan,
-    near-twin coverage: the identical brute-force-topk plan is
-    value-checked by similarity_topk and hard_negative_topk, and the
-    mapInPandas feature extraction it scans stays gated by
-    media_feature_extract) to seat ``video_dhash_canonicals`` — the
-    video dedup family's driver-gate row."""
+    brute-force kernel from operators.similarity."""
     media = M.media_from_documents(load_table(spark, "documents", sf_dir))
     feats = M.extract_features(media, dim=16)
     queries = feats.filter(F.col("media_id") < 8).select(
@@ -4045,7 +3996,6 @@ def revenue_rollup_region_nation_q(spark: SparkSession, sf_dir: str) -> DataFram
     FROM events
     GROUP BY event_type
     """,
-    retired=True,
 )
 def event_value_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution profiling per event type: exact continuous-
@@ -4079,7 +4029,6 @@ def event_value_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type, bucket
     """,
-    retired=True,
 )
 def event_value_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binned value histogram per event type (25 equal-width buckets
@@ -4132,7 +4081,6 @@ _LANG_FRACTIONS = {"en": 0.25}
     FROM documents
     GROUP BY split
     """,
-    retired=True,
 )
 def dataset_split_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test split of the corpus keyed
@@ -4367,11 +4315,10 @@ def dsir_importance_selection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.doc_id, d.lang, d.source, w.dsir_weight_micro
     FROM w JOIN documents d USING (doc_id)
     """,
-    retired=True,
 )
 def dsir_frozen_fit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR frozen-fit batch scoring (retired tier from birth — the
-    driver row is dsir_importance_selection): fit the hashed-ngram
+    """DSIR frozen-fit batch scoring (the fit-and-score-in-one row is
+    dsir_importance_selection): fit the hashed-ngram
     models ONCE on the even-doc_id half, score the odd half against
     the frozen fit — the deployment shape (fit on the reference
     corpus, score each incoming crawl batch), and the path that
@@ -4460,9 +4407,7 @@ def training_set_curation_dsir_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact's arithmetic (bucketing, add-one floors, micro rounding)
     breaks the value hash. Scale shape: fit = one gram explode + one
     ≤1024-key groupBy; scoring = zero-shuffle map-literal fold; the
-    rollup is a bounded-key agg. Registered in the slot
-    ``training_set_curation_semantic`` vacated (retired round 13, still
-    value-checked in tests/test_retired.py)."""
+    rollup is a bounded-key agg."""
     from py_data_pipeline_app_spark.functions.text import tokens as _toks
     from py_data_pipeline_app_spark.operators.sampling import (
         dsir_fit_train,
@@ -4519,7 +4464,6 @@ def training_set_curation_dsir_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r JOIN q USING (source)
     WHERE r.tokens_cum <= q.token_quota
     """,
-    retired=True,
 )
 def source_token_budget_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature mixing in the TRAINER'S currency (round 11 —
@@ -4533,8 +4477,7 @@ def source_token_budget_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a strict prefix rule (a doc is kept iff its running inclusive
     token sum fits the quota — one window cumsum, order-insensitive to
     partitioning, cross-engine exact). Audit columns show how full
-    each quota ran. Retired tier from birth: the round's two driver
-    slots went to embedding_cluster_profile and bpe_token_ids."""
+    each quota ran."""
     from py_data_pipeline_app_spark.operators.sampling import (
         source_token_budget_mix,
     )
@@ -4716,7 +4659,6 @@ _BIGRAM_LAM, _BIGRAM_ULAM = 0.7, 1.0 - 0.7  # exact doubles, repr'd into SQL
            ce <= 3.41 AS kept
     FROM agg
     """,
-    retired=True,
 )
 def text_perplexity_bigram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated-BIGRAM LM quality filter (operators/curation
@@ -4732,9 +4674,7 @@ def text_perplexity_bigram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     All counts exact integers, per-transition logp rounded to 6 dp,
     decimal sums — the whole derivation value-hashes; the interpolation
     weights are repr'd into the SQL so both engines multiply by
-    bit-identical doubles. Retired tier from birth: the round's two
-    driver slots went to embedding_cluster_profile and bpe_token_ids;
-    this oracle value-checks on every pytest run."""
+    bit-identical doubles."""
     from py_data_pipeline_app_spark.operators.curation import (
         bigram_perplexity_buckets,
     )
@@ -4843,7 +4783,6 @@ def text_perplexity_bigram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            ce <= 3.46 AS kept
     FROM agg
     """,
-    retired=True,
 )
 def text_perplexity_frozen_lm_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CCNet filter as ACTUALLY deployed (operators/curation
@@ -4862,9 +4801,7 @@ def text_perplexity_frozen_lm_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     statement — a full round-trip through parquet persistence on the
     Spark side against a pure derivation on DuckDB's. Cutoffs
     3.40/3.46 sit at the odd half's ~25th/90th CE percentiles (the
-    CCNet calibrate-once protocol). Retired tier from birth (round-12
-    headroom went to the frozen-LM streaming gate's test surface);
-    this oracle value-checks on every pytest run."""
+    CCNet calibrate-once protocol)."""
     from py_data_pipeline_app_spark.operators.curation import (
         bigram_lm_frames,
         bigram_lm_train,
@@ -5173,7 +5110,7 @@ def bpe_merge_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_merge_table(load_table(spark, "documents", sf_dir), n_merges=8)
 
 
-@register("bpe_encoded_corpus", _bpe_oracle(n_merges=4, encode=True), retired=True)
+@register("bpe_encoded_corpus", _bpe_oracle(n_merges=4, encode=True))
 def bpe_encoded_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train a 4-merge BPE table on the corpus, then ENCODE the corpus
     with it (operators/curation bpe_apply — the consumer half a
@@ -6121,19 +6058,9 @@ def dedup_canonical_by_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS retained_tokens
     FROM labeled GROUP BY split, source
     """,
-    retired=True,
 )
 def training_set_curation_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retired round 13 (last verified green r11 — the rotation rule:
-    a retirement must come from the half whose prefix slot the
-    newcomer takes) to seat ``training_set_curation_dsir`` at the
-    100-row cap; near-twin of ``training_set_curation_v2`` per the
-    round-12 verdict's retirement order, and its semantic-gate
-    composition is ALSO exercised end-to-end by the streaming front
-    door's parity tests (tests/test_streaming_curation.py). Full
-    oracle keeps running in tests/test_retired.py.
-
-    The EMBEDDING-side curation composition (the v2 pipeline's text
+    """The EMBEDDING-side curation composition (the v2 pipeline's text
     passes have a semantic sibling now that round 9 gave SemDeDup its
     full lifecycle): semantic near-dup verdicts over the embedding
     table (zero-shuffle assignment, within-cluster pairs only) join

@@ -339,7 +339,7 @@ def curation_fold(
         )
 
         cent_rows = _centroid_rows(
-            spark.read.parquet(f"{sem_index}/centroids")
+            fsio.read_small_parquet_rows(spark, f"{sem_index}/centroids")
         )
         probed = [
             r.centroid_id

@@ -18,14 +18,7 @@ import io
 
 import pytest
 
-from py_data_pipeline_app_spark.plans.queries import (
-    QUERIES as _ACTIVE,
-    RETIRED_QUERIES as _RETIRED,
-)
-
-# plan-shape contracts apply to retired queries too (they stay
-# oracle-gated in test_retired.py)
-QUERIES = {**_ACTIVE, **_RETIRED}
+from py_data_pipeline_app_spark.plans.queries import QUERIES
 
 
 def plan_of(df, mode: str = "formatted") -> str:

@@ -94,19 +94,19 @@ def test_incremental_fold_union_equals_batch_lsh(spark, toklists, n_batches, thr
         for r in minhash_dedup_pairs(df, threshold=threshold).collect()
     )
 
-    index = tempfile.mkdtemp(prefix="prop_lsh_")
     got = []
-    for k in range(n_batches):
-        batch = df.filter(F.col("doc_id") % n_batches == k)
-        pairs = incremental_lsh_fold(
-            spark,
-            index,
-            batch,
-            threshold=threshold,
-            max_bucket_size=None,
-            batch_token=f"b{k}",
-        )
-        got.extend((r.id_a, r.id_b, r.jaccard) for r in pairs.collect())
+    with tempfile.TemporaryDirectory(prefix="prop_lsh_") as index:
+        for k in range(n_batches):
+            batch = df.filter(F.col("doc_id") % n_batches == k)
+            pairs = incremental_lsh_fold(
+                spark,
+                index,
+                batch,
+                threshold=threshold,
+                max_bucket_size=None,
+                batch_token=f"b{k}",
+            )
+            got.extend((r.id_a, r.id_b, r.jaccard) for r in pairs.collect())
     assert sorted(got) == expected
 
 

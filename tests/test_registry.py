@@ -1,13 +1,14 @@
-"""Registry contract smoke: every registered query must build a plan
-and execute at sf0.001, and every oracle key must name a registered
-query — catches entries that would only crash inside the driver's
-correctness gate."""
+"""Registry contract: every registered query has a DuckDB oracle, and
+every row matches it at sf0.001 (testing/oracle.py's compare: row
+count, column names and the order-insensitive multiset of normalised
+rows)."""
 
 from __future__ import annotations
 
 import pytest
 
 from py_data_pipeline_app_spark.plans.queries import ORACLES, QUERIES
+from py_data_pipeline_app_spark.testing.oracle import check, duckdb_views
 
 
 def test_every_oracle_has_a_query():
@@ -15,15 +16,12 @@ def test_every_oracle_has_a_query():
 
 
 def test_every_query_has_an_oracle():
-    # current contract: full value-check coverage, zero rows-only rows
     assert sorted(set(QUERIES) - set(ORACLES)) == []
 
 
 # A handful of cheap structurally-diverse sentinels keep the fast loop
 # honest about the registry wiring (import, load_table, plan build);
-# the FULL sweep runs in the slow tier — it re-executes all ~98 queries
-# and duplicates what the driver gate + check_oracle re-verify per
-# round anyway (round-11 tier split, see pytest.ini).
+# the full oracle sweep below runs in the slow tier (see pytest.ini).
 _SMOKE_SENTINELS = [
     "pricing_summary",
     "customer_spend_ranking",
@@ -40,18 +38,25 @@ def test_query_executes_sentinel(spark, sf_dir, name):
     assert df.count() >= 0, name
 
 
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duckdb_views(sf_dir)
+    yield con
+    con.close()
+
+
 @pytest.mark.oracle
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_executes(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.columns, name
-    assert df.count() >= 0, name
+def test_query_executes(spark, sf_dir, duck, name):
+    """Every registered row executes on Spark and matches its DuckDB
+    oracle."""
+    _, mismatches = check(QUERIES[name](spark, sf_dir), duck, ORACLES[name])
+    assert mismatches == [], name
 
 
-def test_entry_rotation_puts_least_recently_verified_first():
-    """The driver verifies only a prefix of the registry each round;
-    __spark_entry__ must order entries least-recently-verified first so
-    no query goes permanently unchecked (round-3 verdict finding #1)."""
+def test_entry_module_serves_the_registry():
+    """``__spark_entry__`` hands out the registry itself, in
+    registration order, and reads nothing else."""
     import importlib.util
     import os
 
@@ -62,71 +67,6 @@ def test_entry_rotation_puts_least_recently_verified_first():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
-    names = list(mod.queries())
-    assert set(names) == set(QUERIES)
-    assert names == list(mod.oracle_sql()), "queries/oracles order must agree"
-
-    last = mod._last_verified_round()
-    priorities = [last.get(n, -1) for n in names]
-    assert priorities == sorted(priorities), (
-        "rotation must be non-decreasing in last-verified round"
-    )
-
-
-def test_no_registered_query_is_stale():
-    """The rotation's guarantee as a failing test instead of a
-    convention: given the committed CORRECTNESS files, every registered
-    query must have a fully-green row no older than (latest round − 1).
-    Queries registered after the latest gate run (no row in any file)
-    are exempt but must sort inside the next round's gate prefix, and
-    the registry must stay small enough that one round always covers
-    everything the previous round rotated out."""
-    import glob
-    import importlib.util
-    import os
-    import re
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    spec = importlib.util.spec_from_file_location(
-        "_spark_entry_stale_test", os.path.join(repo, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    assert rounds, "no committed CORRECTNESS files"
-    current = max(rounds)
-    gate_cap = 50  # driver verifies at most this many entries per round
-
-    last = mod._last_verified_round()
-    order = list(mod.queries())
-    stale = [
-        n for n in order if n in last and last[n] < current - 1
-    ]
-    assert stale == [], f"queries with no green row since round {current - 1}: {stale}"
-
-    never = [n for n in order if n not in last]
-    for n in never:
-        assert order.index(n) < gate_cap, (
-            f"new query {n} would not fit the next gate prefix"
-        )
-    # Structural staleness invariant, stated precisely:
-    # (1) everything OUTSIDE the next gate prefix must carry a green row
-    #     from the LATEST round — it was just verified, so it is at most
-    #     one round stale when the next gate skips it;
-    beyond = order[gate_cap:]
-    not_fresh = [n for n in beyond if last.get(n, -1) != current]
-    assert not_fresh == [], (
-        f"rotated-out queries not verified in round {current}: {not_fresh}"
-    )
-    # (2) the rotated-out set itself fits the round-after-next prefix,
-    #     so the two-round alternation is sustainable. Equivalently
-    #     N <= 2*cap; each future round can then add at most
-    #     2*cap - N new queries without breaking (1).
-    assert len(beyond) <= gate_cap, (
-        f"{len(beyond)} rotated-out queries cannot fit a {gate_cap}-row gate"
-    )
+    assert list(mod.queries()) == list(QUERIES)
+    assert list(mod.oracle_sql()) == list(QUERIES)
+    assert mod.oracle_sql() == ORACLES

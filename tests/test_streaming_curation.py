@@ -351,6 +351,37 @@ def test_reorder_feed_through_front_door(spark, corpus, tmp_path):
     assert got_retained == want_retained
 
 
+def test_backfill_fold_job_count_pinned(spark, corpus, tmp_path):
+    """A backfill micro-batch (ids below folded history) takes the
+    reorder read-back, which reads the frozen centroids driver-side
+    like the append itself: no footer job, no collect. Measured 51
+    jobs; an untyped ``spark.read.parquet`` plus collect of the
+    centroids makes it 53."""
+    n = corpus.agg(F.max("doc_id")).first()[0] + 1
+    t0, t1 = n // 3, 2 * n // 3
+    state = str(tmp_path / "state")
+    out = str(tmp_path / "out")
+    build_semantic_index(
+        corpus.filter((F.col("doc_id") < t0) & F.col("embedding").isNotNull())
+        .select("doc_id", "embedding"),
+        f"{state}/semantic_index",
+        threshold=THRESH,
+        n_centroids=K,
+        id_col="doc_id",
+        vec_col="embedding",
+    )
+    curation_fold(
+        spark, state, out, corpus.filter(F.col("doc_id") >= t1), 0,
+        allow_reorder=True,
+    )
+    low = corpus.filter((F.col("doc_id") >= t0) & (F.col("doc_id") < t1))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    curation_fold(spark, state, out, low, 1, allow_reorder=True)
+    ran = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+    assert ran <= 51, f"backfill fold ran {ran} jobs"
+
+
 def test_reorder_shard_sink_reads_current_verdicts(spark, corpus, tmp_path):
     """Round-12 verdict task 1: with ``allow_reorder=True`` the
     ``shards_every`` sink must shard from the index's CURRENT verdicts

@@ -25,11 +25,10 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    import __spark_entry__ as entry_mod
+    from py_data_pipeline_app_spark.plans.queries import QUERIES as qs
     from py_data_pipeline_app_spark.session import get_spark
 
     spark = get_spark("capture_plans")
-    qs = entry_mod.queries()
     names = args.names or list(qs)
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

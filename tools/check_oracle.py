@@ -1,8 +1,10 @@
-"""Local replica of the driver's correctness gate.
+"""Cross-engine oracle check of the query registry at sf0.01.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on
-DuckDB at sf0.01 (overridable), compares row count, column names, and
-an order-insensitive multiset of stringified rows. Usage:
+Runs every registered query (``plans.queries.QUERIES``) on Spark and its
+oracle (``ORACLES``) on DuckDB at sf0.01 (overridable) and compares row
+count, column names, and an order-insensitive multiset of normalised
+rows (``testing/oracle.py``, the compare the tier-1 sweep uses at
+sf0.001). Usage:
 
     python tools/check_oracle.py [--sf-dir DIR] [name ...]
 """
@@ -10,35 +12,15 @@ an order-insensitive multiset of stringified rows. Usage:
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
-from py_data_pipeline_app_spark.schemas import TESTDATA_TABLES
+from py_data_pipeline_app_spark.plans.queries import ORACLES, QUERIES
 from py_data_pipeline_app_spark.session import get_spark
-
-
-def norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # kill -0.0 and representation jitter below hash-relevant precision
-        if v == 0:
-            v = 0.0
-        return f"{v:.9g}"
-    return str(v)
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("\x01".join(norm_cell(r[i]) for i in order) for r in rows)
+from py_data_pipeline_app_spark.testing.oracle import check, duckdb_views
 
 
 def main() -> int:
@@ -47,63 +29,24 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    import __spark_entry__ as entry_mod
-
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    names = args.names or list(qs)
-
+    names = args.names or list(QUERIES)
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_views(args.sf_dir)
 
     failures = []
     for name in names:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, args.sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            n_rows, msgs = check(
+                QUERIES[name](spark, args.sf_dir), con, ORACLES[name]
+            )
         except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows, no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            dcols = [c.lower() for c in rel.columns]
-            drows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {e}")
-            continue
-
-        msgs = []
-        if len(srows) != len(drows):
-            msgs.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
-        if sorted(c.lower() for c in scols) != sorted(dcols):
-            msgs.append(f"columns spark={sorted(scols)} duckdb={sorted(dcols)}")
-        if not msgs:
-            sn, dn = norm_rows(scols, srows), norm_rows(dcols, drows)
-            if sn != dn:
-                diff = next(
-                    (i for i, (a, b) in enumerate(zip(sn, dn)) if a != b), None
-                )
-                detail = ""
-                if diff is not None:
-                    detail = f" first-diff@{diff}: spark={sn[diff]!r} duckdb={dn[diff]!r}"
-                msgs.append(f"value mismatch{detail}")
+            n_rows, msgs = 0, [f"error: {e}"]
         if msgs:
             failures.append(name)
             print(f"FAIL {name}: {'; '.join(msgs)}")
         else:
-            print(f"ok   {name}: {len(srows)} rows match [{time.time()-t0:.1f}s]")
+            print(f"ok   {name}: {n_rows} rows match [{time.time()-t0:.1f}s]")
 
     print(f"\n{len(names) - len(failures)}/{len(names)} queries match")
     return 1 if failures else 0

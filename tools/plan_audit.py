@@ -66,15 +66,10 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    import __spark_entry__ as entry_mod
+    from py_data_pipeline_app_spark.plans.queries import QUERIES as qs
     from py_data_pipeline_app_spark.session import get_spark
 
     spark = get_spark("plan-audit")
-    from py_data_pipeline_app_spark.plans.queries import RETIRED_QUERIES
-
-    # retired queries stay plan-audited: the PyRow=0 / shuffle-shape
-    # contracts apply to the pytest-gated tier too
-    qs = {**RETIRED_QUERIES, **entry_mod.queries()}
     names = args.names or sorted(qs)
 
     rows = []

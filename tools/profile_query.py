@@ -31,7 +31,7 @@ def main() -> int:
 
     event_dir = tempfile.mkdtemp(prefix="spark_events_")
 
-    import __spark_entry__ as entry_mod
+    from py_data_pipeline_app_spark.plans.queries import QUERIES as qs
     from py_data_pipeline_app_spark.session import get_spark
 
     spark = get_spark(
@@ -43,7 +43,6 @@ def main() -> int:
             "spark.eventLog.rolling.enabled": "false",
         },
     )
-    qs = entry_mod.queries()
     sf_dir = args.sf_dir
 
     # warmup
