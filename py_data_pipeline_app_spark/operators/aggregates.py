@@ -37,12 +37,11 @@ def customer_spend_summary(cat_totals: DataFrame) -> DataFrame:
     before :141), so post-round ties share a dense rank; a NULL total
     (all amounts garbage) ranks last, in its own tier.
 
-    The result has one row per customer and goes to the driver whole
-    (``write_excel_report``'s ``toPandas``), so the rank is a plain
-    ``dense_rank() OVER (ORDER BY amount DESC)`` on one partition, the
-    reference's single pandas sort (app.py:139-142). Building the frame
-    runs no job. The two-phase ``global_dense_rank`` stays for ranks
-    that are not collected (operators/ranking.py)."""
+    The rank is a plain ``dense_rank() OVER (ORDER BY amount DESC)``
+    on one partition, the reference's single pandas sort
+    (app.py:139-142); the result has one row per customer and goes to
+    the driver whole (``write_excel_report``'s ``toPandas``). Building
+    the frame runs no job."""
     totals = cat_totals.groupBy("customer_id", "name").agg(
         money_round(F.sum("amount")).alias("amount")
     )

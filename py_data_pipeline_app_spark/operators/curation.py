@@ -1647,23 +1647,19 @@ def bpe_vocab(
     id order GPT-2's encoder files use (bytes first, merges by rank).
 
     Distribution shape: the alphabet is one distinct-agg over exploded
-    initial symbols (map-side combined), ranked with the two-phase
-    :func:`~py_data_pipeline_app_spark.operators.ranking.global_dense_rank`
-    — no single-partition Exchange even for a word-level vocabulary in
-    the millions. The merge rows are driver-known literals; their id
-    offset joins through a 1-row count frame (no collect). Two merges
+    initial symbols (map-side combined), ranked with one ascending
+    ``dense_rank()`` window on ``symbol``. The merge rows are
+    driver-known literals; their id offset joins through a 1-row count
+    frame (no collect). Two merges
     can textually collide (``(ab,c)`` and ``(a,bc)`` both yield
     ``abc``), and a tokenizer vocabulary maps each symbol to ONE id —
     the smallest wins (HF keeps the first), via a final min-agg over
     the vocab-sized frame."""
-    from py_data_pipeline_app_spark.operators.ranking import global_dense_rank
-
     state = fan_out(docs).select(_bpe_state_expr(text_col, level).alias("_s"))
     syms = F.split(F.expr("substring(_s, 2, length(_s) - 2)"), "›‹")
     alpha = state.select(F.explode(syms).alias("symbol")).distinct()
-    base = global_dense_rank(alpha, "symbol", "_rk", descending=False).select(
-        "symbol", (F.col("_rk") - 1).cast("int").alias("token_id")
-    )
+    rank = F.dense_rank().over(Window.orderBy(F.col("symbol").asc()))
+    base = alpha.select("symbol", (rank - 1).cast("int").alias("token_id"))
     if not merges:
         return base
     mrows = local_rows_df(

@@ -123,7 +123,13 @@ def _posting_list_pair_counts(
     # holds at every multi-consumer localCheckpoint in the engine.
     # Without a cut the tokenize + shingle-explode + collect_list
     # subtree runs 3x per query. Lazy checkpoint: the caller's one
-    # action materializes the (shingle, members) rows once.
+    # action materializes the (shingle, members) rows once. "Lazy"
+    # holds only without AQE. Under AQE (the session default) the
+    # checkpoint's physical plan is finalised when this line runs, and
+    # finalising an adaptive plan executes its query stages: the
+    # upstream shuffle stages (and a range-partition sample, if any)
+    # run here, before any action on the result. A materialisation
+    # point costs its jobs where the frame is built.
     grouped = grouped.localCheckpoint(eager=False)
     sizes = (
         grouped.select(F.explode("_ms").alias(id_col))

@@ -140,7 +140,9 @@ def log_upload(
     app.py:89), or, when ``token`` names an append a first attempt
     already completed (a replayed micro-batch), that attempt's id, so
     the retry overwrites its own row instead of logging a second one."""
-    prior = wh.read_token("uploads", token) if token is not None else None
+    prior = (
+        wh.read_token("uploads", token, schemas.UPLOADS) if token is not None else None
+    )
     upload_id = int(prior.select("id").head()[0]) if prior is not None else wh.next_id("uploads")
     wh.append(
         "uploads",
@@ -187,7 +189,11 @@ def fold_customers(
         F.lit(change_ts).alias("change_timestamp"),
         F.lit(upload_id).cast("long").alias("upload_id"),
     )
-    logged = wh.read_token("address_changes", token) if token is not None else None
+    logged = (
+        wh.read_token("address_changes", token, schemas.ADDRESS_CHANGES)
+        if token is not None
+        else None
+    )
     if logged is None:
         wh.append("address_changes", changes, token=token)
     else:

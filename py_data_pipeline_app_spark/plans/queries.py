@@ -35,7 +35,6 @@ from py_data_pipeline_app_spark.functions.scalar import (
     money_round,
 )
 from py_data_pipeline_app_spark.operators.enrich import enrich_transactions
-from py_data_pipeline_app_spark.operators.ranking import global_dense_rank
 from py_data_pipeline_app_spark.operators.parse import parse_customer_blob
 from py_data_pipeline_app_spark.operators.scd import apply_scd_batch
 from py_data_pipeline_app_spark.sources.parquet import load_table
@@ -149,11 +148,10 @@ def customer_spend_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2→P7→W1 (reference app.py:139-142): per-customer total spend,
     half-even rounded, dense-ranked descending.
 
-    Scale notes: the heavy agg happens first, partitioned by customer
-    key with map-side partial aggregation; the rank is then a two-phase
-    global dense rank (operators/ranking.py) — range-partitioned local
-    ranks plus broadcast offsets — so even at 10⁹ customers no task
-    ever sorts the whole relation."""
+    The heavy agg happens first, partitioned by customer key with
+    map-side partial aggregation; the rank is then one
+    ``dense_rank()`` window over the per-customer rows, the oracle's
+    plan as written. Building the frame runs no job."""
     orders = load_table(spark, "orders", sf_dir)
     customer = load_table(spark, "customer", sf_dir)
     totals = (
@@ -161,7 +159,8 @@ def customer_spend_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "c_name")
         .agg(money_sum("o_totalprice").alias("amount"))
     )
-    return global_dense_rank(totals, "amount", "spend_rank")
+    rank = F.dense_rank().over(Window.orderBy(F.col("amount").desc()))
+    return totals.withColumn("spend_rank", rank)
 
 
 def _category_totals_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6564,27 +6563,26 @@ def small_quantity_order_revenue_q(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def customer_spend_deciles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth spend deciles (extension — the ntile-class window op
-    done scale-safely, operators/ranking.py): per-customer order spend,
-    bucketed into 10 equal-depth tiers of the (spend desc, custkey)
-    total order, rolled up per tier — the marketing-segmentation /
-    quality-tiering primitive. The oracle writes the naive
-    ``row_number() OVER (ORDER BY ...)`` + bucket arithmetic; Spark
-    runs the two-phase ``equi_depth_buckets``: range partition on the
-    sort key, per-partition row_number, P-row offset cumsum broadcast
-    back — the ONLY single-partition step is over P summary rows, vs
-    ntile()'s full-relation single-partition sort. Tie-break o_custkey
-    makes the order total, so both engines agree row-for-row."""
-    from py_data_pipeline_app_spark.operators.ranking import equi_depth_buckets
-
+    """Equi-depth spend deciles (extension — the ntile-class window op):
+    per-customer order spend, bucketed into 10 equal-depth tiers of the
+    (spend desc, custkey) total order, rolled up per tier — the
+    marketing-segmentation / quality-tiering primitive. Both engines
+    run the same plan: ``row_number()`` over that order and
+    ``count(*)`` over the whole relation, bucket
+    ``floor((rn - 1) * 10 / n) + 1``. Sizes differ by at most one and
+    the remainder rows spread across tiers (exact ``ntile()``
+    front-loads them). Tie-break o_custkey makes the order total, so
+    both engines agree row-for-row."""
     orders = load_table(spark, "orders", sf_dir)
     spend = orders.groupBy("o_custkey").agg(
         money_sum("o_totalprice").alias("spend")
     )
-    tiered = equi_depth_buckets(
-        spend, [("spend", True), ("o_custkey", False)], k=10, bucket_col="decile"
+    rn = F.row_number().over(
+        Window.orderBy(F.col("spend").desc(), F.col("o_custkey").asc())
     )
-    return tiered.groupBy("decile").agg(
+    n = F.count(F.lit(1)).over(Window.partitionBy())
+    decile = (F.floor((rn - 1) * 10 / n).cast("int") + 1).alias("decile")
+    return spend.select("spend", decile).groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_customers"),
         money_sum("spend").alias("total_spend"),
         F.max("spend").alias("top_spend"),

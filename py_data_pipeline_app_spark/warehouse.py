@@ -138,12 +138,16 @@ class Warehouse:
             fsio.join(self._append_log_dir(name), sub)
         )
 
-    def read_token(self, name: str, token: str) -> DataFrame | None:
-        """The rows a previous ``append(..., token=...)`` wrote, or None
-        if that append never completed (no ``_SUCCESS``)."""
+    def read_token(
+        self, name: str, token: str, schema: T.StructType
+    ) -> DataFrame | None:
+        """The rows a previous ``append(..., token=...)`` wrote, read
+        with ``schema`` as :meth:`read` applies it (building the frame
+        runs no job), or None if that append never completed (no
+        ``_SUCCESS``)."""
         d = fsio.join(self._append_log_dir(name), token)
         if fsio.exists(self.spark, fsio.join(d, "_SUCCESS")):
-            return self.spark.read.parquet(d)
+            return self.spark.read.schema(schema).parquet(d)
         return None
 
     def compact_log(self, name: str, *, keep_newest: bool = True) -> int:

@@ -132,6 +132,21 @@ def test_spend_summary_matches_python_dense_rank_and_builds_without_jobs(spark):
     assert got[-1][:2] == ("C900", "garbage-only") and got[-1][2] is None
 
 
+def test_registry_ranks_build_without_jobs(spark, sf_dir):
+    """``customer_spend_ranking`` and ``customer_spend_deciles`` rank
+    with plain windows, so building either frame runs no job. Each is
+    built once first: ``load_table``'s first read of a table infers
+    its schema with one job."""
+    from py_data_pipeline_app_spark.plans.queries import QUERIES
+
+    for name in ("customer_spend_ranking", "customer_spend_deciles"):
+        QUERIES[name](spark, sf_dir)
+        before = _job_ids(spark)
+        QUERIES[name](spark, sf_dir)
+        built = _job_ids(spark) - before
+        assert not built, f"building {name} ran jobs {sorted(built)}"
+
+
 def test_top_spender_tie_break_first_occurrence(spark):
     """A3: pandas idxmax takes the first occurrence in (customer_id,
     name, category)-sorted order ⇒ ascending customer_id tie-break."""
@@ -184,72 +199,3 @@ def test_excel_serial_codecs(spark):
     assert str(r.d) == "2023-10-28"
     assert str(r.ts) == "2020-03-09 15:46:54"
     assert r.bad is None and r.good == 1.5
-
-
-def test_global_row_number_matches_single_window(spark):
-    """Two-phase global row_number ≡ the naive single-partition
-    row_number() OVER (ORDER BY ...) on a total order."""
-    from pyspark.sql import Window
-
-    from py_data_pipeline_app_spark.operators.ranking import global_row_number
-
-    df = spark.createDataFrame(
-        [(i, float((i * 37) % 19)) for i in range(200)], "id long, v double"
-    )
-    got = {
-        r.id: r.rn
-        for r in global_row_number(
-            df, [("v", True), ("id", False)], num_partitions=7
-        ).collect()
-    }
-    w = Window.orderBy(F.col("v").desc(), F.col("id").asc())
-    exp = {
-        r.id: r.rn
-        for r in df.withColumn("rn", F.row_number().over(w)).collect()
-    }
-    assert got == exp
-
-
-def test_equi_depth_buckets_sizes_and_order(spark):
-    from py_data_pipeline_app_spark.operators.ranking import equi_depth_buckets
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(25)], "id long, v double"
-    )
-    rows = equi_depth_buckets(
-        df, [("v", True), ("id", False)], k=4, num_partitions=5
-    ).collect()
-    sizes = {}
-    for r in rows:
-        sizes[r.bucket] = sizes.get(r.bucket, 0) + 1
-    # 25 rows / 4 buckets: sizes differ by at most one
-    assert sorted(sizes) == [1, 2, 3, 4]
-    assert max(sizes.values()) - min(sizes.values()) <= 1
-    # monotone: higher v -> lower-or-equal bucket index
-    by_v = sorted(rows, key=lambda r: -r.v)
-    buckets = [r.bucket for r in by_v]
-    assert buckets == sorted(buckets)
-
-
-def test_global_row_number_avoids_full_single_partition_sort(spark):
-    """The big relation never passes through Exchange SinglePartition —
-    only the P-row offsets summary does (its window is the one serial
-    step, bounded by shuffle-partitions)."""
-    import contextlib
-    import io
-
-    from py_data_pipeline_app_spark.operators.ranking import global_row_number
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(100)], "id long, v double"
-    )
-    out = global_row_number(df, [("v", True), ("id", False)], num_partitions=8)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    # at most one SinglePartition exchange (the P-row offsets summary);
-    # the data-sized relation enters via the range-partitioned
-    # checkpoint (shown as an ExistingRDD scan), never a global sort
-    assert plan.count("Exchange SinglePartition") <= 1
-    assert "Scan ExistingRDD" in plan

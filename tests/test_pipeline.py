@@ -175,6 +175,23 @@ def test_typed_reads_return_the_schema_and_run_no_job(spark, wh):
     assert wh.next_id("uploads") == 3
 
 
+def test_read_token_is_typed_and_runs_no_job(spark, wh):
+    """``Warehouse.read_token(name, token, schema)`` on a completed
+    token reads with ``schema``, so a replayed ``log_upload`` or
+    ``fold_customers`` builds the frame without a footer-inference
+    job."""
+    row = (7, "f.xlsx", "t7", 3, 2, 1)
+    wh.append("uploads", local_rows_df(spark, schemas.UPLOADS, [row]), token="batch-7")
+
+    before = _job_ids(spark)
+    logged = wh.read_token("uploads", "batch-7", schemas.UPLOADS)
+    built = _job_ids(spark) - before
+    assert not built, f"read_token ran jobs {sorted(built)}"
+
+    assert logged.schema == schemas.UPLOADS
+    assert [tuple(r) for r in logged.collect()] == [row]
+
+
 def test_legacy_dim_without_upload_id_still_folds(spark, wh, sheets, tmp_path):
     """A customers snapshot written before ``upload_id`` existed reads
     back with a NULL ``upload_id`` and still folds: reloading the
@@ -229,8 +246,8 @@ def test_append_token_is_idempotent(spark, wh):
     wh.append("somelog", df)  # tokenless appends always add
     wh.append("somelog", df)
     assert wh.read("somelog").count() == 3
-    assert wh.read_token("somelog", "batch-7").count() == 1
-    assert wh.read_token("somelog", "nope") is None
+    assert wh.read_token("somelog", "batch-7", df.schema).count() == 1
+    assert wh.read_token("somelog", "nope", df.schema) is None
 
 
 def test_vacuum_keeps_reads_identical_and_bounds_versions(spark, wh):
@@ -397,11 +414,11 @@ def test_warehouse_on_explicit_file_uri(spark, tmp_path):
     assert wh.read("dim").collect()[0].v == 2
 
     for i in range(4):
-        wh.append("log", local_rows_df(spark, "k int", [(i,)]),
-                  token=f"batch-{i}")
+        batch = local_rows_df(spark, "k int", [(i,)])
+        wh.append("log", batch, token=f"batch-{i}")
     before = sorted(tuple(r) for r in wh.read("log").collect())
-    assert wh.read_token("log", "batch-2").count() == 1
-    assert wh.read_token("log", "absent") is None
+    assert wh.read_token("log", "batch-2", batch.schema).count() == 1
+    assert wh.read_token("log", "absent", batch.schema) is None
     assert wh.compact_log("log") == 3  # newest kept back
     assert sorted(tuple(r) for r in wh.read("log").collect()) == before
     assert wh.next_id("ids") == 1
