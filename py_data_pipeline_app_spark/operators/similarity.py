@@ -1380,16 +1380,6 @@ def build_semantic_index(
             f"{index_path}/assigned"
         )
 
-    # The per-cluster Bloom id-stats sidecar (the reorder append's
-    # duplicate-id guard) is built LAZILY by :func:`_ensure_id_stats`
-    # on the first reorder that needs it — a monotone-only lifecycle
-    # never pays its count+write jobs (guide §1.2: don't compute what
-    # the workload throws away), and the lazy rebuild costs the same
-    # one id scan the eager build did. A stale sidecar from a previous
-    # index at the same path would only add false maybe-hits, but the
-    # stale entries would accrete forever — clean it here either way.
-    fsio.delete(spark, f"{index_path}/{ID_STATS_SUBDIR}")
-
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
@@ -1402,230 +1392,6 @@ def build_semantic_index(
 
 SEMANTIC_REORDER_TOKENS_SUBDIR = "reorder-tokens"
 SEMANTIC_REORDER_EXCL_SUBDIR = "reorder-exclusions"
-
-ID_STATS_SUBDIR = "id-stats"
-#: 24 bits/key with 14 probes ≈ 1.1e-5 false-positive rate — a few
-#: expected false maybe-hits per million batch ids, each costing one
-#: partition-pruned exact re-check (never a correctness miss: Bloom
-#: filters have no false negatives).
-_BLOOM_BITS_PER_ID = 24
-_BLOOM_HASHES = 14
-
-
-def _bloom_probe_frame(rows: DataFrame, id_col: str, m: int, h: int) -> DataFrame:
-    """``rows`` with h deterministic Bloom positions per input row
-    exploded to (…, _pi, _pos): double hashing pos_i = (h1 + i·h2) mod m
-    over xxhash64 of the STRING form of the id (so int/bigint/string id
-    columns probe identically across writer and reader frames).
-    pmod-first arithmetic keeps every intermediate ≤ h·m ≪ 2⁶³, so the
-    expressions are ANSI-overflow-safe at any index size."""
-    sid = F.col(id_col).cast("string")
-    h1 = F.pmod(F.xxhash64(sid), F.lit(m))
-    h2 = F.pmod(F.xxhash64(sid, F.lit("‖idstats")), F.lit(m))
-    staged = rows.withColumn("_h1", h1).withColumn("_h2", h2)
-    # one parsed expression instead of h per-probe struct builders
-    # (~110 py4j round trips per frame at h=14, built several times
-    # per reorder guard); arithmetic is token-identical
-    probes = F.expr(
-        "explode(array("
-        + ",".join(
-            f"struct({i} AS _pi, pmod(_h1 + {i} * _h2, {m}) AS _pos)"
-            for i in range(h)
-        )
-        + "))"
-    )
-    return (
-        staged.withColumn("_p", probes)
-        .select("*", "_p._pi", "_p._pos")
-        .drop("_h1", "_h2", "_p")
-    )
-
-
-def _parquet_num_rows(spark, path: str) -> int | None:
-    """Total row count of a parquet directory, summed from file FOOTER
-    metadata driver-side (zero Spark jobs) — exact, because parquet
-    footers record the physical row count of every file. Returns None
-    when the path is not on the driver-local filesystem or unreadable,
-    and the caller falls back to a counting job."""
-    from py_data_pipeline_app_spark.fsio import _local_path
-
-    root = _local_path(spark, path)
-    if root is None:
-        return None
-    import os
-
-    import pyarrow.parquet as pq
-
-    try:
-        total = 0
-        for d, _subdirs, files in os.walk(root):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(d, fn)).metadata.num_rows
-        return total
-    except Exception:  # noqa: BLE001 — metadata fast path; job is authoritative
-        return None
-
-
-def _write_id_stats(
-    spark,
-    index_path: str,
-    entry: str,
-    rows: DataFrame,
-    id_col: str,
-    *,
-    covers_tokens: list | None = None,
-    n_rows: int | None = None,
-) -> None:
-    """Build + persist the per-cluster Bloom sidecar for one index
-    entry (``base`` or ``batch-{token}``): a parquet word table
-    (centroid_id, _word_idx, _bits) whose OR-aggregated 64-bit words
-    encode the entry's id set, sized at build time from the entry's
-    own row count (each entry carries its own m — sidecars never
-    saturate as the index grows, they chain). ``_META`` is written
-    LAST: its presence marks the entry complete, so a crashed write
-    reads as missing and :func:`_ensure_id_stats` rebuilds it. The
-    word table is ~``_BLOOM_BITS_PER_ID``/8 bytes per id — two orders
-    of magnitude below the id column it summarizes. ``n_rows`` lets a
-    caller that already knows the entry's exact row count (parquet
-    footer metadata, or a prior aggregation over the same frame) skip
-    the dedicated counting job."""
-    dest = f"{index_path}/{ID_STATS_SUBDIR}/{entry}"
-    fsio.delete(spark, dest)
-    n = rows.count() if n_rows is None else n_rows
-    meta = {"n": int(n), "h": _BLOOM_HASHES, "m": 0, "id_col": id_col}
-    if covers_tokens is not None:
-        meta["covers_tokens"] = sorted(covers_tokens)
-    if n:
-        m = max(((n * _BLOOM_BITS_PER_ID + 63) // 64) * 64, 1024)
-        meta["m"] = int(m)
-        probes = _bloom_probe_frame(
-            rows.select(F.col(id_col), "centroid_id"), id_col, m, _BLOOM_HASHES
-        )
-        words = (
-            probes.select(
-                F.col("centroid_id").cast("int").alias("centroid_id"),
-                F.expr("_pos DIV 64").alias("_word_idx"),
-                F.expr(
-                    "shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, 64) AS INT))"
-                ).alias("_mask"),
-            )
-            .groupBy("centroid_id", "_word_idx")
-            .agg(F.bit_or("_mask").alias("_bits"))
-        )
-        # one file per ~8M source ids: entry word tables are re-read
-        # whole by every guard probe, so small-file overhead dominates
-        # at test scale while a single giant file would serialize the
-        # scan at 100 TB scale
-        words.coalesce(max(1, -(-n // 8_000_000))).write.mode(
-            "overwrite"
-        ).parquet(f"{dest}/words")
-    fsio.write_json(spark, f"{dest}/_META", meta)
-
-
-def _id_stats_maybe_hits_frame(
-    spark, index_path: str, entry: str, batch_ids: DataFrame, id_col: str
-) -> DataFrame | None:
-    """The (id, centroid_id) maybe-hit frame for ONE sidecar entry —
-    the pairs the entry's Bloom CANNOT rule out, i.e. the clusters an
-    exact duplicate-id re-check must scan. One broadcast join of the
-    (batch × h)-row probe frame against the entry's word table; the
-    result is ≈ batch × FPR + any true duplicates, i.e. tiny unless
-    the feed really is a duplicate. Returns None for an empty entry.
-    LAZY — the guard unions every entry's frame and collects ONCE
-    (probing k entries used to cost k scheduler round trips)."""
-    dest = f"{index_path}/{ID_STATS_SUBDIR}/{entry}"
-    meta = fsio.read_json(spark, f"{dest}/_META")
-    if not meta["n"]:
-        return None
-    probes = _bloom_probe_frame(batch_ids, id_col, meta["m"], meta["h"]).select(
-        F.col(id_col),
-        "_pi",
-        F.expr("_pos DIV 64").alias("_word_idx"),
-        F.expr(
-            "shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, 64) AS INT))"
-        ).alias("_mask"),
-    )
-    words = spark.read.parquet(f"{dest}/words")
-    return (
-        F.broadcast(probes)
-        .join(words, "_word_idx")
-        .filter(F.col("_bits").bitwiseAND(F.col("_mask")) != 0)
-        .groupBy(F.col(id_col), "centroid_id")
-        .agg(F.count_distinct("_pi").alias("_nhit"))
-        .filter(F.col("_nhit") == meta["h"])
-        .select(F.col(id_col), F.col("centroid_id").cast("int").alias("centroid_id"))
-    )
-
-
-def _ensure_id_stats(spark, index_path: str, id_col: str) -> list:
-    """Make Bloom coverage complete for the CURRENT index state and
-    return the entry names to probe. Coverage invariant: every id in
-    base ∪ appends appears in at least one entry — ``base`` covers the
-    assigned table as of its build (including the consumed reorder
-    tokens listed in its ``covers_tokens``), each pending append
-    directory has its own entry, and each later-consumed reorder token
-    keeps the entry written at its commit. A missing append entry is
-    rebuilt from its directory (batch-sized); a missing base or
-    reorder-token entry forces ONE full id scan to rebuild ``base``
-    (the legacy-index migration path — every later guard is bounded).
-    Callers hold the index lock."""
-    stats_root = f"{index_path}/{ID_STATS_SUBDIR}"
-    tokens_dir = f"{index_path}/{SEMANTIC_REORDER_TOKENS_SUBDIR}"
-    tokens = set()
-    if fsio.exists(spark, tokens_dir):
-        tokens = {
-            name
-            for name, is_dir in fsio.child_entries(spark, tokens_dir)
-            if not is_dir
-        }
-    covered: set = set()
-    rebuild_base = not fsio.exists(spark, f"{stats_root}/base/_META")
-    if not rebuild_base:
-        covered = set(
-            fsio.read_json(spark, f"{stats_root}/base/_META").get(
-                "covers_tokens", []
-            )
-        )
-        if any(
-            not fsio.exists(spark, f"{stats_root}/batch-{t}/_META")
-            for t in tokens - covered
-        ):
-            rebuild_base = True
-    if rebuild_base:
-        # footer row count instead of a dedicated count job (exact —
-        # the sidecar covers the entry's physical rows)
-        _write_id_stats(
-            spark,
-            index_path,
-            "base",
-            spark.read.parquet(f"{index_path}/assigned").select(
-                F.col(id_col), "centroid_id"
-            ),
-            id_col,
-            covers_tokens=sorted(tokens),
-            n_rows=_parquet_num_rows(spark, f"{index_path}/assigned"),
-        )
-        covered = tokens
-    entries = ["base"] + [f"batch-{t}" for t in sorted(tokens - covered)]
-    appends_dir = f"{index_path}/{IVF_APPENDS_SUBDIR}"
-    if fsio.exists(spark, appends_dir):
-        for name, is_dir in sorted(fsio.child_entries(spark, appends_dir)):
-            if not (is_dir and name.startswith("batch-")):
-                continue
-            if not fsio.exists(spark, f"{stats_root}/{name}/_META"):
-                _write_id_stats(
-                    spark,
-                    index_path,
-                    name,
-                    spark.read.parquet(f"{appends_dir}/{name}").select(
-                        F.col(id_col), "centroid_id"
-                    ),
-                    id_col,
-                    n_rows=_parquet_num_rows(spark, f"{appends_dir}/{name}"),
-                )
-            entries.append(name)
-    return entries
 
 
 def _load_reorder_exclusions(spark, index_path: str) -> dict:
@@ -1720,7 +1486,6 @@ def _semantic_reorder_append_locked(
     id_col: str,
     vec_col: str,
     token: str,
-    n_batch: int | None = None,
 ) -> None:
     """Recompute-mode append (already under the lock): re-verdict ONLY
     the batch's clusters under the full rebuild rule — merged
@@ -1732,8 +1497,8 @@ def _semantic_reorder_append_locked(
     :func:`_apply_reorder_stage` writes per-append exclusion markers
     (consumed by :func:`_union_appends` and the next compaction) so
     their re-homed rows are never double-counted. Cost is therefore
-    ∝ batch + affected clusters regardless of how many appends are
-    pending — never a full base rewrite.
+    ∝ batch + affected clusters, plus one id-column scan of the index
+    for the duplicate-id guard — never a full base rewrite.
 
     One caveat a multi-producer feed inherits from compaction itself:
     a superseded append that is REPLAYED afterwards (its producer
@@ -1748,77 +1513,29 @@ def _semantic_reorder_append_locked(
     # duplicate-id guard over the FULL index state — not just the
     # probed clusters: a re-embedded doc whose vector moved clusters
     # would otherwise land a second copy of its id in a new cluster
-    # and silently break the rebuild-parity contract. Consults the
-    # per-cluster Bloom sidecars (:func:`_ensure_id_stats`) instead of
-    # scanning every id: sidecar mass is ~_BLOOM_BITS_PER_ID/8 bytes
-    # per id and the exact re-check runs only on Bloom maybe-hits,
-    # partition-pruned to their clusters — so the guard costs
-    # ∝ batch + sidecar probes, never a full id-column scan per
-    # backfill micro-batch (the round-11 regression).
-    entries = _ensure_id_stats(spark, index_path, id_col)
-    batch_ids = assigned.select(F.col(id_col))
-    # every entry's maybe-hit frame unioned into ONE collect — one
-    # scheduler round trip for the whole guard instead of one per
-    # sidecar entry (base + each pending append)
-    probe_frames = [
-        f
-        for f in (
-            _id_stats_maybe_hits_frame(spark, index_path, e, batch_ids, id_col)
-            for e in entries
-        )
-        if f is not None
-    ]
-    maybe: list = []
-    if probe_frames:
-        union = probe_frames[0]
-        for f in probe_frames[1:]:
-            union = union.unionByName(f)
-        maybe = [(r[0], int(r[1])) for r in union.collect()]
-    if maybe:
-        cand = sorted({c for _, c in maybe})
-        suspects = spark.read.parquet(f"{index_path}/assigned").filter(
-            F.col("centroid_id").isin(cand)
-        )
-        suspects = _union_appends(spark, suspects, appends_dir, cand)
-        suspects = _apply_tombstones(spark, suspects, index_path, id_col=id_col)
-        dup = (
-            suspects.select(F.col(id_col))
-            .join(F.broadcast(batch_ids), id_col)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"semantic index at {index_path}: batch id {dup[0][0]} already "
-                "exists in the index - appending an existing id is unsupported "
-                "(replays of a consumed reorder token are skipped via its "
-                "token marker, so this is a genuinely duplicate feed)."
-            )
-    # the batch's own sidecar entry, BEFORE the stage commit: from the
-    # moment the swap makes these rows part of the base, the next
-    # guard's coverage must already include them (a crash in between
-    # leaves an extra entry — false maybes only, never a miss). It
-    # only needs the checkpointed assignment, so it runs CONCURRENTLY
-    # with the staged rewrite below (guide §2.6) — both complete (the
-    # future is joined) before _apply_reorder_stage commits anything.
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    sidecar_fut = pool.submit(
-        _write_id_stats,
-        spark,
-        index_path,
-        f"batch-{token}",
-        assigned.select(F.col(id_col), "centroid_id"),
-        id_col,
-        # the caller's batch-stats aggregation already counted the
-        # batch — no dedicated Bloom-sizing count job
-        n_rows=n_batch,
+    # and silently break the rebuild-parity contract. Column-pruned id
+    # scan on the big side, batch-sized broadcast on the probe side.
+    # One read of the base serves the guard and the history below: each
+    # untyped parquet read runs its own footer-inference job.
+    base = spark.read.parquet(f"{index_path}/assigned")
+    all_ids = _union_appends(spark, base, appends_dir, None)
+    all_ids = _apply_tombstones(spark, all_ids, index_path, id_col=id_col)
+    dup = (
+        all_ids.select(F.col(id_col))
+        .join(F.broadcast(assigned.select(F.col(id_col))), id_col)
+        .limit(1)
+        .collect()
     )
-    base = spark.read.parquet(f"{index_path}/assigned").filter(
-        F.col("centroid_id").isin(probed)
+    if dup:
+        raise ValueError(
+            f"semantic index at {index_path}: batch id {dup[0][0]} already "
+            "exists in the index - appending an existing id is unsupported "
+            "(replays of a consumed reorder token are skipped via its "
+            "token marker, so this is a genuinely duplicate feed)."
+        )
+    hist = _union_appends(
+        spark, base.filter(F.col("centroid_id").isin(probed)), appends_dir, probed
     )
-    hist = _union_appends(spark, base, appends_dir, probed)
     hist = _apply_tombstones(spark, hist, index_path, id_col=id_col)
     merged = hist.select(
         F.col(id_col), F.col(vec_col), F.col("centroid_id")
@@ -1841,13 +1558,7 @@ def _semantic_reorder_append_locked(
     ]
     stage_name = f".reorder-stage-{token}"
     stage = f"{index_path}/{stage_name}"
-    try:
-        kept.write.partitionBy("centroid_id").mode("overwrite").parquet(stage)
-    except BaseException:
-        pool.shutdown(wait=True)  # drain; a stray sidecar is false-maybes only
-        raise
-    sidecar_fut.result()  # sidecar must exist before the commit below
-    pool.shutdown()
+    kept.write.partitionBy("centroid_id").mode("overwrite").parquet(stage)
     # manifest LAST: its presence marks the stage complete (recovery
     # deletes manifest-less stages as invisible orphans)
     fsio.write_json(
@@ -1987,9 +1698,8 @@ def semantic_index_append(
     superseded-cluster exclusion markers (consumed by
     :func:`_union_appends` and the next compaction) keep their
     re-homed rows from being double-counted, so reorder cost is
-    ∝ batch + affected clusters even with appends pending. The
-    duplicate-id guard consults the per-cluster Bloom id-stats
-    sidecar (:func:`_ensure_id_stats`) rather than scanning every id.
+    ∝ batch + affected clusters even with appends pending, plus one
+    id-column scan of the index for the duplicate-id guard.
     History verdicts in affected clusters CAN flip in this mode —
     that is the point; the parity contract below still holds exactly.
     Monotone batches take the ordinary fast path unchanged.
@@ -2058,21 +1768,15 @@ def semantic_index_append(
             vec_col=vec_col,
         )
         assigned = assigned.localCheckpoint(eager=False)
-        # ONE job yields the probed-cluster list, each cluster's
-        # batch-min id, AND the batch size (the probed-collect, the
-        # guard's batch side, and the reorder sidecar's Bloom-sizing
-        # count used to be three jobs over the same frame)
+        # ONE job yields the probed-cluster list AND each cluster's
+        # batch-min id (the guard's batch side)
         batch_stats = (
             assigned.groupBy("centroid_id")
-            .agg(
-                F.min(id_col).alias("_bmin"),
-                F.count(F.lit(1)).alias("_bn"),
-            )
+            .agg(F.min(id_col).alias("_bmin"))
             .collect()
         )
         probed = [r.centroid_id for r in batch_stats]
         bmins = {r.centroid_id: r["_bmin"] for r in batch_stats}
-        n_batch = sum(int(r["_bn"]) for r in batch_stats)
         base = spark.read.parquet(f"{index_path}/assigned").filter(
             F.col("centroid_id").isin(probed)
         )
@@ -2157,7 +1861,6 @@ def semantic_index_append(
                     id_col=id_col,
                     vec_col=vec_col,
                     token=token,
-                    n_batch=n_batch,
                 )
                 return token
             v = viol[0]
@@ -2175,11 +1878,6 @@ def semantic_index_append(
         _write_append_batch(
             spark, kept, f"{index_path}/{IVF_APPENDS_SUBDIR}/batch-{token}"
         )
-        # no sidecar write here: monotone appends are the hot path and
-        # a Bloom entry would tax every one of them; the reorder
-        # guard's :func:`_ensure_id_stats` builds any missing append
-        # entry lazily (batch-sized, once, persisted) when — and only
-        # when — a reorder actually needs to probe it.
         return token
 
 
@@ -2557,61 +2255,7 @@ def _compact_assigned_locked(
         fsio.delete(spark, excl_path)
         if del_names:
             fsio.delete(spark, dels_path)
-    _refresh_id_stats_after_compaction(spark, index_path)
     return len(names) + len(del_names)
-
-
-def _refresh_id_stats_after_compaction(spark, index_path: str) -> None:
-    """Garbage-collect the Bloom id-stats sidecar after a compaction
-    rewrote the base: rebuild ``base`` from the post-compaction
-    assigned table (one id scan — marginal next to the full-base
-    rewrite that just happened, and it's what consumes tombstoned ids
-    out of the Bloom), THEN drop entries whose append directory was
-    merged away and token entries the new base now covers. Order
-    matters for crash-safety: until the new base entry lands, the old
-    entries keep coverage complete (stale sidecars over-approximate —
-    false maybes, never misses), so a crash anywhere here degrades the
-    guard's cost, not its correctness. Indexes without a sidecar (IVF,
-    pre-sidecar semantic indexes) skip in one existence check."""
-    stats_root = f"{index_path}/{ID_STATS_SUBDIR}"
-    base_meta = f"{stats_root}/base/_META"
-    if not fsio.exists(spark, base_meta):
-        return
-    id_col = fsio.read_json(spark, base_meta).get("id_col")
-    if not id_col:
-        fsio.delete(spark, stats_root)
-        return
-    tokens_dir = f"{index_path}/{SEMANTIC_REORDER_TOKENS_SUBDIR}"
-    tokens = (
-        sorted(
-            name
-            for name, is_dir in fsio.child_entries(spark, tokens_dir)
-            if not is_dir
-        )
-        if fsio.exists(spark, tokens_dir)
-        else []
-    )
-    _write_id_stats(
-        spark,
-        index_path,
-        "base",
-        spark.read.parquet(f"{index_path}/assigned").select(
-            F.col(id_col), "centroid_id"
-        ),
-        id_col,
-        covers_tokens=tokens,
-    )
-    appends_dir = f"{index_path}/{IVF_APPENDS_SUBDIR}"
-    keep = {"base"}
-    if fsio.exists(spark, appends_dir):
-        keep.update(
-            name
-            for name, is_dir in fsio.child_entries(spark, appends_dir)
-            if is_dir and name.startswith("batch-")
-        )
-    for name, is_dir in fsio.child_entries(spark, stats_root):
-        if is_dir and name not in keep:
-            fsio.delete(spark, f"{stats_root}/{name}")
 
 
 def ivf_topk_indexed(

@@ -37,16 +37,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from py_data_pipeline_app_spark import fsio
-
 from py_data_pipeline_app_spark.operators.dedup_incremental import (
     PART_COL,
     _acquire_index_lock,
     _append_batch,
-    _batch_names,
     _batch_part_values,
     _check_or_write_config,
     _pinned_history,
+    compact_index,
     part_bucket_col,
 )
 
@@ -196,62 +194,17 @@ def incremental_span_fold(
         )
 
 
-def compact_fps(spark: SparkSession, index_path: str, *, keep_newest: bool = False) -> int:
-    """Merge the ``fps/batch-*`` subdirectories into one
-    ``batch-compact-{token}`` directory of distinct fingerprints. Each
-    fold adds one subdirectory the next fold's history read must list;
-    a long-lived stream accretes one per micro-batch — compaction
-    bounds that driver-side listing cost. ``keep_newest=True`` leaves
-    the most recently WRITTEN batch untouched so the one micro-batch
-    Structured Streaming could replay keeps overwriting its own append
-    (the contract shared with the LSH/IVF compactors). Newest is by
-    modification time, NOT name: a prior ``batch-compact-*`` directory
-    sorts lexically after zero-padded numeric tokens, and protecting
-    it instead of the real newest batch would hand a crash-replayed
-    fold its own first-attempt fingerprints as history — every chunk
-    of the replay would look seen and the rebuild would come back
-    empty. Serialized with folds by the same lock. Returns the number
-    of directories merged."""
-    with _acquire_index_lock(spark, index_path, "fps compaction"):
-        root = f"{index_path}/{FPS_SUBDIR}"
-        names = _batch_names(spark, root)
-        if keep_newest and names:
-            newest = max(
-                names, key=lambda n: (fsio.mtime_ms(spark, f"{root}/{n}"), n)
-            )
-            names = [n for n in names if n != newest]
-        dirs = [f"{root}/{n}" for n in names]
-        if len(dirs) < 2:
-            return 0
-        token = f"compact-{uuid.uuid4().hex[:12]}"
-        # per-directory reads, unioned: the partitioned fp table nests
-        # files under pb=* (multi-path reads refuse that layout), and a
-        # zero-row append (_SUCCESS only) has no schema to infer — it
-        # contributes nothing and its directory is deleted with the rest
-        merged = None
-        for d in dirs:
-            if not fsio.any_file_with_suffix(spark, d, ".parquet"):
-                continue
-            part = spark.read.parquet(d)
-            merged = part if merged is None else merged.unionByName(part)
-        if merged is None:
-            for d in dirs:
-                fsio.delete(spark, d)
-            return len(dirs)
-        merged = merged.distinct()
-        # staged-invisible write: _staging-* does not match the reader's
-        # batch-* listing filter, so the merged copy becomes visible only
-        # through the atomic rename — the duplicate-history crash window
-        # shrinks to [rename, last source delete], and the fold's
-        # history distinct makes even that window semantically harmless
-        staging = f"{root}/_staging-{token}"
-        writer = merged.write.mode("overwrite")
-        if PART_COL in merged.columns:
-            writer = merged.repartition(PART_COL).write.mode(
-                "overwrite"
-            ).partitionBy(PART_COL)
-        writer.parquet(staging)
-        fsio.rename(spark, staging, f"{root}/batch-{token}")
-        for d in dirs:
-            fsio.delete(spark, d)
-        return len(dirs)
+def compact_fps(
+    spark: SparkSession, index_path: str, *, keep_newest: bool = True
+) -> int:
+    """Merge the ``fps/batch-*`` subdirectories into one consolidated
+    batch of distinct fingerprints —
+    :func:`~py_data_pipeline_app_spark.operators.dedup_incremental.compact_index`
+    on this index's layout, inheriting the shared lock, keep-newest
+    (by write time) replay protection and convergence-not-atomicity
+    crash model unchanged. A crash that leaves fingerprints twice in
+    history is harmless: the fold runs ``distinct`` over its history.
+    Returns the number of directories merged."""
+    return compact_index(
+        spark, index_path, keep_newest=keep_newest, tables=((FPS_SUBDIR, None),)
+    )

@@ -1389,11 +1389,12 @@ def semantic_dedup_reordered_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     over three quarters of the planted corpus, then every fourth id —
     including the GLOBAL MINIMUM, so the batch interleaves strictly
     below history ids and the monotone guard trips — arrives as one
-    out-of-order batch. Instead of refusing, the append folds pending
-    appends into the base, re-verdicts ONLY the batch's clusters under
-    the full rebuild rule (partition-pruned read, staged per-cluster
-    directory swap, consumed-token idempotence), and leaves untouched
-    clusters unread and unrewritten. History verdicts in affected
+    out-of-order batch. Instead of refusing, the append re-verdicts
+    ONLY the batch's clusters under the full rebuild rule (partition-
+    pruned read, staged per-cluster directory swap, consumed-token
+    idempotence) and leaves untouched clusters unrewritten; pending
+    appends stay in place, with exclusion markers for the clusters
+    whose rows moved into the base. History verdicts in affected
     clusters can flip — exactly what the monotone fast path
     (semantic_dedup_incremental, its oracle-backed twin) forbids. The
     oracle is the full semantic_dedup rebuild over the merged corpus

@@ -188,43 +188,6 @@ def test_simhash_vote_and_pack_parity(spark):
     _assert_frame_parity(parsed, composed)
 
 
-def test_bloom_probe_frame_parity(spark):
-    """similarity._bloom_probe_frame's one-expression probe explode vs
-    the h per-probe struct builders it replaced (double hashing over
-    xxhash64 of the stringified id)."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        _bloom_probe_frame,
-    )
-
-    m, h = 1024, 14
-    ids = local_rows_df(spark, "vec_id long", [(1,), (2,), (999999,)])
-    parsed = _bloom_probe_frame(ids, "vec_id", m, h)
-
-    sid = F.col("vec_id").cast("string")
-    h1 = F.pmod(F.xxhash64(sid), F.lit(m))
-    h2 = F.pmod(F.xxhash64(sid, F.lit("‖idstats")), F.lit(m))
-    staged = ids.withColumn("_h1", h1).withColumn("_h2", h2)
-    probes = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("_pi"),
-                    F.pmod(
-                        F.col("_h1") + F.lit(i) * F.col("_h2"), F.lit(m)
-                    ).alias("_pos"),
-                )
-                for i in range(h)
-            ]
-        )
-    )
-    composed = (
-        staged.withColumn("_p", probes)
-        .select("*", "_p._pi", "_p._pos")
-        .drop("_h1", "_h2", "_p")
-    )
-    _assert_frame_parity(parsed, composed)
-
-
 @pytest.fixture()
 def mixed(spark):
     import datetime as dt

@@ -662,21 +662,14 @@ def test_reader_refuses_mid_commit_stage_under_live_lock(spark, emb, tmp_path):
         fsio.delete(spark, stage)
 
 
-# ---------------------------------------------------------------------------
-# Round 12: the Bloom id-stats sidecar that bounds the reorder append's
-# duplicate-id guard (round-11 verdict: the full-index id scan per backfill
-# batch was the one remaining O(index) action on the reorder path).
-# ---------------------------------------------------------------------------
-
-
-def test_duplicate_id_guard_fires_through_sidecar(spark, emb, tmp_path):
+def test_duplicate_id_guard_refuses_reembedded_id(spark, emb, tmp_path):
     """A batch containing an id already in the index — with a DIFFERENT
     vector, the re-embedded-doc case that can land in another cluster —
-    must still be refused loudly: the Bloom maybe-hit routes into the
-    exact partition-pruned re-check, never a silent second copy."""
+    must be refused loudly by the reorder append's full-index id check,
+    never committed as a silent second copy."""
     from py_data_pipeline_app_spark import fsio
 
-    idx = _fresh(tmp_path, "sidecar-dup")
+    idx = _fresh(tmp_path, "guard-dup")
     base = emb.filter(F.col("vec_id") % 4 != 0)
     build_semantic_index(base, idx, threshold=THRESH, n_centroids=K)
     # id 1 exists in base; flip its vector so it may assign elsewhere
@@ -697,77 +690,10 @@ def test_duplicate_id_guard_fires_through_sidecar(spark, emb, tmp_path):
     assert not fsio.exists(spark, f"{idx}/reorder-tokens/dupfeed")
 
 
-def test_reorder_guard_never_scans_full_index(spark, emb, tmp_path, monkeypatch):
-    """The scale pin for the bounded guard: during a clean (no-dup)
-    reorder append, every `_union_appends` call must carry a probed
-    cluster list — the round-11 guard's probed=None full-state union
-    is gone — and the sidecar entries exist before and after."""
-    import py_data_pipeline_app_spark.operators.similarity as sim
-    from py_data_pipeline_app_spark import fsio
-
-    idx = _fresh(tmp_path, "sidecar-bounded")
-    base = emb.filter(F.col("vec_id") % 4 != 0)
-    batch = emb.filter(F.col("vec_id") % 4 == 0)
-    build_semantic_index(base, idx, threshold=THRESH, n_centroids=K)
-    # the sidecar is LAZY: a build never pays its count+write jobs
-    # (monotone-only lifecycles never need it); the first reorder's
-    # _ensure_id_stats materializes the base entry below
-    assert not fsio.exists(spark, f"{idx}/id-stats/base/_META")
-
-    calls = []
-    real = sim._union_appends
-
-    def spy(spark_, base_, appends_dir, probed, **kw):
-        calls.append(probed)
-        return real(spark_, base_, appends_dir, probed, **kw)
-
-    monkeypatch.setattr(sim, "_union_appends", spy)
-    semantic_index_append(
-        spark, idx, batch, batch_token="backfill", allow_reorder=True
-    )
-    assert calls, "reorder path should read history through _union_appends"
-    assert all(p is not None for p in calls), (
-        "guard ran a probed=None full-index union scan"
-    )
-    # the committed batch left its own sidecar entry for later guards
-    assert fsio.exists(spark, f"{idx}/id-stats/batch-backfill/_META")
-    assert _state_rows(spark, idx) == _rebuild_rows(emb, base)
-
-
-def test_sidecar_lazy_migration_from_legacy_index(spark, emb, tmp_path):
-    """An index without id-stats (pre-round-12, or manually scrubbed)
-    self-heals: the first reorder's _ensure_id_stats rebuilds the base
-    entry — and a monotone append's directory gets its entry built
-    lazily at guard time, not at append time (the hot path stays
-    untaxed)."""
-    from py_data_pipeline_app_spark import fsio
-
-    idx = _fresh(tmp_path, "sidecar-migrate")
-    n = emb.count()
-    mid = emb.filter((F.col("vec_id") >= n // 4) & (F.col("vec_id") < n // 2))
-    high = emb.filter(F.col("vec_id") >= n // 2)
-    low = emb.filter(F.col("vec_id") < n // 4)
-    build_semantic_index(mid, idx, threshold=THRESH, n_centroids=K)
-    semantic_index_append(spark, idx, high, batch_token="tail")
-    # monotone appends do not write sidecar entries
-    assert not fsio.exists(spark, f"{idx}/id-stats/batch-tail/_META")
-    fsio.delete(spark, f"{idx}/id-stats")  # legacy index
-    semantic_index_append(
-        spark, idx, low, batch_token="backfill", allow_reorder=True
-    )
-    assert fsio.exists(spark, f"{idx}/id-stats/base/_META")
-    assert fsio.exists(spark, f"{idx}/id-stats/batch-tail/_META")
-    assert _state_rows(spark, idx) == _rebuild_rows(emb, mid)
-
-
-def test_compaction_refreshes_sidecar(spark, emb, tmp_path):
-    """A full compaction garbage-collects the sidecar down to one base
-    entry rebuilt from the post-compaction assigned table — and the
-    guard still catches duplicates afterwards (the rebuilt Bloom covers
-    the merged rows)."""
-    from py_data_pipeline_app_spark import fsio
-
-    idx = _fresh(tmp_path, "sidecar-compact")
+def test_duplicate_guard_after_compaction(spark, emb, tmp_path):
+    """After a full compaction merged an append and a reorder into the
+    base, the guard still catches ids that arrived by either route."""
+    idx = _fresh(tmp_path, "guard-compact")
     n = emb.count()
     mid = emb.filter((F.col("vec_id") >= n // 4) & (F.col("vec_id") < n // 2))
     high = emb.filter(F.col("vec_id") >= n // 2)
@@ -778,13 +704,6 @@ def test_compaction_refreshes_sidecar(spark, emb, tmp_path):
         spark, idx, low, batch_token="backfill", allow_reorder=True
     )
     semantic_index_compact(spark, idx)
-    entries = sorted(
-        name
-        for name, is_dir in fsio.child_entries(spark, f"{idx}/id-stats")
-        if is_dir
-    )
-    assert entries == ["base"]
-    # rebuilt Bloom must cover rows that arrived via append AND reorder
     dup = emb.filter(F.col("vec_id").isin(0, int(n) - 1, int(n) // 4))
     with pytest.raises(ValueError, match="already exists"):
         semantic_index_append(
@@ -793,15 +712,12 @@ def test_compaction_refreshes_sidecar(spark, emb, tmp_path):
 
 
 def test_monotone_append_job_count_pinned(spark, emb, tmp_path):
-    """Round-12 verdict task: the r11 bench showed the monotone
-    lifecycle at +69% with no claimed plan change (isolated re-runs
-    landed back at the r10 band — session context noise), but the
-    episode showed the append path has no guard against silent action
-    creep. Pin the job count of one monotone semantic append
-    (checkpoint, probed collect, monotone-violation collect, verdict
-    write + schema/AQE probes = 19 measured): a new per-append
-    O(index) action — the shape of the r11 full-index dup guard —
-    shows up here as extra jobs before it shows up in a bench row."""
+    """Pin the job count of one monotone semantic append: the
+    checkpointed assignment, the probed-cluster collect (the footer
+    prescreen proves monotonicity driver-side) and the verdict write
+    with its AQE stage jobs, 12 measured. A new per-append O(index)
+    action shows up here as extra jobs before it shows up in a bench
+    row."""
     idx = _fresh(tmp_path, "jobpin")
     n = emb.count()
     base = emb.filter(F.col("vec_id") < n // 2)
@@ -811,7 +727,7 @@ def test_monotone_append_job_count_pinned(spark, emb, tmp_path):
     before = len(tracker.getJobIdsForGroup(None) or [])
     semantic_index_append(spark, idx, batch, batch_token="pin")
     after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after - before <= 20, f"monotone append ran {after - before} jobs"
+    assert after - before <= 12, f"monotone append ran {after - before} jobs"
 
 
 def test_append_mode_drift_refused(spark, emb, tmp_path):
