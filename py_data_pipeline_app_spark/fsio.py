@@ -202,10 +202,6 @@ def child_entries(spark, path: str) -> list[tuple[str, bool]]:
     )
 
 
-def child_names(spark, path: str) -> list[str]:
-    return [n for n, _ in child_entries(spark, path)]
-
-
 def mtime_ms(spark, path: str) -> int:
     lp = _local_path(spark, path)
     if lp is not None:
@@ -291,7 +287,7 @@ def read_json(spark, path: str):
 
 def read_small_parquet_rows(spark, path: str) -> list:
     """Collect a TINY flat parquet table (index metadata: ``config``,
-    ``centroids``, ``codebooks``, ``rotation`` — KB-sized, bounded row
+    ``centroids``, ``codebooks`` — KB-sized, bounded row
     counts by construction) WITHOUT scheduling a Spark job.
 
     Every lifecycle operator (append, probe, state read) re-reads a

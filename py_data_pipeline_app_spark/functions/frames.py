@@ -1,7 +1,7 @@
 """Driver-known DataFrames without Python-worker tasks.
 
 Every table the driver already holds — workbook sheets, config
-manifests, label and anchor frames, trained centroids and codebooks,
+manifests, label and anchor frames, sampled centroids and codebooks,
 test fixtures — enters Spark through :func:`local_rows_df`, and
 ``spark.createDataFrame`` appears nowhere else in the package.
 
@@ -17,9 +17,8 @@ builder serves a one-row manifest and a 600×64 fixture.
 Why one partition: a bare Arrow ``LocalTableScan`` is sliced into
 min(rows, defaultParallelism) partitions. The builder coalesces it to
 one, so the executed plan is ``Coalesce 1 +- LocalTableScan``: a
-manifest, centroid or codebook write lands in one file, k-means init
-sees the same one-partition input on every host, and a global
-aggregate over the frame needs no ``Exchange SinglePartition``. Large
+manifest, centroid or codebook write lands in one file, and a
+global aggregate over the frame needs no ``Exchange SinglePartition``. Large
 tables belong in parquet.
 """
 

@@ -65,11 +65,6 @@ def token_hash(col: Column | str) -> Column:
     return md5_long(col) % HASH_PRIME
 
 
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One affine permutation h -> (a*h + b) mod p of a token hash."""
-    return (h * F.lit(a) + F.lit(b)) % F.lit(HASH_PRIME)
-
-
 def perm_coeffs(n_perms: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) coefficients for ``n_perms`` minhash
     permutations — Weyl-sequence constants, identical in the SQL oracle
@@ -163,33 +158,6 @@ def _qident(c: str) -> str:
     return "`" + c.replace("`", "``") + "`"
 
 
-def normalize_text_sql(src: str) -> str:
-    """Parsed-expression SOURCE TEXT of :func:`normalize_text` over the
-    expression source ``src`` (same casts/patterns, token for token —
-    pinned by the renderer parity suite)."""
-    return f"trim(regexp_replace(lower({src}), '[^a-z0-9]+', ' '))"
-
-
-def doc_fingerprint(col: str, gram: int = 16) -> dict[str, Column]:
-    """Document fingerprints: whole-text md5 plus min/max rolling-hash
-    over character ``gram``-grams (winnowing-style selection of extreme
-    shingle hashes — order-independent, robust to small edits at the
-    ends).
-
-    NB: each dict value is an independent expression tree, and
-    whole-stage codegen does NOT common-subexpression the ~|doc| md5
-    calls between min and max (measured 5.5× slower at sf0.1). In a
-    query, prefer :func:`with_doc_fingerprints`, which materializes the
-    gram-hash array once per row."""
-    norm = normalize_text_sql(_qident(col))
-    gram_hashes = _gram_hashes(norm, gram)
-    return {
-        "md5_fingerprint": F.expr(f"md5({norm})"),
-        "min_gram_hash": F.array_min(gram_hashes),
-        "max_gram_hash": F.array_max(gram_hashes),
-    }
-
-
 def _gram_hashes(src: str, gram: int) -> Column:
     """The ~|doc| character-gram rolling-hash array as ONE parsed
     expression over the normalized string's source text ``src`` (the
@@ -207,8 +175,15 @@ def with_doc_fingerprints(
     df, col: Column | str = "text", gram: int = 16
 ):
     """Add ``md5_fingerprint`` / ``min_gram_hash`` / ``max_gram_hash``
-    columns, computing the per-row gram-hash array exactly once via
-    intermediate columns (the fast shape — see :func:`doc_fingerprint`)."""
+    columns: whole-text md5 of the normalized text plus min/max
+    rolling-hash over character ``gram``-grams (winnowing-style
+    selection of extreme shingle hashes — order-independent, robust to
+    small edits at the ends).
+
+    The per-row gram-hash array is computed exactly once via
+    intermediate columns: whole-stage codegen does NOT
+    common-subexpression the ~|doc| md5 calls between the min and the
+    max, so the inlined form measured 5.5× slower at sf0.1."""
     from py_data_pipeline_app_spark.partitioning import fan_out
 
     c = F.col(col) if isinstance(col, str) else col
@@ -287,8 +262,8 @@ def winnowing_fingerprints(
     cluster anywhere) and locally stable: an edit only perturbs the
     fingerprints of windows it touches, so two documents sharing a
     sufficiently long passage MUST share a fingerprint — the property
-    plagiarism/overlap detection needs and :func:`doc_fingerprint`'s
-    global min/max extremes do not give.
+    plagiarism/overlap detection needs and the global min/max extremes
+    of :func:`with_doc_fingerprints` do not give.
 
     Wholly per-row — normalize, gram-hash, and window-min are native
     array expressions; the operator adds ZERO shuffles (callers
@@ -308,9 +283,9 @@ def winnowing_fingerprints(
     projection column (expressions referenced twice are not inlined
     by CollapseProject, so each level computes once — inlining the
     gram-hash array into the window lambdas would re-evaluate its
-    ~|doc| md5 calls per window, measured >50× slower, the
-    :func:`doc_fingerprint` pitfall), and levels only ever index
-    within bounds so the expressions are ANSI-safe.
+    ~|doc| md5 calls per window, measured >50× slower, the pitfall
+    :func:`with_doc_fingerprints` stages around), and levels only ever
+    index within bounds so the expressions are ANSI-safe.
 
     Returns exploded distinct (id, fp) rows, fp a 60-bit md5-derived
     integer (cross-engine reproducible, same construction as

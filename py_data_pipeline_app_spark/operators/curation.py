@@ -1201,165 +1201,6 @@ def bpe_train(
     return merges
 
 
-def _py_bpe_sequences(texts, level: str):
-    """The pure-Python twin of :func:`_bpe_state_expr`'s state machine,
-    collapsed to frequency-keyed symbol sequences: char level keys on
-    DISTINCT WORDS (pairs never cross a word boundary, so per-word
-    training state is exact — Sennrich's reference trainer's own
-    representation), word level keys on whole-document token tuples.
-    Tokenization mirrors ``tokens()`` exactly (trim spaces, split on
-    the Java-regex ``\\s`` class, drop empties) and the reserved-marker
-    guard raises the same ValueError the projection guard does."""
-    import re
-    from collections import Counter
-
-    guard = re.compile("[‹›·]" if level == "char" else "[‹›]")
-    seqs: Counter = Counter()
-    for t in texts:
-        if t is None:
-            continue
-        if guard.search(t):
-            raise ValueError(
-                "bpe: corpus text contains a reserved marker character "
-                f"{_bpe_guard_chars(level)} - pre-scrub or re-tokenize: "
-                f"{t[:40]}"
-            )
-        toks = [
-            x for x in re.split("[ \t\n\x0b\f\r]+", t.strip(" ")) if x != ""
-        ]
-        if level == "word":
-            if toks:
-                seqs[tuple(toks)] += 1
-        else:
-            for w in toks:
-                cs = list(w)
-                cs[-1] += _BPE_EOW
-                seqs[tuple(cs)] += 1
-    return seqs
-
-
-def _py_bpe_train(seqs, n_merges: int, level: str):
-    """Heap-based incremental BPE over frequency-keyed sequences —
-    O(affected sequences) per merge instead of a full recount, which
-    is what makes 32k merges tractable. Selection semantics are
-    bit-identical to :func:`bpe_train`'s Spark loop: count every
-    adjacent (overlapping) pair occurrence, pick max count with
-    lexicographic (left, right) tie-break — the heap orders on
-    (-count, pair) and UTF-8 byte order equals code-point order, so
-    Python tuple comparison reproduces Spark's ORDER BY n DESC, l, r —
-    then merge greedily left-to-right (non-overlapping), the same
-    result as the JVM literal replace. Stale heap entries are handled
-    by lazy validation; every count CHANGE pushes a fresh entry, so a
-    decremented pair can still win later rounds."""
-    import heapq
-    from collections import defaultdict
-
-    seq_list = [(list(s), f) for s, f in sorted(seqs.items())]
-    counts: dict = defaultdict(int)
-    index: dict = defaultdict(set)
-    for si, (syms, f) in enumerate(seq_list):
-        for p in zip(syms, syms[1:]):
-            counts[p] += f
-            index[p].add(si)
-    heap = [(-c, p) for p, c in counts.items()]
-    heapq.heapify(heap)
-
-    def bump(p, delta, si):
-        counts[p] += delta
-        if delta > 0:
-            index[p].add(si)
-        heapq.heappush(heap, (-counts[p], p))
-
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        best = None
-        while heap:
-            negc, p = heap[0]
-            if -negc <= 0:
-                break
-            if counts.get(p, 0) != -negc:
-                heapq.heappop(heap)
-                continue
-            best = p
-            break
-        if best is None:
-            break
-        merges.append((rank, best[0], best[1], int(counts[best])))
-        new_sym = _bpe_merged_symbol(best[0], best[1], level)
-        left, right = best
-        for si in sorted(index[best]):
-            syms, f = seq_list[si]
-            hit = False
-            out: list = []
-            i = 0
-            while i < len(syms):
-                if (
-                    i + 1 < len(syms)
-                    and syms[i] == left
-                    and syms[i + 1] == right
-                ):
-                    out.append(new_sym)
-                    hit = True
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            if not hit:  # stale index entry from an earlier rewrite
-                continue
-            for p in zip(syms, syms[1:]):
-                bump(p, -f, si)
-            seq_list[si] = (out, f)
-            for p in zip(out, out[1:]):
-                bump(p, f, si)
-        counts.pop(best, None)
-        index.pop(best, None)
-    return merges
-
-
-def bpe_train_sampled(
-    docs: DataFrame,
-    *,
-    n_merges: int = 32000,
-    sample_docs: int = 2048,
-    text_col: str = "text",
-    level: str = "char",
-) -> list[tuple[int, str, str, int]]:
-    """Production-scale BPE training: ONE md5-bounded TakeOrdered pulls
-    a deterministic ``sample_docs``-document sample to the driver, and
-    a pure-Python heap trainer (:func:`_py_bpe_train`) runs all
-    ``n_merges`` rounds over it — 32k merges in seconds, where
-    :func:`bpe_train`'s exact distributed loop would cost one keyed
-    count + one collect + one corpus rewrite PER merge (~100k Spark
-    jobs at tokenizer scale; it stays the right tool for the
-    oracle-checked small-merge-count queries). The same
-    sample-statistic-driver-side precedent as
-    ``quantization.train_opq_rotation``: a tokenizer vocabulary is a
-    frequency statistic, and a bounded uniform-ish (md5-ordered)
-    sample estimates it; the returned merge table feeds the UNCHANGED
-    distributed :func:`bpe_apply` / :func:`bpe_vocab` /
-    :func:`bpe_encode_ids`, whose encode stays one zero-shuffle
-    projection regardless of where the table was trained.
-
-    Caveats the name carries: ``n_occurrences`` are SAMPLE counts, and
-    merges beyond what the sample supports simply stop early (the
-    trainer returns fewer rows). Parity contract (property-tested):
-    with ``sample_docs`` ≥ the corpus size this returns EXACTLY
-    :func:`bpe_train`'s output — same pairs, same ranks, same counts,
-    same tie-breaks — at either level."""
-    if level not in ("word", "char"):
-        raise ValueError(f"bpe_train_sampled: unknown level {level!r}")
-    sample = [
-        r[0]
-        for r in docs.select(F.col(text_col))
-        .orderBy(F.md5(F.col(text_col)), F.col(text_col))
-        .limit(int(sample_docs))
-        .collect()
-    ]
-    return _py_bpe_train(
-        _py_bpe_sequences(sample, level), int(n_merges), level
-    )
-
-
 #: merge tables above this size leave the nested-literal-replace encode
 #: for the Arrow-batched one: ~1500 nested F.replace calls overflow the
 #: JVM stack during expression conversion (measured), and Catalyst cost
@@ -1577,11 +1418,11 @@ def bpe_apply(
     consumer runs, still zero extra jobs.
 
     Merge tables larger than ``_BPE_MAX_LITERAL_MERGES`` (tokenizer
-    scale — :func:`bpe_train_sampled` output) dispatch to the
-    row-identical Arrow-batched encode (:func:`_arrow_bpe_encode`):
-    the nested replace chain overflows the JVM stack near ~1500
-    merges, so the big-table path trades whole-stage codegen for one
-    ``mapInPandas`` scan — still zero shuffle."""
+    scale) dispatch to the row-identical Arrow-batched encode
+    (:func:`_arrow_bpe_encode`): the nested replace chain overflows
+    the JVM stack near ~1500 merges, so the big-table path trades
+    whole-stage codegen for one ``mapInPandas`` scan — still zero
+    shuffle."""
     if level not in ("word", "char"):
         raise ValueError(f"bpe_apply: unknown level {level!r}")
     if len(merges) > _BPE_MAX_LITERAL_MERGES:

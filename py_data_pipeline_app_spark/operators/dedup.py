@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from py_data_pipeline_app_spark.functions.text import (
     HASH_PRIME,
     md5_long,
-    minhash_perm,
     normalize_text,
     perm_coeffs,
     token_hash,

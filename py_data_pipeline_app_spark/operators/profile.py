@@ -54,18 +54,6 @@ from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.partitioning import fan_out
 
 
-def _stringify(col: F.Column, dtype: T.DataType) -> F.Column:
-    """Render a min/max value as a cross-engine-deterministic string.
-    Doubles/floats go through decimal(18,6) (Java's 1.0E7 vs DuckDB's
-    10000000.0 otherwise disagree); timestamps through a fixed
-    second-resolution format; everything else casts directly."""
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        return col.cast("decimal(18,6)").cast("string")
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
-    return col.cast("string")
-
-
 _NUMERIC = (
     T.DoubleType,
     T.FloatType,
@@ -89,20 +77,13 @@ def _qident(c: str) -> str:
     return "`" + c.replace("`", "``") + "`"
 
 
-def _num_proxy(c: str, dtype: T.DataType) -> F.Column | None:
-    """Double proxy preserving native order, or None for non-orderable-
-    as-number types (quantiles are null for those)."""
-    col = F.col(c)
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return F.unix_micros(col.cast("timestamp")).cast("double")
-    if isinstance(dtype, _NUMERIC):
-        return col.cast("double")
-    return None
-
-
 def _stringify_sql(inner: str, dtype: T.DataType) -> str:
-    """Parsed-expression twin of :func:`_stringify` (same casts, token
-    for token — pinned by the renderer parity suite)."""
+    """Render a min/max value (the parsed expression source ``inner``)
+    as a cross-engine-deterministic string. Doubles/floats go through
+    decimal(18,6) (Java's 1.0E7 vs DuckDB's 10000000.0 otherwise
+    disagree); timestamps through a fixed second-resolution format;
+    everything else casts directly. Pinned against its Column-composed
+    reference by the renderer parity suite."""
     if isinstance(dtype, (T.DoubleType, T.FloatType)):
         return f"CAST(CAST({inner} AS DECIMAL(18,6)) AS STRING)"
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):

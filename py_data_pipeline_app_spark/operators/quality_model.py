@@ -1,26 +1,20 @@
-"""Trained quality classifier over cheap per-document features, weakly
-supervised by the unigram-LM score (extension — the GPT-3/CCNet recipe
-in public form: a small classifier generalizes a noisy quality signal
-so the full corpus can be scored without the signal's cost or blind
-spots).
+"""Linear quality model over cheap per-document features (extension —
+the GPT-3/CCNet recipe in public form: a small classifier generalizes a
+noisy quality signal so the full corpus can be scored without the
+signal's cost or blind spots).
 
-Recipe: label documents good/bad by their LM cross-entropy relative to
-the corpus mean AND the Gopher-style repetition flags — the LM alone is
-a TRAP here: a unigram LM assigns repeated high-frequency tokens LOW
-cross-entropy ("buy buy buy..." scores as the most fluent document in
-the corpus), so repetition rules must veto it, exactly why production
-pipelines stack both signals. Then featurize every document with zero-shuffle
-native-column statistics (token count, distinct-token ratio,
-punctuation/digit shares, Simpson diversity), and fit Spark ML
-logistic regression (distributed LBFGS — per-iteration map + tiny
-gradient reduce). The fitted coefficient vector is a handful of
-doubles; scoring re-enters the plan as one projection, so the
-classifier runs over 100 TB at scan cost.
-
-No SQL oracle by nature (iterative fit), matching the
-``ivf_topk_trained`` precedent: correctness is asserted behaviorally
-in tests — separation of planted junk from clean prose on held-out
-documents, and agreement with the weak labels above chance.
+The weights were fitted once, offline, by a Spark ML logistic
+regression on weak labels: a document was "good" when its unigram-LM
+cross-entropy sat at or below the corpus mean AND the Gopher-style
+repetition flags did not fire. The LM alone is a TRAP — it assigns
+repeated high-frequency tokens LOW cross-entropy ("buy buy buy..."
+scored as the most fluent document in the corpus), so the repetition
+veto had to stack on it. Every feature is a zero-shuffle native-column
+statistic (token count, distinct-token ratio, punctuation/digit
+shares, Simpson diversity, stopword share), and the fitted coefficient
+vector is a handful of doubles, so scoring is one projection and runs
+over 100 TB at scan cost — and, unlike the iterative fit, it carries a
+full SQL oracle.
 """
 
 from __future__ import annotations
@@ -29,15 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from py_data_pipeline_app_spark.functions.text import LANG_STOPWORDS, tokens
-
-FEATURE_COLS = (
-    "f_log_tokens",
-    "f_distinct_ratio",
-    "f_punct_share",
-    "f_digit_share",
-    "f_simpson",
-    "f_stopword_share",
-)
 
 _ALL_STOPWORDS = sorted({w for ws in LANG_STOPWORDS.values() for w in ws})
 
@@ -101,97 +86,22 @@ def quality_feature_frame(
     )
 
 
-def train_quality_classifier(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 32,
-    seed: int = 7,
-    max_iter: int = 50,
-    max_top_word_frac: float = 0.3,
-    max_dup_2gram_frac: float = 0.6,
-):
-    """Fit the weak-label quality classifier on ``docs``: weak label =
-    (LM cross-entropy ≤ corpus mean) AND (not repetition-flagged) — the
-    repetition veto matters because a unigram LM scores repeated
-    common tokens as maximally fluent (measured: "buy buy buy" had the
-    lowest cross-entropy in the test corpus). The veto budgets default
-    LOOSER than the Gopher filter's (0.3 top-word share vs 0.10) — a
-    label must only catch degenerate spam, while the filter's budget
-    is calibrated for long web documents and flags short clean prose
-    where "the" alone exceeds 10%. Features from
-    :func:`quality_feature_frame`, Spark ML logistic regression.
-    Returns the fitted model (coefficients are a handful of doubles —
-    broadcastable anywhere). Train on a sample at corpus scale; the
-    fit is one pass per LBFGS iteration."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    from py_data_pipeline_app_spark.operators.curation import (
-        perplexity_buckets,
-        repetition_filter,
-    )
-
-    pb = perplexity_buckets(
-        docs, text_col=text_col, id_col=id_col, vocab_size=vocab_size
-    ).select(id_col, "cross_entropy")
-    mean_ce = pb.agg(
-        (
-            F.sum(F.col("cross_entropy").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("m")
-    )
-    rep = repetition_filter(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        max_top_word_frac=max_top_word_frac,
-        max_dup_2gram_frac=max_dup_2gram_frac,
-    ).select(id_col, "flagged")
-    labeled = (
-        pb.crossJoin(F.broadcast(mean_ce))
-        .join(rep, id_col)
-        .select(
-            id_col,
-            ((F.col("cross_entropy") <= F.col("m")) & ~F.col("flagged"))
-            .cast("double")
-            .alias("label"),
-        )
-    )
-    feats = quality_feature_frame(docs, text_col=text_col, id_col=id_col)
-    train = feats.join(labeled, id_col)
-    assembled = VectorAssembler(
-        inputCols=list(FEATURE_COLS), outputCol="features"
-    ).transform(train)
-    lr = LogisticRegression(
-        featuresCol="features",
-        labelCol="label",
-        maxIter=max_iter,
-        regParam=0.01,
-    )
-    return lr.fit(assembled)
-
-
-# Coefficients from one seeded `train_quality_classifier` fit over the
-# sf0.01 documents corpus (defaults; LBFGS is deterministic here —
-# pinned by test_training_is_deterministic). This is the production
+# Coefficients from one seeded Spark ML logistic-regression fit over
+# the sf0.01 documents corpus (vocab_size=32, maxIter=50, regParam=0.01,
+# repetition-veto budgets 0.3 top-word / 0.6 duplicate-2-gram share;
+# LBFGS was deterministic at those settings). This is the production
 # shipping pattern: train on a sample once, then scoring is pure
 # column arithmetic that costs a scan — the model never rides along as
-# an object, just these doubles. Refit and re-pin when the corpus
-# distribution moves. The signs mirror the weak LM label's quirks
-# (documented in train_quality_classifier) — the scorer's contract is
-# "reproduces the trained model", not "hand-tuned taste".
+# an object, just these doubles. The signs mirror the weak LM label's
+# quirks (module docstring) — the scorer's contract is "reproduces
+# that fit", not "hand-tuned taste".
 #
 # f_punct_share / f_digit_share are absent BY MEASUREMENT: the
 # synthetic documents corpus contains no punctuation or digit
-# characters at all (stddev = 0.0 for both at sf0.01), so every fit
-# zero-weights them regardless of regularization — the pinned scorer
-# would compute two regexp features per row and multiply them by
-# zero (round-8 verdict finding #4). The trained path
-# (train_quality_classifier / score_quality) keeps the full
-# FEATURE_COLS: on a real web corpus both features carry signal, and
-# re-pinning from such a fit just adds the two entries back here.
+# characters at all (stddev = 0.0 for both at sf0.01), so the fit
+# zero-weighted them — the scorer would compute two regexp features
+# per row and multiply them by zero. On a real web corpus both carry
+# signal; a fit there would add the two entries back here.
 LINEAR_FEATURE_COLS = (
     "f_log_tokens",
     "f_distinct_ratio",
@@ -210,39 +120,33 @@ PINNED_BIAS = 4.468778
 def score_quality_linear(
     docs: DataFrame,
     *,
-    weights: dict[str, float] | None = None,
-    bias: float | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """(id, quality_z, predicted_good): apply a PINNED linear quality
-    model as native column arithmetic — the deployment half of
-    :func:`train_quality_classifier` (its coefficient vector pasted
-    into :data:`PINNED_WEIGHTS`), with zero Python per row and zero
-    shuffle: the whole scorer is one projection fused into the scan.
+    """(id, quality_z, predicted_good): apply the PINNED linear quality
+    model (:data:`PINNED_WEIGHTS`, :data:`PINNED_BIAS`) as native
+    column arithmetic, with zero Python per row and zero shuffle: the
+    whole scorer is one projection fused into the scan.
 
-    Cross-engine determinism (this is the oracle-backed variant of
-    ``score_quality``): every feature is rounded to 6dp BEFORE the dot
-    product — ``f_log_tokens`` is the one libm-dependent feature
-    (``ln`` may differ in the last ulp between engines; same pre-round
-    discipline as the perplexity oracle), the rest are exact integer
-    ratios — and the dot product is a fixed left-to-right sum of six
-    products, which IEEE doubles evaluate bit-identically everywhere.
+    Cross-engine determinism: every feature is rounded to 6dp BEFORE
+    the dot product — ``f_log_tokens`` is the one libm-dependent
+    feature (``ln`` may differ in the last ulp between engines; same
+    pre-round discipline as the perplexity oracle), the rest are exact
+    integer ratios — and the dot product is a fixed left-to-right sum
+    of four products, which IEEE doubles evaluate bit-identically
+    everywhere.
     ``quality_z`` is the linear score (sigmoid is monotone, so
     thresholding z at 0 ≡ thresholding probability at 0.5 — and
     skipping exp() avoids a second libm dependency).
 
-    The dot product runs over whichever FEATURE_COLS appear in the
-    weight dict (pinned default: :data:`LINEAR_FEATURE_COLS` — see
-    the PINNED_WEIGHTS comment for why punct/digit are absent);
-    features a weight set does not use are never referenced, so
-    Catalyst prunes their expressions out of the scan projection."""
-    w = dict(PINNED_WEIGHTS if weights is None else weights)
-    b = float(PINNED_BIAS if bias is None else bias)
+    The dot product runs over :data:`LINEAR_FEATURE_COLS` (see the
+    PINNED_WEIGHTS comment for why punct/digit are absent); the unused
+    features are never referenced, so Catalyst prunes their
+    expressions out of the scan projection."""
     feats = quality_feature_frame(docs, text_col=text_col, id_col=id_col)
-    z = F.lit(b)
-    for name in (c for c in FEATURE_COLS if c in w):
-        z = z + F.round(F.col(name), 6) * F.lit(float(w[name]))
+    z = F.lit(PINNED_BIAS)
+    for name in LINEAR_FEATURE_COLS:
+        z = z + F.round(F.col(name), 6) * F.lit(PINNED_WEIGHTS[name])
     return feats.select(
         F.col(id_col),
         F.round(z, 6).alias("quality_z"),
@@ -250,28 +154,3 @@ def score_quality_linear(
     )
 
 
-def score_quality(
-    model,
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """(id, quality_prob, predicted_good): apply a fitted classifier to
-    ANY document set — the point of training one (the weak LM label
-    needs the corpus it was trained on; the classifier generalizes to
-    held-out or future documents at pure scan cost)."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.functions import vector_to_array
-
-    feats = quality_feature_frame(docs, text_col=text_col, id_col=id_col)
-    assembled = VectorAssembler(
-        inputCols=list(FEATURE_COLS), outputCol="features"
-    ).transform(feats)
-    scored = model.transform(assembled)
-    return scored.select(
-        F.col(id_col),
-        F.round(vector_to_array("probability")[1], 6).alias("quality_prob"),
-        (vector_to_array("probability")[1] >= threshold).alias("predicted_good"),
-    )

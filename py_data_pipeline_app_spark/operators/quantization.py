@@ -16,27 +16,14 @@ The IVF-PQ index encodes RESIDUALS ``r = x − q1(x)`` against the
 coarse centroid (the paper's §V IVFADC layout), not raw vectors: the
 score numerator decomposes as ``q·q1(x) + q·q2(r)`` with the first
 term exact per (query, probed centroid), so only the (smaller, when
-the coarse quantizer absorbs energy) residual is lossy. Measured on
-the random-unit-vector testdata: with TRAINED quantizers residual
-ADC recall is 0.44 vs 0.30 for every raw variant (re-rank 0.77 vs
-0.48); with the md5-SAMPLED stand-in tables the residuals come out
-larger than the vectors (sample centroids only absorb ~0.2 cosine)
-and recall drops to 0.14 — the sampled tables exist for
-cross-engine oracle replay, not recall, and the recall tests pin the
-trained configuration.
-
-``rotation_seed`` adds the OPQ-style decorrelation step (Ge et al.
-2014's fixed-random-rotation baseline): residuals are rotated by a
-deterministic orthonormal matrix before PQ slicing, spreading
-cross-subspace correlation that independent subspace quantizers
-cannot exploit. Measured: on data whose coordinates correlate across
-subspaces, trained codebooks in the rotated space lift recall
-0.47 → 0.58 (0.44 → 0.52 at the test's cheaper config); with
-SAMPLED codebooks the rotation is neutral (sample-quantizer error is
-linear in per-subspace variance — rebalancing it is a wash), so the
-knob matters for trained production indexes over real embeddings.
-The matrix persists beside the index with a checksum; probes and
-appends replay it or refuse.
+the coarse quantizer absorbs energy) residual is lossy. Both tables
+are md5-ordered samples of the corpus, so every probe replays
+cross-engine; on the random-unit-vector testdata the sample centroids
+absorb only ~0.2 cosine, and full-probe residual ADC recall is 0.14
+(an exact re-rank of a 4k shortlist lifts it to 0.29 —
+``ivfpq_topk_rerank``). Callers may pass
+their own ``cents``/``codebooks`` tables to :func:`build_ivfpq_index`
+behind the identical plan.
 
 Determinism contract (same spirit as operators/similarity): codebooks
 are a hash-ordered sample of the corpus (md5_long, reproducible in
@@ -119,10 +106,9 @@ def pq_codebooks(
     """(sub_id, code_id, codeword): one codebook per subspace, each
     the ``dsub``-wide slice of the same ``ksub`` hash-ordered sample
     vectors — a deterministic, oracle-reproducible stand-in for
-    per-subspace k-means (pass the result of a trained fit through
-    :func:`pq_encode`'s ``codebooks`` parameter when recall matters
-    more than cross-engine replay; the encoding/ranking plans are
-    identical either way).
+    per-subspace k-means (:func:`pq_encode` takes any codebook table
+    of this shape; the encoding/ranking plans are identical either
+    way).
 
     The sample rows are ordered by md5_long(id) — pseudo-random but
     deterministic, executed as a per-partition top-k merge. The
@@ -150,58 +136,6 @@ def pq_codebooks(
     )
     return sample.select("code_id", F.explode(subs).alias("sc")).select(
         F.col("sc.sub_id").alias("sub_id"), "code_id", F.col("sc.codeword").alias("codeword")
-    )
-
-
-def train_pq_codebooks(
-    corpus: DataFrame,
-    *,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 20,
-) -> DataFrame:
-    """(sub_id, code_id, codeword): per-subspace k-means codebooks via
-    Spark ML's distributed Lloyd's (deterministic seed) — the
-    production-recall pick (quantization error drops vs the hash
-    sample because each codebook tracks its subspace's distribution).
-    The m fits each reduce to a ksub×dsub partial per iteration; the
-    resulting m×ksub×dsub table is a few KB and re-enters encode/rank
-    plans as a literal, identical to the sampled path. The gate keeps
-    the sampled variant (an iterative fit has no SQL oracle); this
-    one's recall-vs-sampled win is asserted in tests."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} must divide into m={m} subspaces")
-    dsub = dim // m
-    spark = corpus.sparkSession
-    # materialise the training column once: KMeans re-evaluates its
-    # input plan on every Lloyd iteration of each of the m fits, and
-    # the column is usually a residual (and rotation) projection whose
-    # per-row matvec would otherwise be recomputed every time. The
-    # checkpoint keeps the input's partitioning, which k-means|| init
-    # depends on, so the fitted codebooks are unchanged.
-    vecs = corpus.select(vec_col).localCheckpoint()
-    out = []
-    for s in range(m):
-        train = vecs.select(
-            array_to_vector(_sub(F.col(vec_col), s, dsub)).alias("features")
-        )
-        model = KMeans(
-            k=ksub, seed=seed + s, maxIter=max_iter, featuresCol="features"
-        ).fit(train)
-        out.extend(
-            (s, j, [float(x) for x in c])
-            for j, c in enumerate(model.clusterCenters())
-        )
-    # an Arrow local relation, like the sampled codebooks: no plan
-    # that embeds the trained table runs a Python task
-    return local_rows_df(
-        spark, "sub_id int, code_id int, codeword array<double>", out
     )
 
 
@@ -484,83 +418,16 @@ def _codebook_checksum(codebooks) -> str:
 IVFPQ_ENCODING = "ivfadc-residual"
 
 
-def rotation_matrix(seed: int, dim: int) -> list[list[float]]:
-    """Deterministic orthonormal ``dim×dim`` rotation — the OPQ-style
-    decorrelation step's simplest instance (a fixed random rotation,
-    the "RR" baseline of Ge et al. 2014's OPQ paper): spreads variance
-    evenly across PQ subspaces, which lowers quantization error when
-    the data's energy is concentrated in a few coordinates (anisotropy
-    plain slicing punishes). Built from md5-derived uniforms +
-    pure-Python Gram-Schmidt: bit-identical on every platform (a
-    LAPACK QR would vary across BLAS builds and break the config
-    checksum), and a 64×64 build is microseconds driver-side."""
-    import struct
-
-    def u(i: int) -> float:  # uniform in [-1, 1), md5-derived
-        h = hashlib.md5(f"rot:{seed}:{i}".encode()).digest()
-        return struct.unpack(">Q", h[:8])[0] / 2**63 - 1.0
-
-    rows: list[list[float]] = []
-    i = 0
-    while len(rows) < dim:
-        v = [u(i * dim + j) for j in range(dim)]
-        i += 1
-        for q in rows:  # Gram-Schmidt against accepted rows
-            d = sum(a * b for a, b in zip(v, q))
-            v = [a - d * b for a, b in zip(v, q)]
-        n = sum(a * a for a in v) ** 0.5
-        if n < 1e-6:
-            continue  # degenerate draw: try the next candidate vector
-        rows.append([a / n for a in v])
-    return rows
-
-
-def _rotation_checksum(rot: list[list[float]]) -> str:
-    return hashlib.md5(repr(rot).encode()).hexdigest()
-
-
-def _matvec(rot_lit: Column, vec: Column, dim: int) -> Column:
-    """``R·v`` as a pure Column expression: one fold per output
-    coordinate — dim² multiply-adds per row, fused into the scan
-    (4096 ops at dim=64, ~4× the PQ encode itself; linear in rows,
-    zero shuffle)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.aggregate(
-            F.zip_with(
-                F.element_at(rot_lit, (i + 1).cast("int")),
-                vec,
-                lambda a, b: a * b.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
 def _centroid_matrix_lit(cent_rows) -> Column:
     """CVEC[centroid_id + 1] = centroid vector, as one nested literal.
-    Requires contiguous 0-based centroid ids (what both the md5 sample
-    and the k-means trainer emit) because lookup is positional."""
+    Requires contiguous 0-based centroid ids (what the md5 sample
+    emits) because lookup is positional."""
     rows = _centroid_rows(cent_rows)
     if [int(r.centroid_id) for r in rows] != list(range(len(rows))):
         raise ValueError(
             "residual encoding requires contiguous 0-based centroid ids"
         )
     return float_matrix_lit([[float(x) for x in r.cvec] for r in rows])
-
-
-def _rotated_centroids(rot, cent_rows) -> list[list[float]]:
-    """R·c for every centroid, driver-side (k×dim is a few KB; the
-    same pure-Python fold order as the build, so build and append
-    produce bit-identical offsets)."""
-    return [
-        [
-            sum(a * b for a, b in zip(row, [float(x) for x in r.cvec]))
-            for row in rot
-        ]
-        for r in cent_rows
-    ]
 
 
 def _with_residual(assigned: DataFrame, cent_rows, *, vec_col: str) -> DataFrame:
@@ -597,8 +464,6 @@ def build_ivfpq_index(
     cents: DataFrame | None = None,
     codebooks: DataFrame | None = None,
     files_per_bucket: int | None = None,
-    rotation_seed: int | None = None,
-    rotation: list | None = None,
 ) -> None:
     """Materialize the IVF-PQ index — the standard corpus-scale ANN
     layout (FAISS's IVFPQ shape, rebuilt Spark-first): every vector's
@@ -619,19 +484,14 @@ def build_ivfpq_index(
     fail-loudly manifest pattern shared with the LSH/IVF indexes).
 
     Defaults keep every input deterministic (md5-ordered samples), so
-    probed results are oracle-reproducible end-to-end; pass trained
-    ``cents``/``codebooks`` for production recall behind the identical
-    plan.
+    probed results are oracle-reproducible end-to-end; explicit
+    ``cents``/``codebooks`` tables ride the identical plan.
 
-    ``codebooks`` must be trained in RESIDUAL space (on ``x − q1(x)``
-    against the SAME ``cents``, after the same rotation when
-    ``rotation_seed`` is set) — codes quantize residuals since the
-    IVFADC change, and raw-vector codebooks (the pre-residual
-    contract) silently degrade recall instead of failing (the
-    ``IVFPQ_ENCODING`` marker protects readers from old on-disk
-    indexes, not the builder from mis-trained inputs). External
-    callers should prefer :func:`build_ivfpq_index_trained`, which
-    derives both tables correctly in one call."""
+    ``codebooks`` must quantize RESIDUALS (``x − q1(x)`` against the
+    SAME ``cents``) — raw-vector codebooks silently degrade recall
+    instead of failing (the ``IVFPQ_ENCODING`` marker protects readers
+    from old on-disk indexes, not the builder from mismatched
+    inputs)."""
     spark = corpus.sparkSession
     _refuse_rebuild_over_mutations(
         spark, index_path, "IVF-PQ", "assignments and codes"
@@ -683,42 +543,12 @@ def build_ivfpq_index(
         corpus, cent_rows, id_col=id_col, vec_col=vec_col
     )
     resid = _with_residual(assigned, cent_rows, vec_col=vec_col)
-    enc_vec, enc_offset = "_rvec", "_cvec"
-    rot = None
-    if rotation is not None or rotation_seed is not None:
-        # OPQ-style decorrelation: quantize R·r instead of r. The
-        # reconstruction norm the score needs is ‖c + Rᵀ·q2(Rr)‖,
-        # which equals ‖Rc + q2(Rr)‖ (R is orthonormal) — so the
-        # existing offset machinery works verbatim with the centroid
-        # PRE-ROTATED driver-side. ``rotation`` passes an EXPLICIT
-        # matrix (a trained OPQ rotation — train_opq_rotation — is
-        # not derivable from a seed); ``rotation_seed`` derives the
-        # fixed RR baseline. Readers never see the difference: both
-        # persist to rotation/ with the same checksum machinery.
-        rot = (
-            rotation
-            if rotation is not None
-            else rotation_matrix(rotation_seed, dim)
-        )
-        rot_lit = float_matrix_lit(rot)
-        crot = _rotated_centroids(rot, cent_rows)
-
-        def _rotated(frame: DataFrame) -> DataFrame:
-            return frame.withColumn(
-                "_rvec_rot", _matvec(rot_lit, F.col("_rvec"), dim)
-            ).withColumn(
-                "_cvec_rot",
-                F.element_at(float_matrix_lit(crot), F.col("centroid_id") + 1),
-            )
-
-        resid = _rotated(resid)
-        enc_vec, enc_offset = "_rvec_rot", "_cvec_rot"
     if codebooks is None and samp_df is not None:
         # fused-sample path: the ksub md5-smallest rows are already on
         # the driver — residualize them through the SAME expression
-        # chain the corpus takes (assignment literal, residual,
-        # rotation), on a ksub-row literal frame instead of a second
-        # full corpus TakeOrdered
+        # chain the corpus takes (assignment literal, residual), on a
+        # ksub-row literal frame instead of a second full corpus
+        # TakeOrdered
         resid_samp = _with_residual(
             _assign_to_centroids(
                 samp_df, cent_rows, id_col=id_col, vec_col=vec_col
@@ -726,25 +556,21 @@ def build_ivfpq_index(
             cent_rows,
             vec_col=vec_col,
         )
-        if rot is not None:
-            resid_samp = _rotated(resid_samp)
         codebooks = pq_codebooks(
-            resid_samp, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col=enc_vec
+            resid_samp, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col="_rvec"
         )
     elif codebooks is None:
         # codebooks quantize RESIDUALS (IVFADC): sampled from the same
-        # md5 order as before, but each sample vector is x − q1(x)
-        # (rotated when rotation is on) — still one deterministic
-        # TakeOrdered over the build corpus
+        # md5 order as before, but each sample vector is x − q1(x) —
+        # still one deterministic TakeOrdered over the build corpus
         codebooks = pq_codebooks(
-            resid, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col=enc_vec
+            resid, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col="_rvec"
         )
     cb_rows = _codebook_rows(codebooks)
-    rot_checksum = "" if rot is None else _rotation_checksum(rot)
 
-    # the four sidecar tables are driver-literal writes, independent of
-    # each other and of the corpus-sized encode below — run all five
-    # as concurrent jobs (guide §2.6) instead of five job latencies
+    # the three sidecar tables are driver-literal writes, independent of
+    # each other and of the corpus-sized encode below — run all four
+    # as concurrent jobs (guide §2.6) instead of four job latencies
     # end to end
     def _w_centroids() -> None:
         _centroid_rows_df(spark, cent_rows).write.mode("overwrite").parquet(
@@ -756,41 +582,31 @@ def build_ivfpq_index(
             f"{index_path}/codebooks"
         )
 
-    def _w_rotation() -> None:
-        if rot is not None:
-            local_rows_df(
-                spark,
-                "row_id int, coeffs array<double>",
-                [(i, row) for i, row in enumerate(rot)],
-            ).write.mode("overwrite").parquet(f"{index_path}/rotation")
-
     def _w_config() -> None:
         local_rows_df(
             spark,
             "centroid_checksum string, codebook_checksum string, "
-            "encoding string, rotation_checksum string",
+            "encoding string",
             [
                 (
                     _ivf_centroid_checksum(cent_rows),
                     _codebook_checksum(cb_rows),
                     IVFPQ_ENCODING,
-                    rot_checksum,
                 )
             ],
         ).write.mode("overwrite").parquet(f"{index_path}/config")
 
     def _w_assigned() -> None:
-        # one projection end-to-end: centroid assignment, residual
-        # (+ rotation), and codes are all pure functions of the vector,
-        # computed in the same scan task — never a join of two derived
-        # frames by id
+        # one projection end-to-end: centroid assignment, residual and
+        # codes are all pure functions of the vector, computed in the
+        # same scan task — never a join of two derived frames by id
         combined = pq_encode(
             resid,
             cb_rows,
             id_col=id_col,
-            vec_col=enc_vec,
+            vec_col="_rvec",
             extra_cols=("centroid_id",),
-            recon_offset_col=enc_offset,
+            recon_offset_col="_cvec",
             fan_out_input=False,  # resid rides the fanned-out assignment
         )
         # files_per_bucket bounds the (task x bucket) small-files
@@ -808,191 +624,10 @@ def build_ivfpq_index(
     with ThreadPoolExecutor(max_workers=4) as pool:
         futs = [
             pool.submit(f)
-            for f in (_w_centroids, _w_codebooks, _w_rotation, _w_config, _w_assigned)
+            for f in (_w_centroids, _w_codebooks, _w_config, _w_assigned)
         ]
         for fut in futs:
             fut.result()
-
-
-def _np_lloyd(S, ksub: int, n_iter: int = 10):
-    """Plain Lloyd's over a small numpy sample (n×dsub), deterministic:
-    initial centers are the first ``ksub`` DISTINCT sample rows (the
-    sample arrives md5-ordered, so the init is a pure function of the
-    data), an emptied cluster keeps its previous center. Returns
-    (centers ksub×dsub, assignment n)."""
-    import numpy as np
-
-    _, first = np.unique(S.round(12), axis=0, return_index=True)
-    init = S[np.sort(first)[:ksub]]
-    if len(init) < ksub:  # degenerate sample: pad by repeating rows
-        init = np.vstack([init, S[: ksub - len(init)]])
-    C = init.copy()
-    assign = None
-    for _ in range(n_iter):
-        d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        assign = d2.argmin(1)
-        for j in range(ksub):
-            mask = assign == j
-            if mask.any():
-                C[j] = S[mask].mean(0)
-    return C, assign
-
-
-def train_opq_rotation(
-    resid: DataFrame,
-    *,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    vec_col: str = "_rvec",
-    id_col: str = "vec_id",
-    sample_size: int = 2048,
-    n_iter: int = 8,
-    seed: int = 7,
-) -> list[list[float]]:
-    """TRAINED OPQ rotation — Ge et al. 2014's non-parametric
-    alternating optimization (Algorithm 1), not the fixed-random "RR"
-    baseline :func:`rotation_matrix` is: repeat {fit per-subspace
-    k-means codebooks to the rotated sample; reconstruct each sample
-    from its nearest codewords; update R by the orthogonal Procrustes
-    solution ``R = V·Uᵀ`` of ``svd(XᵀY)``, which is the orthogonal
-    matrix minimizing ‖XRᵀ − Y‖²}. Each half-step is a coordinate
-    descent on the same objective; because the codebook fit
-    re-initializes each round (deterministic first-distinct-rows init,
-    not warm-started), tiny inter-round blips are possible, but the
-    ENDPOINT lands well below the RR initialization — measured 2.1×
-    lower sample quantization error, and that endpoint (not per-step
-    monotonicity) is what the test pins.
-
-    Runs DRIVER-SIDE over a bounded deterministic sample (md5-ordered
-    ``sample_size`` rows collected once — FAISS's OPQMatrix trains on
-    a sample the same way; the rotation is a dim×dim statistic, it
-    does not need the corpus). The distributed plan never changes:
-    the result feeds ``build_ivfpq_index(rotation=...)`` / full-corpus
-    codebook training exactly like the fixed matrix. numpy SVD is
-    bit-stable per platform but not across BLAS builds — trained
-    indexes persist the matrix with a checksum (readers replay it
-    from disk, never re-derive), and the cross-engine gate stays on
-    the seed-derived path."""
-    import numpy as np
-
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} must divide into m={m} subspaces")
-    dsub = dim // m
-    sample = (
-        resid.select(F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(sample_size)
-        .collect()
-    )
-    X = np.array([[float(x) for x in r[0]] for r in sample])
-    R = np.array(rotation_matrix(seed, dim))
-    for _ in range(n_iter):
-        Xr = X @ R.T
-        Y = np.empty_like(Xr)
-        for s in range(m):
-            Ssub = Xr[:, s * dsub : (s + 1) * dsub]
-            C, assign = _np_lloyd(Ssub, ksub)
-            Y[:, s * dsub : (s + 1) * dsub] = C[assign]
-        U, _, Vt = np.linalg.svd(X.T @ Y)
-        R = Vt.T @ U.T
-    return [[float(x) for x in row] for row in R]
-
-
-def build_ivfpq_index_trained(
-    corpus: DataFrame,
-    index_path: str,
-    *,
-    n_centroids: int = 16,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    files_per_bucket: int | None = None,
-    rotation_seed: int | None = None,
-    opq_iters: int = 0,
-    seed: int = 7,
-    max_iter: int = 20,
-) -> None:
-    """The PRODUCTION one-call builder: k-means coarse centroids +
-    k-means codebooks trained on the (optionally rotated) RESIDUALS,
-    then :func:`build_ivfpq_index` with those tables — the recall
-    configuration (measured 0.44 full-probe vs 0.14 for the sampled
-    stand-in tables, re-rank 0.77; module docstring) without the
-    five-call assembly dance, and with the rotation space
-    impossible to mismatch between codebook training and encoding.
-    ``opq_iters > 0`` upgrades the rotation from the fixed RR
-    baseline to the TRAINED alternating-optimization one
-    (:func:`train_opq_rotation`, initialized from ``rotation_seed``
-    or ``seed``) — measured strictly above the fixed rotation on
-    cross-subspace-correlated data (test-pinned); the full-corpus
-    codebooks then refit in the trained space. No SQL oracle by
-    nature (iterative k-means) — the sampled
-    :func:`build_ivfpq_index` defaults stay the gate path; recall and
-    parity are pinned in tests."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        train_centroids,
-    )
-
-    cent_rows = _centroid_rows(
-        train_centroids(
-            corpus, n_centroids=n_centroids, vec_col=vec_col,
-            seed=seed, max_iter=max_iter,
-        )
-    )
-    resid = _with_residual(
-        # fan_out_input=False: this residual frame feeds the Spark ML
-        # KMeans codebook fit below, whose k-means|| init is sensitive
-        # to the input PARTITIONING — a layout change would silently
-        # retrain different codebooks (and different recall) from the
-        # identical data. The final index build re-derives residuals
-        # through the default fanned-out assignment; its consumers are
-        # pure projections, layout-independent.
-        _assign_to_centroids(
-            corpus, cent_rows, id_col=id_col, vec_col=vec_col,
-            fan_out_input=False,
-        ),
-        cent_rows,
-        vec_col=vec_col,
-    )
-    rot = None
-    if opq_iters > 0:
-        rot = train_opq_rotation(
-            resid,
-            m=m,
-            ksub=ksub,
-            dim=dim,
-            id_col=id_col,
-            n_iter=opq_iters,
-            seed=rotation_seed if rotation_seed is not None else seed,
-        )
-    elif rotation_seed is not None:
-        rot = rotation_matrix(rotation_seed, dim)
-    train_vec = "_rvec"
-    if rot is not None:
-        resid = resid.withColumn(
-            "_rvec_rot", _matvec(float_matrix_lit(rot), F.col("_rvec"), dim)
-        )
-        train_vec = "_rvec_rot"
-    codebooks = train_pq_codebooks(
-        resid, m=m, ksub=ksub, dim=dim, vec_col=train_vec,
-        seed=seed, max_iter=max_iter,
-    )
-    build_ivfpq_index(
-        corpus,
-        index_path,
-        n_centroids=n_centroids,
-        m=m,
-        ksub=ksub,
-        dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        cents=cent_rows,
-        codebooks=codebooks,
-        files_per_bucket=files_per_bucket,
-        rotation=rot,
-    )
 
 
 def ivfpq_topk(
@@ -1062,16 +697,6 @@ def ivfpq_topk(
             ),
         ),
     )
-    # rotated index: the lookup-table side works in the rotated space
-    # (q·Rᵀw = (Rq)·w), while the exact centroid term _qc above stays
-    # in the original space — only the query rotates, once per probe
-    qtab_vec = "_qvec"
-    rot = _load_rotation(spark, index_path, cfg)
-    if rot is not None:
-        probes = probes.withColumn(
-            "_qvec_rot", _matvec(float_matrix_lit(rot), F.col("_qvec"), dim)
-        )
-        qtab_vec = "_qvec_rot"
     probed = [r.centroid_id for r in probes.select("centroid_id").distinct().collect()]
     encoded = spark.read.parquet(f"{index_path}/assigned").filter(
         F.col("centroid_id").isin(probed)
@@ -1088,7 +713,7 @@ def ivfpq_topk(
         dim=dim,
         k=k,
         id_col=id_col,
-        vec_col=qtab_vec,
+        vec_col="_qvec",
         query_id_col=query_id_col,
         join_cols=["centroid_id"],
         offset_col="_qc",
@@ -1104,28 +729,14 @@ def _check_ivfpq_encoding(cfg, index_path: str) -> None:
             "across mismatched code semantics are meaningless. Rebuild "
             "the index."
         )
-
-
-def _load_rotation(spark, index_path: str, cfg) -> list[list[float]] | None:
-    """The index's persisted OPQ rotation (or None when it was built
-    without one), checksum-verified: probing or appending through a
-    drifted rotation would encode/score in a different space than the
-    stored codes."""
-    want = getattr(cfg, "rotation_checksum", "") or ""
-    if not want:
-        return None
-    rows = sorted(
-        fsio.read_small_parquet_rows(spark, f"{index_path}/rotation"),
-        key=lambda r: r.row_id,
-    )
-    rot = [[float(x) for x in r.coeffs] for r in rows]
-    if _rotation_checksum(rot) != want:
+    # a non-empty rotation_checksum marks codes quantized in a rotated
+    # space; this reader scores in the unrotated one
+    if getattr(cfg, "rotation_checksum", None):
         raise ValueError(
-            f"IVF-PQ index at {index_path}: rotation matrix does not match "
-            "its build-time checksum - codes live in the rotated space, so "
-            "a drifted rotation scores garbage. Rebuild the index."
+            f"IVF-PQ index at {index_path} was built with a rotation - "
+            "its codes live in the rotated space, which this reader does "
+            "not replay. Rebuild the index."
         )
-    return rot
 
 
 IVFPQ_APPENDS_SUBDIR = "appends"
@@ -1270,25 +881,13 @@ def _ivfpq_index_append_locked(
         vec_col=vec_col,
     )
     resid = _with_residual(assigned, cent_rows, vec_col=vec_col)
-    enc_vec, enc_offset = "_rvec", "_cvec"
-    rot = _load_rotation(spark, index_path, cfg)
-    if rot is not None:  # rotated index: encode the batch identically
-        crot = _rotated_centroids(rot, cent_rows)
-        dim = len(rot)
-        resid = resid.withColumn(
-            "_rvec_rot", _matvec(float_matrix_lit(rot), F.col("_rvec"), dim)
-        ).withColumn(
-            "_cvec_rot",
-            F.element_at(float_matrix_lit(crot), F.col("centroid_id") + 1),
-        )
-        enc_vec, enc_offset = "_rvec_rot", "_cvec_rot"
     combined = pq_encode(
         resid,
         cb_rows,
         id_col=id_col,
-        vec_col=enc_vec,
+        vec_col="_rvec",
         extra_cols=("centroid_id",),
-        recon_offset_col=enc_offset,
+        recon_offset_col="_cvec",
         fan_out_input=False,  # resid rides the fanned-out assignment
     )
     _write_append_batch(

@@ -186,25 +186,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def lsh_recall_estimate(threshold: float, n_planes: int, bands: int) -> float:
-    """Expected hyperplane-LSH recall for a pair at exactly
-    ``threshold`` cosine: per-plane sign-agreement probability is
-    p = 1 - acos(t)/π, a band of r = n_planes/bands bits hits with
-    p^r, and the pair is a candidate if ANY band hits —
-    1 - (1 - p^r)^bands. Pairs above the threshold do better; use this
-    to pick (n_planes, bands) for a target threshold REGIME before
-    paying for a measurement run. The flip side, the random-pair
-    candidate fraction, is ≈ 1 - (1 - 2^-r)^bands (p = 1/2 for
-    orthogonal-ish vectors) — wider bands cut candidates
-    exponentially, but drop low-threshold recall the same way (see
-    the measured table on :func:`hyperplane_lsh_near_dup_pairs`)."""
-    import math
-
-    p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-    r = n_planes // bands
-    return 1.0 - (1.0 - p**r) ** bands
-
-
 def lsh_config_for(
     n_rows: int,
     threshold: float,
@@ -322,7 +303,9 @@ def hyperplane_lsh_near_dup_pairs(
     against the exact baseline.
 
     Choosing (n_planes, bands) — band WIDTH must match the threshold
-    regime (:func:`lsh_recall_estimate`); measured on the sf0.01
+    regime (a pair at cosine t is a candidate with probability
+    1 − (1 − p^r)^bands, p = 1 − acos(t)/π, r = n_planes/bands — the
+    model :func:`lsh_config_for` inverts); measured on the sf0.01
     embeddings at threshold 0.4 (59 exact pairs, cosine mass ≤ 0.51):
 
     ======================  ========  ==============  ==============
@@ -466,62 +449,28 @@ def ivf_topk(
     DuckDB oracle. The tiny result is then numbered with a window —
     fine on n_centroids rows. The corpus-assignment pass is one
     broadcast join + argmin; the query pass scans ~nprobe/n_centroids
-    of the corpus. For trained (k-means) centroids behind the same
-    probing plumbing see :func:`ivf_topk_trained`."""
-    cents = _md5_sample_centroids(
-        corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-    )
-    return _ivf_probe_topk(
-        corpus,
-        queries,
-        cents,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-    )
+    of the corpus.
 
-
-def ivf_topk_trained(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 7,
-    max_iter: int = 20,
-) -> DataFrame:
-    """IVF top-k with *trained* coarse centroids: fit
-    ``pyspark.ml.KMeans`` (deterministic seed) on the corpus vectors
-    and probe exactly like :func:`ivf_topk`. Trained centroids track
-    the data distribution, so each bucket's Voronoi cell is tighter and
-    recall at the same ``nprobe`` improves over the hash-sample pick —
-    measured in tests against the brute-force baseline.
-
-    Scale shape: the k-means fit is Spark ML's distributed Lloyd's
-    (per-iteration map + tiny reduce of k×dim partials); the resulting
-    k×dim centroid table collects to the driver (a few KB) and
-    re-enters the plan as a broadcast literal — the probing plan is
-    byte-for-byte the hash-sample one. The gate keeps the hash-sample
-    variant (an iterative fit has no SQL oracle); this one is
-    recall-tested."""
-    cents = train_centroids(
-        corpus, n_centroids=n_centroids, vec_col=vec_col, seed=seed, max_iter=max_iter
+    The centroid table is collected ONCE and re-enters both the
+    assignment and the probe plan as an Arrow local relation — each
+    plan that embedded the sample frame directly would re-run it (full
+    corpus scans at 100 TB for a few KB of state)."""
+    cent_rows = _centroid_rows(
+        _md5_sample_centroids(
+            corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
+        )
     )
-    return _ivf_probe_topk(
-        corpus,
-        queries,
-        cents,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
+    cents_local = F.broadcast(
+        _centroid_rows_df(corpus.sparkSession, cent_rows)
+    )
+    assigned = _assign_to_centroids(
+        corpus, cent_rows, id_col=id_col, vec_col=vec_col
+    )
+    probes = _query_probes(
+        queries, cents_local, nprobe=nprobe, query_id_col=query_id_col, vec_col=vec_col
+    )
+    return _rank_probed(
+        assigned, probes, k=k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
     )
 
 
@@ -534,7 +483,7 @@ def _md5_sample_centroids(
     surface must sample THIS way or the oracle-parity contracts split).
     TakeOrderedAndProject over md5(id): per-partition top-k, driver
     merge of k rows, never a global sort; the k-row window after the
-    limit is fine. For trained centroids see :func:`train_centroids`."""
+    limit is fine."""
     return (
         corpus.select(
             md5_long(F.col(id_col).cast("string")).alias("_hk"),
@@ -570,8 +519,7 @@ def _centroid_rows_df(spark, rows: list) -> DataFrame:
 
 
 def _assign_to_centroids(
-    corpus: DataFrame, cents, *, id_col: str, vec_col: str,
-    fan_out_input: bool = True,
+    corpus: DataFrame, cents, *, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, vec, centroid_id): argmax-cosine bucket assignment —
     ZERO-shuffle.
@@ -590,13 +538,7 @@ def _assign_to_centroids(
     # have no codegen) narrow compute — an unsplittable one-file scan
     # would pin it to one core (guide §2.5); no-op on an already-wide
     # corpus, and a pure projection downstream keeps results identical.
-    # ``fan_out_input=False`` is for the ONE consumer whose result DOES
-    # depend on the input layout: a Spark ML KMeans fit downstream
-    # (k-means|| init samples per partition), where repartitioning
-    # would silently retrain different codebooks
-    # (build_ivfpq_index_trained pins the historical layout).
-    if fan_out_input:
-        corpus = fan_out(corpus)
+    corpus = fan_out(corpus)
     rows = _centroid_rows(cents)
     # one parsed expression, not per-element F.lit composition (the
     # float_matrix_lit rationale: ~1 py4j round trip instead of k)
@@ -663,71 +605,6 @@ def _rank_probed(
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select(query_id_col, id_col, "score", F.col("rn").alias("rank"))
-    )
-
-
-def train_centroids(
-    corpus: DataFrame,
-    *,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 20,
-) -> DataFrame:
-    """(centroid_id, cvec): k-means coarse centroids via Spark ML's
-    distributed Lloyd's (deterministic seed). The k×dim result
-    collects to the driver (a few KB) and re-enters the plan as an
-    Arrow local relation (a ``LocalTableScan``), so it broadcasts into
-    any probing or index-build plan — including
-    :func:`build_ivf_index`'s ``cents`` parameter, which persists
-    trained centroids behind the same partition-pruned probing path as
-    the hash-sample pick."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(
-        k=n_centroids, seed=seed, maxIter=max_iter, featuresCol="features"
-    ).fit(train)
-    return local_rows_df(
-        corpus.sparkSession,
-        "centroid_id int, cvec array<double>",
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-    )
-
-
-def _ivf_probe_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cents: DataFrame,
-    *,
-    k: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Shared IVF probing plan: assign corpus vectors to their nearest
-    centroid (literal-table argmax cosine), probe each query's
-    ``nprobe`` nearest buckets, exact-rank the scanned candidates.
-
-    The centroid table is collected ONCE and re-enters both the
-    assignment and the probe plan as an Arrow local relation — when
-    ``cents`` is a derived sample over the corpus, each plan that
-    embedded the frame directly would re-run that sample (full corpus
-    scans at 100 TB for a few KB of state)."""
-    cent_rows = _centroid_rows(cents)
-    cents_local = F.broadcast(
-        _centroid_rows_df(corpus.sparkSession, cent_rows)
-    )
-    assigned = _assign_to_centroids(
-        corpus, cent_rows, id_col=id_col, vec_col=vec_col
-    )
-    probes = _query_probes(
-        queries, cents_local, nprobe=nprobe, query_id_col=query_id_col, vec_col=vec_col
-    )
-    return _rank_probed(
-        assigned, probes, k=k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
     )
 
 
@@ -944,7 +821,7 @@ def semantic_dedup(
     bucket expansion keyed by cluster id — within-cluster quadratic
     cost is SemDeDup's nature, CONTROLLED by the centroid count (pick
     k ∝ N/target_cluster_size so clusters stay bounded as the corpus
-    grows; pass trained centroids via ``cents`` for tighter clusters
+    grows; pass a better-fitted table via ``cents`` for tighter clusters
     at the same k). The verification join touches candidate pairs
     only. Every within-cluster pair is compared (no chunk cap): the
     cluster is the only blocking, so capping would skip genuine
@@ -1137,8 +1014,7 @@ def embedding_decontamination(
     preserves the benchmark frame's own id type (string doc keys
     included — the argmax fold is keyed by POSITION in the id-sorted
     literal, and the winning position maps back through a same-typed
-    id literal), matching :func:`embedding_decontamination_lsh`'s
-    documented same-output-shape contract.
+    id literal).
 
     Scale shape: benchmark sets are small by nature (an eval suite is
     10²-10⁴ rows) — the vectors collect ONCE and ride the plan as one
@@ -1147,8 +1023,8 @@ def embedding_decontamination(
     size: the corpus never shuffles and never crosses an Exchange
     (the ``_assign_to_centroids`` plan shape). Guarded at
     ``MAX_DECONTAMINATION_BENCHMARK`` rows — past that the literal
-    stops being free; use :func:`embedding_decontamination_lsh`, the
-    banded variant with the same output shape.
+    stops being free; block the tagged corpus ∪ benchmark union with
+    :func:`hyperplane_lsh_near_dup_pairs` instead.
     """
     rows = sorted(
         benchmark.select(
@@ -1159,9 +1035,9 @@ def embedding_decontamination(
     if len(rows) > MAX_DECONTAMINATION_BENCHMARK:
         raise ValueError(
             f"benchmark set has {len(rows)} rows; the literal-fold plan is "
-            f"sized for <= {MAX_DECONTAMINATION_BENCHMARK}. Use "
-            "embedding_decontamination_lsh (hyperplane_lsh banding over "
-            "the tagged union) for large benchmark corpora."
+            f"sized for <= {MAX_DECONTAMINATION_BENCHMARK}. Block the "
+            "tagged corpus/benchmark union with hyperplane_lsh_near_dup_pairs "
+            "for large benchmark corpora."
         )
     bid_type = benchmark.schema[id_col].dataType
     if not rows:
@@ -1196,104 +1072,6 @@ def embedding_decontamination(
         .alias("nearest_benchmark_id"),
         best["csim"].alias("benchmark_cos"),
         (best["csim"] < F.lit(float(threshold))).alias("kept"),
-    )
-
-
-def embedding_decontamination_lsh(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    *,
-    dim: int,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int | str = "auto",
-    bands: int | str = "auto",
-    n_rows: int | None = None,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """The blocked variant of :func:`embedding_decontamination` for
-    benchmark sets past ``MAX_DECONTAMINATION_BENCHMARK`` (where the
-    matrix-literal sweep stops being free): tag both sides, run the
-    shared hyperplane-LSH banding over the union, and keep only
-    CROSS-side verified pairs — the recipe the exact variant's guard
-    names. Same output shape (id, nearest_benchmark_id, benchmark_cos,
-    kept), with one contract difference inherent to blocking: scores
-    exist only for FLAGGED rows (the banding surfaces pairs at
-    cos ≥ threshold; kept rows carry nulls — at scale nobody pays a
-    full benchmark sweep per clean row just to report how clean).
-    Recall follows the banding S-curve (:func:`lsh_recall_estimate`):
-    at contamination-grade cosines (≥ 0.9) a true hit collides in
-    some band with probability ≈ 1.
-
-    Banding defaults to ``"auto"`` — sized for the TAGGED UNION
-    (corpus + benchmark) via :func:`lsh_config_for`, the production
-    path; pass ``n_rows`` if the caller already knows the combined
-    count, or an explicit ``(n_planes, bands)`` pair for
-    bit-reproducible eval runs (the parity tests pin one).
-
-    Scale shape: cost ∝ corpus + benchmark + candidate pairs — never
-    |corpus|×|benchmark|; the per-corpus-row argmax window runs over
-    verified pairs only (candidate-sized, not corpus-sized)."""
-    ck = F.concat(F.lit("c:"), F.col(id_col).cast("string"))
-    bk = F.concat(F.lit("b:"), F.col(id_col).cast("string"))
-    tagged = (
-        corpus.select(ck.alias("_k"), F.col(vec_col))
-        .unionByName(benchmark.select(bk.alias("_k"), F.col(vec_col)))
-    )
-    pairs = hyperplane_lsh_near_dup_pairs(
-        tagged,
-        dim=dim,
-        threshold=threshold,
-        id_col="_k",
-        vec_col=vec_col,
-        n_planes=n_planes,
-        bands=bands,
-        n_rows=n_rows,
-        max_bucket_size=max_bucket_size,
-    )
-    a_is_b = F.col("id_a").startswith("b:")
-    b_is_b = F.col("id_b").startswith("b:")
-    cross = pairs.filter(a_is_b != b_is_b).select(
-        F.when(a_is_b, F.col("id_b")).otherwise(F.col("id_a")).alias("_ck"),
-        F.substring(
-            F.when(a_is_b, F.col("id_a")).otherwise(F.col("id_b")), 3, 2_000_000
-        ).alias("_bid_str"),
-        F.col("cos_sim"),
-    )
-    # the caller's NATIVE-typed benchmark id joins in BEFORE the argmax
-    # window, for two contracts at once: the output id preserves the
-    # benchmark frame's own type (a cast would hardcode one; strings
-    # must survive), and the tie-break at an exact-9dp-equal cosine
-    # orders by the id's native collation — matching the exact sweep's
-    # lowest-id rule (string order would rank "10" < "2" for numeric
-    # ids and report a different nearest_benchmark_id per variant).
-    # Plain keyed join: candidates and the benchmark are BOTH unbounded
-    # at the scale this variant exists for, so neither side broadcasts.
-    bid_map = benchmark.select(
-        F.col(id_col).cast("string").alias("_bid_str"),
-        F.col(id_col).alias("nearest_benchmark_id"),
-    ).distinct()
-    typed = cross.join(bid_map, "_bid_str")
-    w = Window.partitionBy("_ck").orderBy(
-        F.col("cos_sim").desc(), F.col("nearest_benchmark_id")
-    )
-    flagged = (
-        typed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "_ck", "nearest_benchmark_id", F.col("cos_sim").alias("benchmark_cos")
-        )
-    )
-    return (
-        corpus.select(F.col(id_col), ck.alias("_ck"))
-        .join(flagged, "_ck", "left")
-        .select(
-            F.col(id_col),
-            "nearest_benchmark_id",
-            "benchmark_cos",
-            F.col("benchmark_cos").isNull().alias("kept"),
-        )
     )
 
 
@@ -1958,8 +1736,8 @@ def build_ivf_index(
     batch. Default centroids are the deterministic md5-ordered pick of
     :func:`ivf_topk`, so an indexed query returns bit-identical
     results to the on-the-fly operator (parity-tested, same oracle);
-    pass ``cents`` (e.g. from :func:`train_centroids`) to persist
-    trained centroids behind the identical probing path.
+    pass ``cents`` to persist another centroid table behind the
+    identical probing path.
 
     New embedding batches append incrementally via
     :func:`ivf_index_append` — a rebuild while appends exist would

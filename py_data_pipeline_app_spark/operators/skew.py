@@ -1,15 +1,14 @@
-"""Skew-mitigation operators: salted shuffle join and two-phase
-(salted) aggregation (extension — no reference evidence; the
-reference's pandas joins are single-process and skew-blind).
+"""Skew mitigation: the salted shuffle join (extension — no reference
+evidence; the reference's pandas joins are single-process and
+skew-blind).
 
 At 100 TB the enemy is the straggler task: a shuffle join or groupBy
 hash-partitions by key, so one viral key (the whale customer, the
 empty-string document, the 'en' language) lands its entire volume on
 ONE reducer while 999 executors idle. First-line defense is AQE
 (``spark.sql.adaptive.skewJoin.enabled`` splits oversized partitions
-at runtime); these operators are the explicit fallback for the cases
-AQE can't rewrite — a single join key bigger than one executor, or a
-non-splittable aggregation buffer (collect_list / count distinct).
+at runtime); the salted join is the explicit fallback for the case
+AQE can't rewrite — a single join key bigger than one executor.
 
 Mechanics of ``salted_join``: the big (skewed) side gets a
 deterministic salt in [0, n) derived from a high-cardinality column,
@@ -19,12 +18,6 @@ row-for-row identical to the plain join — verified by the parity
 oracle — but the shuffle now spreads each hot key over n reducers.
 Cost: small side replicated n×; choose n ~ (hot-key rows / rows per
 healthy task).
-
-``salted_agg`` is the same idea for re-aggregable aggregates:
-groupBy(key, salt) partial → groupBy(key) combine. Spark's hash
-aggregate already does map-side partials, so this only pays off when
-the REDUCE side per-key state is the bottleneck (giant arrays,
-distinct sets) — documented here as the pattern, exercised by tests.
 """
 
 from __future__ import annotations
@@ -63,38 +56,3 @@ def salted_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
     return b.join(s, [key, "_salt"], how).drop("_salt")
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    sums: dict[str, str] | None = None,
-    counts: bool = True,
-    salt_from: str | None = None,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation: partial groupBy(keys + salt), then
-    combine groupBy(keys). ``sums`` maps output alias -> input column
-    (decimal-summed for order-independence); ``counts=True`` adds an
-    ``n`` row count. Result is identical to the direct groupBy —
-    the salt only bounds per-task reduce state.
-    """
-    sums = sums or {}
-    salt_col = (
-        _salt(df, salt_from, n_salts)
-        if salt_from
-        else F.pmod(F.xxhash64(*[F.col(k) for k in df.columns]), F.lit(n_salts))
-    )
-    partial_aggs = [
-        F.sum(F.col(src).cast("decimal(18,6)")).alias(f"_p_{alias}")
-        for alias, src in sums.items()
-    ]
-    if counts:
-        partial_aggs.append(F.count(F.lit(1)).alias("_p_n"))
-    partial = df.withColumn("_salt", salt_col.cast("int")).groupBy(
-        *keys, "_salt"
-    ).agg(*partial_aggs)
-    final_aggs = [F.sum(f"_p_{alias}").alias(alias) for alias in sums]
-    if counts:
-        final_aggs.append(F.sum("_p_n").alias("n"))
-    return partial.groupBy(*keys).agg(*final_aggs)

@@ -5909,20 +5909,17 @@ _QUALITY_SCORE_CTES = f"""tok AS (
     """,
 )
 def quality_linear_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-quality-model scoring at scan cost (extension — the
-    deployment half of operators/quality_model.py): every document
-    scored by the PINNED logistic-regression coefficient vector from a
-    seeded ``train_quality_classifier`` fit, as pure native-column
-    arithmetic — no model object, no UDF, no shuffle; the scorer IS a
-    projection.
+    """Trained-quality-model scoring at scan cost (extension —
+    operators/quality_model.py): every document scored by the PINNED
+    logistic-regression coefficient vector of a seeded Spark ML fit, as
+    pure native-column arithmetic — no model object, no UDF, no
+    shuffle; the scorer IS a projection.
 
-    This closes the loop the ``ivf_topk_trained`` precedent left open:
-    the TRAINING step is iterative (no SQL oracle by nature, covered
-    behaviorally in tests), but once its coefficients are pinned,
-    SCORING is fully SQL-expressible and carries a full value-hash
-    oracle. Determinism comes from rounding each feature to 6dp before
-    a fixed-order dot product (see score_quality_linear docstring);
-    100-TB plan: refit on a sample, re-pin, and the scorer still costs
+    The fit was iterative (no SQL oracle by nature), but once its
+    coefficients are pinned, SCORING is fully SQL-expressible and
+    carries a full value-hash oracle. Determinism comes from rounding
+    each feature to 6dp before a fixed-order dot product (see
+    score_quality_linear docstring); at 100 TB the scorer still costs
     exactly one scan of (doc_id, text)."""
     from py_data_pipeline_app_spark.operators.quality_model import (
         score_quality_linear,

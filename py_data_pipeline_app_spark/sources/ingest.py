@@ -17,14 +17,10 @@ thousand rows). The driver decodes the zip with the stdlib codec
 (:mod:`sources.xlsx`), and each sheet enters Spark as a one-partition
 Arrow local relation (``functions/frames.local_rows_df``) of the
 declared schema, so no upload job runs a Python task to re-read the
-ingested rows. For at-scale ingest the staging format is CSV/Parquet
-(:func:`ingest_csv_dir` / :func:`ingest_staged_parquet`), which Spark
-reads distributed with the same post-ingest contract.
+ingested rows.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -90,57 +86,3 @@ def ingest_workbook(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     if not path.lower().endswith(".xlsx"):  # SRC3 analog (reference app.py:55-56)
         raise ValueError(f"Only .xlsx uploads are accepted, got: {path}")
     return sheets_to_dataframes(spark, read_xlsx_sheets(path))
-
-
-def ingest_csv_dir(spark: SparkSession, directory: str) -> dict[str, DataFrame]:
-    """At-scale staging ingest: ``<dir>/Transactions.csv`` and
-    ``<dir>/Products.csv`` with header rows (read distributed, names
-    lowercased — P4/P5 at scan time), ``<dir>/Customers.csv`` headerless
-    with columns (raw, _sheet_pos) — the staging layer carries the
-    position explicitly, because "row order in a file" is not a
-    distributed concept Spark may rely on."""
-    out: dict[str, DataFrame] = {}
-    for name, schema in SHEET_SCHEMAS.items():
-        path = os.path.join(directory, f"{name}.csv")
-        if not os.path.exists(path):
-            raise MissingSheetsError(f"Missing staged sheet: {path}")
-        df = spark.read.csv(path, header=True, inferSchema=False)
-        df = df.toDF(*[c.lower() for c in df.columns])
-        expected = [f.name for f in schema.fields]
-        if df.columns != expected:
-            raise ValueError(
-                f"Staged {name} columns {df.columns} != expected {expected}"
-            )
-        out[name] = df
-    cpath = os.path.join(directory, "Customers.csv")
-    if not os.path.exists(cpath):
-        raise MissingSheetsError(f"Missing staged sheet: {cpath}")
-    out["Customers"] = spark.read.csv(cpath, schema=schemas.CUSTOMERS_RAW)
-    return out
-
-
-def ingest_staged_parquet(spark: SparkSession, directory: str) -> dict[str, DataFrame]:
-    """Parquet staging (the real 100 TB path): same contract as
-    :func:`ingest_csv_dir`, columnar + splittable + pushdown-friendly."""
-    out: dict[str, DataFrame] = {}
-    for name in ("Transactions", "Products", "Customers"):
-        path = os.path.join(directory, f"{name}.parquet")
-        if not os.path.exists(path):
-            raise MissingSheetsError(f"Missing staged sheet: {path}")
-        df = spark.read.parquet(path)
-        out[name] = df.toDF(*[c.lower() if c != "_sheet_pos" else c for c in df.columns])
-    return out
-
-
-def workbook_to_staging(
-    spark: SparkSession, xlsx_path: str, staging_dir: str
-) -> dict[str, str]:
-    """Land one workbook into parquet staging (SRC4 analog: the raw
-    artifact is preserved elsewhere; this is the queryable landing)."""
-    dfs = ingest_workbook(spark, xlsx_path)
-    paths: dict[str, str] = {}
-    for name, df in dfs.items():
-        p = os.path.join(staging_dir, f"{name}.parquet")
-        df.write.mode("overwrite").parquet(p)
-        paths[name] = p
-    return paths

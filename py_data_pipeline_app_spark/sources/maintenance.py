@@ -1,84 +1,11 @@
-"""Table-layout maintenance for cluster-scale parquet warehouses:
-small-file compaction with data clustering, and bucketed tables for
-shuffle-free co-located joins (extension — the reference's SQLite
+"""The curated-corpus sink: training shards with deterministic
+membership and intra-file order (extension — the reference's SQLite
 storage has no layout dimension at all).
-
-Why these are engine operators and not ops scripts: at 100 TB the
-dominant query costs are (a) open-file overhead and lost min/max
-pruning from millions of tiny ingest files, and (b) the exchange that
-every fact-fact join pays when the tables aren't co-partitioned.
-Compaction fixes (a) — fewer, larger, range-clustered files whose
-per-column min/max statistics actually prune. Bucketing fixes (b) —
-two tables bucketed by the join key into the same bucket count join
-with zero Exchange on either side, which is the single biggest shuffle
-a fact-fact pipeline avoids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    *,
-    cluster_cols: list[str] | None = None,
-    target_files: int | None = None,
-    max_records_per_file: int | None = None,
-) -> int:
-    """Rewrite a parquet directory into fewer, clustered files.
-
-    ``cluster_cols`` range-partitions and sorts the rewrite so each
-    output file covers a narrow key range — parquet footer min/max
-    statistics then prune whole files for key-range predicates (the
-    poor man's Z-order, exact for a single clustering axis).
-    ``target_files`` sets the rewrite width (default: let AQE coalesce);
-    ``max_records_per_file`` caps file size regardless. Returns the
-    number of files written."""
-    df = spark.read.parquet(src)
-    if cluster_cols:
-        if target_files:
-            df = df.repartitionByRange(target_files, *cluster_cols)
-        else:
-            df = df.repartitionByRange(*cluster_cols)
-        df = df.sortWithinPartitions(*cluster_cols)
-    elif target_files:
-        df = df.repartition(target_files)
-    writer = df.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(dst)
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(dst)
-        .select(F.input_file_name().alias("_f"))
-        .distinct()
-        .count()
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    *,
-    buckets: int,
-    bucket_cols: list[str],
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by the join
-    key. Two tables bucketed by their join key into the SAME bucket
-    count join with no Exchange on either side — the shuffle is paid
-    once at write time and amortized over every subsequent join; with
-    ``sort_cols`` the sort-merge join skips its sort too."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
+from pyspark.sql import DataFrame
 
 
 def write_training_shards(

@@ -2,10 +2,10 @@
 
 The built-in windowed aggregations (streaming/windows.py) cover
 count/sum shapes; this module is the escape hatch for *arbitrary*
-keyed state machines — the streaming analog of functions/custom.py.
-The demonstrator is a per-user running profile (event count, value
-total, first/last event time) that emits an updated row per key per
-micro-batch and evicts idle keys with a processing-time timeout.
+keyed state machines. The demonstrator is a per-user running profile
+(event count, value total, first/last event time) that emits an
+updated row per key per micro-batch and evicts idle keys with a
+processing-time timeout.
 
 Scale shape: state lives in Spark's per-key state store (RocksDB/HDFS
 backed on a real cluster), partitioned by the grouping key — the same

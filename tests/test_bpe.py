@@ -466,22 +466,139 @@ def test_sequence_packing_over_real_ids(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round 12: sampled driver-side trainer (bpe_train_sampled) — the 32k-merge
-# path. Parity with the exact distributed loop when the sample covers the
-# corpus; bounded-sample determinism; tokenizer-scale merge counts.
+# Pure-Python heap trainer: the reference that reproduces bpe_train's
+# exact distributed loop, and the source of tokenizer-scale (>200-merge)
+# tables for the Arrow-batched encode path.
 # ---------------------------------------------------------------------------
 
 from py_data_pipeline_app_spark.operators.curation import (  # noqa: E402
-    bpe_train_sampled,
+    _BPE_EOW,
+    _bpe_guard_chars,
+    _bpe_merged_symbol,
 )
 
 
+def _py_bpe_sequences(texts, level: str):
+    """The pure-Python twin of ``curation._bpe_state_expr``'s state machine,
+    collapsed to frequency-keyed symbol sequences: char level keys on
+    DISTINCT WORDS (pairs never cross a word boundary, so per-word
+    training state is exact — Sennrich's reference trainer's own
+    representation), word level keys on whole-document token tuples.
+    Tokenization mirrors ``tokens()`` exactly (trim spaces, split on
+    the Java-regex ``\\s`` class, drop empties) and the reserved-marker
+    guard raises the same ValueError the projection guard does."""
+    import re
+    from collections import Counter
+
+    guard = re.compile("[‹›·]" if level == "char" else "[‹›]")
+    seqs: Counter = Counter()
+    for t in texts:
+        if t is None:
+            continue
+        if guard.search(t):
+            raise ValueError(
+                "bpe: corpus text contains a reserved marker character "
+                f"{_bpe_guard_chars(level)} - pre-scrub or re-tokenize: "
+                f"{t[:40]}"
+            )
+        toks = [
+            x for x in re.split("[ \t\n\x0b\f\r]+", t.strip(" ")) if x != ""
+        ]
+        if level == "word":
+            if toks:
+                seqs[tuple(toks)] += 1
+        else:
+            for w in toks:
+                cs = list(w)
+                cs[-1] += _BPE_EOW
+                seqs[tuple(cs)] += 1
+    return seqs
+
+
+def _py_bpe_train(seqs, n_merges: int, level: str):
+    """Heap-based incremental BPE over frequency-keyed sequences —
+    O(affected sequences) per merge instead of a full recount, which
+    is what makes 1k+ merges tractable. Selection semantics are
+    bit-identical to ``bpe_train``'s Spark loop: count every
+    adjacent (overlapping) pair occurrence, pick max count with
+    lexicographic (left, right) tie-break — the heap orders on
+    (-count, pair) and UTF-8 byte order equals code-point order, so
+    Python tuple comparison reproduces Spark's ORDER BY n DESC, l, r —
+    then merge greedily left-to-right (non-overlapping), the same
+    result as the JVM literal replace. Stale heap entries are handled
+    by lazy validation; every count CHANGE pushes a fresh entry, so a
+    decremented pair can still win later rounds."""
+    import heapq
+    from collections import defaultdict
+
+    seq_list = [(list(s), f) for s, f in sorted(seqs.items())]
+    counts: dict = defaultdict(int)
+    index: dict = defaultdict(set)
+    for si, (syms, f) in enumerate(seq_list):
+        for p in zip(syms, syms[1:]):
+            counts[p] += f
+            index[p].add(si)
+    heap = [(-c, p) for p, c in counts.items()]
+    heapq.heapify(heap)
+
+    def bump(p, delta, si):
+        counts[p] += delta
+        if delta > 0:
+            index[p].add(si)
+        heapq.heappush(heap, (-counts[p], p))
+
+    merges: list[tuple[int, str, str, int]] = []
+    for rank in range(1, n_merges + 1):
+        best = None
+        while heap:
+            negc, p = heap[0]
+            if -negc <= 0:
+                break
+            if counts.get(p, 0) != -negc:
+                heapq.heappop(heap)
+                continue
+            best = p
+            break
+        if best is None:
+            break
+        merges.append((rank, best[0], best[1], int(counts[best])))
+        new_sym = _bpe_merged_symbol(best[0], best[1], level)
+        left, right = best
+        for si in sorted(index[best]):
+            syms, f = seq_list[si]
+            hit = False
+            out: list = []
+            i = 0
+            while i < len(syms):
+                if (
+                    i + 1 < len(syms)
+                    and syms[i] == left
+                    and syms[i + 1] == right
+                ):
+                    out.append(new_sym)
+                    hit = True
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            if not hit:  # stale index entry from an earlier rewrite
+                continue
+            for p in zip(syms, syms[1:]):
+                bump(p, -f, si)
+            seq_list[si] = (out, f)
+            for p in zip(out, out[1:]):
+                bump(p, f, si)
+        counts.pop(best, None)
+        index.pop(best, None)
+    return merges
+
+
+
 @pytest.mark.parametrize("level", ["word", "char"])
-def test_sampled_trainer_matches_exact_loop(spark, level):
-    """With sample_docs ≥ corpus size the heap trainer must reproduce
-    bpe_train EXACTLY — same pairs, ranks, occurrence counts and
-    tie-breaks — at both symbol levels (this is the property that
-    licenses swapping the trainer under the unchanged encode chain)."""
+def test_heap_reference_matches_exact_loop(spark, level):
+    """The heap trainer must reproduce bpe_train EXACTLY — same pairs,
+    ranks, occurrence counts and tie-breaks — at both symbol levels
+    (this is what licenses its tables as stand-ins for bpe_train's)."""
     texts = [
         "the cat sat on the mat",
         "the cat ate the hat",
@@ -491,46 +608,15 @@ def test_sampled_trainer_matches_exact_loop(spark, level):
     ]
     df = _df(spark, texts)
     want = bpe_train(df, n_merges=12, level=level)
-    got = bpe_train_sampled(
-        df, n_merges=12, sample_docs=100, level=level
-    )
+    got = _py_bpe_train(_py_bpe_sequences(texts, level), 12, level)
     assert got == want
 
 
-def test_sampled_trainer_marker_guard(spark):
-    with pytest.raises(ValueError, match="reserved marker"):
-        bpe_train_sampled(_df(spark, ["bad ‹text›"]), n_merges=2)
-
-
-def test_sampled_trainer_sample_is_md5_bounded(spark):
-    """A sample smaller than the corpus trains on exactly the
-    md5-ordered prefix — deterministic across runs and sessions, the
-    train_opq_rotation sampling discipline."""
-    from py_data_pipeline_app_spark.operators.curation import (
-        _py_bpe_sequences,
-        _py_bpe_train,
-    )
-
-    texts = [f"doc {i} alpha beta gamma delta epsilon {i}" for i in range(20)]
-    df = _df(spark, texts)
-    got = bpe_train_sampled(df, n_merges=6, sample_docs=7, level="char")
-    import hashlib
-
-    prefix = sorted(texts, key=lambda t: hashlib.md5(t.encode()).hexdigest())[
-        :7
-    ]
-    want = _py_bpe_train(_py_bpe_sequences(prefix, "char"), 6, "char")
-    assert got == want
-    assert got == bpe_train_sampled(df, n_merges=6, sample_docs=7, level="char")
-
-
-def test_sampled_trainer_tokenizer_scale(spark):
-    """1k+ merges train in seconds (the whole point): a synthetic
-    2k-word corpus admits >1000 char-level merges, the trained table
-    feeds the unchanged zero-shuffle encode, and encoding the sample
-    corpus with its own vocab has zero OOV."""
+def test_arrow_encode_tokenizer_scale_zero_oov(spark):
+    """A tokenizer-scale table (>1000 char-level merges from a
+    synthetic 2k-word corpus) dispatches bpe_apply to the Arrow-batched
+    encode, and encoding the corpus with its own vocab has zero OOV."""
     import random
-    import time
 
     from py_data_pipeline_app_spark.operators.curation import (
         bpe_encode_ids,
@@ -546,14 +632,8 @@ def test_sampled_trainer_tokenizer_scale(spark):
         " ".join(rng.choice(words) for _ in range(40)) for _ in range(300)
     ]
     df = _df(spark, texts)
-    t0 = time.time()
-    merges = bpe_train_sampled(
-        df, n_merges=1500, sample_docs=300, level="char"
-    )
-    took = time.time() - t0
+    merges = _py_bpe_train(_py_bpe_sequences(texts, "char"), 1500, "char")
     assert len(merges) == 1500
-    # driver-side training, not job-per-merge: seconds, not minutes
-    assert took < 30, f"sampled trainer took {took:.1f}s"
     assert [m[0] for m in merges] == list(range(1, 1501))
     small = _df(spark, texts[:20])
     vocab = [

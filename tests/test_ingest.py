@@ -11,11 +11,8 @@ from py_data_pipeline_app_spark import pipeline, schemas
 from py_data_pipeline_app_spark.pipeline import process_upload
 from py_data_pipeline_app_spark.sources.ingest import (
     MissingSheetsError,
-    ingest_csv_dir,
-    ingest_staged_parquet,
     ingest_workbook,
     sheets_to_dataframes,
-    workbook_to_staging,
 )
 from py_data_pipeline_app_spark.sources.xlsx import read_xlsx_sheets, write_xlsx
 from py_data_pipeline_app_spark.testing.fixtures import make_workbook
@@ -112,29 +109,6 @@ def test_end_to_end_from_xlsx_matches_fixture_goldens(spark, tmp_path):
     assert rows(r_file.changes, "customer_id") == rows(r_mem.changes, "customer_id")
     assert r_file.rejects.count() == r_mem.rejects.count() == 3
     assert wh_a.read("customers").count() == 100
-
-
-def test_csv_and_parquet_staging_paths(spark, tmp_path):
-    path, _ = _workbook_file(spark, tmp_path, n_txns=40, n_customers=8)
-    staged = str(tmp_path / "staged")
-    workbook_to_staging(spark, path, staged)
-    via_parquet = ingest_staged_parquet(spark, staged)
-    assert via_parquet["Transactions"].count() == 40
-    assert via_parquet["Customers"].columns == ["raw", "_sheet_pos"]
-
-    csv_dir = tmp_path / "csvs"
-    csv_dir.mkdir()
-    wb = ingest_workbook(spark, path)
-    wb["Transactions"].toPandas().to_csv(csv_dir / "Transactions.csv", index=False)
-    wb["Products"].toPandas().to_csv(csv_dir / "Products.csv", index=False)
-    wb["Customers"].toPandas().to_csv(
-        csv_dir / "Customers.csv", index=False, header=False
-    )
-    via_csv = ingest_csv_dir(spark, str(csv_dir))
-    assert via_csv["Transactions"].count() == 40
-    assert via_csv["Customers"].count() == wb["Customers"].count()
-    with pytest.raises(MissingSheetsError):
-        ingest_csv_dir(spark, str(tmp_path))
 
 
 def test_excel_report_sink_roundtrips(spark, tmp_path):

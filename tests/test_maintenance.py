@@ -1,79 +1,10 @@
-"""Layout maintenance: compaction reduces file count and clusters key
-ranges; bucketed tables join with zero Exchange."""
+"""The curated-corpus sink: deterministic training-shard membership,
+intra-file order and the shard-count contract."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pyspark.sql.functions as F
 import pytest
-
-from py_data_pipeline_app_spark.sources.maintenance import (
-    compact_parquet,
-    write_bucketed,
-)
-
-
-def test_compaction_reduces_files_and_clusters_ranges(spark, tmp_path):
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    # a fragmented ingest: 40 tiny files with interleaved keys
-    spark.range(0, 20_000).select(
-        F.col("id").alias("k"), (F.col("id") * 7 % 1000).alias("v")
-    ).repartition(40).write.parquet(src)
-
-    n_files = compact_parquet(spark, src, dst, cluster_cols=["k"], target_files=4)
-    assert n_files <= 4
-
-    out = spark.read.parquet(dst)
-    assert out.count() == 20_000
-    # clustering: file key-ranges must be disjoint (each file covers a
-    # narrow range -> min/max footer stats prune whole files)
-    ranges = (
-        out.select(F.input_file_name().alias("f"), "k")
-        .groupBy("f")
-        .agg(F.min("k").alias("lo"), F.max("k").alias("hi"))
-        .collect()
-    )
-    spans = sorted((r.lo, r.hi) for r in ranges)
-    for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
-        assert hi_prev < lo_next
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    left = spark.range(0, 5_000).select(
-        F.col("id").alias("k"), (F.col("id") % 97).alias("a")
-    )
-    right = spark.range(0, 50_000).select(
-        (F.col("id") % 5_000).alias("k"), (F.col("id") % 13).alias("b")
-    )
-    # warehouse.dir is static; park the test db in tmp via LOCATION
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '{tmp_path / 'wh'}'")
-    write_bucketed(
-        left, "bucketdb.t_left_b", buckets=8, bucket_cols=["k"], sort_cols=["k"]
-    )
-    write_bucketed(
-        right, "bucketdb.t_right_b", buckets=8, bucket_cols=["k"], sort_cols=["k"]
-    )
-    try:
-        # force a sort-merge join so the test exercises co-location,
-        # not broadcast
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("bucketdb.t_left_b").join(spark.table("bucketdb.t_right_b"), "k")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain(mode="formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert j.count() == 50_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS bucketdb.t_left_b")
-        spark.sql("DROP TABLE IF EXISTS bucketdb.t_right_b")
-        spark.sql("DROP DATABASE IF EXISTS bucketdb")
-
 
 def test_write_training_shards_deterministic_membership_and_order(spark, tmp_path):
     """The curated-corpus sink: shard membership is a pure hash of the

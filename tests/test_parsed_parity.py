@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.functions.text import HASH_PRIME, perm_coeffs
@@ -203,6 +204,31 @@ def mixed(spark):
     )
 
 
+def _stringify(col: F.Column, dtype: T.DataType) -> F.Column:
+    """Column-composed reference for ``profile._stringify_sql``:
+    doubles/floats through decimal(18,6), timestamps through a fixed
+    second-resolution format, everything else a direct cast."""
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        return col.cast("decimal(18,6)").cast("string")
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
+    return col.cast("string")
+
+
+def _num_proxy(c: str, dtype: T.DataType) -> F.Column | None:
+    """Column-composed reference for the quantile proxy of
+    ``profile._approx_profile``: a double preserving native order, or
+    None for types with no numeric order (quantiles are null)."""
+    from py_data_pipeline_app_spark.operators.profile import _NUMERIC
+
+    col = F.col(c)
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return F.unix_micros(col.cast("timestamp")).cast("double")
+    if isinstance(dtype, _NUMERIC):
+        return col.cast("double")
+    return None
+
+
 def test_approx_profile_parity_with_composed_builders(mixed):
     """profile._approx_profile's parsed sketch aggregates vs the
     Column-composed builders they replaced — same counts, HLL distinct
@@ -224,10 +250,10 @@ def test_approx_profile_parity_with_composed_builders(mixed):
             F.count(col).alias(f"__present_{i}"),
             F.count(F.when(col.isNull(), F.lit(1))).alias(f"__null_{i}"),
             F.approx_count_distinct(col, rsd).alias(f"__distinct_{i}"),
-            P._stringify(F.min(col), dtypes[c]).alias(f"__min_{i}"),
-            P._stringify(F.max(col), dtypes[c]).alias(f"__max_{i}"),
+            _stringify(F.min(col), dtypes[c]).alias(f"__min_{i}"),
+            _stringify(F.max(col), dtypes[c]).alias(f"__max_{i}"),
         ]
-        proxy = P._num_proxy(c, dtypes[c])
+        proxy = _num_proxy(c, dtypes[c])
         for q in quantiles:
             expr = (
                 F.percentile_approx(proxy, q)
@@ -487,7 +513,6 @@ def test_gram_hashes_and_winnowing_parity(spark):
     from py_data_pipeline_app_spark.functions.text import (
         _gram_hashes,
         normalize_text,
-        normalize_text_sql,
     )
 
     gram = 4
@@ -496,11 +521,6 @@ def test_gram_hashes_and_winnowing_parity(spark):
         "text string",
         [("The quick brown fox jumps over the lazy dog",), ("ab",), ("",)],
     ).withColumn("_norm", normalize_text(F.col("text")))
-    # normalize_text_sql vs normalize_text
-    _assert_frame_parity(
-        d.select(F.expr(normalize_text_sql("`text`")).alias("n")),
-        d.select(normalize_text(F.col("text")).alias("n")),
-    )
     norm = F.col("_norm")
     starts = F.sequence(
         F.lit(1), F.greatest(F.length(norm) - F.lit(gram - 1), F.lit(1))

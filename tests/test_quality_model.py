@@ -1,16 +1,13 @@
-"""Weak-label quality classifier: feature correctness against a Python
-model, junk/prose separation on held-out documents, determinism."""
+"""Pinned linear quality model: feature correctness against a Python
+model, and a shuffle-free scorer."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.operators.quality_model import (
     quality_feature_frame,
-    score_quality,
-    train_quality_classifier,
 )
 
 CLEAN = [
@@ -53,63 +50,6 @@ def test_features_match_python_model(spark):
     assert abs(r.f_digit_share - digits / len(text)) < 1e-9
     c2 = 2 * 2 + 1 + 1 + 1 + 1
     assert abs(r.f_simpson - (1 - c2 / (n * n))) < 1e-9
-
-
-def test_classifier_separates_heldout_junk(spark, corpus):
-    """Train on even ids, score odd ids: planted junk must score below
-    clean prose on documents the classifier never saw."""
-    train = corpus.filter(F.col("doc_id") % 2 == 0)
-    test = corpus.filter(F.col("doc_id") % 2 == 1)
-    model = train_quality_classifier(train, vocab_size=16)
-    scores = {r.doc_id: r.quality_prob for r in score_quality(model, test).collect()}
-    clean_scores = [v for k, v in scores.items() if k < 60]
-    junk_scores = [v for k, v in scores.items() if k >= 60]
-    avg_clean = sum(clean_scores) / len(clean_scores)
-    avg_junk = sum(junk_scores) / len(junk_scores)
-    assert avg_clean > avg_junk + 0.2, (avg_clean, avg_junk)
-    # threshold-free ranking quality: AUC of clean-above-junk pairs —
-    # weak labels mislabel some docs, so probability CALIBRATION at 0.5
-    # is not the contract; the ranking is
-    pairs = [(c, j) for c in clean_scores for j in junk_scores]
-    auc = sum(1.0 if c > j else 0.5 if c == j else 0.0 for c, j in pairs) / len(pairs)
-    assert auc >= 0.8, auc
-
-
-@pytest.mark.oracle
-def test_training_is_deterministic(spark, corpus):
-    m1 = train_quality_classifier(corpus, vocab_size=16)
-    m2 = train_quality_classifier(corpus, vocab_size=16)
-    c1 = [round(float(x), 9) for x in m1.coefficients]
-    c2 = [round(float(x), 9) for x in m2.coefficients]
-    assert c1 == c2
-
-
-def test_linear_scorer_reproduces_model_decisions(spark, corpus):
-    """Pin a fit's coefficients into score_quality_linear: its z>0
-    decision must reproduce the model's prob>=0.5 decision everywhere
-    except within the 6dp feature-rounding band around the boundary."""
-    from py_data_pipeline_app_spark.operators.quality_model import (
-        FEATURE_COLS,
-        score_quality_linear,
-    )
-
-    model = train_quality_classifier(corpus, vocab_size=16)
-    weights = dict(zip(FEATURE_COLS, (float(c) for c in model.coefficients)))
-    probs = {r.doc_id: r.quality_prob for r in score_quality(model, corpus).collect()}
-    lin = {
-        r.doc_id: r
-        for r in score_quality_linear(
-            corpus, weights=weights, bias=float(model.intercept)
-        ).collect()
-    }
-    assert set(lin) == set(probs)
-    for doc_id, r in lin.items():
-        if abs(r.quality_z) > 1e-3:
-            assert r.predicted_good == (probs[doc_id] >= 0.5), (
-                doc_id,
-                r.quality_z,
-                probs[doc_id],
-            )
 
 
 def test_linear_scorer_is_shuffle_free(spark, corpus):

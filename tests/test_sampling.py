@@ -14,7 +14,7 @@ from py_data_pipeline_app_spark.operators.sampling import (
     hash_split,
     stratified_sample,
 )
-from py_data_pipeline_app_spark.operators.skew import salted_agg, salted_join
+from py_data_pipeline_app_spark.operators.skew import salted_join
 from py_data_pipeline_app_spark.sources.parquet import load_table
 
 
@@ -97,24 +97,6 @@ def test_salted_join_parity(spark, sf_dir):
     cols = sorted(plain.columns)
     assert salted.select(*cols).exceptAll(plain.select(*cols)).count() == 0
     assert plain.select(*cols).exceptAll(salted.select(*cols)).count() == 0
-
-
-def test_salted_agg_parity(spark, sf_dir):
-    ev = load_table(spark, "events", sf_dir)
-    direct = ev.groupBy("event_type").agg(
-        F.sum(F.col("value").cast("decimal(18,6)")).alias("total"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    two_phase = salted_agg(
-        ev,
-        ["event_type"],
-        sums={"total": "value"},
-        salt_from="event_id",
-        n_salts=4,
-    )
-    a = {r["event_type"]: (r["total"], r["n"]) for r in direct.collect()}
-    b = {r["event_type"]: (r["total"], r["n"]) for r in two_phase.collect()}
-    assert a == b
 
 
 def test_approx_distinct_close_to_exact(spark, sf_dir):

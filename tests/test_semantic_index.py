@@ -566,7 +566,9 @@ def test_reorder_with_pending_appends_is_bounded(spark, emb, tmp_path):
     assert {t: append_listing(t) for t in ("a1", "a2")} == appends_before
     assert {c: listing(c) for c in untouched} == base_before
     # exclusion markers exist for both pending appends
-    excl = sorted(fsio.child_names(spark, f"{idx}/{SEMANTIC_REORDER_EXCL_SUBDIR}"))
+    excl = sorted(
+        n for n, _ in fsio.child_entries(spark, f"{idx}/{SEMANTIC_REORDER_EXCL_SUBDIR}")
+    )
     assert excl == ["batch-a1--backfill", "batch-a2--backfill"]
 
     want_corpus = emb.filter((F.col("vec_id") >= n // 4) & (F.col("vec_id") < n - 5)).unionByName(low)

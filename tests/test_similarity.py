@@ -10,6 +10,7 @@ import pytest
 
 from py_data_pipeline_app_spark.functions.frames import local_rows_df
 from py_data_pipeline_app_spark.operators.similarity import (
+    _md5_sample_centroids,
     brute_force_topk,
     cosine,
     embedding_near_dup_pairs,
@@ -18,6 +19,24 @@ from py_data_pipeline_app_spark.operators.similarity import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def lsh_recall_estimate(threshold: float, n_planes: int, bands: int) -> float:
+    """Expected hyperplane-LSH recall for a pair at exactly
+    ``threshold`` cosine — the reference model ``lsh_config_for``
+    inverts: per-plane sign-agreement probability is
+    p = 1 - acos(t)/π, a band of r = n_planes/bands bits hits with
+    p^r, and the pair is a candidate if ANY band hits —
+    1 - (1 - p^r)^bands."""
+    p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
+    r = n_planes // bands
+    return 1.0 - (1.0 - p**r) ** bands
+
+
+def _sampled_cents(corpus, n_centroids: int):
+    return _md5_sample_centroids(
+        corpus, n_centroids=n_centroids, id_col="vec_id", vec_col="embedding"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -117,8 +136,6 @@ def test_lsh_recall_estimate_matches_measurement_regimes():
     magnitudes must match what was measured on the sf0.01 embeddings
     (recall 0.56 / 0.10 / 0.81 for the three configs at t=0.4) and the
     high-threshold design point (8-bit bands at cosine 0.9)."""
-    from py_data_pipeline_app_spark.operators.similarity import lsh_recall_estimate
-
     est_16_4 = lsh_recall_estimate(0.4, 16, 4)
     est_32_4 = lsh_recall_estimate(0.4, 32, 4)
     est_32_8 = lsh_recall_estimate(0.4, 32, 8)
@@ -174,79 +191,6 @@ def test_indexed_ivf_matches_on_the_fly_and_prunes_partitions(spark, emb, tmp_pa
     assert "centroid_id" in plan.split("PartitionFilters", 1)[1][:200]
 
 
-def test_indexed_ivf_with_trained_centroids_matches_on_the_fly(spark, emb, tmp_path):
-    """Trained (KMeans) centroids persist behind the same
-    partition-pruned probing path and return exactly what the
-    on-the-fly trained operator returns."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_indexed,
-        ivf_topk_trained,
-        train_centroids,
-    )
-
-    cents = train_centroids(emb, n_centroids=8, seed=7)
-    index = str(tmp_path / "ivf_trained")
-    build_ivf_index(emb, index, cents=cents)
-    queries = emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    indexed = ivf_topk_indexed(spark, index, queries, k=5, nprobe=2)
-    onfly = ivf_topk_trained(
-        emb, queries, k=5, n_centroids=8, nprobe=2, seed=7
-    )
-    got = sorted(((r.query_id, r.rank, r.vec_id, r.score) for r in indexed.collect()))
-    exp = sorted(((r.query_id, r.rank, r.vec_id, r.score) for r in onfly.collect()))
-    assert got == exp
-
-
-def test_trained_centroids_are_a_local_relation(emb):
-    """The trained centroid table re-enters plans as an Arrow local
-    relation: a LocalTableScan of the declared schema, never a
-    Python-RDD scan that each embedding plan would re-run."""
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    from py_data_pipeline_app_spark.operators.similarity import train_centroids
-
-    cents = train_centroids(emb, n_centroids=4, seed=7, max_iter=5)
-    plan = cents._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
-    assert cents.schema == StructType([
-        StructField("centroid_id", IntegerType()),
-        StructField("cvec", ArrayType(DoubleType())),
-    ])
-    dim = len(emb.first().embedding)
-    rows = cents.collect()
-    assert [r.centroid_id for r in rows] == [0, 1, 2, 3]
-    assert all(len(r.cvec) == dim for r in rows)
-
-
-def test_trained_ivf_recall_at_least_hash_sample(emb):
-    from py_data_pipeline_app_spark.operators.similarity import ivf_topk_trained
-
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {(r.query_id, r.vec_id) for r in brute_force_topk(emb, queries, k=5).collect()}
-
-    def recall(df):
-        got = {(r.query_id, r.vec_id) for r in df.collect()}
-        return len(exact & got) / len(exact)
-
-    r_hash = recall(ivf_topk(emb, queries, k=5, n_centroids=8, nprobe=2))
-    r_train = recall(
-        ivf_topk_trained(emb, queries, k=5, n_centroids=8, nprobe=2, seed=7)
-    )
-    # trained centroids track the distribution: at the same probe
-    # budget they must not lose to a random sample, and measured they
-    # beat it (see commit); >= keeps the assertion robust to ml-lib
-    # version drift in the k-means init.
-    assert r_train >= r_hash
-    assert r_train >= 0.5
-
-
 @pytest.mark.oracle
 def test_ivf_append_parity_with_full_rebuild(spark, emb, tmp_path):
     """build(A) + append(B) probes bit-identically to build(A∪B) with
@@ -257,10 +201,9 @@ def test_ivf_append_parity_with_full_rebuild(spark, emb, tmp_path):
         build_ivf_index,
         ivf_index_append,
         ivf_topk_indexed,
-        train_centroids,
     )
 
-    cents = train_centroids(emb, n_centroids=8, seed=7)
+    cents = _sampled_cents(emb, 8)
     a = emb.filter(F.col("vec_id") % 2 == 0)
     b = emb.filter(F.col("vec_id") % 2 == 1)
 
@@ -329,15 +272,15 @@ def test_ivf_append_fails_on_centroid_drift(spark, emb, tmp_path):
     from py_data_pipeline_app_spark.operators.similarity import (
         build_ivf_index,
         ivf_index_append,
-        train_centroids,
     )
 
     index = str(tmp_path / "drift")
     build_ivf_index(emb, index, n_centroids=8)
-    # simulate out-of-band centroid replacement
-    train_centroids(emb, n_centroids=8, seed=13).write.mode("overwrite").parquet(
-        f"{index}/centroids"
-    )
+    # simulate out-of-band centroid replacement: a sample of the odd
+    # half is a different table from the build's whole-corpus sample
+    _sampled_cents(emb.filter(F.col("vec_id") % 2 == 1), 8).write.mode(
+        "overwrite"
+    ).parquet(f"{index}/centroids")
     with pytest.raises(ValueError, match="checksum"):
         ivf_index_append(spark, index, emb.limit(10))
 
@@ -369,10 +312,9 @@ def test_centroid_assignment_is_shuffle_free(spark, emb):
 
     from py_data_pipeline_app_spark.operators.similarity import (
         _assign_to_centroids,
-        train_centroids,
     )
 
-    cents = train_centroids(emb, n_centroids=8, seed=7)
+    cents = _sampled_cents(emb, 8)
     wide = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
     assigned = _assign_to_centroids(
         wide, cents, id_col="vec_id", vec_col="embedding"
@@ -445,10 +387,7 @@ def test_lsh_config_for_scales_with_corpus():
     """Band width must grow with the corpus (constant occupancy), band
     count must restore the recall target, and the predicted recall of
     the returned config must meet it."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        lsh_config_for,
-        lsh_recall_estimate,
-    )
+    from py_data_pipeline_app_spark.operators.similarity import lsh_config_for
 
     prev_bits = 0
     for n in (1_000, 100_000, 10_000_000, 1_000_000_000):
@@ -739,14 +678,13 @@ def test_indexed_probe_refuses_drifted_centroids(spark, emb, tmp_path):
     from py_data_pipeline_app_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
-        train_centroids,
     )
 
     index = str(tmp_path / "ivf_drift")
     build_ivf_index(emb, index, n_centroids=8)
-    train_centroids(emb, n_centroids=8, seed=13).write.mode("overwrite").parquet(
-        f"{index}/centroids"
-    )
+    _sampled_cents(emb.filter(F.col("vec_id") % 2 == 1), 8).write.mode(
+        "overwrite"
+    ).parquet(f"{index}/centroids")
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1065,68 +1003,15 @@ def test_cluster_profile_is_total_and_consistent(spark, emb):
     assert {r.centroid_id: r.n_members for r in prof} == sizes
 
 
-def test_decontamination_lsh_matches_exact_on_planted_hits(spark):
-    """The blocked variant flags the same rows the exact sweep flags
-    when hits sit at contamination-grade cosine (≈1 ⇒ identical sign
-    patterns ⇒ collide in every band), with the same nearest id and
-    9dp score; kept rows carry nulls by contract."""
-    from py_data_pipeline_app_spark.operators.similarity import (
-        embedding_decontamination,
-        embedding_decontamination_lsh,
-    )
-
-    import random
-
-    rng = random.Random(11)
-    dim = 16
-    bench_rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(5)]
-    bench = local_rows_df(
-        spark, "vec_id long, embedding array<double>", bench_rows
-    )
-    corpus_rows = [
-        (100, [x + 1e-6 for x in bench_rows[2][1]]),  # near bench 2
-        (101, [x * 2.0 for x in bench_rows[4][1]]),   # parallel to bench 4
-        (102, [rng.uniform(-1, 1) for _ in range(dim)]),  # clean
-        (103, [rng.uniform(-1, 1) for _ in range(dim)]),  # clean
-    ]
-    corpus = local_rows_df(
-        spark, "vec_id long, embedding array<double>", corpus_rows
-    )
-    got = {
-        r.vec_id: r
-        for r in embedding_decontamination_lsh(
-            corpus, bench, dim=dim, threshold=0.99
-        ).collect()
-    }
-    exact = {
-        r.vec_id: r
-        for r in embedding_decontamination(
-            corpus, bench, threshold=0.99
-        ).collect()
-    }
-    assert set(got) == set(exact) == {100, 101, 102, 103}
-    for v in (100, 101):
-        assert not got[v].kept and not exact[v].kept
-        assert got[v].nearest_benchmark_id == exact[v].nearest_benchmark_id
-        assert got[v].benchmark_cos == exact[v].benchmark_cos
-    for v in (102, 103):
-        assert got[v].kept
-        assert got[v].nearest_benchmark_id is None
-        assert got[v].benchmark_cos is None
-
-
-def test_decontamination_exact_tie_matches_across_variants(spark):
+def test_decontamination_exact_tie_resolves_to_lowest_native_id(spark):
     """An exact-9dp cosine tie between two benchmark vectors (identical
-    vectors, numeric ids 2 and 10) resolves to the same
-    nearest_benchmark_id in BOTH variants: the lowest id in the
-    benchmark's NATIVE order (2) — not string order, where "10" < "2"
-    (the round-12 parity nit)."""
+    vectors, numeric ids 2 and 10) resolves nearest_benchmark_id to the
+    lowest id in the benchmark's NATIVE order (2) — not string order,
+    where "10" < "2"."""
     from py_data_pipeline_app_spark.operators.similarity import (
         embedding_decontamination,
-        embedding_decontamination_lsh,
     )
 
-    dim = 8
     v = [0.3, -0.7, 0.2, 0.9, -0.1, 0.5, -0.4, 0.6]
     bench = local_rows_df(
         spark,
@@ -1137,26 +1022,19 @@ def test_decontamination_exact_tie_matches_across_variants(spark):
         spark, "vec_id long, embedding array<double>", [(100, list(v))]
     )
     exact = embedding_decontamination(corpus, bench, threshold=0.99).first()
-    lsh = embedding_decontamination_lsh(
-        corpus, bench, dim=dim, threshold=0.99
-    ).first()
     assert exact.nearest_benchmark_id == 2
-    assert lsh.nearest_benchmark_id == 2
-    assert not exact.kept and not lsh.kept
-    assert exact.benchmark_cos == lsh.benchmark_cos == 1.0
+    assert not exact.kept
+    assert exact.benchmark_cos == 1.0
 
 
 def test_decontamination_preserves_string_benchmark_ids(spark):
     """The matrix-literal sweep preserves a STRING benchmark id type —
     the streaming decon gate's contract (the verdict fallback derives
-    its schema from the batch for exactly this reason) — and agrees
-    with the LSH variant, which always preserved the caller's type."""
+    its schema from the batch for exactly this reason)."""
     from py_data_pipeline_app_spark.operators.similarity import (
         embedding_decontamination,
-        embedding_decontamination_lsh,
     )
 
-    dim = 8
     va = [0.3, -0.7, 0.2, 0.9, -0.1, 0.5, -0.4, 0.6]
     vb = [-0.6, 0.1, 0.8, -0.3, 0.4, -0.9, 0.2, 0.7]
     bench = local_rows_df(
@@ -1175,14 +1053,6 @@ def test_decontamination_preserves_string_benchmark_ids(spark):
     assert got["doc-1"].nearest_benchmark_id == "eval-a"
     assert not got["doc-1"].kept
     assert got["doc-2"].kept
-    lsh = {
-        r.vec_id: r
-        for r in embedding_decontamination_lsh(
-            corpus, bench, dim=dim, threshold=0.99
-        ).collect()
-    }
-    assert lsh["doc-1"].nearest_benchmark_id == "eval-a"
-    assert lsh["doc-1"].benchmark_cos == got["doc-1"].benchmark_cos
 
     # empty benchmark: schema keeps the caller's id type too
     empty = embedding_decontamination(

@@ -261,97 +261,3 @@ def test_streamed_semantic_reorder_appends_match_full_rebuild(
     assert got == want
 
 
-def test_streamed_trained_opq_ivfpq_matches_full_rebuild(
-    spark, emb, tmp_path
-):
-    """Round-12 verdict task 8 (stretch): the one-call streaming story
-    in the TRAINED-OPQ configuration — an index built by
-    ``build_ivfpq_index_trained(opq_iters>0)`` (the measured
-    0.92-re-ranked-recall setup) takes streamed micro-batch appends
-    across a compaction boundary and probes — both ADC and re-ranked —
-    identically to one rebuild over everything with the same trained
-    tables. The appends must encode through the PERSISTED
-    checksum-verified rotation; a batch encoded in the unrotated space
-    would silently score garbage."""
-    import os
-
-    import pyspark.sql.functions as F2
-
-    from py_data_pipeline_app_spark.operators.quantization import (
-        build_ivfpq_index,
-        build_ivfpq_index_trained,
-        ivfpq_topk,
-        ivfpq_topk_rerank,
-    )
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    index = str(tmp_path / "index")
-    initial = emb.filter(F2.col("vec_id") % 3 == 0)
-    build_ivfpq_index_trained(
-        initial, index, n_centroids=16, m=8, ksub=16, dim=64, opq_iters=2
-    )
-    cfg = spark.read.parquet(f"{index}/config").first()
-    assert cfg.rotation_checksum  # the trained path actually rotated
-
-    for part in (1, 2):
-        emb.filter(F2.col("vec_id") % 3 == part).coalesce(1).write.parquet(
-            f"{landing}/b{part}"
-        )
-        q = _ingest_stream(
-            spark, landing + "/*", ckpt, index,
-            ivfpq_index_append, ivfpq_index_compact, maintain_every=1,
-        )
-        q.awaitTermination(120)
-    appends = os.path.join(index, "appends")
-    n_appends = (
-        len([d for d in os.listdir(appends) if d.startswith("batch-")])
-        if os.path.isdir(appends)
-        else 0
-    )
-    assert n_appends <= 1, n_appends  # batch 1 crossed a compaction
-
-    queries = emb.filter(F2.col("vec_id") < 10).select(
-        F2.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = sorted(
-        map(tuple, ivfpq_topk(spark, index, queries, k=5, nprobe=4).collect())
-    )
-    got_rr = sorted(
-        map(
-            tuple,
-            ivfpq_topk_rerank(
-                spark, index, emb, queries, k=5, nprobe=4
-            ).collect(),
-        )
-    )
-
-    # reference: one rebuild over everything with the SAME trained
-    # tables — centroids, codebooks AND the persisted OPQ rotation
-    ref = str(tmp_path / "ref")
-    cents = spark.read.parquet(f"{index}/centroids")
-    cbs = spark.read.parquet(f"{index}/codebooks")
-    rot = [
-        [float(x) for x in r.coeffs]
-        for r in sorted(
-            spark.read.parquet(f"{index}/rotation").collect(),
-            key=lambda r: r.row_id,
-        )
-    ]
-    build_ivfpq_index(
-        emb, ref, n_centroids=16, m=8, ksub=16, dim=64,
-        cents=cents, codebooks=cbs, rotation=rot,
-    )
-    want = sorted(
-        map(tuple, ivfpq_topk(spark, ref, queries, k=5, nprobe=4).collect())
-    )
-    want_rr = sorted(
-        map(
-            tuple,
-            ivfpq_topk_rerank(
-                spark, ref, emb, queries, k=5, nprobe=4
-            ).collect(),
-        )
-    )
-    assert got == want
-    assert got_rr == want_rr
